@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 
 /** Session factory for the graft engine.
   *
@@ -20,6 +21,11 @@ object GraftSession {
     * `initialPartitions` with input splits (rule of thumb: total input
     * bytes / 128 MB, min 2× total cores) — it is the one knob here that
     * must grow with data volume.
+    *
+    * `shufflePartitions` is also the width of every partition count
+    * graft picks explicitly ([[fanOut]]): range-partitioned rankings,
+    * the as-of join's clustering, and the default bucket count of every
+    * persisted store.
     */
   def builder(master: String = "local[32]", shufflePartitions: Int = 32,
       initialPartitions: Int =
@@ -54,6 +60,19 @@ object GraftSession {
       // plans.
       .config("spark.sql.unionOutputPartitioning", "false")
       .config("spark.ui.enabled", "false")
+
+  /** The ONE fan-out rule: every partition count graft picks
+    * explicitly — range-partition widths (`Ranking`, `AsOfJoin`) and
+    * the default bucket count of a store build — is the session's
+    * configured `spark.sql.shuffle.partitions`, which is also AQE's
+    * coalesce floor above. Never `SQLConf.numShufflePartitions`: under
+    * AQE coalescing that getter returns `initialPartitionNum` (the wide
+    * START of a coalescable shuffle), and an explicit count is never
+    * coalesced, so every stage would run that many mostly-empty tasks.
+    */
+  def fanOut(conf: SQLConf): Int = conf.defaultNumShufflePartitions
+
+  def fanOut(spark: SparkSession): Int = fanOut(spark.sessionState.conf)
 
   /** Create (or reuse) a session and register graft SQL functions. */
   def getOrCreate(master: String = "local[32]"): SparkSession = {

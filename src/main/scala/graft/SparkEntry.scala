@@ -2286,12 +2286,18 @@ object SparkEntry {
     * neighbors' labels, and the previous generation's label of its
     * label (the pointer jump — labels are node ids, so the map covers
     * every key and the inner joins drop nothing). Both engines iterate
-    * to the same unique fixpoint (the true per-component min); jumping
-    * covers ≥2^iters hops, so `iters`=10 handles any component diameter
-    * ≤ 1024 — far beyond the co-purchase graph's. A naive reachability
-    * closure (d6's walk CTE) is V×V rows on this near-complete graph —
-    * measured 108 s at sf0.01, vs well under a second for the jumping
-    * chain. CTEs are MATERIALIZED: each generation is referenced three
+    * to the same unique fixpoint (the true per-component min). The
+    * neighbor term alone moves the min one hop per generation, so the
+    * chain is guaranteed to reach the fixpoint on any component whose
+    * diameter is at most `iters` ([[G4OracleIters]], 28) — the
+    * co-purchase graph is near-complete, far inside that. The jump
+    * through the previous generation's label closes roughly half the
+    * remaining distance per round in practice, not a doubling of hops
+    * per round; the query's own convergence assertion (rounds within
+    * the shared budget) turns any shortfall into a failure. A naive
+    * reachability closure (d6's walk CTE) is V×V rows on this
+    * near-complete graph — measured 108 s at sf0.01, vs well under a
+    * second for the jumping chain. CTEs are MATERIALIZED: each generation is referenced three
     * times, and DuckDB's default inlining would re-expand the chain
     * 3^iters-fold (the t13 lesson).
     */

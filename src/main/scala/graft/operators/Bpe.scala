@@ -123,10 +123,10 @@ object Bpe {
     // and the throwing path to None so restore unsets instead of
     // attempting set(key, null), which requires a non-null value
     val prevInit = Option(try spark.conf.get(initKey) catch { case _: Exception => null })
-    // read spark.sql.shuffle.partitions DIRECTLY: SQLConf's
-    // numShufflePartitions getter returns initialPartitionNum itself
-    // when AQE coalescing is on, which would make this set a no-op
-    spark.conf.set(initKey, spark.conf.get("spark.sql.shuffle.partitions"))
+    // the session's fan-out (GraftSession.fanOut), never SQLConf's
+    // numShufflePartitions getter: that returns initialPartitionNum
+    // itself when AQE coalescing is on, which would make this set a no-op
+    spark.conf.set(initKey, graft.GraftSession.fanOut(spark).toString)
     def restoreInit(): Unit = prevInit match {
       case Some(v) => spark.conf.set(initKey, v)
       case None => spark.conf.unset(initKey)
@@ -234,7 +234,7 @@ object Bpe {
     * probes) publish atomically; a failed build drops its half-written
     * tables and burns its claim, leaving the prior generation live.
     */
-  def buildDictStore(t: Tables, name: String, numMerges: Int = 8, buckets: Int = 32): Unit = {
+  def buildDictStore(t: Tables, name: String, numMerges: Int = 8, buckets: Int = 0): Unit = {
     import graft.sources.Warehouse
     val spark = t.documents.sparkSession
     val gen = Warehouse.claimGeneration(spark, name)
@@ -270,28 +270,31 @@ object Bpe {
     * fall back to true BPE: the stored merge list (≤ numMerges rows,
     * collected bounded) is applied in rank order to the unseen word's
     * characters map-side, so nothing is silently dropped or
-    * undercounted (spec-asserted on an unseen-word corpus).
+    * undercounted (spec-asserted on an unseen-word corpus). The probe's
+    * bucket count derives from the dict table's catalog metadata (pass
+    * 0, the default); a nonzero value is validated against it.
     */
-  def bpeEncodeAgainstStore(t: Tables, name: String, buckets: Int = 32): DataFrame =
+  def bpeEncodeAgainstStore(t: Tables, name: String, buckets: Int = 0): DataFrame =
     encodeDocsAgainstStore(t.documents, name, buckets)
 
   /** [[bpeEncodeAgainstStore]] over any (doc_id, text) frame — shared
     * with the streaming twin, whose micro-batches are not a Tables.
     */
-  def encodeDocsAgainstStore(docs: DataFrame, name: String, buckets: Int = 32): DataFrame = {
+  def encodeDocsAgainstStore(docs: DataFrame, name: String, buckets: Int = 0): DataFrame = {
     import graft.sources.Warehouse
     val spark = docs.sparkSession
     // resolve ONCE so dict and merges pin to the same generation even
     // if a rebuild publishes mid-plan
     val gen = Warehouse.resolveGeneration(spark, name)
     val dict = Warehouse.table(spark, Warehouse.storeTableName(name, gen, "dict"))
+    val storeBuckets = Warehouse.storedBuckets(spark, name, gen, "dict", buckets)
     val merges = Warehouse.table(spark, Warehouse.storeTableName(name, gen, "merges"))
       .orderBy(col("step")).collect() // ≤ numMerges rows — bounded
     // probe keys carry a distinct name so the plan (and its spec) can
     // tell the batch-side exchange from a store-side one (d7's idiom)
     var joined = docWords(docs)
       .withColumnRenamed("word", "pword")
-      .repartition(buckets, col("pword"))
+      .repartition(storeBuckets, col("pword"))
       .join(dict, col("pword") === col("word"), "left")
       .withColumn("oov_syms", initialSymbols(col("pword")))
     // one withColumn PER merge, not one folded Column: each rewrite

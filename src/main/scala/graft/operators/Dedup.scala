@@ -161,7 +161,7 @@ object Dedup {
     * [[Warehouse.vacuumStoreGenerations]].
     */
   def buildSignatureStore(docs: DataFrame, name: String, numHashes: Int = 64,
-      bands: Int = 16, buckets: Int = 32,
+      bands: Int = 16, buckets: Int = 0,
       maxBandBucket: Option[Long] = Some(QuadraticGuardDefault)): Unit = {
     val spark = docs.sparkSession
     val gen = Warehouse.claimGeneration(spark, name)
@@ -253,34 +253,7 @@ object Dedup {
       .getOrElse(throw new IllegalStateException(
         s"signature store '$name' base generation $base has an empty band index — " +
           "cannot derive the band count; rebuild the base"))
-    val buckets = Warehouse.bucketCount(spark, bandsT)
-      .getOrElse(throw new IllegalStateException(
-        s"signature store '$name' base generation $base has unreadable bucket " +
-          "metadata — refusing a segment whose layout could diverge from the " +
-          "base (co-partitioned probing would silently void); rebuild the base"))
-    (numHashes, bands, buckets)
-  }
-
-  /** The bucket count a store table was actually built with, shared by
-    * every probe that must repartition its batch side to the store's
-    * layout: `given == 0` derives from catalog metadata (unreadable
-    * metadata fails loudly — a guessed layout silently voids
-    * co-partitioning); a nonzero `given` validates against the stored
-    * count so caller-vs-store drift fails loudly too.
-    */
-  private def storedBucketsOf(spark: SparkSession, name: String, gen: Long,
-      suffix: String, given: Int): Int = {
-    val stored = Warehouse.bucketCount(spark,
-      Warehouse.storeTableName(name, gen, suffix))
-      .getOrElse(throw new IllegalStateException(
-        s"store '$name' generation $gen has unreadable bucket metadata on " +
-          s"'$suffix' — refusing a probe whose partitioning could diverge " +
-          "from the store (co-partitioned probing would silently void); rebuild the store"))
-    require(given == 0 || given == stored,
-      s"probe buckets=$given differs from store '$name''s built layout " +
-        s"($stored) — the probe side would join mis-partitioned; pass 0 " +
-        "to derive the layout from the store")
-    stored
+    (numHashes, bands, Warehouse.storedBuckets(spark, name, base, "bands", 0))
   }
 
   /** Segment-append for the SIGNATURE store — the t23/s11 incremental
@@ -386,8 +359,11 @@ object Dedup {
       fold = (oldSigs, _) => oldSigs.join(broadcast(ids), Seq("doc_id"), "left_anti"),
       maxBandBucket = None, beforePublish,
       // a removal only filters rows: the stored band index anti-joins
-      // the same ids instead of re-hashing every surviving signature
-      foldBands = Some(b => b.join(broadcast(ids), Seq("doc_id"), "left_anti")))
+      // the same ids instead of re-hashing every surviving signature.
+      // The USING join moves doc_id first; the select restores the
+      // build's (band_idx, band_hash, doc_id) column order
+      foldBands = Some(b => b.join(broadcast(ids), Seq("doc_id"), "left_anti")
+        .select(col("band_idx"), col("band_hash"), col("doc_id"))))
   }
 
   /** The shared FOLD core of [[growSignatureStore]] and
@@ -408,9 +384,13 @@ object Dedup {
       val (base, segs) = Warehouse.resolveSegmented(spark, name)
       val layout = signatureLayoutOf(spark, name, base)
       val (_, bands, buckets) = layout
+      // generations union BY NAME: a band index written by an older
+      // takedown fold carries (doc_id, band_idx, band_hash), and a
+      // positional union with a segment's (band_idx, band_hash, doc_id)
+      // would publish a corrupt index
       val oldSigs = (base +: segs)
         .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "sigs")))
-        .reduce(_ unionAll _)
+        .reduce(_ unionByName _)
       val gen = Warehouse.claimGeneration(spark, name)
       val sigsT = Warehouse.storeTableName(name, gen, "sigs")
       val bandsT = Warehouse.storeTableName(name, gen, "bands")
@@ -432,7 +412,7 @@ object Dedup {
           case Some(fb) =>
             val oldBands = (base +: segs)
               .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "bands")))
-              .reduce(_ unionAll _)
+              .reduce(_ unionByName _)
             (fold(oldSigs, layout), fb(oldBands))
           case None =>
             val foldedSigs = fold(oldSigs, layout).localCheckpoint(true)
@@ -574,7 +554,7 @@ object Dedup {
     * it without ever re-pairing history.
     */
   def buildClusterStore(docs: DataFrame, name: String, numHashes: Int = 64,
-      bands: Int = 16, threshold: Double = 0.5, buckets: Int = 32,
+      bands: Int = 16, threshold: Double = 0.5, buckets: Int = 0,
       maxIter: Int = 100): Unit = {
     val spark = docs.sparkSession
     val gen = Warehouse.claimGeneration(spark, name)
@@ -613,7 +593,7 @@ object Dedup {
     */
   def buildClusterStoreFromSignatureStore(spark: SparkSession, sigStore: String,
       name: String, threshold: Double = 0.5,
-      buckets: Int = 32, maxIter: Int = 100): Unit = {
+      buckets: Int = 0, maxIter: Int = 100): Unit = {
     // segment-aware: the labeling derives from base ∪ published append
     // segments (one union per table kind; this is a REBUILD-time pass,
     // so the union's lost bucketing costs one shuffle here, never on
@@ -621,10 +601,10 @@ object Dedup {
     val (sbase, ssegs) = Warehouse.resolveSegmented(spark, sigStore)
     val storeBands = (sbase +: ssegs)
       .map(g => Warehouse.table(spark, Warehouse.storeTableName(sigStore, g, "bands")))
-      .reduce(_ unionAll _)
+      .reduce(_ unionByName _)
     val storeSigs = (sbase +: ssegs)
       .map(g => Warehouse.table(spark, Warehouse.storeTableName(sigStore, g, "sigs")))
-      .reduce(_ unionAll _)
+      .reduce(_ unionByName _)
     val a = storeBands.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_a"))
     val b = storeBands.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_b"))
     val pairs = a.join(b, Seq("band_idx", "band_hash"))
@@ -676,7 +656,7 @@ object Dedup {
     val gen = Warehouse.resolveGeneration(spark, clusterStore)
     val (recorded, hasCol) = clusterThresholdOf(spark, clusterStore, gen)
     val th = resolveClusterThreshold(clusterStore, threshold, recorded, hasCol)
-    val storeBuckets = storedBucketsOf(spark, clusterStore, gen, "labels", buckets)
+    val storeBuckets = Warehouse.storedBuckets(spark, clusterStore, gen, "labels", buckets)
     buildClusterStoreFromSignatureStore(spark, sigStore, clusterStore,
       th, storeBuckets, maxIter)
   }
@@ -860,11 +840,12 @@ object Dedup {
     // an EMPTY prior demands one; a legacy prior stays legacy unless one
     // is given) and the bucket count derives from the prior generation
     // (caller-repeated parameters are never trusted); a FIRST publish
-    // takes the caller's values (buckets defaulting to 32)
+    // takes the caller's values (buckets defaulting to the session's
+    // fan-out, as every build does)
     val prior = Warehouse.currentGeneration(spark, name)
     val useBuckets = prior match {
-      case Some(g) => storedBucketsOf(spark, name, g, "labels", buckets)
-      case None => if (buckets > 0) buckets else 32
+      case Some(g) => Warehouse.storedBuckets(spark, name, g, "labels", buckets)
+      case None => buckets
     }
     val stampTh: Option[Double] = prior match {
       case Some(g) =>
@@ -1139,7 +1120,7 @@ object Dedup {
     * probes derive it from the store.
     */
   def buildNoveltyStore(docs: DataFrame, name: String, k: Int = 3,
-      buckets: Int = 32): Unit = {
+      buckets: Int = 0): Unit = {
     val spark = docs.sparkSession
     val gen = Warehouse.claimGeneration(spark, name)
     try {
@@ -1186,7 +1167,7 @@ object Dedup {
     */
   private def noveltyLayoutOf(spark: SparkSession, name: String,
       gens: Seq[Long]): (Option[Int], Int, Boolean) = {
-    val buckets = storedBucketsOf(spark, name, gens.head, "shdf", 0)
+    val buckets = Warehouse.storedBuckets(spark, name, gens.head, "shdf", 0)
     val hasKCol = Warehouse
       .table(spark, Warehouse.storeTableName(name, gens.head, "shdf"))
       .columns.contains("k")
@@ -1678,7 +1659,7 @@ object Dedup {
     * probe hashes never collide — a silent total miss).
     */
   def buildSubstringStore(docs: DataFrame, name: String, k: Int = 8,
-      buckets: Int = 32,
+      buckets: Int = 0,
       maxDf: Option[Long] = Some(QuadraticGuardDefault)): Unit = {
     val spark = docs.sparkSession
     val gen = Warehouse.claimGeneration(spark, name)
@@ -1736,7 +1717,7 @@ object Dedup {
     */
   private def substringLayoutOf(spark: SparkSession, name: String,
       gens: Seq[Long]): (Option[Int], Int, Boolean) = {
-    val buckets = storedBucketsOf(spark, name, gens.head, "shingles", 0)
+    val buckets = Warehouse.storedBuckets(spark, name, gens.head, "shingles", 0)
     val hasKCol = Warehouse
       .table(spark, Warehouse.storeTableName(name, gens.head, "shingles"))
       .columns.contains("k")
@@ -1921,7 +1902,7 @@ object Dedup {
     var attempt = 0
     while (attempt < 5) {
       val (base, segs) = Warehouse.resolveSegmented(spark, name)
-      val buckets = storedBucketsOf(spark, name, base, "shingles", 0)
+      val buckets = Warehouse.storedBuckets(spark, name, base, "shingles", 0)
       val oldOcc = (base +: segs)
         .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "shingles")))
         .reduce(_ unionAll _)

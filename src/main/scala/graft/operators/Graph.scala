@@ -219,7 +219,7 @@ object Graph {
     * (src, dst, deg) and `wedges` (src, dst, w, wdeg), both
     * bucketed+sorted by src. Returns the published generation.
     */
-  def buildEdgeStore(t: Tables, store: String = "graphedges", buckets: Int = 32): Long =
+  def buildEdgeStore(t: Tables, store: String = "graphedges", buckets: Int = 0): Long =
     buildEdgeStoreOf(copurchaseEdges(t), weightedCopurchaseEdges(t), store, buckets)
 
   /** [[buildEdgeStore]] over explicit unweighted/weighted edge lists

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Distributed global ranking. `row_number() OVER (ORDER BY ...)` with no
   * partition key collapses the whole input into ONE task — fine for a
   * handful of post-aggregation rows, a bottleneck the moment the ranked
@@ -24,6 +26,10 @@ import org.apache.spark.sql.functions._
   * column) — with ties at a range boundary the partitioner may split
   * equal keys and the offset correction cannot restore a deterministic
   * order between them.
+  *
+  * The range width defaults to the session's fan-out
+  * ([[GraftSession.fanOut]]): an explicit range partitioning is never
+  * coalesced by AQE, so every extra partition is an extra task.
   */
 object Ranking {
 
@@ -38,7 +44,7 @@ object Ranking {
     */
   def globalRunningSum(df: DataFrame, order: Seq[Column], value: Column,
       outCol: String, numPartitions: Option[Int] = None): DataFrame = {
-    val parts = numPartitions.getOrElse(df.sparkSession.sessionState.conf.numShufflePartitions)
+    val parts = numPartitions.getOrElse(GraftSession.fanOut(df.sparkSession))
     // materialized ONCE for the same reason as globalRowNumber: the
     // offsets branch and the join branch must see identical range
     // boundaries and partition membership
@@ -63,7 +69,7 @@ object Ranking {
 
   def globalRowNumber(df: DataFrame, order: Seq[Column], outCol: String,
       numPartitions: Option[Int] = None): DataFrame = {
-    val parts = numPartitions.getOrElse(df.sparkSession.sessionState.conf.numShufflePartitions)
+    val parts = numPartitions.getOrElse(GraftSession.fanOut(df.sparkSession))
     // monotonically_increasing_id = pid * 2^33 + within-partition index
     // materialized ONCE: the offsets branch and the join branch must see
     // the same range boundaries and partition-local ids — relying on

@@ -801,7 +801,7 @@ object TextAnalysis {
     * and scores with the SAME [[bm25TermScore]] expression as the
     * in-job operator. Docs with no query-term hits are never read.
     */
-  def buildBm25Store(docs: DataFrame, name: String, buckets: Int = 32): Unit = {
+  def buildBm25Store(docs: DataFrame, name: String, buckets: Int = 0): Unit = {
     import graft.sources.Warehouse
     val spark = docs.sparkSession
     val gen = Warehouse.claimGeneration(spark, name)
@@ -901,13 +901,7 @@ object TextAnalysis {
     Warehouse.appendSegmentWith[Int](
       Warehouse.chainOf(spark, name), s"appendToBm25Store('$name')",
       dedupeTag, docs.isEmpty,
-      prepare = base => Warehouse.bucketCount(spark,
-        Warehouse.storeTableName(name, base, "postings"))
-        .getOrElse(throw new IllegalStateException(
-          s"BM25 store '$name' base generation $base has unreadable bucket " +
-            "metadata — refusing to append a segment whose layout could " +
-            "diverge from the base (cross-segment pruning would silently " +
-            "void); rebuild the base or drop the store")),
+      prepare = base => Warehouse.storedBuckets(spark, name, base, "postings", 0),
       writeData = (gen, layout) => writeBm25Generation(docs, name, gen, layout),
       dropData = gen => dropBm25Generation(spark, name, gen),
       beforePublish = beforePublish)
@@ -941,11 +935,7 @@ object TextAnalysis {
     var attempt = 0
     while (attempt < 5) {
       val (base, segs) = Warehouse.resolveSegmented(spark, name)
-      val buckets = Warehouse.bucketCount(spark,
-        Warehouse.storeTableName(name, base, "postings"))
-        .getOrElse(throw new IllegalStateException(
-          s"BM25 store '$name' base generation $base has unreadable bucket " +
-            "metadata — refusing a removal whose layout could diverge; rebuild the base"))
+      val buckets = Warehouse.storedBuckets(spark, name, base, "postings", 0)
       val oldPostings = (base +: segs)
         .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "postings")))
         .reduce(_ unionAll _)

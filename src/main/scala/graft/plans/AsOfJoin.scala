@@ -11,6 +11,8 @@ import org.apache.spark.sql.classic.GraftInterop
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
 
+import graft.GraftSession
+
 /** As-of join — for every left row, the single latest right row (per join
   * key) whose time is <= (or < when strict) the left row's time. The
   * operator Spark's built-ins lack; implemented the whole-operator way:
@@ -63,7 +65,7 @@ object AsOfJoinPlans {
     override def output: Seq[Attribute] = left.output ++ right.output.map(_.withNullability(true))
 
     override def requiredChildDistribution: Seq[Distribution] = {
-      val n = Some(conf.numShufflePartitions)
+      val n = Some(GraftSession.fanOut(conf))
       ClusteredDistribution(leftKeys, requireAllClusterKeys = true, n) ::
         ClusteredDistribution(rightKeys, requireAllClusterKeys = true, n) :: Nil
     }

@@ -11,9 +11,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Exchange on either side). At 100 TB this converts the nightly
   * fact⋈fact join from a full-network shuffle into a local merge.
   *
-  * Bucketed tables live in the session catalog (`saveAsTable`); the
-  * bucket count should match `spark.sql.shuffle.partitions` at write
-  * time so downstream aggregations can also reuse the clustering.
+  * Bucketed tables live in the session catalog (`saveAsTable`). The
+  * bucket count follows one rule: a build writes the session's fan-out
+  * ([[graft.GraftSession.fanOut]], `spark.sql.shuffle.partitions`)
+  * unless the caller passes an explicit count, and every append, fold
+  * and probe derives the count from the store's own catalog metadata
+  * ([[storedBuckets]]), never from a caller default.
   */
 object Warehouse {
 
@@ -28,18 +31,22 @@ object Warehouse {
     * per file). With the aligned exchange each bucket is exactly one
     * task → one file. This is the write-side hash distribution the
     * Iceberg `write.distribution-mode=hash` pattern names; the exchange
-    * it adds moves the compact store rows once, and at scale the bucket
-    * count (the caller's knob) grows with the corpus so per-task volume
-    * stays bounded.
+    * it adds moves the compact store rows once. `buckets = 0` writes
+    * the session's fan-out ([[graft.GraftSession.fanOut]]), sized with
+    * the cluster once per deployment; appends and folds pass the count
+    * their base was built with, so every generation of a store shares
+    * one layout.
     */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit =
-    df.repartition(buckets, org.apache.spark.sql.functions.col(bucketCol))
+  def writeBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit = {
+    val n = if (buckets > 0) buckets else graft.GraftSession.fanOut(df.sparkSession)
+    df.repartition(n, org.apache.spark.sql.functions.col(bucketCol))
       .write
       .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
+      .bucketBy(n, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
+  }
 
   /** Run independent bucketed table writes CONCURRENTLY (guide §2.6 —
     * overlap independent jobs): a store generation publishes 2+ tables
@@ -60,7 +67,8 @@ object Warehouse {
   /** The thread mechanics behind [[writeBucketedConcurrently]], for
     * publishes whose sides are not both bucketed (e.g. the BM25
     * postings table + its one-row stats table). Every task is awaited;
-    * the first failure rethrows after all settle.
+    * the first failure rethrows after all settle, carrying every other
+    * task's failure as a suppressed exception.
     */
   private[graft] def runConcurrently(tasks: Seq[() => Unit]): Unit =
     if (tasks.sizeIs <= 1) tasks.foreach(_.apply())
@@ -74,7 +82,11 @@ object Warehouse {
         th
       }
       threads.foreach(_.join())
-      if (!errs.isEmpty) throw errs.peek()
+      if (!errs.isEmpty) {
+        val first = errs.poll()
+        errs.forEach(e => if (e ne first) first.addSuppressed(e))
+        throw first
+      }
     }
 
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
@@ -88,6 +100,28 @@ object Warehouse {
       spark.sql(s"DESCRIBE EXTENDED $name")
         .filter(org.apache.spark.sql.functions.col("col_name") === "Num Buckets")
         .head().getString(1).trim.toInt).toOption
+
+  /** The bucket count store table `<name>__g<gen>_<suffix>` was built
+    * with, for every append, fold and probe that must match the store's
+    * layout: `given == 0` derives it from catalog metadata (unreadable
+    * metadata fails loudly — a guessed layout silently voids
+    * co-partitioning); a nonzero `given` is validated against the
+    * stored count, so caller-vs-store drift fails loudly too.
+    */
+  private[graft] def storedBuckets(spark: SparkSession, name: String, gen: Long,
+      suffix: String, given: Int): Int = {
+    val stored = bucketCount(spark, storeTableName(name, gen, suffix))
+      .getOrElse(throw new IllegalStateException(
+        s"store '$name' generation $gen has unreadable bucket metadata on " +
+          s"'$suffix' — refusing an append, fold or probe whose partitioning could " +
+          "diverge from the store (co-partitioned probing would silently void); " +
+          "rebuild the store"))
+    require(given == 0 || given == stored,
+      s"probe buckets=$given differs from store '$name''s built layout " +
+        s"($stored) — the probe side would join mis-partitioned; pass 0 " +
+        "to derive the layout from the store")
+    stored
+  }
 
   // ---------------------------------------------------------------------
   // Store generations — atomic publish for multi-table bucketed stores.
@@ -449,22 +483,11 @@ object Warehouse {
   def currentPathGeneration(root: String): Option[Long] =
     pathChainOf(root).state().current
 
-  /** Resolve the latest published generation or fail with a build hint. */
-  def resolvePathGeneration(root: String): Long =
-    currentPathGeneration(root).getOrElse(throw new IllegalStateException(
-      s"path store '$root' has no published generation — run its build first"))
-
   /** True iff the appender tag committed on the directory store — the
     * at-least-once replay check.
     */
   def pathSegmentTagPublished(root: String, tag: String): Boolean =
     pathChainOf(root).tagCommitted(tag)
-
-  /** The base generation a directory-store segment names, or None for
-    * full builds.
-    */
-  def pathSegmentBase(root: String, gen: Long): Option[Long] =
-    pathChainOf(root).segmentBase(gen)
 
   /** The live read set of a segment-aware directory store — the
     * [[resolveSegmented]] rules on the path protocol.

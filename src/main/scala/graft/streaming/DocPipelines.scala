@@ -456,7 +456,7 @@ object DocPipelines {
     * batches.
     */
   def bpeEncodeStream(docs: DataFrame, storeName: String,
-      onCounts: (DataFrame, Long) => Unit, buckets: Int = 32):
+      onCounts: (DataFrame, Long) => Unit, buckets: Int = 0):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream
       .outputMode(OutputMode.Append)

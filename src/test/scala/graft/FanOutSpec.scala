@@ -1,0 +1,78 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+
+import graft.operators.{Bpe, Dedup, Ranking, TextAnalysis}
+import graft.sources.{Tables, Warehouse}
+
+/** The fan-out rule ([[GraftSession.fanOut]]): every partition count
+  * graft picks explicitly is the session's `spark.sql.shuffle.partitions`
+  * — never AQE's `initialPartitionNum`, which `SQLConf.numShufflePartitions`
+  * returns while coalescing is on, and never a per-call-site constant.
+  */
+class FanOutSpec extends SparkSpecBase {
+  import spark.implicits._
+
+  private def width: Int = spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+  test("globalRowNumber range-partitions to the session width, not AQE's initial partition count") {
+    val init = spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum").toInt
+    assume(init != width, "the suite's session must start AQE shuffles wider than its floor")
+    val df = (0 until 100).map(i => (i.toLong, (i * 37) % 100)).toDF("id", "score")
+    val order = Seq(col("score").desc, col("id"))
+    val ranked = Ranking.globalRowNumber(df, order, "position")
+    val checkpointParts = ranked.queryExecution.analyzed
+      .collect { case r: LogicalRDD => r.rdd.getNumPartitions }.distinct
+    assert(checkpointParts == Seq(width),
+      s"the ranking's checkpoint must hold $width partitions, got $checkpointParts")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("position"))).sortBy(_._1).toSeq
+    val wide = Ranking.globalRowNumber(df, order, "position", numPartitions = Some(256))
+    assert(rows(ranked) == rows(wide), "the numbering must not depend on the range width")
+    assert(rows(ranked).map(_._2).sorted == (1 to 100))
+  }
+
+  test("default-built signature, BM25 and BPE-dict stores take the session width; an explicit count wins") {
+    val t = Tables(spark, sfDir)
+    val docs = t.documents.filter(col("doc_id") < 200)
+    val stores = Seq(
+      ("fan_sig", Seq("sigs", "bands"), "bands",
+        (b: Int) => Dedup.buildSignatureStore(docs, "fan_sig", buckets = b)),
+      ("fan_bm25", Seq("postings", "stats"), "postings",
+        (b: Int) => TextAnalysis.buildBm25Store(docs, "fan_bm25", buckets = b)),
+      ("fan_bpe", Seq("dict", "merges"), "dict",
+        (b: Int) => Bpe.buildDictStore(t, "fan_bpe", numMerges = 2, buckets = b)))
+    def built(name: String, suffix: String): Option[Int] = Warehouse.bucketCount(spark,
+      Warehouse.storeTableName(name, Warehouse.resolveGeneration(spark, name), suffix))
+    for ((name, suffixes, bucketed, build) <- stores) {
+      Warehouse.dropStore(spark, name, suffixes)
+      build(0)
+      assert(built(name, bucketed).contains(width), s"$name default build")
+      build(8)
+      assert(built(name, bucketed).contains(8), s"$name explicit buckets = 8")
+      Warehouse.dropStore(spark, name, suffixes)
+    }
+  }
+
+  test("no main source asks SQLConf.numShufflePartitions for a width") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    val blockComment = "(?s)/\\*.*?\\*/".r
+    val lineComment = "//[^\n]*".r
+    val offenders = files.filter { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      lineComment.replaceAllIn(blockComment.replaceAllIn(src, ""), "")
+        .contains("numShufflePartitions")
+    }
+    assert(offenders.isEmpty,
+      s"use GraftSession.fanOut instead of numShufflePartitions in: ${offenders.mkString(", ")}")
+  }
+}

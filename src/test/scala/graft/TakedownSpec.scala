@@ -206,6 +206,30 @@ class TakedownSpec extends SparkSpecBase {
     Seq("tk_sig", "tk_sig_ref").foreach(Warehouse.dropStore(spark, _, Seq("bands", "sigs")))
   }
 
+  test("takedown → append → takedown probes identically to a one-shot rebuild of the filtered corpus") {
+    def key(df: DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("dup_of"),
+        r.getAs[Double]("est_jaccard"))).toSet
+    Warehouse.dropStore(spark, "tk_twice", Seq("bands", "sigs"))
+    Warehouse.dropStore(spark, "tk_twice_ref", Seq("bands", "sigs"))
+    Dedup.buildSignatureStore(corpus.filter(col("doc_id") < 200), "tk_twice")
+    Dedup.removeFromSignatureStore(
+      corpus.filter(col("doc_id") >= 100 && col("doc_id") < 150).select(col("doc_id")), "tk_twice")
+    // the takedown fold keeps the build's band-index column order
+    val folded = Warehouse.resolveGeneration(spark, "tk_twice")
+    assert(Warehouse.table(spark, Warehouse.storeTableName("tk_twice", folded, "bands"))
+      .columns.toSeq == Seq("band_idx", "band_hash", "doc_id"))
+    Dedup.appendToSignatureStore(corpus.filter(col("doc_id") >= 200), "tk_twice")
+    Dedup.removeFromSignatureStore(
+      corpus.filter(col("doc_id") >= 210 && col("doc_id") < 220).select(col("doc_id")), "tk_twice")
+    Dedup.buildSignatureStore(filteredCorpus, "tk_twice_ref")
+    val got = key(Dedup.minhashIncrementalAgainstStore("tk_twice", probeBatch))
+    val want = key(Dedup.minhashIncrementalAgainstStore("tk_twice_ref", probeBatch))
+    assert(got == want, s"the second takedown must equal the filtered rebuild: got $got want $want")
+    assert(got.nonEmpty, "the filtered corpus still has cross-split near-dups")
+    Seq("tk_twice", "tk_twice_ref").foreach(Warehouse.dropStore(spark, _, Seq("bands", "sigs")))
+  }
+
   test("removal-vs-append race: a segment published mid-removal refuses the publish; the re-fold keeps the segment AND the removal") {
     def key(df: DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("dup_of"))).toSet
@@ -541,7 +565,7 @@ class TakedownSpec extends SparkSpecBase {
     Dedup.buildClusterStoreFromSignatureStore(spark, "tk_cl2_sig", "tk_cl2",
       threshold = 0.7, buckets = 16)
     // a maintained publish derives the 16-bucket layout from the prior
-    // generation, never the caller-side default of 32
+    // generation, never the session's default fan-out
     val batch = corpus.filter(col("doc_id") >= 50 && col("doc_id") < 60)
     val labels = Dedup.maintainClustersAgainstStore("tk_cl2", "tk_cl2_sig",
       batch, threshold = 0.0)

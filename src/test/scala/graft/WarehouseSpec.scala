@@ -886,7 +886,7 @@ class WarehouseSpec extends SparkSpecBase {
     assert(key(TextAnalysis.bm25AgainstStore(spark, "bm25replay")) == scores,
       "the store must be unchanged after the replayed append")
     // the derived bucket layout: the segment must carry the BASE's 8
-    // buckets even though the append call left the 32-bucket default
+    // buckets, not the session's default fan-out
     assert(Warehouse.bucketCount(spark,
       Warehouse.storeTableName("bm25replay", first.get, "postings")).contains(8),
       "the segment must inherit the base build's bucket layout")
@@ -1315,5 +1315,17 @@ class WarehouseSpec extends SparkSpecBase {
     val spans = ivfAudit.filter(_.getString(0) == "codegen")
     assert(spans.nonEmpty && spans.forall(_.getString(6).matches("fused=[1-9]\\d*")),
       s"codegen spans must surface with their fused sizes: ${spans.mkString}")
+  }
+
+  test("runConcurrently rethrows one failure carrying every other task's as suppressed") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger()
+    val e = intercept[IllegalStateException](Warehouse.runConcurrently(Seq(
+      () => throw new IllegalStateException("left write failed"),
+      () => { ran.incrementAndGet(); () },
+      () => throw new IllegalStateException("right write failed"))))
+    assert(ran.get == 1, "every task runs to completion before the rethrow")
+    val messages = (e +: e.getSuppressed.toSeq).map(_.getMessage).toSet
+    assert(messages == Set("left write failed", "right write failed"),
+      s"both failures must be reachable from the rethrown one: $messages")
   }
 }
