@@ -190,7 +190,8 @@ object SparkEntry {
       // also runs ungated at minAge 0)
       val root = s"${sys.props("java.io.tmpdir")}/graft_s10_ivf_${new java.io.File(dir).getName}"
       Similarity.buildIvfIndex(t, root)
-      graft.sources.Warehouse.vacuumPathGenerations(root, keep = 1, minAgeMs = 0L)
+      graft.sources.Warehouse.vacuumGenerations(
+        graft.sources.Warehouse.pathStore(root), keep = 1, minAgeMs = 0L)
       Similarity.searchIvfIndex(t, root)
     }),
     "s11_ivf_append_probe" -> ((s, dir) => {

@@ -237,28 +237,17 @@ object Bpe {
   def buildDictStore(t: Tables, name: String, numMerges: Int = 8, buckets: Int = 0): Unit = {
     import graft.sources.Warehouse
     val spark = t.documents.sparkSession
-    val gen = Warehouse.claimGeneration(spark, name)
-    val dictT = Warehouse.storeTableName(name, gen, "dict")
-    val mergesT = Warehouse.storeTableName(name, gen, "merges")
-    try {
+    Warehouse.build(Warehouse.tableStore(spark, name, Seq("dict", "merges"))) { gen =>
       val (steps, dict) = train(t, numMerges)
       try
         Warehouse.writeBucketed(
           dict.select(col("word"), size(col("syms")).cast(LongType).as("word_bpe")),
-          dictT, "word", buckets)
+          Warehouse.storeTableName(name, gen, "dict"), "word", buckets)
       finally dict.unpersist()
       spark.createDataFrame(steps)
         .toDF("step", "lhs", "rhs", "merged", "pair_count")
-        .write.format("parquet").saveAsTable(mergesT)
-      Warehouse.publishGeneration(spark, name, gen)
-    } catch {
-      case e: Throwable =>
-        // guarded: drops + burn only when the chain provably shows the
-        // generation unpublished (an ambiguous publish self-verifies;
-        // a double-failure must leak, never delete live data)
-        Warehouse.cleanupFailedBuild(spark, name, gen, Seq("dict", "merges"))
-        throw e
-    }
+        .write.format("parquet").saveAsTable(Warehouse.storeTableName(name, gen, "merges"))
+    }: Unit
   }
 
   /** t14 against the persisted store: the corpus is tokenized once, the

@@ -154,7 +154,7 @@ object Dedup {
     *
     * GENERATIONS: each build writes fresh `<name>__g<N>_{sigs,bands}`
     * tables and atomically publishes N only when both are complete
-    * ([[Warehouse.claimGeneration]]/[[Warehouse.publishGeneration]]) —
+    * ([[Warehouse.build]]) —
     * a rebuild never touches the live generation, so probes racing it
     * keep reading their resolved generation bit-identically
     * (spec-verified). Old generations are reclaimed by
@@ -163,19 +163,13 @@ object Dedup {
   def buildSignatureStore(docs: DataFrame, name: String, numHashes: Int = 64,
       bands: Int = 16, buckets: Int = 0,
       maxBandBucket: Option[Long] = Some(QuadraticGuardDefault)): Unit = {
-    val spark = docs.sparkSession
-    val gen = Warehouse.claimGeneration(spark, name)
-    try {
+    Warehouse.build(signatureStore(docs.sparkSession, name)) { gen =>
       writeSignatureGeneration(docs, name, gen, numHashes, bands, buckets, maxBandBucket)
-      Warehouse.publishGeneration(spark, name, gen)
-    } catch { case e: Throwable =>
-      // guarded cleanup (incl. a tripped guard): drop the partial tables
-      // and burn the claim only when the chain provably shows gen
-      // unpublished; the prior generation, if any, stays live untouched
-      Warehouse.cleanupFailedBuild(spark, name, gen, Seq("sigs", "bands"))
-      throw e
-    }
+    }: Unit
   }
+
+  private def signatureStore(spark: SparkSession, name: String): Warehouse.Store =
+    Warehouse.tableStore(spark, name, Seq("sigs", "bands"))
 
   /** ONE definition of a signature-store generation's content — the
     * sigs table (bucketed doc_id) and the band index derived from
@@ -216,6 +210,15 @@ object Dedup {
     Warehouse.writeBucketedConcurrently(Seq(
       (hashed, sigsT, "doc_id", buckets),
       (banded, bandsT, "band_hash", buckets)))
+    checkBandBuckets(spark, name, bandsT, maxBandBucket)
+  }
+
+  /** The quadratic guard over a just-written band index: a band bucket
+    * holding more than `maxBandBucket` docs throws, refusing the
+    * publish (the caller's guarded cleanup drops the generation).
+    */
+  private def checkBandBuckets(spark: SparkSession, name: String, bandsT: String,
+      maxBandBucket: Option[Long]): Unit =
     maxBandBucket.foreach { m =>
       val worst = Warehouse.table(spark, bandsT)
         .groupBy(col("band_idx"), col("band_hash")).agg(count(lit(1)).as("n"))
@@ -228,7 +231,6 @@ object Dedup {
             "(fix the corpus or opt out with maxBandBucket = None)")
       }
     }
-  }
 
   /** The signature-store layout constants, derived FROM THE STORE's
     * base generation (signature length from the stored array, band
@@ -274,16 +276,13 @@ object Dedup {
       dedupeTag: Option[String] = None,
       maxBandBucket: Option[Long] = Some(QuadraticGuardDefault)): Option[Long] = {
     val spark = docs.sparkSession
-    Warehouse.appendSegmentWith[(Int, Int, Int)](
-      Warehouse.chainOf(spark, name), s"appendToSignatureStore('$name')",
+    Warehouse.appendSegmentWith[(Int, Int, Int)](signatureStore(spark, name),
       dedupeTag, docs.isEmpty,
       prepare = base => signatureLayoutOf(spark, name, base),
       writeData = (gen, layout) => {
         val (numHashes, bands, buckets) = layout
         writeSignatureGeneration(docs, name, gen, numHashes, bands, buckets, maxBandBucket)
-      },
-      dropData = gen => Seq("sigs", "bands").foreach(sfx =>
-        scala.util.Try(Warehouse.drop(spark, Warehouse.storeTableName(name, gen, sfx))): Unit))
+      })
   }
 
   /** COMPACT the segmented signature store (optionally absorbing one
@@ -306,12 +305,10 @@ object Dedup {
     * and its window is corpus-sized, so a segment published DURING it
     * (the documented compact-while-streaming usage) would be superseded
     * without its rows — and its committed dedupe tag would make the
-    * replay skip: silent permanent loss. The publish therefore commits
-    * through [[Warehouse.publishGenerationExpecting]], which refuses
-    * atomically ([[graft.sources.StaleFoldException]]) when the live
-    * set changed; the fold drops its never-visible tables and re-folds
-    * against the fresh set, absorbing the new segments (bounded
-    * retries, mirroring [[Warehouse.appendSegmentWith]]'s).
+    * replay skip: silent permanent loss. The publish therefore runs
+    * through [[Warehouse.fold]], which publishes conditionally on the
+    * resolved set and re-folds against the fresh set when it changed,
+    * absorbing the new segments.
     */
   def growSignatureStore(batch: DataFrame, name: String,
       maxBandBucket: Option[Long] = Some(QuadraticGuardDefault)): Unit =
@@ -326,7 +323,7 @@ object Dedup {
       maxBandBucket: Option[Long] = Some(QuadraticGuardDefault),
       beforePublish: () => Unit = () => ()): Unit = {
     val spark = batch.sparkSession
-    refoldSignatureStore(spark, name, s"growSignatureStore('$name')",
+    refoldSignatureStore(spark, name,
       fold = (oldSigs, layout) => {
         val fresh = spreadIfNarrow(batch.select(col("doc_id"), col("text")))
           .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
@@ -355,7 +352,7 @@ object Dedup {
       beforePublish: () => Unit = () => ()): Unit = {
     val spark = docIds.sparkSession
     val ids = docIds.select(col("doc_id")).distinct().localCheckpoint(true)
-    refoldSignatureStore(spark, name, s"removeFromSignatureStore('$name')",
+    refoldSignatureStore(spark, name,
       fold = (oldSigs, _) => oldSigs.join(broadcast(ids), Seq("doc_id"), "left_anti"),
       maxBandBucket = None, beforePublish,
       // a removal only filters rows: the stored band index anti-joins
@@ -367,34 +364,27 @@ object Dedup {
   }
 
   /** The shared FOLD core of [[growSignatureStore]] and
-    * [[removeFromSignatureStore]]: resolve the live set, derive the
-    * layout from the base, `fold` the unioned stored signatures into
-    * the next full build, publish CONDITIONALLY on the resolved set
-    * still being live ([[Warehouse.publishGenerationExpecting]] — see
-    * the fold-vs-append note on [[growSignatureStore]]), and re-fold on
-    * a refused publish (bounded retries, mirroring
-    * [[Warehouse.appendSegmentWith]]'s).
+    * [[removeFromSignatureStore]]: derive the layout from the live
+    * base, `fold` the unioned stored signatures into the next full
+    * build, and publish it through [[Warehouse.fold]] (see the
+    * fold-vs-append note on [[growSignatureStore]]).
     */
-  private def refoldSignatureStore(spark: SparkSession, name: String, what: String,
+  private def refoldSignatureStore(spark: SparkSession, name: String,
       fold: (DataFrame, (Int, Int, Int)) => DataFrame,
       maxBandBucket: Option[Long], beforePublish: () => Unit,
-      foldBands: Option[DataFrame => DataFrame] = None): Unit = {
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, segs) = Warehouse.resolveSegmented(spark, name)
-      val layout = signatureLayoutOf(spark, name, base)
-      val (_, bands, buckets) = layout
-      // generations union BY NAME: a band index written by an older
-      // takedown fold carries (doc_id, band_idx, band_hash), and a
-      // positional union with a segment's (band_idx, band_hash, doc_id)
-      // would publish a corrupt index
-      val oldSigs = (base +: segs)
-        .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "sigs")))
-        .reduce(_ unionByName _)
-      val gen = Warehouse.claimGeneration(spark, name)
-      val sigsT = Warehouse.storeTableName(name, gen, "sigs")
-      val bandsT = Warehouse.storeTableName(name, gen, "bands")
-      try {
+      foldBands: Option[DataFrame => DataFrame] = None): Unit =
+    Warehouse.fold(signatureStore(spark, name))(
+      prepare = (base, segs) => Some((base +: segs, signatureLayoutOf(spark, name, base))))(
+      write = { case (gen, (gens, layout)) =>
+        val (_, bands, buckets) = layout
+        // generations union BY NAME: a band index written by an older
+        // takedown fold carries (doc_id, band_idx, band_hash), and a
+        // positional union with a segment's (band_idx, band_hash, doc_id)
+        // would publish a corrupt index
+        def stored(sfx: String) = gens
+          .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, sfx)))
+          .reduce(_ unionByName _)
+        val bandsT = Warehouse.storeTableName(name, gen, "bands")
         // the band index: a fold that only FILTERS rows (takedown) passes
         // `foldBands` and the stored index is filtered the same way —
         // the stored bands derive row-for-row from the stored sigs, so
@@ -409,54 +399,22 @@ object Dedup {
         // tables publish CONCURRENTLY (guide §2.6 — the sequential
         // publishes were ~2/3 of every store phase's wall at sf0.1).
         val (sigsDf, bandsDf) = foldBands match {
-          case Some(fb) =>
-            val oldBands = (base +: segs)
-              .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "bands")))
-              .reduce(_ unionByName _)
-            (fold(oldSigs, layout), fb(oldBands))
+          case Some(fb) => (fold(stored("sigs"), layout), fb(stored("bands")))
           case None =>
-            val foldedSigs = fold(oldSigs, layout).localCheckpoint(true)
+            val foldedSigs = fold(stored("sigs"), layout).localCheckpoint(true)
             (foldedSigs,
               foldedSigs.select(col("doc_id"), posexplode(sig_bands(col("sig"), bands)))
                 .select(col("pos").as("band_idx"), col("col").as("band_hash"),
                   col("doc_id")))
         }
         Warehouse.writeBucketedConcurrently(Seq(
-          (sigsDf, sigsT, "doc_id", buckets),
+          (sigsDf, Warehouse.storeTableName(name, gen, "sigs"), "doc_id", buckets),
           (bandsDf, bandsT, "band_hash", buckets)))
         // the same quadratic guard as the full build — a batch can mint a
-        // corpus-hot bucket too; the guarded catch below unpublishes
-        maxBandBucket.foreach { m =>
-          val worst = Warehouse.table(spark, bandsT)
-            .groupBy(col("band_idx"), col("band_hash")).agg(count(lit(1)).as("n"))
-            .filter(col("n") > m).orderBy(col("n").desc).limit(1).collect()
-          worst.headOption.foreach { r =>
-            throw new IllegalStateException(
-              s"signature store '$name' band bucket exceeds maxBandBucket=$m after absorb: " +
-                s"band ${r.get(0)} hash ${r.get(1)} holds ${r.getAs[Long]("n")} docs — " +
-                "store generation not published (fix the corpus or opt out with maxBandBucket = None)")
-          }
-        }
-        beforePublish()
-        // conditional on the folded live set still being current: an
-        // append that landed mid-fold refuses this publish (nothing
-        // committed, nothing visible) and the loop re-folds with the
-        // new segment in the union
-        Warehouse.publishGenerationExpecting(spark, name, gen, base, segs)
-        return
-      } catch {
-        case _: graft.sources.StaleFoldException =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("sigs", "bands"))
-          attempt += 1
-        case e: Throwable =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("sigs", "bands"))
-          throw e
-      }
-    }
-    throw new IllegalStateException(
-      s"$what lost to 5 consecutive concurrent " +
-        "appends/rebuilds — aborting (the batch is safe to replay)")
-  }
+        // corpus-hot bucket too
+        checkBandBuckets(spark, name, bandsT, maxBandBucket)
+      },
+      beforePublish)
 
   /** d7 against the persisted store: the new batch's band keys
     * (explicitly partitioned to the store's bucket layout) join the
@@ -556,22 +514,17 @@ object Dedup {
   def buildClusterStore(docs: DataFrame, name: String, numHashes: Int = 64,
       bands: Int = 16, threshold: Double = 0.5, buckets: Int = 0,
       maxIter: Int = 100): Unit = {
-    val spark = docs.sparkSession
-    val gen = Warehouse.claimGeneration(spark, name)
-    val labelsT = Warehouse.storeTableName(name, gen, "labels")
-    try {
+    Warehouse.build(clusterStore(docs.sparkSession, name)) { gen =>
       Warehouse.writeBucketed(
         clustersOfPairs(minhashPairsOf(docs, numHashes, bands, threshold)
           .select(col("doc_a"), col("doc_b")), maxIter)
           .withColumn("threshold", lit(threshold)),
-        labelsT, "doc_id", buckets)
-      Warehouse.publishGeneration(spark, name, gen)
-    } catch { case e: Throwable =>
-      // guarded cleanup: only when the chain provably shows gen unpublished
-      Warehouse.cleanupFailedBuild(spark, name, gen, Seq("labels"))
-      throw e
-    }
+        Warehouse.storeTableName(name, gen, "labels"), "doc_id", buckets)
+    }: Unit
   }
+
+  private def clusterStore(spark: SparkSession, name: String): Warehouse.Store =
+    Warehouse.tableStore(spark, name, Seq("labels"))
 
   /** [[buildClusterStore]] FROM an already-published signature store —
     * the composition a real ingest loop runs: the corpus's signatures
@@ -619,18 +572,11 @@ object Dedup {
       .filter(sig_agreement(col("sig_a"), col("sig_b")).cast("double") /
         size(col("sig_a")) >= threshold)
       .select(col("doc_a"), col("doc_b"))
-    val gen = Warehouse.claimGeneration(spark, name)
-    val labelsT = Warehouse.storeTableName(name, gen, "labels")
-    try {
+    Warehouse.build(clusterStore(spark, name)) { gen =>
       Warehouse.writeBucketed(
         clustersOfPairs(pairs, maxIter).withColumn("threshold", lit(threshold)),
-        labelsT, "doc_id", buckets)
-      Warehouse.publishGeneration(spark, name, gen)
-    } catch { case e: Throwable =>
-      // guarded cleanup: only when the chain provably shows gen unpublished
-      Warehouse.cleanupFailedBuild(spark, name, gen, Seq("labels"))
-      throw e
-    }
+        Warehouse.storeTableName(name, gen, "labels"), "doc_id", buckets)
+    }: Unit
   }
 
   /** TAKEDOWN at the cluster layer: relabel the components AFTER the
@@ -860,16 +806,10 @@ object Dedup {
     }
     val stamped = stampTh.fold(labels)(th =>
       labels.select(col("doc_id"), col("cluster_id")).withColumn("threshold", lit(th)))
-    val gen = Warehouse.claimGeneration(spark, name)
-    val labelsT = Warehouse.storeTableName(name, gen, "labels")
-    try {
-      Warehouse.writeBucketed(stamped, labelsT, "doc_id", useBuckets)
-      Warehouse.publishGeneration(spark, name, gen)
-    } catch { case e: Throwable =>
-      // guarded cleanup: only when the chain provably shows gen unpublished
-      Warehouse.cleanupFailedBuild(spark, name, gen, Seq("labels"))
-      throw e
-    }
+    Warehouse.build(clusterStore(spark, name)) { gen =>
+      Warehouse.writeBucketed(stamped,
+        Warehouse.storeTableName(name, gen, "labels"), "doc_id", useBuckets)
+    }: Unit
   }
 
   /** d3: SimHash near-dup. 64-bit signature map-side; pigeonhole banding
@@ -1121,19 +1061,13 @@ object Dedup {
     */
   def buildNoveltyStore(docs: DataFrame, name: String, k: Int = 3,
       buckets: Int = 0): Unit = {
-    val spark = docs.sparkSession
-    val gen = Warehouse.claimGeneration(spark, name)
-    try {
+    Warehouse.build(noveltyStore(docs.sparkSession, name)) { gen =>
       writeNoveltyGeneration(docs, name, gen, k, buckets)
-      Warehouse.publishGeneration(spark, name, gen)
-    } catch { case e: Throwable =>
-      // the sibling builders' failure contract, guarded: drop the
-      // partial table and burn the claim only when the chain provably
-      // shows gen unpublished; the previous generation stays resolvable
-      Warehouse.cleanupFailedBuild(spark, name, gen, Seq("shdf"))
-      throw e
-    }
+    }: Unit
   }
+
+  private def noveltyStore(spark: SparkSession, name: String): Warehouse.Store =
+    Warehouse.tableStore(spark, name, Seq("shdf"))
 
   /** ONE definition of a novelty-store generation's content — the
     * (h, df, k) distinct-doc frequency table bucketed on the hash —
@@ -1155,10 +1089,6 @@ object Dedup {
       dfT, "h", buckets)
   }
 
-  /** The novelty store's (k, buckets) layout from its base generation —
-    * the substring store's derivation rules (legacy stores without the
-    * k column return None and the caller's explicit k stands).
-    */
   /** Layout of the novelty store at `gens` (base first): buckets and
     * the k-column presence come from the base; the recorded k comes
     * from the FIRST generation holding a row — a base emptied by a full
@@ -1215,8 +1145,7 @@ object Dedup {
   def appendToNoveltyStore(docs: DataFrame, name: String,
       dedupeTag: Option[String] = None, k: Int = 0): Option[Long] = {
     val spark = docs.sparkSession
-    Warehouse.appendSegmentWith[(Int, Int)](
-      Warehouse.chainOf(spark, name), s"appendToNoveltyStore('$name')",
+    Warehouse.appendSegmentWith[(Int, Int)](noveltyStore(spark, name),
       dedupeTag, docs.isEmpty,
       prepare = base => {
         // span the base's published segments too: a base emptied by a
@@ -1228,9 +1157,7 @@ object Dedup {
         (resolveNoveltyK(name, k, kOpt, hasK), buckets)
       },
       writeData = (gen, layout) =>
-        writeNoveltyGeneration(docs, name, gen, layout._1, layout._2),
-      dropData = gen => scala.util.Try(
-        Warehouse.drop(spark, Warehouse.storeTableName(name, gen, "shdf"))): Unit)
+        writeNoveltyGeneration(docs, name, gen, layout._1, layout._2))
   }
 
   /** COMPACT the segmented novelty store: merge base ∪ segments by
@@ -1242,40 +1169,28 @@ object Dedup {
     * only through [[appendToNoveltyStore]]'s tagged segments.
     */
   def growNoveltyStore(name: String, spark: SparkSession): Unit =
-    growNoveltyStoreHooked(name, spark)
-
-  private[graft] def growNoveltyStoreHooked(name: String, spark: SparkSession,
-      beforePublish: () => Unit = () => ()): Unit = {
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, segs) = Warehouse.resolveSegmented(spark, name)
-      val (kOpt, buckets, _) = noveltyLayoutOf(spark, name, base +: segs)
-      val folded = (base +: segs)
-        .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "shdf"))
-          .select(col("h"), col("df")))
-        .reduce(_ unionAll _)
-        .groupBy(col("h")).agg(sum(col("df")).as("df"))
-      val withK = kOpt.fold(folded)(sk => folded.select(col("h"), col("df"), lit(sk).as("k")))
-      val gen = Warehouse.claimGeneration(spark, name)
-      try {
-        Warehouse.writeBucketed(withK,
+    Warehouse.fold(noveltyStore(spark, name))(
+      prepare = (base, segs) => {
+        val (kOpt, buckets, _) = noveltyLayoutOf(spark, name, base +: segs)
+        Some((summedNoveltyDf(spark, name, base +: segs), kOpt, buckets))
+      })(
+      write = { case (gen, (folded, kOpt, buckets)) =>
+        Warehouse.writeBucketed(withNoveltyK(folded, kOpt),
           Warehouse.storeTableName(name, gen, "shdf"), "h", buckets)
-        beforePublish()
-        Warehouse.publishGenerationExpecting(spark, name, gen, base, segs)
-        return
-      } catch {
-        case _: graft.sources.StaleFoldException =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("shdf"))
-          attempt += 1
-        case e: Throwable =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("shdf"))
-          throw e
-      }
-    }
-    throw new IllegalStateException(
-      s"growNoveltyStore('$name') lost to 5 consecutive concurrent " +
-        "appends/rebuilds — aborting (the fold is safe to replay)")
-  }
+      },
+      beforePublish = () => ())
+
+  /** The (h, df) sum-merge of a novelty store's generations `gens`. */
+  private def summedNoveltyDf(spark: SparkSession, name: String,
+      gens: Seq[Long]): DataFrame =
+    gens.map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "shdf"))
+        .select(col("h"), col("df")))
+      .reduce(_ unionAll _)
+      .groupBy(col("h")).agg(sum(col("df")).as("df"))
+
+  /** Re-attach the recorded k column (absent on a legacy store). */
+  private def withNoveltyK(hdf: DataFrame, kOpt: Option[Int]): DataFrame =
+    kOpt.fold(hdf)(sk => hdf.select(col("h"), col("df"), lit(sk).as("k")))
 
   /** d15 at ingest: the NEW batch's novelty AGAINST the persisted
     * corpus index — a shingle is novel when the corpus has never seen
@@ -1351,54 +1266,35 @@ object Dedup {
     */
   def removeFromNoveltyStore(removedDocs: DataFrame, name: String, k: Int = 0): Unit = {
     val spark = removedDocs.sparkSession
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, segs) = Warehouse.resolveSegmented(spark, name)
-      val (kOpt, buckets, hasK) = noveltyLayoutOf(spark, name, base +: segs)
-      val oldDf = (base +: segs)
-        .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "shdf"))
-          .select(col("h"), col("df")))
-        .reduce(_ unionAll _)
-        .groupBy(col("h")).agg(sum(col("df")).as("df"))
-      // a removal from a fully-EMPTY store is a no-op (the subtraction
-      // result is empty under any k) — return before demanding a k the
-      // emptied store can no longer record, so a second takedown through
-      // the removeDocs cascade never wedges mid-cascade
-      if (kOpt.isEmpty && oldDf.isEmpty) return
-      val kk = resolveNoveltyK(name, k, kOpt, hasK)
-      // dedupe by doc_id like every sibling remover: a doc listed twice
-      // (two opt-out lists concatenated) would otherwise subtract its
-      // shingles' df twice — dropping rows the filtered corpus still
-      // holds, a violated identity contract, not just a wrong count
-      val rdf = spreadIfNarrow(
-          removedDocs.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
-        .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
-        .filter(size(col("tokens")) >= kk)
-        .select(col("doc_id"), explode(array_distinct(shingle_hashes(col("tokens"), kk))).as("h"))
-        .groupBy(col("h")).agg(count(lit(1)).as("rdf"))
-      val gen = Warehouse.claimGeneration(spark, name)
-      val dfT = Warehouse.storeTableName(name, gen, "shdf")
-      val subtracted = oldDf.join(rdf, Seq("h"), "left")
-        .select(col("h"), (col("df") - coalesce(col("rdf"), lit(0L))).as("df"))
-        .filter(col("df") > 0)
-      try {
-        Warehouse.writeBucketed(
-          kOpt.fold(subtracted)(sk => subtracted.select(col("h"), col("df"), lit(sk).as("k"))),
-          dfT, "h", buckets)
-        Warehouse.publishGenerationExpecting(spark, name, gen, base, segs)
-        return
-      } catch {
-        case _: graft.sources.StaleFoldException =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("shdf"))
-          attempt += 1
-        case e: Throwable =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("shdf"))
-          throw e
-      }
-    }
-    throw new IllegalStateException(
-      s"removeFromNoveltyStore('$name') lost to 5 consecutive concurrent " +
-        "appends/rebuilds — aborting (the removal is safe to replay)")
+    Warehouse.fold(noveltyStore(spark, name))(
+      prepare = (base, segs) => {
+        val (kOpt, buckets, hasK) = noveltyLayoutOf(spark, name, base +: segs)
+        val oldDf = summedNoveltyDf(spark, name, base +: segs)
+        // a removal from a fully-EMPTY store is a no-op (the subtraction
+        // result is empty under any k) — return before demanding a k the
+        // emptied store can no longer record, so a second takedown through
+        // the removeDocs cascade never wedges mid-cascade
+        if (kOpt.isEmpty && oldDf.isEmpty) None
+        else Some((oldDf, kOpt, resolveNoveltyK(name, k, kOpt, hasK), buckets))
+      })(
+      write = { case (gen, (oldDf, kOpt, kk, buckets)) =>
+        // dedupe by doc_id like every sibling remover: a doc listed twice
+        // (two opt-out lists concatenated) would otherwise subtract its
+        // shingles' df twice — dropping rows the filtered corpus still
+        // holds, a violated identity contract, not just a wrong count
+        val rdf = spreadIfNarrow(
+            removedDocs.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
+          .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
+          .filter(size(col("tokens")) >= kk)
+          .select(col("doc_id"), explode(array_distinct(shingle_hashes(col("tokens"), kk))).as("h"))
+          .groupBy(col("h")).agg(count(lit(1)).as("rdf"))
+        val subtracted = oldDf.join(rdf, Seq("h"), "left")
+          .select(col("h"), (col("df") - coalesce(col("rdf"), lit(0L))).as("df"))
+          .filter(col("df") > 0)
+        Warehouse.writeBucketed(withNoveltyK(subtracted, kOpt),
+          Warehouse.storeTableName(name, gen, "shdf"), "h", buckets)
+      },
+      beforePublish = () => ())
   }
 
   def substringSpans(t: Tables, k: Int = 8, minSpanTokens: Int = 16,
@@ -1570,18 +1466,6 @@ object Dedup {
           x.getField("pos") >= c.getField("s") && x.getField("pos") <= c.getField("e"))))
   }
 
-  /** d20 over an arbitrary (doc_id, text) frame — the entry point the
-    * dc9 fixed-point spec re-runs on a REWRITTEN survivor corpus, and
-    * the non-Tables twin of [[substringRewrite]] (exactly
-    * [[substringSpansOfDocs]]'s relationship to [[substringSpans]]).
-    */
-  def substringRewriteOfDocs(docs: DataFrame, k: Int = 8, minSpanTokens: Int = 16,
-      maxDf: Option[Long] = None): DataFrame =
-    substringRewriteKept(docs, k, minSpanTokens, maxDf)
-      .select(col("doc_id"), col("n_tokens"), col("removed_tokens"),
-        array_join(col("kept"), " ").as("text"))
-      .orderBy(col("doc_id"))
-
   /** d20's engine over an arbitrary (doc_id, text) frame, emitting the
     * kept TOKEN ARRAY per doc — (doc_id, n_tokens, removed_tokens,
     * kept: array<string>) — the form [[graft.operators.Curation]]'s
@@ -1661,16 +1545,13 @@ object Dedup {
   def buildSubstringStore(docs: DataFrame, name: String, k: Int = 8,
       buckets: Int = 0,
       maxDf: Option[Long] = Some(QuadraticGuardDefault)): Unit = {
-    val spark = docs.sparkSession
-    val gen = Warehouse.claimGeneration(spark, name)
-    try {
+    Warehouse.build(substringStore(docs.sparkSession, name)) { gen =>
       writeSubstringGeneration(docs, name, gen, k, buckets, maxDf)
-      Warehouse.publishGeneration(spark, name, gen)
-    } catch { case e: Throwable =>
-      Warehouse.cleanupFailedBuild(spark, name, gen, Seq("shingles"))
-      throw e
-    }
+    }: Unit
   }
+
+  private def substringStore(spark: SparkSession, name: String): Warehouse.Store =
+    Warehouse.tableStore(spark, name, Seq("shingles"))
 
   /** ONE definition of a substring-store generation's content — the
     * (h, doc_id, pos, k) occurrence table bucketed on the hash — shared
@@ -1706,14 +1587,10 @@ object Dedup {
     }
   }
 
-  /** The substring store's layout — (k, buckets), both derived FROM THE
-    * STORE's base generation: buckets from catalog metadata (unreadable
-    * fails loudly), k from the constant column the build bakes in. A
+  /** [[noveltyLayoutOf]]'s substring twin: k from the first generation
+    * holding a row, buckets/column presence from the base. A
     * pre-k-column legacy store returns k = None — the caller's explicit
     * k then stands, documented must-match (nothing to validate against).
-    */
-  /** [[noveltyLayoutOf]]'s substring twin: k from the first generation
-    * holding a row, buckets/column presence from the base.
     */
   private def substringLayoutOf(spark: SparkSession, name: String,
       gens: Seq[Long]): (Option[Int], Int, Boolean) = {
@@ -1771,8 +1648,7 @@ object Dedup {
       dedupeTag: Option[String] = None, k: Int = 0,
       maxDf: Option[Long] = Some(QuadraticGuardDefault)): Option[Long] = {
     val spark = docs.sparkSession
-    Warehouse.appendSegmentWith[(Int, Int)](
-      Warehouse.chainOf(spark, name), s"appendToSubstringStore('$name')",
+    Warehouse.appendSegmentWith[(Int, Int)](substringStore(spark, name),
       dedupeTag, docs.isEmpty,
       prepare = base => {
         // see appendToNoveltyStore: layout spans published segments
@@ -1782,53 +1658,41 @@ object Dedup {
         (resolveSubstringK(name, k, kOpt, hasK), buckets)
       },
       writeData = (gen, layout) =>
-        writeSubstringGeneration(docs, name, gen, layout._1, layout._2, maxDf),
-      dropData = gen => scala.util.Try(
-        Warehouse.drop(spark, Warehouse.storeTableName(name, gen, "shingles"))): Unit)
+        writeSubstringGeneration(docs, name, gen, layout._1, layout._2, maxDf))
   }
 
   /** COMPACT the segmented substring store: fold base ∪ published
     * segments into the next FULL generation WITHOUT re-tokenizing any
     * text — the stored occurrence rows union as-is (compact longs; the
     * fold is a bucketed rewrite, not a rebuild). Publishing is
-    * CONDITIONAL on the folded live set ([[graft.sources
-    * .StaleFoldException]] → re-fold), the growSignatureStore
-    * discipline, so a segment landing mid-fold is never superseded
-    * unfolded. Run on the rebuild cadence; per-batch ingest uses
+    * CONDITIONAL on the folded live set ([[Warehouse.fold]]), so a
+    * segment landing mid-fold is never superseded unfolded. Run on the rebuild cadence; per-batch ingest uses
     * [[appendToSubstringStore]]'s O(batch) segments.
     */
   def growSubstringStore(name: String, spark: SparkSession): Unit =
     growSubstringStoreHooked(name, spark)
 
   private[graft] def growSubstringStoreHooked(name: String, spark: SparkSession,
-      beforePublish: () => Unit = () => ()): Unit = {
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, segs) = Warehouse.resolveSegmented(spark, name)
-      val (_, buckets, _) = substringLayoutOf(spark, name, base +: segs)
-      val folded = (base +: segs)
-        .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "shingles")))
-        .reduce(_ unionAll _)
-      val gen = Warehouse.claimGeneration(spark, name)
-      try {
-        Warehouse.writeBucketed(folded,
+      beforePublish: () => Unit = () => ()): Unit =
+    refoldSubstringStore(spark, name, identity, beforePublish)
+
+  /** The shared FOLD core of [[growSubstringStore]] and
+    * [[removeFromSubstringStore]]: the stored occurrence rows of base ∪
+    * segments, passed through `fold`, become the next full generation.
+    */
+  private def refoldSubstringStore(spark: SparkSession, name: String,
+      fold: DataFrame => DataFrame, beforePublish: () => Unit): Unit =
+    Warehouse.fold(substringStore(spark, name))(
+      prepare = (base, segs) => Some((base +: segs,
+        Warehouse.storedBuckets(spark, name, base, "shingles", 0))))(
+      write = { case (gen, (gens, buckets)) =>
+        Warehouse.writeBucketed(
+          fold(gens.map(g =>
+            Warehouse.table(spark, Warehouse.storeTableName(name, g, "shingles")))
+            .reduce(_ unionAll _)),
           Warehouse.storeTableName(name, gen, "shingles"), "h", buckets)
-        beforePublish()
-        Warehouse.publishGenerationExpecting(spark, name, gen, base, segs)
-        return
-      } catch {
-        case _: graft.sources.StaleFoldException =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("shingles"))
-          attempt += 1
-        case e: Throwable =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("shingles"))
-          throw e
-      }
-    }
-    throw new IllegalStateException(
-      s"growSubstringStore('$name') lost to 5 consecutive concurrent " +
-        "appends/rebuilds — aborting (the fold is safe to replay)")
-  }
+      },
+      beforePublish)
 
   /** d10 against the persisted store: the new batch's positional
     * shingles (partitioned to the store's bucket layout) join the
@@ -1897,35 +1761,9 @@ object Dedup {
     * signature fold.
     */
   def removeFromSubstringStore(docIds: DataFrame, name: String): Unit = {
-    val spark = docIds.sparkSession
     val ids = docIds.select(col("doc_id")).distinct().localCheckpoint(true)
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, segs) = Warehouse.resolveSegmented(spark, name)
-      val buckets = Warehouse.storedBuckets(spark, name, base, "shingles", 0)
-      val oldOcc = (base +: segs)
-        .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "shingles")))
-        .reduce(_ unionAll _)
-      val gen = Warehouse.claimGeneration(spark, name)
-      val shinglesT = Warehouse.storeTableName(name, gen, "shingles")
-      try {
-        Warehouse.writeBucketed(
-          oldOcc.join(broadcast(ids), Seq("doc_id"), "left_anti"),
-          shinglesT, "h", buckets)
-        Warehouse.publishGenerationExpecting(spark, name, gen, base, segs)
-        return
-      } catch {
-        case _: graft.sources.StaleFoldException =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("shingles"))
-          attempt += 1
-        case e: Throwable =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("shingles"))
-          throw e
-      }
-    }
-    throw new IllegalStateException(
-      s"removeFromSubstringStore('$name') lost to 5 consecutive concurrent " +
-        "appends/rebuilds — aborting (the removal is safe to replay)")
+    refoldSubstringStore(docIds.sparkSession, name,
+      _.join(broadcast(ids), Seq("doc_id"), "left_anti"), () => ())
   }
 
   /** d6: near-duplicate clusters — connected components over the LSH

@@ -234,8 +234,7 @@ object Graph {
     val wedges = wund.select(col("src"), col("dst"), col("w"))
       .union(wund.select(col("dst").as("src"), col("src").as("dst"), col("w")))
     val wdeg = wedges.groupBy("src").agg(sum(col("w")).as("wdeg"))
-    val gen = Warehouse.claimGeneration(spark, store)
-    try {
+    Warehouse.build(Warehouse.tableStore(spark, store, Seq("edges", "wedges"))) { gen =>
       // independent frames — publish both tables concurrently
       // (guide §2.6, the signature-store pattern)
       Warehouse.writeBucketedConcurrently(Seq(
@@ -243,13 +242,7 @@ object Graph {
           Warehouse.storeTableName(store, gen, "edges"), "src", buckets),
         (wedges.join(wdeg, "src"),
           Warehouse.storeTableName(store, gen, "wedges"), "src", buckets)))
-      Warehouse.publishGeneration(spark, store, gen)
-    } catch { case e: Throwable =>
-      // guarded cleanup: only when the chain provably shows gen unpublished
-      Warehouse.cleanupFailedBuild(spark, store, gen, Seq("edges", "wedges"))
-      throw e
     }
-    gen
   }
 
   /** The live generation's bucketed table — package-visible so specs

@@ -208,13 +208,13 @@ object Similarity {
     * `partitionBy(cid)`, so a probe's scan prunes to its nprobe cluster
     * directories — at 100 TB a top-k search reads nprobe/nlist of the
     * corpus from disk, not all of it. The index is GENERATION-VERSIONED
-    * with the dedup stores' claim/ready protocol
-    * ([[graft.sources.Warehouse.claimPathGeneration]]): data lands at
+    * with the dedup stores' claim/publish protocol, as a path store
+    * ([[graft.sources.Warehouse.pathStore]]): data lands at
     * `<path>/g<gen>` (centroids ride along at `_centroids` inside it, so
     * a probe always pairs centroids with their exact assignments) and
     * becomes visible only on publish — a rebuild racing live probes
     * clobbers nothing, and old generations are reclaimed by
-    * [[graft.sources.Warehouse.vacuumPathGenerations]]. Returns the
+    * [[vacuumIvfIndex]]. Returns the
     * centroid table.
     */
   def buildIvfIndex(t: Tables, path: String, nlist: Int = 16): DataFrame =
@@ -225,25 +225,12 @@ object Similarity {
     */
   def buildIvfIndexOf(emb: DataFrame, path: String, nlist: Int = 16): DataFrame = {
     val refined = kmeansCentroids(emb, nlist)
-    val gen = Warehouse.claimPathGeneration(path)
-    val genPath = Warehouse.pathGenData(path, gen)
-    try {
+    Warehouse.build(Warehouse.pathStore(path)) { gen =>
+      val genPath = Warehouse.pathGenData(path, gen)
       assignNearest(emb, refined)
         .write.mode("overwrite").partitionBy("cid").parquet(genPath)
       // underscore prefix: parquet readers of the index root skip it
       refined.write.mode("overwrite").parquet(s"$genPath/_centroids")
-      // publish INSIDE the try: a failed publish must clean up like a
-      // failed write, not leak an orphaned data dir behind the highest
-      // claim (which vacuum never sweeps)
-      Warehouse.publishPathGeneration(path, gen)
-    } catch { case e: Throwable =>
-      // guarded cleanup (only when the chain provably shows gen
-      // unpublished): the partial data dir is deleted BEFORE the claim
-      // burns — an entry-less g<gen> dir would be invisible to vacuum,
-      // and a re-issued claim number under dynamic partition overwrite
-      // could let stale cid dirs survive into a published generation
-      Warehouse.cleanupFailedPathBuild(path, gen)
-      throw e
     }
     refined
   }
@@ -253,7 +240,7 @@ object Similarity {
     * the live base generation's FIXED centroids and published as a
     * SEGMENT generation (the Lucene/FAISS segment model): a cid-
     * partitioned directory whose chain entry (see
-    * [[graft.sources.Warehouse.publishPathSegment]]) names the base
+    * [[graft.sources.Warehouse.appendSegmentWith]]) names the base
     * whose centroids routed it. Probes read base ∪ segments — at 100 TB
     * the corpus is k-means-assigned ONCE per rebuild and every ingest
     * batch costs only its own assignment (one broadcast cross-score over
@@ -290,14 +277,12 @@ object Similarity {
     // batch is assigned against the LIVE base's frozen centroids, per
     // attempt, so a re-append after a lost race routes against the
     // winner's centroids.
-    Warehouse.appendSegmentWith[DataFrame](
-      Warehouse.pathChainOf(path), s"appendToIvfIndex('$path')",
+    Warehouse.appendSegmentWith[DataFrame](Warehouse.pathStore(path),
       dedupeTag, inc.isEmpty,
       prepare = base => assignNearest(inc, spark.read.parquet(
         s"${Warehouse.pathGenData(path, base)}/_centroids")),
       writeData = (gen, assigned) => assigned.write.mode("overwrite")
         .partitionBy("cid").parquet(Warehouse.pathGenData(path, gen)),
-      dropData = gen => Warehouse.deletePathGenData(path, gen),
       beforePublish = beforePublish)
   }
 
@@ -317,44 +302,27 @@ object Similarity {
   def removeFromIvfIndex(vecIds: DataFrame, path: String): Unit = {
     val spark = vecIds.sparkSession
     val ids = vecIds.select(col("vec_id")).distinct().localCheckpoint(true)
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, segs) = Warehouse.resolvePathSegmented(path)
-      val index = (base +: segs)
-        .map(g => spark.read.parquet(Warehouse.pathGenData(path, g)))
-        .reduce(_ unionAll _)
-      val centroids = spark.read.parquet(
-        s"${Warehouse.pathGenData(path, base)}/_centroids")
-      val gen = Warehouse.claimPathGeneration(path)
-      val genPath = Warehouse.pathGenData(path, gen)
-      try {
+    Warehouse.fold(Warehouse.pathStore(path))((base, segs) => Some((
+      (base +: segs).map(g => spark.read.parquet(Warehouse.pathGenData(path, g)))
+        .reduce(_ unionAll _),
+      spark.read.parquet(s"${Warehouse.pathGenData(path, base)}/_centroids"))))(
+      write = { case (gen, (index, centroids)) =>
+        val genPath = Warehouse.pathGenData(path, gen)
         index.join(broadcast(ids), Seq("vec_id"), "left_anti")
           .write.mode("overwrite").partitionBy("cid").parquet(genPath)
         centroids.write.mode("overwrite").parquet(s"$genPath/_centroids")
-        Warehouse.publishPathGenerationExpecting(path, gen, base, segs)
-        return
-      } catch {
-        case _: graft.sources.StaleFoldException =>
-          Warehouse.cleanupFailedPathBuild(path, gen)
-          attempt += 1
-        case e: Throwable =>
-          Warehouse.cleanupFailedPathBuild(path, gen)
-          throw e
-      }
-    }
-    throw new IllegalStateException(
-      s"removeFromIvfIndex('$path') lost to 5 consecutive concurrent " +
-        "appends/rebuilds — aborting (the removal is safe to replay)")
+      },
+      beforePublish = () => ())
   }
 
   /** Reclaim superseded IVF generations — the fixed-floor segmented
-    * vacuum ([[graft.sources.Warehouse.vacuumPathSegmented]]): prior
+    * vacuum ([[graft.sources.Warehouse.vacuumSegmented]]): prior
     * bases and their segments go, the live base + its segments +
     * in-flight claims survive, and a racing segment publish can never
     * shift the live base into the dropped window.
     */
   def vacuumIvfIndex(path: String, minAgeMs: Long = 3600_000L): Unit =
-    Warehouse.vacuumPathSegmented(path, minAgeMs)
+    Warehouse.vacuumSegmented(Warehouse.pathStore(path), minAgeMs)
 
   /** Probe the persisted index: nearest `nprobe` centroids per query,
     * then search ONLY those cluster partitions (`cid IN (...)` prunes at
@@ -412,7 +380,7 @@ object Similarity {
     // directory pruning holds across segments. A no-append index reads
     // exactly its base as before; the set is pinned at plan time — a
     // concurrent rebuild/append changes nothing this plan reads.
-    val (baseGen, segs) = Warehouse.resolvePathSegmented(path)
+    val (baseGen, segs) = Warehouse.pathStore(path).resolveSegmented()
     val centroids = spark.read.parquet(
       s"${Warehouse.pathGenData(path, baseGen)}/_centroids")
     val index = (baseGen +: segs).map(g => spark.read.parquet(Warehouse.pathGenData(path, g)))

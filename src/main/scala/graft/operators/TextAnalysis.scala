@@ -803,18 +803,14 @@ object TextAnalysis {
     */
   def buildBm25Store(docs: DataFrame, name: String, buckets: Int = 0): Unit = {
     import graft.sources.Warehouse
-    val spark = docs.sparkSession
-    val gen = Warehouse.claimGeneration(spark, name)
-    try {
+    Warehouse.build(bm25Store(docs.sparkSession, name)) { gen =>
       writeBm25Generation(docs, name, gen, buckets)
-      Warehouse.publishGeneration(spark, name, gen)
-    } catch {
-      case e: Throwable =>
-        // guarded cleanup: only when the chain provably shows gen unpublished
-        Warehouse.cleanupFailedBuild(spark, name, gen, Seq("postings", "stats"))
-        throw e
-    }
+    }: Unit
   }
+
+  private def bm25Store(spark: org.apache.spark.sql.SparkSession,
+      name: String): graft.sources.Warehouse.Store =
+    graft.sources.Warehouse.tableStore(spark, name, Seq("postings", "stats"))
 
   /** ONE definition of a BM25 generation's content — postings bucketed
     * on token plus the (n_docs, avgdl, dl_sum) stats row — shared by the
@@ -849,13 +845,6 @@ object TextAnalysis {
           sum(col("dl")).as("dl_sum"))
         .write.format("parquet")
         .saveAsTable(Warehouse.storeTableName(name, gen, "stats"))))
-  }
-
-  private def dropBm25Generation(spark: org.apache.spark.sql.SparkSession,
-      name: String, gen: Long): Unit = {
-    import graft.sources.Warehouse
-    Seq("postings", "stats").foreach(sfx =>
-      scala.util.Try(Warehouse.drop(spark, Warehouse.storeTableName(name, gen, sfx))))
   }
 
   /** t23: INCREMENTAL index ingest — append a batch of new documents to
@@ -898,12 +887,10 @@ object TextAnalysis {
     // across the union — derived from the base's catalog metadata,
     // never a caller-repeated parameter; unreadable metadata refuses
     // the append instead of guessing.
-    Warehouse.appendSegmentWith[Int](
-      Warehouse.chainOf(spark, name), s"appendToBm25Store('$name')",
+    Warehouse.appendSegmentWith[Int](bm25Store(spark, name),
       dedupeTag, docs.isEmpty,
       prepare = base => Warehouse.storedBuckets(spark, name, base, "postings", 0),
       writeData = (gen, layout) => writeBm25Generation(docs, name, gen, layout),
-      dropData = gen => dropBm25Generation(spark, name, gen),
       beforePublish = beforePublish)
   }
 
@@ -932,26 +919,23 @@ object TextAnalysis {
       .dropDuplicates("doc_id")
       .localCheckpoint(true)
     val ids = removed.select(col("doc_id"))
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, segs) = Warehouse.resolveSegmented(spark, name)
-      val buckets = Warehouse.storedBuckets(spark, name, base, "postings", 0)
-      val oldPostings = (base +: segs)
-        .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "postings")))
-        .reduce(_ unionAll _)
-      // same legacy tolerance as the query path: a stats table persisted
-      // before dl_sum existed reconstructs it as avgdl x n_docs (the one
-      // float product its own build performed, inverted) — a takedown
-      // must not fail analysis on exactly the stores queries still serve
-      val oldStats = (base +: segs)
-        .map { g =>
-          val st = Warehouse.table(spark, Warehouse.storeTableName(name, g, "stats"))
-          if (st.columns.contains("dl_sum")) st.select(col("n_docs"), col("dl_sum"))
-          else st.select(col("n_docs"), (col("avgdl") * col("n_docs")).as("dl_sum"))
-        }
-        .reduce(_ unionAll _)
-      val gen = Warehouse.claimGeneration(spark, name)
-      try {
+    Warehouse.fold(bm25Store(spark, name))((base, segs) =>
+      Some((base +: segs, Warehouse.storedBuckets(spark, name, base, "postings", 0))))(
+      write = { case (gen, (gens, buckets)) =>
+        val oldPostings = gens
+          .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "postings")))
+          .reduce(_ unionAll _)
+        // same legacy tolerance as the query path: a stats table persisted
+        // before dl_sum existed reconstructs it as avgdl x n_docs (the one
+        // float product its own build performed, inverted) — a takedown
+        // must not fail analysis on exactly the stores queries still serve
+        val oldStats = gens
+          .map { g =>
+            val st = Warehouse.table(spark, Warehouse.storeTableName(name, g, "stats"))
+            if (st.columns.contains("dl_sum")) st.select(col("n_docs"), col("dl_sum"))
+            else st.select(col("n_docs"), (col("avgdl") * col("n_docs")).as("dl_sum"))
+          }
+          .reduce(_ unionAll _)
         // both sides read only OLD generations + the removed-id set —
         // publish concurrently (guide §2.6, the signature-store pattern)
         Warehouse.runConcurrently(Seq(
@@ -978,20 +962,8 @@ object TextAnalysis {
                 .otherwise(col("dl_sum") - col("r_dl")).as("dl_sum"))
             .write.format("parquet")
             .saveAsTable(Warehouse.storeTableName(name, gen, "stats"))))
-        Warehouse.publishGenerationExpecting(spark, name, gen, base, segs)
-        return
-      } catch {
-        case _: graft.sources.StaleFoldException =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("postings", "stats"))
-          attempt += 1
-        case e: Throwable =>
-          Warehouse.cleanupFailedBuild(spark, name, gen, Seq("postings", "stats"))
-          throw e
-      }
-    }
-    throw new IllegalStateException(
-      s"removeFromBm25Store('$name') lost to 5 consecutive concurrent " +
-        "appends/rebuilds — aborting (the removal is safe to replay)")
+      },
+      beforePublish = () => ())
   }
 
   /** Query the persisted BM25 index: same output contract as [[bm25]]

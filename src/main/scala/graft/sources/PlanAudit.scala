@@ -89,12 +89,4 @@ object PlanAudit {
     case _: org.apache.spark.sql.execution.InputAdapter => 0
     case other => 1 + other.children.map(fusedCount).sum
   }
-
-  /** Convenience: (shuffles, broadcasts) in `df`'s current plan —
-    * counted driver-side on the walked plan, no Spark job.
-    */
-  def exchangeCounts(df: DataFrame): (Long, Long) = {
-    val a = auditRows(df)
-    (a.count(_.op == "shuffle").toLong, a.count(_.op == "broadcast").toLong)
-  }
 }

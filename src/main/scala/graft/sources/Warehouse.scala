@@ -124,28 +124,39 @@ object Warehouse {
   }
 
   // ---------------------------------------------------------------------
-  // Store generations — atomic publish for multi-table bucketed stores.
+  // Store generations — atomic publish for multi-table stores.
   //
-  // A persisted dedup store is a SET of bucketed tables rebuilt together
-  // once per corpus generation. Rebuild-in-place (SaveMode.Overwrite +
-  // drop) would let an ingest probe racing the rebuild read a dropped or
-  // half-written table. Instead each build writes to fresh
-  // generation-suffixed tables (`<store>__g<N>_<suffix>`) and publishes
+  // A persisted store is a SET of tables (or directories) rebuilt
+  // together once per corpus generation. Rebuild-in-place would let a
+  // probe racing the rebuild read a dropped or half-written table.
+  // Instead each build writes generation N's data fresh and publishes N
   // through the store's [[GenerationChain]] — one versioned state chain
-  // (at `_generations/<store>/`, committed via the [[StoreIO]]
-  // create-new-or-fail primitive) holding every generation's lifecycle
-  // plus the committed appender tags. Probes resolve a generation ONCE
-  // at plan construction and read its immutable tables regardless of
-  // concurrent rebuilds; old generations stay readable until vacuumed.
+  // (committed via the [[StoreIO]] create-new-or-fail primitive) holding
+  // every generation's lifecycle plus the committed appender tags.
+  // Probes resolve a generation ONCE at plan construction and read its
+  // immutable data regardless of concurrent rebuilds; old generations
+  // stay readable until vacuumed.
+  //
+  // Two store kinds share that one chain protocol and differ only in
+  // where a generation's data lives, which a [[Store]] handle captures:
+  // a TABLE store ([[tableStore]]) writes bucketed catalog tables
+  // `<store>__g<N>_<suffix>` and keeps its chain under the warehouse
+  // dir at `_generations/<store>/`; a PATH store ([[pathStore]]) writes
+  // plain (partitioned) parquet directories `<root>/g<N>` — e.g. the IVF
+  // index, whose load-bearing scale property is directory-level
+  // partition pruning on cid — and keeps its chain at
+  // `<root>/_generations` (underscore-prefixed: invisible to any parquet
+  // reader of the root). Every full build ([[build]]), compaction or
+  // takedown ([[fold]]) and segment append ([[appendSegmentWith]]) runs
+  // its claim → write → publish → guarded-cleanup sequence through this
+  // object over a handle, so the protocol rules live once.
   //
   // Segments: an append publishes its generation as a SEGMENT of the
   // live full build (the Lucene-style incremental-ingest model) —
   // [[GenerationChain.publishSegment]] checks base liveness, publishes,
   // and commits the appender's idempotence tag in ONE atomic chain
   // commit, so a lost append-vs-rebuild race throws BEFORE anything is
-  // visible and the appender just re-appends. The old marker-file
-  // protocol's orphan segments, tag confirmation/withdrawal and retract
-  // grace periods are unreachable states now and have no API.
+  // visible and the appender just re-appends.
   // ---------------------------------------------------------------------
 
   /** Scheme-aware chain-dir join: a remote-scheme root (`hdfs://`,
@@ -167,6 +178,9 @@ object Warehouse {
     chainDir(spark.conf.get("spark.sql.warehouse.dir"),
       "_generations", store.toLowerCase(java.util.Locale.ROOT))
 
+  private def chainAt(dir: String): GenerationChain =
+    new GenerationChain(dir, StoreIO.forScheme(dir))
+
   /** The store's generation chain — package-visible so specs can assert
     * protocol state directly and sweep the chain against the
     * fault-injecting [[InMemoryStoreIO]]. The impl is selected per the
@@ -175,15 +189,210 @@ object Warehouse {
     * rename-without-overwrite impl, and schemes without a
     * create-new-or-fail primitive refuse loudly at construction.
     */
-  private[graft] def chainOf(spark: SparkSession, store: String): GenerationChain = {
-    val dir = genDir(spark, store)
-    new GenerationChain(dir, StoreIO.forScheme(dir))
+  private[graft] def chainOf(spark: SparkSession, store: String): GenerationChain =
+    chainAt(genDir(spark, store))
+
+  /** One store's lifecycle handle: its chain, its name for error
+    * messages, and how to delete one generation's data (idempotent —
+    * cleanup and vacuum may both run it). Building one does no I/O.
+    */
+  final case class Store(chain: GenerationChain, what: String, dropGen: Long => Unit) {
+    /** The live read set: the latest published FULL build plus every
+      * published segment that names it. Fails with the build hint when
+      * nothing full is published.
+      */
+    def resolveSegmented(): (Long, Seq[Long]) = chain.resolveSegmented(what)
   }
 
-  private[graft] def pathChainOf(root: String): GenerationChain = {
-    val dir = pathGenDir(root)
-    new GenerationChain(dir, StoreIO.forScheme(dir))
+  /** The table store `name`, whose generation `g` is the catalog tables
+    * `<name>__g<g>_<sfx>` for each of `suffixes`.
+    */
+  def tableStore(spark: SparkSession, name: String, suffixes: Seq[String]): Store =
+    Store(chainOf(spark, name), s"store '$name'",
+      g => suffixes.foreach(s => drop(spark, storeTableName(name, g, s))))
+
+  /** The path store at `root`, whose generation `g` is the directory
+    * [[pathGenData]]`(root, g)`. Deletes ride the Hadoop filesystem
+    * layer ([[HadoopFs]]) — the same connectors Spark wrote the parquet
+    * through — so cleanup and vacuum reclaim on an object store too.
+    */
+  def pathStore(root: String): Store =
+    Store(chainAt(chainDir(root, "_generations")), s"path store '$root'",
+      g => HadoopFs.deleteRecursive(pathGenData(root, g)): Unit)
+
+  /** Data directory of generation `gen` under a path store's root
+    * (scheme-preserving: the data plane reads/writes it through Spark's
+    * Hadoop layer, which speaks remote schemes directly).
+    */
+  def pathGenData(root: String, gen: Long): String =
+    StoreIO.schemeOf(root) match {
+      case None | Some("file") => s"${root.stripPrefix("file:")}/g$gen"
+      case Some(_) => s"${root.stripSuffix("/")}/g$gen"
+    }
+
+  /** FULL BUILD: claim the next generation, `write` its data, publish it
+    * — after which new probes resolve to it, while probes constructed
+    * before keep reading their own generation. Any failure, including
+    * a tripped guard inside `write` or a failed publish, runs the
+    * guarded cleanup and rethrows; the prior generation stays live
+    * untouched. Returns the published generation.
+    */
+  private[graft] def build(store: Store)(write: Long => Unit): Long = {
+    val gen = store.chain.claim()
+    try {
+      write(gen)
+      store.chain.publishFull(gen)
+      gen
+    } catch { case e: Throwable => failed(store, gen, e) }
   }
+
+  /** COMPACTION / TAKEDOWN: resolve the live (base, segments), let
+    * `prepare` derive the per-attempt context from them (None = nothing
+    * to fold, publish nothing), claim, `write` the folded generation,
+    * run `beforePublish` (a test seam), and publish CONDITIONALLY on the
+    * resolved set still being live. The fold window is corpus-sized, so
+    * a segment published during it would otherwise be superseded
+    * without its rows while its committed tag makes the replay skip
+    * (silent permanent loss): the chain refuses atomically with
+    * [[StaleFoldException]], the never-visible generation is reclaimed,
+    * and the fold re-resolves and re-folds, absorbing the new segments
+    * (bounded at 5 attempts).
+    */
+  private[graft] def fold[C](store: Store)(prepare: (Long, Seq[Long]) => Option[C])(
+      write: (Long, C) => Unit, beforePublish: () => Unit): Unit = {
+    var attempt = 0
+    while (attempt < 5) {
+      val (base, segs) = store.resolveSegmented()
+      val ctx = prepare(base, segs) match {
+        case Some(c) => c
+        case None => return
+      }
+      val gen = store.chain.claim()
+      try {
+        write(gen, ctx)
+        beforePublish()
+        store.chain.publishFullExpecting(gen, base, segs)
+        return
+      } catch {
+        case _: StaleFoldException => reclaim(store, gen)
+        case e: Throwable => failed(store, gen, e)
+      }
+      attempt += 1
+    }
+    throw new IllegalStateException(
+      s"${store.what}: fold lost to 5 consecutive concurrent appends/rebuilds — " +
+        "aborting (it is safe to replay)")
+  }
+
+  /** The at-least-once SEGMENT-APPEND protocol:
+    *
+    *   1. a committed `dedupeTag` means the batch already landed —
+    *      skip (the tag commits atomically with its segment's publish);
+    *   2. an empty increment publishes nothing;
+    *   3. loop: resolve the live base → `prepare` the per-attempt
+    *      context (bucket layout, centroids) → claim → `writeData` →
+    *      `beforePublish` (test seam) → atomic publish;
+    *   4. [[SupersededBaseException]] = lost the race BEFORE anything
+    *      became visible: reclaim the never-published generation and
+    *      re-append against the winner (bounded at 5 attempts);
+    *   5. any other failure runs the guarded cleanup and rethrows.
+    */
+  private[graft] def appendSegmentWith[C](store: Store,
+      dedupeTag: Option[String], isEmpty: => Boolean,
+      prepare: Long => C,
+      writeData: (Long, C) => Unit,
+      beforePublish: () => Unit = () => ()): Option[Long] = {
+    if (dedupeTag.exists(store.chain.tagCommitted)) return None
+    if (isEmpty) return None
+    var attempt = 0
+    while (true) {
+      val (base, _) = store.resolveSegmented()
+      val ctx = prepare(base)
+      val gen = store.chain.claim()
+      try {
+        writeData(gen, ctx)
+        beforePublish()
+        store.chain.publishSegment(gen, base, dedupeTag)
+        return Some(gen)
+      } catch {
+        case _: SupersededBaseException => reclaim(store, gen)
+        case e: Throwable => failed(store, gen, e)
+      }
+      attempt += 1
+      require(attempt < 5,
+        s"${store.what}: append lost to $attempt consecutive concurrent rebuilds — " +
+          "aborting (the batch is safe to replay)")
+    }
+    None // unreachable
+  }
+
+  /** Reclaim a generation that never became visible: delete its data
+    * and burn its claim ONLY when the chain provably shows `gen`
+    * unpublished. A publish self-verifies ambiguous commits, so a
+    * failure reaching here is pre-publish (clean) or a double failure,
+    * which must LEAK the claim for the age-gated vacuum rather than
+    * delete data that may be in the live read set. A throwing `dropGen`
+    * propagates and skips the burn for the same reason: burning the top
+    * claim lets the next claim re-issue its number over the leftover
+    * data. A vacuum that retires the expired claim between the guard
+    * and the burn is the expected handoff (its own reclaim is in
+    * flight; the delete is idempotent), so burn's refusal is swallowed
+    * iff the fresh chain no longer shows the generation unpublished.
+    */
+  private def reclaim(store: Store, gen: Long): Unit =
+    if (store.chain.provablyUnpublished(gen)) {
+      store.dropGen(gen)
+      try store.chain.burn(gen)
+      catch { case e: IllegalStateException =>
+        if (store.chain.provablyUnpublished(gen)) throw e
+      }
+    }
+
+  /** The failure exit of every build, fold and append: reclaim, attach
+    * any cleanup failure to `cause` as suppressed, rethrow `cause`.
+    */
+  private def failed(store: Store, gen: Long, cause: Throwable): Nothing = {
+    try reclaim(store, gen)
+    catch { case e: Throwable => cause.addSuppressed(e) }
+    throw cause
+  }
+
+  /** Drop published generations older than the newest `keep`, and dead
+    * claims (a failed build's leftovers). Never touches the kept
+    * generations or the live group, so probes resolved against them are
+    * safe. The safety rules (the `minAgeMs` floor runs on the instant a
+    * generation LEFT the live read set, claims are swept only below the
+    * newest published generation and only once something is published,
+    * reclaim is crash-safe two-phase) live on
+    * [[GenerationChain.vacuum]]. Pass `minAgeMs = 0` only when no
+    * builder can be active and no probe is pinned to an old generation.
+    */
+  def vacuumGenerations(store: Store, keep: Int, minAgeMs: Long): Unit =
+    store.chain.vacuum(keepCountSelect(keep), minAgeMs)(store.dropGen)
+
+  /** Vacuum a SEGMENT-AWARE store: every published generation STRICTLY
+    * OLDER than the live full build goes (superseded bases and their
+    * segments); the live base, its published segments, and in-flight
+    * claims survive. Selection runs against the FRESH chain state inside
+    * the vacuum's own commit, so a racing publish can widen but never
+    * corrupt the kept set.
+    */
+  def vacuumSegmented(store: Store, minAgeMs: Long): Unit =
+    store.chain.vacuum(belowLiveBaseSelect, minAgeMs)(store.dropGen)
+
+  /** Keep-count selection: all published generations but the newest
+    * `keep` (the chain core protects the live group on top).
+    */
+  private def keepCountSelect(keep: Int)(s: GenerationChain.State): Seq[Long] =
+    s.entries.filter(_.status == GenerationChain.Published).map(_.gen).sorted.dropRight(keep)
+
+  /** Fixed-floor selection: published generations below the live base. */
+  private def belowLiveBaseSelect(s: GenerationChain.State): Seq[Long] =
+    s.liveBase.fold(Seq.empty[Long])(b =>
+      s.entries.filter(e => e.status == GenerationChain.Published && e.gen < b).map(_.gen))
+
+  // The catalog-keyed table-store API: one-line calls on the chain of
+  // [[tableStore]].
 
   /** The generation-suffixed concrete table name. */
   def storeTableName(store: String, gen: Long, suffix: String): String =
@@ -203,17 +412,6 @@ object Warehouse {
     */
   def publishGeneration(spark: SparkSession, store: String, gen: Long): Unit =
     chainOf(spark, store).publishFull(gen)
-
-  /** [[publishGeneration]] conditioned on the live read set a COMPACTION
-    * resolved and folded: refuses with [[StaleFoldException]] when a
-    * segment (or rebuild) published during the fold window — publishing
-    * over it would supersede rows the fold never saw while their
-    * committed dedupe tags make replays skip (silent permanent loss).
-    * The folder drops its never-visible tables and re-folds.
-    */
-  def publishGenerationExpecting(spark: SparkSession, store: String, gen: Long,
-      expectedBase: Long, expectedSegments: Seq[Long]): Unit =
-    chainOf(spark, store).publishFullExpecting(gen, expectedBase, expectedSegments)
 
   /** Publish a claimed generation as an APPEND SEGMENT of `base`,
     * committing the appender's idempotence `tag` atomically with it.
@@ -243,12 +441,9 @@ object Warehouse {
   def segmentBase(spark: SparkSession, store: String, gen: Long): Option[Long] =
     chainOf(spark, store).segmentBase(gen)
 
-  /** The live read set of a segment-aware table store: the latest
-    * published FULL build plus every published segment that names it.
-    * Fails with the build hint when nothing full is published.
-    */
+  /** [[Store.resolveSegmented]] of the table store `store`. */
   def resolveSegmented(spark: SparkSession, store: String): (Long, Seq[Long]) =
-    chainOf(spark, store).resolveSegmented(s"store '$store'")
+    tableStore(spark, store, Nil).resolveSegmented()
 
   /** Resolve the latest published generation or fail with a build hint. */
   def resolveGeneration(spark: SparkSession, store: String): Long =
@@ -287,244 +482,15 @@ object Warehouse {
   def burnClaim(spark: SparkSession, store: String, gen: Long): Unit =
     chainOf(spark, store).burn(gen)
 
-  /** Drop published generations older than the newest `keep`, and dead
-    * claims (a failed build's leftovers). Never touches the kept
-    * generations or the live group, so probes resolved against them are
-    * safe. The safety rules (the `minAgeMs` floor runs on the instant a
-    * generation LEFT the live read set, claims are swept only below the
-    * newest published generation and only once something is published,
-    * reclaim is crash-safe two-phase) live on
-    * [[GenerationChain.vacuum]]. Pass `minAgeMs = 0` only when no
-    * builder can be active and no probe is pinned to an old generation.
-    */
+  /** [[vacuumGenerations]] of the table store `store`. */
   def vacuumStoreGenerations(spark: SparkSession, store: String,
       suffixes: Seq[String], keep: Int = 1, minAgeMs: Long = 3600_000L): Unit =
-    chainOf(spark, store).vacuum(keepCountSelect(keep), minAgeMs) { g =>
-      suffixes.foreach(s => drop(spark, storeTableName(store, g, s)))
-    }
+    vacuumGenerations(tableStore(spark, store, suffixes), keep, minAgeMs)
 
-  /** Vacuum a SEGMENT-AWARE table store: every published generation
-    * STRICTLY OLDER than the live full build goes (superseded bases and
-    * their segments); the live base, its published segments, and
-    * in-flight claims survive. Selection runs against the FRESH chain
-    * state inside the vacuum's own commit, so a racing publish can
-    * widen but never corrupt the kept set.
-    */
+  /** [[vacuumSegmented]] of the table store `store`. */
   def vacuumSegmentedStore(spark: SparkSession, store: String,
       suffixes: Seq[String], minAgeMs: Long = 3600_000L): Unit =
-    chainOf(spark, store).vacuum(belowLiveBaseSelect, minAgeMs) { g =>
-      suffixes.foreach(s => drop(spark, storeTableName(store, g, s)))
-    }
-
-  /** The shared at-least-once SEGMENT-APPEND protocol — one place for
-    * the retry and cleanup rules both appenders (BM25 table store, IVF
-    * path store) follow:
-    *
-    *   1. a committed `dedupeTag` means the batch already landed —
-    *      skip (the tag commits atomically with its segment's publish);
-    *   2. an empty increment publishes nothing;
-    *   3. loop: resolve the live base → `prepare` the per-attempt
-    *      context (bucket layout, centroids) → claim → `writeData` →
-    *      `beforePublish` (test seam) → atomic publish;
-    *   4. [[SupersededBaseException]] = lost the race BEFORE anything
-    *      became visible: drop the never-published data, burn the
-    *      claim, re-append against the winner (bounded at 5 attempts);
-    *   5. any other failure cleans up ONLY when the chain PROVABLY
-    *      shows the generation unpublished
-    *      ([[GenerationChain.provablyUnpublished]]) — an ambiguous
-    *      publish already self-verifies inside the chain, and a
-    *      double-failure (commit AND verification both erroring) must
-    *      LEAK a claim for the age-gated sweep, never delete data that
-    *      may be in the live read set with a committed tag (that would
-    *      be silent permanent loss: the replay would skip).
-    */
-  private[graft] def appendSegmentWith[C](chain: GenerationChain, what: String,
-      dedupeTag: Option[String], isEmpty: => Boolean,
-      prepare: Long => C,
-      writeData: (Long, C) => Unit,
-      dropData: Long => Unit,
-      beforePublish: () => Unit = () => ()): Option[Long] = {
-    if (dedupeTag.exists(chain.tagCommitted)) return None
-    if (isEmpty) return None
-    var attempt = 0
-    while (true) {
-      val (base, _) = chain.resolveSegmented(what)
-      val ctx = prepare(base)
-      val gen = chain.claim()
-      try {
-        writeData(gen, ctx)
-        beforePublish()
-        chain.publishSegment(gen, base, dedupeTag)
-        return Some(gen)
-      } catch {
-        case _: SupersededBaseException =>
-          reclaimUnpublished(chain, gen, dropData)
-        case e: Throwable =>
-          reclaimUnpublished(chain, gen, dropData)
-          throw e
-      }
-      attempt += 1
-      require(attempt < 5,
-        s"$what lost to $attempt consecutive concurrent rebuilds — " +
-          "aborting (the batch is safe to replay)")
-    }
-    None // unreachable
-  }
-
-  /** The shared guarded cleanup: drop data and burn the claim ONLY when
-    * the chain provably shows `gen` unpublished (leak-beats-loss on any
-    * ambiguity), and hand off to a vacuum that retires the expired
-    * claim BETWEEN the guard check and the burn — vacuum's own reclaim
-    * is then in flight (the data drop both sides run is idempotent),
-    * so burn's refusal is the expected handoff, swallowed iff the
-    * fresh chain no longer shows the generation unpublished. A burn
-    * refusal while the generation IS still provably unpublished (or
-    * the chain is unreadable) rethrows: that's a real protocol error,
-    * not a handoff.
-    */
-  private def reclaimUnpublished(chain: GenerationChain, gen: Long,
-      dropData: Long => Unit): Unit =
-    if (chain.provablyUnpublished(gen)) {
-      dropData(gen)
-      try chain.burn(gen)
-      catch { case e: IllegalStateException =>
-        if (chain.provablyUnpublished(gen)) throw e
-      }
-    }
-
-  /** Guarded FULL-BUILD failure cleanup: drop the half-written data and
-    * burn the claim ONLY when the chain provably shows the generation
-    * unpublished — the publish self-verifies ambiguous commits, so a
-    * failure that reaches the caller is either pre-publish (write
-    * failed, guard trips: clean) or a double-failure, which must leak
-    * the claim for the age-gated sweep rather than delete a possibly
-    * live generation's data. Same vacuum handoff as the appenders'
-    * [[reclaimUnpublished]].
-    */
-  private[graft] def cleanupFailedBuild(chain: GenerationChain, gen: Long)(
-      dropData: => Unit): Unit =
-    reclaimUnpublished(chain, gen, _ => dropData)
-
-  /** [[cleanupFailedBuild]] for table stores by name (per-table drops
-    * Try-wrapped: a half-created table's drop may itself fail, and the
-    * cleanup must still burn the claim and surface the ORIGINAL error).
-    */
-  def cleanupFailedBuild(spark: SparkSession, store: String, gen: Long,
-      suffixes: Seq[String]): Unit =
-    cleanupFailedBuild(chainOf(spark, store), gen) {
-      suffixes.foreach(s =>
-        scala.util.Try(drop(spark, storeTableName(store, gen, s))): Unit)
-    }
-
-  /** [[cleanupFailedBuild]] for path stores. */
-  def cleanupFailedPathBuild(root: String, gen: Long): Unit =
-    cleanupFailedBuild(pathChainOf(root), gen)(deletePathGenData(root, gen))
-
-  /** Keep-count selection: all published generations but the newest
-    * `keep` (the chain core protects the live group on top).
-    */
-  private def keepCountSelect(keep: Int)(s: GenerationChain.State): Seq[Long] =
-    s.entries.filter(_.status == GenerationChain.Published).map(_.gen).sorted.dropRight(keep)
-
-  /** Fixed-floor selection: published generations below the live base. */
-  private def belowLiveBaseSelect(s: GenerationChain.State): Seq[Long] =
-    s.liveBase.fold(Seq.empty[Long])(b =>
-      s.entries.filter(e => e.status == GenerationChain.Published && e.gen < b).map(_.gen))
-
-  // ---------------------------------------------------------------------
-  // PATH-based generation stores: the same claim/ready protocol for
-  // indexes that live as plain (partitioned) parquet DIRECTORIES rather
-  // than warehouse tables — e.g. the IVF index, whose load-bearing scale
-  // property is directory-level partition pruning on cid. Generation g's
-  // data lives at `<root>/g<g>`; markers live at `<root>/_generations`
-  // (underscore-prefixed: invisible to any parquet reader of the root).
-  // Without this, racing rebuilds clobber one shared directory mid-probe.
-  // ---------------------------------------------------------------------
-
-  private def pathGenDir(root: String): String =
-    chainDir(root, "_generations")
-
-  /** Data directory of generation `gen` under a path store's root
-    * (scheme-preserving: the data plane reads/writes it through Spark's
-    * Hadoop layer, which speaks remote schemes directly).
-    */
-  def pathGenData(root: String, gen: Long): String =
-    StoreIO.schemeOf(root) match {
-      case None | Some("file") => s"${root.stripPrefix("file:")}/g$gen"
-      case Some(_) => s"${root.stripSuffix("/")}/g$gen"
-    }
-
-  /** Claim the next free generation of a directory store (atomic chain
-    * commit; racing builders get distinct numbers). Invisible to probes
-    * until [[publishPathGeneration]].
-    */
-  def claimPathGeneration(root: String): Long = pathChainOf(root).claim()
-
-  /** Publish a claimed directory-store generation as a FULL build. */
-  def publishPathGeneration(root: String, gen: Long): Unit =
-    pathChainOf(root).publishFull(gen)
-
-  /** [[publishGenerationExpecting]] for path stores — the conditional
-    * fold/removal publish on the directory-store chain.
-    */
-  def publishPathGenerationExpecting(root: String, gen: Long,
-      expectedBase: Long, expectedSegments: Seq[Long]): Unit =
-    pathChainOf(root).publishFullExpecting(gen, expectedBase, expectedSegments)
-
-  /** [[publishSegment]] for path stores — the same atomic
-    * liveness-check + publish + tag commit, one chain for both store
-    * kinds so the protocol rules live once.
-    */
-  def publishPathSegment(root: String, gen: Long, base: Long,
-      tag: Option[String] = None): Unit =
-    pathChainOf(root).publishSegment(gen, base, tag)
-
-  /** Latest PUBLISHED generation of a directory store, if any. */
-  def currentPathGeneration(root: String): Option[Long] =
-    pathChainOf(root).state().current
-
-  /** True iff the appender tag committed on the directory store — the
-    * at-least-once replay check.
-    */
-  def pathSegmentTagPublished(root: String, tag: String): Boolean =
-    pathChainOf(root).tagCommitted(tag)
-
-  /** The live read set of a segment-aware directory store — the
-    * [[resolveSegmented]] rules on the path protocol.
-    */
-  def resolvePathSegmented(root: String): (Long, Seq[Long]) =
-    pathChainOf(root).resolveSegmented(s"path store '$root'")
-
-  /** Vacuum a SEGMENT-AWARE directory store — [[vacuumSegmentedStore]]'s
-    * fixed-floor rules, deleting data directories.
-    */
-  def vacuumPathSegmented(root: String, minAgeMs: Long = 3600_000L): Unit =
-    pathChainOf(root).vacuum(belowLiveBaseSelect, minAgeMs)(g => deletePathGenData(root, g))
-
-  /** Remove a claimed-but-unpublished directory generation's chain entry
-    * (after its data dir is removed via [[deletePathGenData]]) —
-    * build-failure cleanup.
-    */
-  def burnPathClaim(root: String, gen: Long): Unit = pathChainOf(root).burn(gen)
-
-  /** Delete a directory generation's data dir (recursive). Builders call
-    * this on failure BEFORE [[burnPathClaim]]: a marker-less partial dir
-    * would be invisible to vacuum and could poison a re-issued
-    * generation number under dynamic partition overwrite. Deletes ride
-    * the Hadoop filesystem layer ([[HadoopFs]]) — the same connectors
-    * Spark wrote the parquet through — so vacuum can reclaim on an
-    * object store, not just a local disk.
-    */
-  def deletePathGenData(root: String, gen: Long): Unit =
-    HadoopFs.deleteRecursive(pathGenData(root, gen)): Unit
-
-  /** Vacuum a directory store: same safety rules as
-    * [[vacuumStoreGenerations]] (shared [[GenerationChain.vacuum]]
-    * core), deleting `g<gen>` data directories instead of tables.
-    */
-  def vacuumPathGenerations(root: String, keep: Int = 1,
-      minAgeMs: Long = 3600_000L): Unit =
-    pathChainOf(root).vacuum(keepCountSelect(keep), minAgeMs)(g => deletePathGenData(root, g))
+    vacuumSegmented(tableStore(spark, store, suffixes), minAgeMs)
 
   /** Drop a table AND its on-disk location: the in-memory catalog
     * forgets across JVMs but the warehouse dir persists, and

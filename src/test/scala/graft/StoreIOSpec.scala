@@ -506,11 +506,7 @@ class StoreIOSpec extends SparkSpecBase {
     var rivalFired = false
     val written = scala.collection.mutable.ListBuffer.empty[Long]
     val dropped = scala.collection.mutable.ListBuffer.empty[Long]
-    val res = graft.sources.Warehouse.appendSegmentWith[Long](chain, "probe store",
-      dedupeTag = Some("batch:1"), isEmpty = false,
-      prepare = identity,
-      writeData = (g, _) => { written += g; () },
-      dropData = { g =>
+    val store = graft.sources.Warehouse.Store(chain, "probe store", dropGen = { g =>
         dropped += g
         // the injected interleaving: the appender's lost-race cleanup
         // passed its provably-unpublished check; NOW a vacuum retires
@@ -519,7 +515,11 @@ class StoreIOSpec extends SparkSpecBase {
         now += 7200_000L
         scala.util.Try(chain.vacuum(_ => Seq.empty, 3600_000L)(_ =>
           throw new RuntimeException("injected crash mid-delete"))): Unit
-      },
+      })
+    val res = graft.sources.Warehouse.appendSegmentWith[Long](store,
+      dedupeTag = Some("batch:1"), isEmpty = false,
+      prepare = identity,
+      writeData = (g, _) => { written += g; () },
       beforePublish = () => {
         if (!rivalFired) {
           rivalFired = true

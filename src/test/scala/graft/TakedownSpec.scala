@@ -341,7 +341,7 @@ class TakedownSpec extends SparkSpecBase {
     Similarity.buildIvfIndex(t, dir)
     Similarity.appendToIvfIndex(
       t.embeddings.filter(col("vec_id") < 0), dir) // empty: exercises the no-op path
-    val (b0, _) = Warehouse.resolvePathSegmented(dir)
+    val (b0, _) = Warehouse.pathStore(dir).resolveSegmented()
     val beforeRows = spark.read.parquet(Warehouse.pathGenData(dir, b0))
       .select(col("vec_id"), col("cid")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
@@ -354,7 +354,7 @@ class TakedownSpec extends SparkSpecBase {
     val rangeBefore = Similarity.searchIvfIndexRange(queries, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     Similarity.removeFromIvfIndex(victims.toDF("vec_id"), dir)
-    val (b1, segs1) = Warehouse.resolvePathSegmented(dir)
+    val (b1, segs1) = Warehouse.pathStore(dir).resolveSegmented()
     assert(b1 != b0 && segs1.isEmpty)
     val afterRows = spark.read.parquet(Warehouse.pathGenData(dir, b1))
       .select(col("vec_id"), col("cid")).collect()

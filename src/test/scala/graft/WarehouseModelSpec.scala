@@ -119,14 +119,15 @@ class WarehouseModelSpec extends SparkSpecBase {
     Seq(5, 23).foreach { seed =>
       val root = java.nio.file.Files
         .createTempDirectory(s"graft_pathmodel$seed").resolve("idx").toString
+      val store = Warehouse.pathStore(root)
       sweep(seed, Proto(
-        claim = () => Warehouse.claimPathGeneration(root),
-        publishFull = Warehouse.publishPathGeneration(root, _),
-        publishSegment = (g, b, t) => Warehouse.publishPathSegment(root, g, b, Some(t)),
-        burn = Warehouse.burnPathClaim(root, _),
-        vacuum = () => Warehouse.vacuumPathSegmented(root, minAgeMs = 0L),
-        resolve = () => Warehouse.resolvePathSegmented(root),
-        tagPublished = Warehouse.pathSegmentTagPublished(root, _)))
+        claim = () => store.chain.claim(),
+        publishFull = store.chain.publishFull,
+        publishSegment = (g, b, t) => store.chain.publishSegment(g, b, Some(t)),
+        burn = store.chain.burn,
+        vacuum = () => Warehouse.vacuumSegmented(store, minAgeMs = 0L),
+        resolve = () => store.resolveSegmented(),
+        tagPublished = store.chain.tagCommitted))
     }
   }
 

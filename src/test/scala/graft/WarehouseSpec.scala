@@ -643,7 +643,7 @@ class WarehouseSpec extends SparkSpecBase {
     val subDir = java.nio.file.Files.createTempDirectory("graft_ivfsub_").toString
     t.embeddings.filter(col("vec_id") < 60).write.parquet(s"$subDir/embeddings.parquet")
     graft.operators.Similarity.buildIvfIndex(Tables(spark, subDir), root)
-    assert(graft.sources.Warehouse.currentPathGeneration(root).contains(1L))
+    assert(graft.sources.Warehouse.pathStore(root).chain.state().current.contains(1L))
 
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("query_id"), r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"))
@@ -653,7 +653,7 @@ class WarehouseSpec extends SparkSpecBase {
 
     // rebuild over the FULL corpus: racing probes must see no clobber
     graft.operators.Similarity.buildIvfIndex(t, root)
-    assert(graft.sources.Warehouse.currentPathGeneration(root).contains(2L),
+    assert(graft.sources.Warehouse.pathStore(root).chain.state().current.contains(2L),
       "a rebuild claims and publishes the NEXT generation, never overwrites")
     assert(p1.collect().map(key).toSeq == r1,
       "a probe planned before the rebuild stays pinned to its generation bit-identically")
@@ -661,11 +661,12 @@ class WarehouseSpec extends SparkSpecBase {
     assert(r2 != r1, "the full-corpus generation finds neighbors the subset lacked")
 
     // vacuum reclaims the old generation but never the kept one
-    graft.sources.Warehouse.vacuumPathGenerations(root, keep = 1, minAgeMs = 0L)
+    graft.sources.Warehouse.vacuumGenerations(
+      graft.sources.Warehouse.pathStore(root), keep = 1, minAgeMs = 0L)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(graft.sources.Warehouse.pathGenData(root, 1L))),
       "vacuum deletes the superseded generation's data directory")
-    assert(graft.sources.Warehouse.currentPathGeneration(root).contains(2L))
+    assert(graft.sources.Warehouse.pathStore(root).chain.state().current.contains(2L))
     assert(graft.operators.Similarity.searchIvfIndex(t, root).collect().map(key).toSeq == r2,
       "the surviving generation reads back identically after vacuum")
   }
@@ -913,7 +914,7 @@ class WarehouseSpec extends SparkSpecBase {
     Similarity.appendToIvfIndex(
       emb.filter(col("vec_id") >= mid), root + "2", Some("s:1"))
     val full = Similarity.searchIvfIndex(t, root + "2").collect().length
-    Warehouse.vacuumPathGenerations(root + "2", keep = 1, minAgeMs = 0L)
+    Warehouse.vacuumGenerations(Warehouse.pathStore(root + "2"), keep = 1, minAgeMs = 0L)
     assert((1L to 3L).forall(g => java.nio.file.Files.exists(
       java.nio.file.Paths.get(Warehouse.pathGenData(root + "2", g)))),
       "a keep-count vacuum must never delete any member of the live group (base + its segments)")
@@ -921,7 +922,7 @@ class WarehouseSpec extends SparkSpecBase {
 
     // keep=1 would keep only the segment (gen 2) — the base it names
     // must survive anyway
-    Warehouse.vacuumPathGenerations(root, keep = 1, minAgeMs = 0L)
+    Warehouse.vacuumGenerations(Warehouse.pathStore(root), keep = 1, minAgeMs = 0L)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(Warehouse.pathGenData(root, 1L))),
       "a keep-count vacuum must never delete the live base out from under its kept segment")
@@ -1112,15 +1113,15 @@ class WarehouseSpec extends SparkSpecBase {
         }
       })
     assert(vseg.contains(4L))
-    assert(Warehouse.resolvePathSegmented(root) == ((3L, Seq(4L))))
-    assert(Warehouse.pathSegmentTagPublished(root, "v:1"))
+    assert(Warehouse.pathStore(root).resolveSegmented() == ((3L, Seq(4L))))
+    assert(Warehouse.pathStore(root).chain.tagCommitted("v:1"))
     assert(Similarity.appendToIvfIndex(
       emb.filter(col("vec_id") >= vhalf), root, Some("v:1")).isEmpty)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(Warehouse.pathGenData(root, 2L))),
       "the refused segment's data dir is reclaimed immediately (it was never visible)")
     Similarity.vacuumIvfIndex(root, minAgeMs = 0L)
-    assert(Warehouse.resolvePathSegmented(root) == ((3L, Seq(4L))))
+    assert(Warehouse.pathStore(root).resolveSegmented() == ((3L, Seq(4L))))
   }
 
   test("segment publish is the single atomic commit point: stale publishes refuse, committed tags are durable forever") {
