@@ -61,6 +61,16 @@ object Bench {
     // seeding a BASELINE.md row); unset = all queries (the driver's mode)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
 
+    // the phase record: every rep runs inside Phase(<key>), so the
+    // recorder folds each key's jobs, stages, tasks, shuffle and spill —
+    // and those of the engine phases nested under it — per phase path.
+    // It reads nothing inside the timed region; the bus drains once, at
+    // the end
+    val recorder = Phase.record(spark)
+    // per key, the fastest successful rep's (seconds, construct, execute):
+    // the rep whose time the key reports
+    val splits = scala.collection.mutable.Map.empty[String, (Double, Double, Double)]
+
     // noop sink forces full evaluation of every output column; a count()
     // would let Catalyst prune the computation being measured. A ROOT
     // Sort is presentation-only ordering for the oracle diff (the
@@ -77,33 +87,16 @@ object Bench {
     // pass keep the invariant ACROSS passes too — a rerun where every rep
     // crashed must not min() its fast-crash time into a successful
     // first-pass measurement
-    // SPARK_GRAFT_BENCH_VERBOSE=1: per-rep wall times + the slowest
-    // Spark STAGES of each rep to stderr — the variance-attribution
-    // instrument (which stage moves when a quiet floor drifts between
-    // sessions), not part of the driver's JSON contract
-    val verbose = sys.env.get("SPARK_GRAFT_BENCH_VERBOSE").contains("1")
-    val stageTimes = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-    if (verbose) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val info = sc.stageInfo
-          val ms = (for (s <- info.submissionTime; c <- info.completionTime) yield c - s)
-            .getOrElse(0L)
-          stageTimes.put(info.stageId, (info.name.takeWhile(_ != '\n'), ms))
-        }
-      })
-
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         nReps: Int): (Double, Boolean) = {
       val ok = scala.collection.mutable.ListBuffer.empty[Double]
       val crashed = scala.collection.mutable.ListBuffer.empty[Double]
-      (1 to nReps).foreach { rep =>
-        if (!failures.contains(name)) {
-          stageTimes.clear()
+      (1 to nReps).foreach { _ =>
+        if (!failures.contains(name)) Phase(name) {
           val t0 = System.nanoTime()
           try {
             val df = fn(spark, sfDir)
+            val built = System.nanoTime()
             val plan = org.apache.spark.sql.classic.GraftInterop.analyzed(df)
             val stripped = plan match {
               case org.apache.spark.sql.catalyst.plans.logical.Sort(_, true, child, _) => child
@@ -111,23 +104,11 @@ object Bench {
             }
             org.apache.spark.sql.classic.GraftInterop.ofRows(spark, stripped)
               .write.format("noop").mode("overwrite").save()
-            val secs = (System.nanoTime() - t0) / 1e9
+            val done = System.nanoTime()
+            val secs = (done - t0) / 1e9
             ok += secs
-            if (verbose) {
-              // stage events arrive on the ASYNC listener bus — drain it
-              // before reading, or a slow stage of this rep lands after
-              // the next rep's clear() (misattributed) or after this
-              // report printed (missing): wrong attribution is worse
-              // than none for a variance instrument. Try-wrapped: the
-              // drain's 10 s timeout must degrade the REPORT, never
-              // record a succeeded rep as a query failure
-              scala.util.Try(
-                org.apache.spark.GraftSparkInterop.drainListenerBus(spark.sparkContext)): Unit
-              import scala.jdk.CollectionConverters._
-              val top = stageTimes.asScala.toSeq.sortBy(-_._2._2).take(5)
-                .map { case (id, (nm, ms)) => f"s$id $nm%.40s ${ms / 1000.0}%.2fs" }
-              System.err.println(f"[bench-rep] $name rep$rep $secs%.2fs | ${top.mkString(" ; ")}")
-            }
+            if (splits.get(name).forall(_._1 > secs))
+              splits(name) = (secs, (built - t0) / 1e9, (done - built) / 1e9)
           } catch { case e: Throwable =>
             // a crashed query must not masquerade as a fast one: record
             // the elapsed-until-crash time, and the errors array flags it
@@ -209,8 +190,27 @@ object Bench {
       s""""$k":[${d2(firstByKey(k))},${d2(r)},${d2(resultByKey(k))}]"""
     }.mkString("{", ",", "}")
     val loadJson = loads.map { case (k, v) => s""""$k":${d2(v)}""" }.mkString("{", ",", "}")
+    // per key: the reported rep's construct/execute split, and the
+    // key's phase map — every phase path under the key, each figure a
+    // mean per rep of the key (first pass and reruns alike), so a
+    // loop phase's `n` is its round count
+    def num(v: Double): String =
+      if (v == math.rint(v)) v.toLong.toString
+      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val phases = scala.util.Try(recorder.snapshot()).getOrElse(Map.empty[String, Phase.Stats])
+    val recordJson = results.map { case (k, _) =>
+      val mine = phases.filter { case (p, _) => p == k || p.startsWith(k + "/") }
+      val reps = mine.get(k).fold(1L)(_.instances)
+      val split = splits.get(k).fold("") { case (_, c, e) =>
+        s""""construct_s":${num(c)},"execute_s":${num(e)},""" }
+      val phaseJson = mine.toSeq.sortBy(_._1).map { case (p, st) =>
+        st.per(reps).map { case (f, v) => s""""$f":${num(v)}""" }
+          .mkString("\"" + p + "\":{", ",", "}")
+      }.mkString("{", ",", "}")
+      s""""$k":{$split"reps":$reps,"phases":$phaseJson}"""
+    }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"rerun":$rerunJson,"load_per_key":$loadJson,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"rerun":$rerunJson,"load_per_key":$loadJson,"errors":$errs,"sf":"$sfDir","record":$recordJson}"""
     // the driver records only the LAST ~2000 chars of stdout; with 100+
     // queries the full line overflows that window. It goes ONLY to
     // target/bench_full.json (NOT stdout — a second metric:total line

@@ -5,7 +5,9 @@ package graft
   * shuffle/broadcast/pushdown regressions are visible per operator.
   * `fmt` = `audit` prints [[graft.sources.PlanAudit]]'s row form
   * instead of EXPLAIN text (post-execution, so AQE's final exchanges
-  * and codegen spans are included).
+  * and codegen spans are included). After each query it prints the
+  * query's [[Phase]] record: per phase path, instances, wall time, jobs,
+  * stages, tasks, shuffle and spill bytes.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -14,26 +16,27 @@ object Explain {
     val mode = if (args.length > 2) args(2) else "formatted"
     val spark = GraftSession.getOrCreate(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val ms = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-        if (ms > 200)
-          println(f"  stage ${si.stageId}%3d tasks=${si.numTasks}%3d wall=${ms}ms")
-      }
-    })
+    val recorder = Phase.record(spark)
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      println(s"\n===== $name =====")
-      if (mode != "none" && mode != "audit") df.explain(mode)
-      val t0 = System.nanoTime()
-      // audit mode executes THIS df's plan (toRdd finalizes AQE without
-      // materializing rows on the driver) so the audit sees the final
-      // exchanges and codegen spans; other modes keep the count shortcut
-      val n = if (mode == "audit") df.queryExecution.toRdd.count() else df.count()
-      println(f"[$name] rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      if (mode == "audit")
-        graft.sources.PlanAudit.planAudit(df).show(200, truncate = false)
+      Phase(name) {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        println(s"\n===== $name =====")
+        if (mode != "none" && mode != "audit") df.explain(mode)
+        val t0 = System.nanoTime()
+        // audit mode executes THIS df's plan (toRdd finalizes AQE without
+        // materializing rows on the driver) so the audit sees the final
+        // exchanges and codegen spans; other modes keep the count shortcut
+        val n = if (mode == "audit") df.queryExecution.toRdd.count() else df.count()
+        println(f"[$name] rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
+        if (mode == "audit")
+          graft.sources.PlanAudit.planAudit(df).show(200, truncate = false)
+      }
+      // the query's phase record: one line per phase path under it
+      recorder.snapshot().toSeq.sortBy(_._1)
+        .filter { case (p, _) => p == name || p.startsWith(name + "/") }
+        .foreach { case (p, st) =>
+          println(st.per(1).map { case (f, v) => f"$f=$v%.3f" }.mkString(s"  phase $p ", " ", ""))
+        }
     }
     spark.stop()
   }

@@ -1,0 +1,144 @@
+package graft
+
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+
+/** graft's one measurement instrument: a named scope plus one recorder.
+  *
+  * `Phase(name) { body }` labels every Spark job the body submits with
+  * the `graft.phase` local property and the job description. Scopes
+  * nest as a path (`dc3_canonical/propagation.round`), and on exit the
+  * caller's property and description come back. The job group is left
+  * alone, so a caller's `cancelJobGroup` still reaches the body's jobs.
+  * Threads started inside a scope inherit its path (Spark's local
+  * properties are inheritable). Without a live session the body just
+  * runs.
+  *
+  * A [[Recorder]] is installed explicitly ([[record]]). Until one is,
+  * a scope costs two local-property writes and launches no job.
+  *
+  * The engines are labelled once where they are centralised: the store
+  * lifecycle (`store.build`, `store.fold`, `store.append` in
+  * [[graft.sources.Warehouse]]), connected-component propagation
+  * (`propagation.setup` and one `propagation.round` per loop iteration
+  * in `Dedup.clustersOfPairsCounted`) and BPE training (one `bpe.round`
+  * per merge round in `Bpe.train`).
+  */
+object Phase {
+  /** The local property holding the open phase path. */
+  val Property = "graft.phase"
+
+  private val DescriptionProperty = "spark.job.description"
+
+  @volatile private var recorders = List.empty[Recorder]
+
+  /** The live session's context: the thread's active session, else the
+    * default one.
+    */
+  private[graft] def activeContext: Option[SparkContext] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext).filterNot(_.isStopped)
+
+  def apply[T](name: String)(body: => T): T = activeContext match {
+    case None => body
+    case Some(sc) =>
+      val outer = sc.getLocalProperty(Property)
+      val outerDescription = sc.getLocalProperty(DescriptionProperty)
+      val path = if (outer == null) name else s"$outer/$name"
+      sc.setLocalProperty(Property, path)
+      sc.setLocalProperty(DescriptionProperty, path)
+      val t0 = System.nanoTime()
+      try body
+      finally {
+        val wallNs = System.nanoTime() - t0
+        recorders.foreach(_.ended(path, wallNs))
+        sc.setLocalProperty(Property, outer)
+        sc.setLocalProperty(DescriptionProperty, outerDescription)
+      }
+  }
+
+  /** Install a recorder on `spark`'s context; it records until closed. */
+  def record(spark: SparkSession): Recorder = {
+    val r = new Recorder(spark.sparkContext)
+    spark.sparkContext.addSparkListener(r)
+    synchronized { recorders = r :: recorders }
+    r
+  }
+
+  /** One phase path's totals. `instances` counts scope exits and
+    * `wallNs` sums their driver wall time; the rest is the Spark work of
+    * the jobs submitted directly under the path (not under a nested
+    * scope). Shuffle and spill figures are bytes.
+    */
+  final case class Stats(instances: Long, wallNs: Long, jobs: Long, stages: Long,
+      tasks: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long) {
+    def +(o: Stats): Stats = Stats(instances + o.instances, wallNs + o.wallNs,
+      jobs + o.jobs, stages + o.stages, tasks + o.tasks,
+      shuffleReadBytes + o.shuffleReadBytes, shuffleWriteBytes + o.shuffleWriteBytes,
+      spillBytes + o.spillBytes)
+
+    /** This record scaled by `1 / n`, e.g. per repetition of the key. */
+    def per(n: Long): Seq[(String, Double)] = {
+      val d = math.max(1L, n).toDouble
+      Seq("n" -> instances / d, "wall_s" -> wallNs / 1e9 / d, "jobs" -> jobs / d,
+        "stages" -> stages / d, "tasks" -> tasks / d,
+        "shuffle_read_bytes" -> shuffleReadBytes / d,
+        "shuffle_write_bytes" -> shuffleWriteBytes / d, "spill_bytes" -> spillBytes / d)
+    }
+  }
+
+  object Stats {
+    val Zero: Stats = Stats(0, 0, 0, 0, 0, 0, 0, 0)
+  }
+
+  /** The listener that folds jobs, stages and task metrics into
+    * [[Stats]] per phase path. Jobs, stages and tasks outside every
+    * scope are not recorded.
+    */
+  final class Recorder private[Phase] (sc: SparkContext) extends SparkListener {
+    private val totals = new ConcurrentHashMap[String, Stats]()
+    private val stagePath = new ConcurrentHashMap[Int, String]()
+
+    private def add(path: String, s: Stats): Unit = totals.merge(path, s, _ + _): Unit
+
+    private def pathOf(props: java.util.Properties): Option[String] =
+      Option(props).flatMap(p => Option(p.getProperty(Property)))
+
+    private[Phase] def ended(path: String, wallNs: Long): Unit =
+      add(path, Stats.Zero.copy(instances = 1, wallNs = wallNs))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      pathOf(e.properties).foreach(add(_, Stats.Zero.copy(jobs = 1)))
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      pathOf(e.properties).foreach { p =>
+        stagePath.put(e.stageInfo.stageId, p)
+        add(p, Stats.Zero.copy(stages = 1))
+      }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      for (p <- Option(stagePath.get(e.stageId)); m <- Option(e.taskMetrics))
+        add(p, Stats.Zero.copy(tasks = 1,
+          shuffleReadBytes = m.shuffleReadMetrics.totalBytesRead,
+          shuffleWriteBytes = m.shuffleWriteMetrics.bytesWritten,
+          spillBytes = m.memoryBytesSpilled + m.diskBytesSpilled))
+
+    /** Every path's totals so far, after the listener bus has delivered
+      * the events already posted.
+      */
+    def snapshot(): Map[String, Stats] = {
+      org.apache.spark.GraftSparkInterop.drainListenerBus(sc)
+      totals.asScala.toMap
+    }
+
+    def close(): Unit = {
+      Phase.synchronized { recorders = recorders.filterNot(_ eq this) }
+      sc.removeSparkListener(this)
+    }
+  }
+}

@@ -147,7 +147,7 @@ object Bpe {
     // serves, and the loop's cost is its sequential job count.
     var parent: Option[DataFrame] = None
     try {
-      for (step <- 1 to numMerges) {
+      for (step <- 1 to numMerges) graft.Phase("bpe.round") {
         val best = cached
           .select(col("freq"), explode(adjacentPairs(col("syms"))).as("p"))
           .groupBy(col("p.l").as("lhs"), col("p.r").as("rhs"))

@@ -64,7 +64,7 @@ object Dedup {
 
   /** d2 over any (doc_id, text) frame — also the batch-internal pair
     * source for d19's cluster maintenance (the new×new side the d7
-    * cross-probe cannot see) and StoreBench's synthetic corpora.
+    * cross-probe cannot see).
     */
   def minhashPairsOf(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.5): DataFrame =
@@ -1825,53 +1825,11 @@ object Dedup {
     // computes the full closure, so early truncation would also diverge
     // from verification)
     val spark = pairGraph.sparkSession
-    val pairs = pairGraph.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-    // Scale-adaptive loop layout (guide §2): derive the layout from the
-    // MATERIALIZED edge count instead of inheriting a cluster-wide
-    // default that is 32× too wide at bench scale and could be 1000×
-    // too narrow at corpus scale. Two measured regimes:
-    //  - LATENCY-BOUND (under ~50k edge rows per core): a round's join
-    //    work is microseconds per task, so every extra partition and
-    //    every adaptive re-planning round-trip is pure overhead on a
-    //    sequential O(log diameter) loop. Collapse to
-    //    ceil(rows / 50k) partitions and plan the rounds STATICALLY —
-    //    adaptive execution materializes each exchange as its own query
-    //    stage, measured as ~6 driver round-trip jobs of 20-140 ms per
-    //    round on the dc8 forest (22 rounds), i.e. nearly the whole
-    //    per-round wall. Static rounds run as ONE job over 1-2
-    //    partitions. (Measured both ways: static 1-2 partitions ≈ 2×
-    //    faster on dc8; the same static treatment on g4's ~2M-row edge
-    //    joins was 3× SLOWER — hence the gate.)
-    //  - COMPUTE-BOUND (above the floor): keep adaptive execution — its
-    //    per-round coalescing/broadcast decisions earn their latency —
-    //    and spread the edge list across the cluster parallelism,
-    //    capped at ~2M compact rows per task so per-task volume stays
-    //    bounded no matter the corpus.
-    // In BOTH regimes the edge list — the loop's static side, scanned
-    // once per round — is pinned onto the neighbor-lookup join's layout
-    // once (hash-partitioned and sorted by the far end;
-    // `localCheckpoint` preserves both), so no round ever exchanges or
-    // sorts the 2|E| edge rows again. Only label-sized streams move per
-    // round.
-    val nEdges = 2L * pairs.count()
-    val para = spark.sparkContext.defaultParallelism
-    val latencyBound = nEdges < PropagationRowsPerCoreFloor * para
-    val parts =
-      if (latencyBound)
-        // floor 2, not 1: a single-partition checkpoint surfaces as
-        // SinglePartition, which EnsureRequirements does not treat as
-        // hash-compatible with the join's clustered requirement — the
-        // edge side would re-exchange every round (measured in the plan)
-        math.max(2L, (nEdges + PropagationRowsPerCoreFloor - 1) /
-          PropagationRowsPerCoreFloor).toInt
-      else
-        math.max(para.toLong,
-          (nEdges + PropagationRowsPerPartition - 1) / PropagationRowsPerPartition).toInt
     // static-planning window: the session conf is restored
     // unconditionally, and the RETURNED frame plans after the last
     // restore, so only the jobs materialized inside see the static
     // config
-    def staticPlanning[A](f: => A): A = {
+    def staticPlanning[A](parts: Int)(f: => A): A = {
       val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
       val widthWas = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -1881,40 +1839,85 @@ object Dedup {
         spark.conf.set("spark.sql.shuffle.partitions", widthWas)
       }
     }
-    // the setup checkpoints are built statically in BOTH regimes: a
-    // checkpoint materialized under adaptive execution surfaces as
-    // UnknownPartitioning (measured — the per-round join then re-sorts
-    // and re-exchanges the edge side it was pinned to avoid), while a
-    // statically-planned one carries its hash partitioning and sort
-    // order into every round
-    val (edges, labels0) = staticPlanning {
-      val l = pairs.select(col("doc_a").as("doc_id"))
-        .unionByName(pairs.select(col("doc_b").as("doc_id")))
-        .distinct().withColumn("label", col("doc_id"))
-        .localCheckpoint(true)
-      // pre-partitioning the edge list pays exactly when the per-round
-      // neighbor join will NOT broadcast the labeling: in the
-      // latency-bound regime (static SMJ rounds), and at vert counts
-      // past broadcast size (where each adaptive round would otherwise
-      // re-exchange + re-sort the 2|E| side every round). When the
-      // labeling is small enough that adaptive execution broadcasts it,
-      // the edge side is streamed in place and a setup
-      // shuffle-and-sort of millions of edge rows is pure overhead
-      // (measured +1.9 s on g4's ~2M-row edge list for zero per-round
-      // benefit).
-      val eBase = pairs
-        .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      val e =
-        (if (latencyBound || l.count() > PropagationBroadcastableVerts)
-          eBase.repartition(parts, col("doc_b")).sortWithinPartitions("doc_b")
-        else eBase).localCheckpoint(true)
-      (e, l)
+    val (edges, labels0, latencyBound, parts) = graft.Phase("propagation.setup") {
+      val pairs = pairGraph.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
+      // Scale-adaptive loop layout (guide §2): derive the layout from the
+      // MATERIALIZED edge count instead of inheriting a cluster-wide
+      // default that is 32× too wide at bench scale and could be 1000×
+      // too narrow at corpus scale. Two measured regimes:
+      //  - LATENCY-BOUND (under ~50k edge rows per core): a round's join
+      //    work is microseconds per task, so every extra partition and
+      //    every adaptive re-planning round-trip is pure overhead on a
+      //    sequential O(log diameter) loop. Collapse to
+      //    ceil(rows / 50k) partitions and plan the rounds STATICALLY —
+      //    adaptive execution materializes each exchange as its own query
+      //    stage, measured as ~6 driver round-trip jobs of 20-140 ms per
+      //    round on the dc8 forest (22 rounds), i.e. nearly the whole
+      //    per-round wall. Static rounds run as ONE job over 1-2
+      //    partitions. (Measured both ways: static 1-2 partitions ≈ 2×
+      //    faster on dc8; the same static treatment on g4's ~2M-row edge
+      //    joins was 3× SLOWER — hence the gate.)
+      //  - COMPUTE-BOUND (above the floor): keep adaptive execution — its
+      //    per-round coalescing/broadcast decisions earn their latency —
+      //    and spread the edge list across the cluster parallelism,
+      //    capped at ~2M compact rows per task so per-task volume stays
+      //    bounded no matter the corpus.
+      // In BOTH regimes the edge list — the loop's static side, scanned
+      // once per round — is pinned onto the neighbor-lookup join's layout
+      // once (hash-partitioned and sorted by the far end;
+      // `localCheckpoint` preserves both), so no round ever exchanges or
+      // sorts the 2|E| edge rows again. Only label-sized streams move per
+      // round.
+      val nEdges = 2L * pairs.count()
+      val para = spark.sparkContext.defaultParallelism
+      val latencyBound = nEdges < PropagationRowsPerCoreFloor * para
+      val parts =
+        if (latencyBound)
+          // floor 2, not 1: a single-partition checkpoint surfaces as
+          // SinglePartition, which EnsureRequirements does not treat as
+          // hash-compatible with the join's clustered requirement — the
+          // edge side would re-exchange every round (measured in the plan)
+          math.max(2L, (nEdges + PropagationRowsPerCoreFloor - 1) /
+            PropagationRowsPerCoreFloor).toInt
+        else
+          math.max(para.toLong,
+            (nEdges + PropagationRowsPerPartition - 1) / PropagationRowsPerPartition).toInt
+      // the setup checkpoints are built statically in BOTH regimes: a
+      // checkpoint materialized under adaptive execution surfaces as
+      // UnknownPartitioning (measured — the per-round join then re-sorts
+      // and re-exchanges the edge side it was pinned to avoid), while a
+      // statically-planned one carries its hash partitioning and sort
+      // order into every round
+      val (e, l) = staticPlanning(parts) {
+        val l = pairs.select(col("doc_a").as("doc_id"))
+          .unionByName(pairs.select(col("doc_b").as("doc_id")))
+          .distinct().withColumn("label", col("doc_id"))
+          .localCheckpoint(true)
+        // pre-partitioning the edge list pays exactly when the per-round
+        // neighbor join will NOT broadcast the labeling: in the
+        // latency-bound regime (static SMJ rounds), and at vert counts
+        // past broadcast size (where each adaptive round would otherwise
+        // re-exchange + re-sort the 2|E| side every round). When the
+        // labeling is small enough that adaptive execution broadcasts it,
+        // the edge side is streamed in place and a setup
+        // shuffle-and-sort of millions of edge rows is pure overhead
+        // (measured +1.9 s on g4's ~2M-row edge list for zero per-round
+        // benefit).
+        val eBase = pairs
+          .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+        val e =
+          (if (latencyBound || l.count() > PropagationBroadcastableVerts)
+            eBase.repartition(parts, col("doc_b")).sortWithinPartitions("doc_b")
+          else eBase).localCheckpoint(true)
+        (e, l)
+      }
+      (e, l, latencyBound, parts)
     }
     var labels = labels0
     var converged = false
     var iter = 0
     def runLoop(): Unit =
-      while (!converged && iter < maxIter) {
+      while (!converged && iter < maxIter) graft.Phase("propagation.round") {
         // LAZY checkpoint: the convergence count below is the action that
         // materializes it, so each round costs ONE Spark job — and the
         // sequential job count is the loop's dominant cost. (Materialization
@@ -1930,7 +1933,7 @@ object Dedup {
         converged = changed == 0
         iter += 1
       }
-    if (latencyBound) staticPlanning(runLoop()) else runLoop()
+    if (latencyBound) staticPlanning(parts)(runLoop()) else runLoop()
     (labels
       .select(col("doc_id"), col("label").as("cluster_id"))
       .orderBy(col("cluster_id"), col("doc_id")), iter, converged)

@@ -24,8 +24,9 @@ import graft.sources.{Tables, Warehouse}
   *    flat at any iteration count. For graphs whose rank table outgrows
   *    the broadcast pin, [[buildEdgeStore]] persists the edges bucketed
   *    by src and the `*AgainstStore` loops co-locate the per-round join
-  *    on that layout (edge side exchange-free — the GRAPHBENCH-measured
-  *    deployment path); the loop shape is unchanged.
+  *    on that layout (edge side exchange-free — the deployment path
+  *    measured in SURVEY.md's "Measured design decisions"); the loop
+  *    shape is unchanged.
   *  - All rank arithmetic is INTEGER (micro-units, floor division) —
   *    Long sums are associative, so results are bit-identical under any
   *    partitioning AND exactly replayable by the DuckDB oracle
@@ -211,23 +212,17 @@ object Graph {
   // claim/publish generation protocol as the dedup/BM25/IVF stores
   // (racing rebuilds get distinct generations; probes pin a published
   // one). WarehouseSpec asserts the exchange shape via PlanAudit and
-  // bit-identity of store-path ranks vs the in-memory loops; GRAPHBENCH
-  // measures it against the broadcast pin at both node-set sizes.
+  // bit-identity of store-path ranks vs the in-memory loops; SURVEY.md's
+  // "Measured design decisions" records it against the broadcast pin.
   // ---------------------------------------------------------------------
 
   /** Build (or rebuild) the co-purchase edge store: `edges`
     * (src, dst, deg) and `wedges` (src, dst, w, wdeg), both
     * bucketed+sorted by src. Returns the published generation.
     */
-  def buildEdgeStore(t: Tables, store: String = "graphedges", buckets: Int = 0): Long =
-    buildEdgeStoreOf(copurchaseEdges(t), weightedCopurchaseEdges(t), store, buckets)
-
-  /** [[buildEdgeStore]] over explicit unweighted/weighted edge lists
-    * (one row per unordered pair) — exposed for crafted graphs and
-    * GraphBench's synthetic hub graph.
-    */
-  def buildEdgeStoreOf(und: DataFrame, wund: DataFrame,
-      store: String, buckets: Int): Long = {
+  def buildEdgeStore(t: Tables, store: String = "graphedges", buckets: Int = 0): Long = {
+    val und = copurchaseEdges(t)
+    val wund = weightedCopurchaseEdges(t)
     val spark = und.sparkSession
     val edges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))

@@ -275,7 +275,7 @@ object ProductQuant {
     * are already fetched for the probed cells, so the extra cost is
     * c·k − nCandidates exact dot products per query, traded directly
     * for recall (spec: strictly above the unrefined path; measured in
-    * RETRIEVALBENCH.md).
+    * SURVEY.md, "Measured design decisions").
     */
   def ivfPqResidualTopK(t: Tables, nQueries: Int = 10, k: Int = 5, nlist: Int = 16,
       nprobe: Int = 4, m: Int = 4, pqNlist: Int = 16, iters: Int = 2,

@@ -734,7 +734,8 @@ object Relational {
     * here it is explicit, deterministic, and available to any plan
     * (including ones whose build side exceeds the broadcast threshold —
     * the filter is 128 KiB regardless of build-side row count, where a
-    * broadcast hash table grows linearly). RfBench measures the win.
+    * broadcast hash table grows linearly). SURVEY.md's "Measured design
+    * decisions" records the win.
     */
   def q28BloomJoin(t: Tables, nationKey: Int = 7, nbits: Int = 1 << 20, kProbes: Int = 4,
       topK: Int = 100): DataFrame = {

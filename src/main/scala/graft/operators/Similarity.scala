@@ -57,13 +57,8 @@ object Similarity {
     * runs against the s2 IVF cells (radius-bounded probe set) — the
     * exact form here is also that path's verify stage.
     */
-  def rangeSearch(t: Tables, nQueries: Int = 10, minCos: Double = 0.2): DataFrame =
-    rangeSearchOf(t.embeddings, nQueries, minCos)
-
-  /** s8 over any (vec_id, embedding) frame — exposed for RangeBench's
-    * synthetic corpora.
-    */
-  def rangeSearchOf(embAll: DataFrame, nQueries: Int, minCos: Double): DataFrame = {
+  def rangeSearch(t: Tables, nQueries: Int = 10, minCos: Double = 0.2): DataFrame = {
+    val embAll = t.embeddings
     val corpus = embAll.select(col("vec_id").as("match_id"), col("embedding"))
     embAll.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"))
@@ -145,32 +140,20 @@ object Similarity {
     * returned (no fixed k). The production radius query at scale — the
     * probe reads nprobe/nlist of the corpus (the persisted-index form
     * prunes the same cells at directory level), while s8's exact scan is
-    * the verify stage. An out-of-probed-cell vector within the radius is
+    * the verify stage (the s8/s9 scale figures are in SURVEY.md,
+    * "Measured design decisions"). An out-of-probed-cell vector within the radius is
     * deliberately absent (IVF's recall trade); the ORACLE replays the
     * same cell pruning, so the gate pins the exact admitted set.
     */
   def ivfRange(t: Tables, nQueries: Int = 10, minCos: Double = 0.2,
-      nlist: Int = 16, nprobe: Int = 4): DataFrame =
-    ivfRangeOf(t.embeddings.select(col("vec_id"), col("embedding")),
-      nQueries, minCos, nlist, nprobe)
-
-  /** s9 over any (vec_id, embedding) frame — exposed for RangeBench's
-    * synthetic corpora.
-    */
-  def ivfRangeOf(emb: DataFrame, nQueries: Int, minCos: Double,
-      nlist: Int = 16, nprobe: Int = 4): DataFrame =
-    ivfRangeWith(emb, kmeansCentroids(emb, nlist), nQueries, minCos, nprobe)
-
-  /** s9 with a pre-built centroid table — exposed so RangeBench can
-    * time the probe separately from the (amortized) index build.
-    */
-  private[graft] def ivfRangeWith(emb: DataFrame, refined: DataFrame,
-      nQueries: Int, minCos: Double, nprobe: Int): DataFrame =
-    ivfAdmitted(emb, refined, nQueries, nprobe)
+      nlist: Int = 16, nprobe: Int = 4): DataFrame = {
+    val emb = t.embeddings.select(col("vec_id"), col("embedding"))
+    ivfAdmitted(emb, kmeansCentroids(emb, nlist), nQueries, nprobe)
       .filter(col("cos") >= minCos)
       .select(col("query_id"), col("neighbor_id").as("match_id"),
         round(col("cos"), 6).as("cos"))
       .orderBy(col("query_id"), col("cos").desc, col("match_id"))
+  }
 
   /** The shared s2/s9 probe core: per-query nprobe cell admission over
     * a built centroid table, exact cosine on the admitted (query,
@@ -220,9 +203,7 @@ object Similarity {
   def buildIvfIndex(t: Tables, path: String, nlist: Int = 16): DataFrame =
     buildIvfIndexOf(t.embeddings.select(col("vec_id"), col("embedding")), path, nlist)
 
-  /** [[buildIvfIndex]] over any (vec_id, embedding) frame — exposed for
-    * RangeBench's synthetic corpora.
-    */
+  /** [[buildIvfIndex]] over any (vec_id, embedding) frame. */
   def buildIvfIndexOf(emb: DataFrame, path: String, nlist: Int = 16): DataFrame = {
     val refined = kmeansCentroids(emb, nlist)
     Warehouse.build(Warehouse.pathStore(path)) { gen =>

@@ -27,8 +27,8 @@ object Skew {
     * a broadcast). It must be applied HERE, after the salt explode — a
     * hint the caller puts on `small` is detached by the Generate node
     * the replication inserts, and the join silently falls back to
-    * sort-merge (measured 2× slower in SkewBench: the full salted fact
-    * gets sorted).
+    * sort-merge: the full salted fact gets sorted, measured 2× slower
+    * (SURVEY.md, "Measured design decisions").
     */
   def saltedJoin(large: DataFrame, small: DataFrame, key: String,
       saltBy: String, factor: Int = 8, smallHint: Option[String] = None): DataFrame = {

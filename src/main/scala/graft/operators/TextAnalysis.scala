@@ -738,8 +738,8 @@ object TextAnalysis {
     * column arithmetic: `size(toks) - size(array_remove(toks, term))`.
     * A `filter(toks, lambda)` higher-order function computes the same
     * number but runs INTERPRETED per element — measured 5× slower
-    * end-to-end at 1M docs (RETRIEVALBENCH.md), the repo-wide rule
-    * against lambdas on per-token paths.
+    * end-to-end at 1M docs (SURVEY.md, "Measured design decisions"), the
+    * repo-wide rule against lambdas on per-token paths.
     */
   private def termCount(toks: Column, term: Column): Column =
     (size(toks) - size(array_remove(toks, term))).cast("double")

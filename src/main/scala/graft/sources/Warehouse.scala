@@ -66,17 +66,32 @@ object Warehouse {
 
   /** The thread mechanics behind [[writeBucketedConcurrently]], for
     * publishes whose sides are not both bucketed (e.g. the BM25
-    * postings table + its one-row stats table). Every task is awaited;
-    * the first failure rethrows after all settle, carrying every other
-    * task's failure as a suppressed exception.
+    * postings table + its one-row stats table). Each task thread tags
+    * its jobs with a fresh job tag (a tag, unlike a job group, leaves a
+    * caller's group in force) and inherits the caller's local
+    * properties, so its jobs carry the caller's [[graft.Phase]]. The
+    * first failure cancels the other tasks' running jobs through their
+    * tags; every task is awaited, and the first failure rethrows
+    * carrying every other task's failure as a suppressed exception.
     */
   private[graft] def runConcurrently(tasks: Seq[() => Unit]): Unit =
     if (tasks.sizeIs <= 1) tasks.foreach(_.apply())
     else {
+      val sc = graft.Phase.activeContext
+      val tags = tasks.map(_ => s"graft-concurrent-${java.util.UUID.randomUUID()}")
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val threads = tasks.map { t =>
+      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val threads = tasks.zip(tags).map { case (t, tag) =>
         val th = new Thread(() =>
-          try t() catch { case e: Throwable => errs.add(e) })
+          try {
+            sc.foreach(_.addJobTag(tag))
+            t()
+          } catch { case e: Throwable =>
+            errs.add(e)
+            if (failed.compareAndSet(false, true))
+              for (c <- sc; other <- tags if other != tag)
+                c.cancelJobsWithTag(other, s"a sibling task failed: ${e.getMessage}")
+          })
         th.setDaemon(true)
         th.start()
         th
@@ -237,14 +252,15 @@ object Warehouse {
     * guarded cleanup and rethrows; the prior generation stays live
     * untouched. Returns the published generation.
     */
-  private[graft] def build(store: Store)(write: Long => Unit): Long = {
-    val gen = store.chain.claim()
-    try {
-      write(gen)
-      store.chain.publishFull(gen)
-      gen
-    } catch { case e: Throwable => failed(store, gen, e) }
-  }
+  private[graft] def build(store: Store)(write: Long => Unit): Long =
+    graft.Phase("store.build") {
+      val gen = store.chain.claim()
+      try {
+        write(gen)
+        store.chain.publishFull(gen)
+        gen
+      } catch { case e: Throwable => failed(store, gen, e) }
+    }
 
   /** COMPACTION / TAKEDOWN: resolve the live (base, segments), let
     * `prepare` derive the per-attempt context from them (None = nothing
@@ -259,30 +275,32 @@ object Warehouse {
     * (bounded at 5 attempts).
     */
   private[graft] def fold[C](store: Store)(prepare: (Long, Seq[Long]) => Option[C])(
-      write: (Long, C) => Unit, beforePublish: () => Unit): Unit = {
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, segs) = store.resolveSegmented()
-      val ctx = prepare(base, segs) match {
-        case Some(c) => c
-        case None => return
+      write: (Long, C) => Unit, beforePublish: () => Unit): Unit =
+    graft.Phase("store.fold") {
+      var attempt = 0
+      var done = false
+      while (!done) {
+        if (attempt == 5) throw new IllegalStateException(
+          s"${store.what}: fold lost to 5 consecutive concurrent appends/rebuilds — " +
+            "aborting (it is safe to replay)")
+        val (base, segs) = store.resolveSegmented()
+        prepare(base, segs) match {
+          case None => done = true
+          case Some(ctx) =>
+            val gen = store.chain.claim()
+            try {
+              write(gen, ctx)
+              beforePublish()
+              store.chain.publishFullExpecting(gen, base, segs)
+              done = true
+            } catch {
+              case _: StaleFoldException => reclaim(store, gen)
+              case e: Throwable => failed(store, gen, e)
+            }
+        }
+        attempt += 1
       }
-      val gen = store.chain.claim()
-      try {
-        write(gen, ctx)
-        beforePublish()
-        store.chain.publishFullExpecting(gen, base, segs)
-        return
-      } catch {
-        case _: StaleFoldException => reclaim(store, gen)
-        case e: Throwable => failed(store, gen, e)
-      }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"${store.what}: fold lost to 5 consecutive concurrent appends/rebuilds — " +
-        "aborting (it is safe to replay)")
-  }
 
   /** The at-least-once SEGMENT-APPEND protocol:
     *
@@ -301,30 +319,33 @@ object Warehouse {
       dedupeTag: Option[String], isEmpty: => Boolean,
       prepare: Long => C,
       writeData: (Long, C) => Unit,
-      beforePublish: () => Unit = () => ()): Option[Long] = {
-    if (dedupeTag.exists(store.chain.tagCommitted)) return None
-    if (isEmpty) return None
-    var attempt = 0
-    while (true) {
-      val (base, _) = store.resolveSegmented()
-      val ctx = prepare(base)
-      val gen = store.chain.claim()
-      try {
-        writeData(gen, ctx)
-        beforePublish()
-        store.chain.publishSegment(gen, base, dedupeTag)
-        return Some(gen)
-      } catch {
-        case _: SupersededBaseException => reclaim(store, gen)
-        case e: Throwable => failed(store, gen, e)
+      beforePublish: () => Unit = () => ()): Option[Long] =
+    graft.Phase("store.append") {
+      var published = Option.empty[Long]
+      if (!dedupeTag.exists(store.chain.tagCommitted) && !isEmpty) {
+        var attempt = 0
+        while (published.isEmpty) {
+          val (base, _) = store.resolveSegmented()
+          val ctx = prepare(base)
+          val gen = store.chain.claim()
+          try {
+            writeData(gen, ctx)
+            beforePublish()
+            store.chain.publishSegment(gen, base, dedupeTag)
+            published = Some(gen)
+          } catch {
+            case _: SupersededBaseException =>
+              reclaim(store, gen)
+              attempt += 1
+              require(attempt < 5,
+                s"${store.what}: append lost to $attempt consecutive concurrent rebuilds — " +
+                  "aborting (the batch is safe to replay)")
+            case e: Throwable => failed(store, gen, e)
+          }
+        }
       }
-      attempt += 1
-      require(attempt < 5,
-        s"${store.what}: append lost to $attempt consecutive concurrent rebuilds — " +
-          "aborting (the batch is safe to replay)")
+      published
     }
-    None // unreachable
-  }
 
   /** Reclaim a generation that never became visible: delete its data
     * and burn its claim ONLY when the chain provably shows `gen`

@@ -1,12 +1,11 @@
 package org.apache.spark
 
-/** Bridge to the `private[spark]` listener bus. Bench's verbose per-rep
-  * stage attribution reads a map filled by an ASYNC listener — without
-  * draining the bus first, a slow stage of rep N lands after rep N+1's
-  * clear() (misattributed) or after rep N's own report printed
-  * (missing), and the instrument names the wrong stage as the variance
-  * carrier. Lives in the spark package namespace solely to reach the
-  * private member; graft code calls this instead of touching internals.
+/** Bridge to the `private[spark]` listener bus. The phase recorder
+  * ([[graft.Phase.Recorder]]) folds events an ASYNC listener receives;
+  * a snapshot taken without draining the bus first would miss the
+  * stages and tasks of jobs that already returned. Lives in the spark
+  * package namespace solely to reach the private member; graft code
+  * calls this instead of touching internals.
   */
 object GraftSparkInterop {
   def drainListenerBus(sc: SparkContext): Unit =

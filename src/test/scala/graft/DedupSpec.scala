@@ -769,4 +769,32 @@ class DedupSpec extends SparkSpecBase {
         nbits = 64, bandBits = 64)
     }
   }
+
+  test("d9 maxDf cap below a hot boilerplate shingle's df leaves the spans unchanged") {
+    // 2,000 docs of 34 tokens, mostly unique per doc; every 200th doc
+    // carries one shared 8-token boilerplate block (one shingle with
+    // df = 10, above the cap of 4) and docs 1/2 and 1001/1002 share a
+    // 20-token block — the planted duplicates. The boilerplate run is
+    // shorter than minSpanTokens = 16, so the cap drops only work that
+    // can never produce a reportable span.
+    val k = 8
+    def uniq(tag: String, m: Int) =
+      transform(sequence(lit(0), lit(m - 1)), i => concat(lit("u"), col("id"), lit(tag), i))
+    val boiler = array((0 until k).map(i => lit(s"bp$i")): _*)
+    val shared = transform(sequence(lit(0), lit(19)),
+      i => concat(lit("d"), floor(col("id") / 1000), lit("t"), i))
+    val docs = spark.range(0, 2000).select(col("id").as("doc_id"),
+      concat_ws(" ", concat(
+        uniq("f", 4),
+        when(col("id") % 200 === 0, boiler).otherwise(uniq("g", k)),
+        when(col("id") % 1000 === 1 || col("id") % 1000 === 2, shared).otherwise(uniq("h", 20)),
+        uniq("t", 2))).as("text"))
+    def spans(maxDf: Option[Long]) = Dedup.substringSpansOfDocs(docs, k = k, maxDf = maxDf)
+      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
+        r.getAs[Int]("start_a"), r.getAs[Int]("start_b"), r.getAs[Long]("span_tokens"))).toSet
+    val uncapped = spans(None)
+    assert(uncapped.map(s => (s._1, s._2)) == Set((1L, 2L), (1001L, 1002L)),
+      s"exactly the planted 20-token blocks are found: $uncapped")
+    assert(spans(Some(4L)) == uncapped, "the cap must not change the answer on this corpus")
+  }
 }

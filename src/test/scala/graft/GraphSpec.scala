@@ -313,4 +313,31 @@ class GraphSpec extends SparkSpecBase {
     assert(est > exact / 2 && est < exact * 2,
       s"estimate $est vs exact $exact — outside the factor-2 band")
   }
+
+  test("g2: hub-plus-chords graph — degree-ordered total equals the naive symmetric wedge count") {
+    import org.apache.spark.sql.functions._
+    // hub 0 adjacent to every rim node, a rim ring, seeded chords; one
+    // row per unordered pair, src < dst
+    val nRim = 300L
+    val hub = spark.range(1, nRim + 1).select(lit(0L).as("src"), col("id").as("dst"))
+    val ring = spark.range(1, nRim).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val chords = spark.range(0, 2000).select(
+        (pmod(xxhash64(col("id")), lit(nRim - 1)) + 1).as("a"),
+        (pmod(xxhash64(col("id") + 2000), lit(nRim - 1)) + 1).as("b"))
+      .filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("src"), greatest(col("a"), col("b")).as("dst"))
+    val und = hub.unionAll(ring).unionAll(chords).distinct().localCheckpoint(true)
+    // naive: wedges at every center of the symmetric adjacency, closed by
+    // the canonical edge; each triangle closes at all 3 centers
+    val sym = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
+    val naive = sym.select(col("src").as("u"), col("dst").as("v"))
+      .join(sym.select(col("src").as("u"), col("dst").as("w")), Seq("u"))
+      .filter(col("v") < col("w"))
+      .join(und.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
+      .count() / 3
+    val ordered = Graph.triangleCountsFromEdges(und).agg(sum(col("n_tri")))
+      .collect()(0).getLong(0) / 3
+    assert(naive > nRim, s"the chords close triangles beyond the hub's: $naive")
+    assert(ordered == naive, s"triangle totals must agree: naive=$naive ordered=$ordered")
+  }
 }

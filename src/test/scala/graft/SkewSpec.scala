@@ -65,4 +65,14 @@ class SkewSpec extends SparkSpecBase {
     // the salt column must not leak into the output
     assert(!result.columns.contains("__salt"))
   }
+
+  test("saltedJoin applies smallHint after the salt replication: the join plans as ShuffledHashJoin") {
+    import spark.implicits._
+    val large = (1 to 200).map(i => (if (i % 2 == 0) 1L else i.toLong % 5, i.toLong)).toDF("k", "row_id")
+    val small = (0L to 4L).map(k => (k, s"v$k")).toDF("k", "v")
+    val joined = Skew.saltedJoin(large, small, "k", "row_id", factor = 4,
+      smallHint = Some("shuffle_hash"))
+    val plan = joined.queryExecution.sparkPlan.toString
+    assert(plan.contains("ShuffledHashJoin"), s"the hint must reach the join:\n$plan")
+  }
 }

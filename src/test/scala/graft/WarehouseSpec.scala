@@ -1329,4 +1329,68 @@ class WarehouseSpec extends SparkSpecBase {
     assert(messages == Set("left write failed", "right write failed"),
       s"both failures must be reachable from the rethrown one: $messages")
   }
+
+  test("runConcurrently cancels a running sibling job on the first failure and keeps its error as suppressed") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val longJob = "warehouse-spec: sibling long job"
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val jobIds = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val results = new java.util.concurrent.ConcurrentHashMap[Int, JobResult]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == longJob)) {
+          jobIds.add(e.jobId)
+          started.countDown()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = results.put(e.jobId, e.jobResult): Unit
+    }
+    sc.addSparkListener(listener)
+    val t0 = System.nanoTime()
+    val e = try intercept[IllegalStateException](Warehouse.runConcurrently(Seq(
+      () => {
+        assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS), "the long job started")
+        throw new IllegalStateException("first failure")
+      },
+      () => {
+        sc.setJobDescription(longJob)
+        // each task idles until it is killed, or for at most 60 s
+        sc.parallelize(1 to 2, 2).map { x =>
+          val ctx = org.apache.spark.TaskContext.get()
+          val deadline = System.currentTimeMillis() + 60000L
+          while (!ctx.isInterrupted() && System.currentTimeMillis() < deadline) Thread.sleep(10)
+          x
+        }.count(): Unit
+      })))
+    finally {
+      org.apache.spark.GraftSparkInterop.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert((System.nanoTime() - t0) / 1e9 < 45, "the sibling did not run to its deadline")
+    assert(e.getMessage == "first failure", "the first failure is the one rethrown")
+    val suppressed = e.getSuppressed.toSeq
+    assert(suppressed.size == 1 && suppressed.head.getMessage.toLowerCase.contains("cancel"),
+      s"the cancelled sibling's error rides along: ${suppressed.map(_.getMessage)}")
+    val ids = jobIds.asScala.toSeq
+    // JobFailed is Spark-private: its rendering carries the cancellation
+    assert(ids.size == 1 && results.get(ids.head) != JobSucceeded &&
+      String.valueOf(results.get(ids.head)).toLowerCase.contains("cancel"),
+      s"the sibling's job ended cancelled: ${ids.map(results.get)}")
+  }
+
+  test("IVF segment-union probe returns k neighbors for every query") {
+    import org.apache.spark.sql.functions.col
+    val emb = Tables(spark, sfDir).embeddings.select(col("vec_id"), col("embedding"))
+    val half = emb.count() / 2
+    val root = java.nio.file.Files.createTempDirectory("graft_ivfshape_").resolve("idx").toString
+    graft.operators.Similarity.buildIvfIndexOf(emb.filter(col("vec_id") < half), root)
+    assert(graft.operators.Similarity.appendToIvfIndex(
+      emb.filter(col("vec_id") >= half), root).nonEmpty)
+    val q = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"))
+    val perQuery = graft.operators.Similarity.searchIvfIndexWith(q, root).collect()
+      .groupBy(_.getAs[Long]("query_id")).map { case (id, rows) => id -> rows.length }
+    assert(perQuery == (0L until 10L).map(_ -> 5).toMap,
+      s"base ∪ segment probe: 10 queries × top-5, got $perQuery")
+  }
 }
