@@ -37,12 +37,12 @@ object Main {
       force: Boolean = false,
       warehouse: String = "spark-warehouse/etl",
       source: String = "/root/testdata/sf0.001",
-      snapshot: Boolean = false)
+  )
 
   val usage: String =
     """usage: graft.etl.Main [--mode pre_season|post_race] [--table NAME]
       |                      [--year N] [--round N] [--force]
-      |                      [--warehouse DIR] [--source DIR] [--snapshot]
+      |                      [--warehouse DIR] [--source DIR]
       |
       |  --table NAME                      targeted single-table run
       |  --table NAME --year Y [--round R] period-scoped backfill of one slice
@@ -75,7 +75,6 @@ object Main {
         case None => Left(s"--round needs an integer, got '$v'")
       }
       case "--force" :: t => go(t, cfg.copy(force = true))
-      case "--snapshot" :: t => go(t, cfg.copy(snapshot = true))
       case "--warehouse" :: v :: t if !v.startsWith("--") => go(t, cfg.copy(warehouse = v))
       case "--source" :: v :: t if !v.startsWith("--") => go(t, cfg.copy(source = v))
       case flag :: _ if flag.startsWith("--") => Left(s"$flag: unknown flag or missing value")
@@ -175,8 +174,7 @@ object Main {
       spark.sparkContext.setLogLevel("WARN")
       val runner = new PipelineRunner(spark, cfg.warehouse,
         new MetadataStore(spark, s"${cfg.warehouse}/_metadata"), specs,
-        extracts(cfg.source), useSnapshotTables = cfg.snapshot,
-        scopedExtracts = scopedExtracts(cfg.source))
+        extracts(cfg.source), scopedExtracts = scopedExtracts(cfg.source))
       val code = execute(cfg, runner)
       spark.stop()
       sys.exit(code)

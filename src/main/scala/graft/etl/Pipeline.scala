@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   * logic, idempotent merge into the warehouse, and a sync audit log.
   *
   * Differences from the reference are deliberate Spark-isms: the
-  * warehouse is parquet directories (not Postgres rows), the merge is a
-  * window dedup (not per-row ON CONFLICT), and the metadata store is
-  * itself a small parquet table — everything scales by partitioning, and
-  * nothing iterates rows on the driver.
+  * warehouse is parquet directories (not Postgres rows) — an
+  * unpartitioned table is a [[SnapshotTable]] (one atomic manifest
+  * commit per load), a partitioned one merges per touched partition —
+  * the merge is a window dedup (not per-row ON CONFLICT), and the
+  * metadata store is itself a small parquet table — everything scales
+  * by partitioning, and nothing iterates rows on the driver.
   */
 object Pipeline {
 
@@ -74,8 +76,9 @@ object Pipeline {
 
   /** Incremental merge into a PARTITIONED parquet target, rewriting only
     * the partitions `fresh` touches (dynamic partition overwrite). The
-    * whole-table merge + staging swap reads and rewrites every byte of
-    * the target per run — fatal once the table is 1000× the increment.
+    * whole-table merge of an unpartitioned table reads and rewrites every
+    * byte of the target per run — fatal once the table is 1000× the
+    * increment.
     * Here: existing rows are read ONLY from touched partitions (partition
     * pruning at the scan), merged last-write-wins with the increment, and
     * written back in overwrite-dynamic mode, which replaces exactly the
@@ -83,14 +86,13 @@ object Pipeline {
     * files are never read or rewritten. Returns the merged row count of
     * the touched partitions.
     *
-    * Atomicity tradeoff vs the unpartitioned staging-swap path: dynamic
-    * overwrite replaces each touched partition directory at commit, so a
-    * crash mid-commit can leave a touched partition between generations
-    * (untouched partitions are never at risk). Closing that window needs
-    * a table format with transactional commits (Delta/Iceberg-class) —
-    * the same boundary `atomicPublish` documents for multi-writer ACID.
-    * The merge itself is idempotent, so rerunning the increment repairs
-    * an interrupted commit.
+    * Atomicity tradeoff vs the unpartitioned [[SnapshotTable]] path:
+    * dynamic overwrite replaces each touched partition directory at
+    * commit, so a crash mid-commit can leave a touched partition between
+    * generations (untouched partitions are never at risk), and racing
+    * writers are not serialized. Closing that window needs partition-
+    * aware manifests. The merge itself is idempotent, so rerunning the
+    * increment repairs an interrupted commit.
     */
   def mergeIntoPartitioned(spark: SparkSession, targetPath: String, fresh: DataFrame,
       keys: Seq[String], version: Option[String], partitionCol: String,
@@ -165,7 +167,7 @@ object Pipeline {
     * `ON CONFLICT (key) DO UPDATE` — the loader's write side is a
     * pluggable destination, not always a parquet directory). The runner's
     * built-in paths (partitioned dynamic-overwrite, snapshot-manifest
-    * commit, whole-table atomic swap) stay the default; a warehouse-bound
+    * commit) stay the default; a warehouse-bound
     * user plugs a sink that pushes the upsert down to their store (a JDBC
     * sink issues the actual ON CONFLICT statement — which is why the
     * interface hands over the FRESH increment and the spec, not a
@@ -501,8 +503,13 @@ object MetadataStore {
 }
 
 /** The orchestrator (reference: main.py run loop). Warehouse tables are
-  * parquet dirs under `warehouseRoot`; each run is
-  * extract → merge → write → metadata, in dependency order.
+  * dirs under `warehouseRoot`; each run is extract → merge → publish →
+  * metadata, in dependency order. An unpartitioned table is a
+  * [[SnapshotTable]]: every load is one read-modify-write manifest
+  * commit, so racing runners compose instead of clobbering, every load
+  * is a version ([[tableAt]]), and readers see one snapshot. A
+  * partitioned table merges in place per touched partition
+  * ([[Pipeline.mergeIntoPartitioned]]); a `mergeSink` replaces both.
   */
 final class PipelineRunner(
     spark: SparkSession,
@@ -513,12 +520,8 @@ final class PipelineRunner(
     // event calendar for freshness gating (reference: the round table);
     // None = no gating, every run loads (the pre-gating behavior)
     calendar: Option[SparkSession => Seq[Long]] = None,
-    // publish unpartitioned tables through [[SnapshotTable]] manifests
-    // instead of the staging-dir swap: adds multi-writer safety (two
-    // runners racing the same table cannot clobber each other), version
-    // history, and snapshot-isolated readers. Partitioned tables keep
-    // the dynamic-partition-overwrite path either way.
-    useSnapshotTables: Boolean = false,
+    // accepts only true (the one unpartitioned path); the next benchmark change drops it
+    useSnapshotTables: Boolean = true,
     // period-scoped loaders for [[backfill]]; tables without one fall
     // back to the full extract filtered to the period (correct, but
     // re-fetches history — provide a scoped extract where the source
@@ -532,90 +535,31 @@ final class PipelineRunner(
     // swaps only the warehouse
     mergeSink: Option[Pipeline.MergeSink] = None) {
 
+  require(useSnapshotTables, "unpartitioned tables always publish through SnapshotTable")
+
   private def targetPath(name: String) = s"$warehouseRoot/$name"
 
   private def snapshotTable(name: String) = new SnapshotTable(spark, targetPath(name))
 
-  /** Does `name` publish through [[SnapshotTable]] manifests? Partitioned
-    * tables never do — they merge in place via dynamic partition
-    * overwrite ([[Pipeline.mergeIntoPartitioned]]) and are stored as
-    * plain partitioned parquet, so their reads must not demand a
-    * manifest. A table with no committed manifest yet (e.g. a legacy
-    * plain-parquet table adopted into snapshot mode) also reads the
-    * parquet path until its first snapshot commit.
+  private def partitioned(name: String): Boolean =
+    specs.find(_.name == name).exists(_.partitionColumn.isDefined)
+
+  /** The table's current state: partitioned tables are plain
+    * partitioned parquet; every other table reads its latest snapshot
+    * (and fails loudly before its first commit).
     */
-  private def readsViaSnapshot(name: String): Boolean =
-    useSnapshotTables &&
-      specs.find(_.name == name).forall(_.partitionColumn.isEmpty) &&
-      snapshotTable(name).currentVersion.isDefined
-
-  /** Does the table's root use the [[SnapshotTable]] on-disk layout
-    * (immutable dirs under `data/`, manifests under `_manifests/`)?
-    * Such a root must NEVER be read as plain recursive parquet: a
-    * first commit in flight (or crashed after writeData) has staged
-    * `data/d-*` dirs but no manifest, and a recursive read would pick
-    * the uncommitted files up as committed state (`_manifests` is
-    * underscore-filtered by the parquet reader; `data/` is not).
-    */
-  private def hasSnapshotLayout(name: String): Boolean = {
-    val root = Paths.get(targetPath(name))
-    Files.isDirectory(root.resolve("data")) ||
-      Files.isDirectory(root.resolve("_manifests"))
-  }
-
-  private def readTarget(name: String): Option[DataFrame] =
-    if (readsViaSnapshot(name)) Some(snapshotTable(name).read())
-    else if (hasSnapshotLayout(name)) {
-      // snapshot-layout root outside the snapshot read path (snapshot
-      // mode off, or no committed version yet): read through the
-      // manifest if one exists; a manifest-less root has no committed
-      // state — staged data dirs are garbage, not a table.
-      snapshotTable(name).currentVersion.map(_ => snapshotTable(name).read())
-    }
-    else if (Files.exists(Paths.get(targetPath(name)))) {
-      Some(spark.read.parquet(targetPath(name)))
-    } else None
-
   def table(name: String): DataFrame =
-    if (readsViaSnapshot(name)) snapshotTable(name).read()
-    else if (hasSnapshotLayout(name))
-      snapshotTable(name).currentVersion match {
-        case Some(_) => snapshotTable(name).read()
-        case None => throw new IllegalStateException(
-          s"table $name has a snapshot layout but no committed version — " +
-            "staged (uncommitted) data is not readable table state")
-      }
-    else spark.read.parquet(targetPath(name))
+    if (partitioned(name)) spark.read.parquet(targetPath(name))
+    else snapshotTable(name).read()
 
-  /** Time travel (snapshot mode only): the table as of `version`.
-    * Partitioned tables merge in place (no manifest chain), so they have
-    * no version history to travel to — rejected up front.
+  /** Time travel: the table as of `version`. Partitioned tables merge in
+    * place (no manifest chain), so they have no version history to
+    * travel to — rejected up front.
     */
   def tableAt(name: String, version: Long): DataFrame = {
-    require(useSnapshotTables, "tableAt needs useSnapshotTables = true")
-    require(specs.find(_.name == name).forall(_.partitionColumn.isEmpty),
+    require(!partitioned(name),
       s"$name is partitioned: partitioned tables merge in place and keep no version history")
     snapshotTable(name).read(Some(version))
-  }
-
-  /** Atomic publish: write the merged result to a staging dir, then swap
-    * it into place with filesystem renames. A crash mid-write leaves the
-    * old table intact (the staging dir is garbage, not the target) —
-    * single-writer atomicity without a table format; multi-writer ACID
-    * is a Delta/Iceberg-class concern, out of scope.
-    */
-  private def atomicPublish(df: DataFrame, name: String): Unit = {
-    val target = Paths.get(targetPath(name))
-    val staging = Paths.get(s"${targetPath(name)}.staging-${System.nanoTime()}")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val retired = Paths.get(s"${targetPath(name)}.retired-${System.nanoTime()}")
-    if (Files.exists(target)) Files.move(target, retired, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    Files.move(staging, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // old generation removed only after the swap succeeded
-    if (Files.exists(retired)) {
-      def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
-      rm(retired.toFile)
-    }
   }
 
   /** Run one mode (reference: --mode pre_season|post_race). `force`
@@ -748,17 +692,25 @@ final class PipelineRunner(
       n
     } catch {
       case e: Exception =>
-        metadata.completeSync(name, logId, success = false, 0L, metadata.watermark(name),
-          Option(e.getMessage))
+        closeFailed(e, name, logId, metadata.watermark(name))
         throw e
     }
   }
 
+  /** Record a failed load's terminal sync-log row. A log write that
+    * fails too rides on the load's error as suppressed: the load's own
+    * error is the one the caller sees.
+    */
+  private def closeFailed(e: Exception, name: String, logId: Long,
+      watermark: => Option[Long]): Unit =
+    try metadata.completeSync(name, logId, success = false, 0L, watermark, Option(e.getMessage))
+    catch { case logErr: Exception => e.addSuppressed(logErr) }
+
   /** The shared merge→publish tail of [[runOne]] and [[backfill]]:
-    * partitioned tables merge in place per touched partition; snapshot
-    * tables commit a read-modify-write version; plain tables merge whole
-    * and swap atomically. Returns the merged row count (touched
-    * partitions for partitioned tables, full table otherwise).
+    * partitioned tables merge in place per touched partition; every
+    * other table commits a read-modify-write snapshot version. Returns
+    * the merged row count (touched partitions for partitioned tables,
+    * full table otherwise).
     */
   private def mergeAndPublish(spec: Pipeline.TableSpec, fresh: DataFrame): Long =
     mergeSink match {
@@ -772,19 +724,12 @@ final class PipelineRunner(
         Pipeline.mergeIntoPartitioned(spark, targetPath(spec.name), fresh,
           spec.keyColumns, spec.versionColumn, pc)
       case None =>
-        if (useSnapshotTables) {
-          // read-modify-write: on a version conflict with a racing
-          // runner, the merge re-derives against the winner's fresh
-          // snapshot — neither runner's increment is lost
-          val (_, published) = snapshotTable(spec.name).overwriteWith(existing =>
-            Pipeline.merge(existing, fresh, spec.keyColumns, spec.versionColumn))
-          published.count()
-        } else {
-          val merged = Pipeline.merge(readTarget(spec.name), fresh, spec.keyColumns, spec.versionColumn)
-            .localCheckpoint(eager = true) // sever lineage from the file being replaced
-          atomicPublish(merged, spec.name)
-          merged.count()
-        }
+        // read-modify-write: on a version conflict with a racing
+        // runner, the merge re-derives against the winner's fresh
+        // snapshot — neither runner's increment is lost
+        val (_, published) = snapshotTable(spec.name).overwriteWith(existing =>
+          Pipeline.merge(existing, fresh, spec.keyColumns, spec.versionColumn))
+        published.count()
     }
 
   private def runOne(spec: Pipeline.TableSpec, force: Boolean,
@@ -808,8 +753,7 @@ final class PipelineRunner(
         Some(name -> n)
       } catch {
         case e: Exception =>
-          metadata.completeSync(name, logId, success = false, 0L, since,
-            Option(e.getMessage))
+          closeFailed(e, name, logId, since)
           throw e
       }
     }

@@ -5,15 +5,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.{PosixStoreIO, StoreIO}
 
 /** Version-conflict signal for optimistic commits: the table advanced
-  * between snapshot resolution and manifest publication. Callers re-read
-  * the fresh snapshot and retry (what [[SnapshotTable.commitRetry]] does).
+  * between snapshot resolution and manifest publication. Writers re-read
+  * the fresh snapshot and retry (the one commit loop every
+  * [[SnapshotTable]] writer runs); `restore` surfaces it to the caller.
   */
 final case class VersionConflictException(expected: Long)
   extends RuntimeException(s"snapshot version $expected was superseded by a concurrent commit")
 
-/** A minimal snapshot-isolated table format — the multi-writer upgrade of
-  * [[PipelineRunner]]'s single-writer staging swap, re-expressing at file
-  * level what Delta/Iceberg-class formats do with transaction logs:
+/** A minimal snapshot-isolated table format — the one way
+  * [[PipelineRunner]] publishes an unpartitioned table — re-expressing at
+  * file level what Delta/Iceberg-class formats do with transaction logs:
   *
   *  - data files are IMMUTABLE parquet directories under `root/data/`;
   *    a write never mutates an existing file
@@ -23,11 +24,15 @@ final case class VersionConflictException(expected: Long)
   *    publish: `link(2)` fails with EEXIST if the version was taken) —
   *    so of two racing writers exactly ONE wins; the loser sees
   *    [[VersionConflictException]], re-reads the new snapshot and
-  *    reapplies its change (optimistic concurrency, no locks)
+  *    reapplies its change (optimistic concurrency, no locks); every
+  *    writer runs the same commit loop ([[commit]])
   *  - readers resolve a manifest once and then read only immutable
   *    files: every query sees one consistent snapshot regardless of
   *    concurrent commits (snapshot isolation); older versions stay
   *    readable (time travel) until explicitly vacuumed
+  *  - the first commit refuses a root that already holds anything but
+  *    `data/` and `_manifests/` (a plain-parquet table written another
+  *    way): committing over it would hide its rows
   *
   * Portability: every metadata-plane operation (manifest publish, list,
   * read, sidecars, vacuum of manifests) goes through the injected
@@ -111,9 +116,16 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   def read(version: Option[Long] = None): DataFrame =
     readWith(version, mergeSchema = false)
 
+  private def noCommittedVersion(version: Option[Long] = None): Nothing =
+    throw new IllegalStateException(
+      s"no committed version${version.fold("")(v => s" $v")} at $root")
+
+  /** [[snapshot]] that must exist: fails loudly before the first commit. */
+  private def committed(version: Option[Long] = None): Snapshot =
+    snapshot(version).getOrElse(noCommittedVersion(version))
+
   private def readWith(version: Option[Long], mergeSchema: Boolean): DataFrame = {
-    val snap = snapshot(version)
-      .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
+    val snap = committed(version)
     if (snap.dirs.isEmpty) spark.emptyDataFrame
     else {
       val r = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
@@ -151,10 +163,8 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * read — and cancel to an EMPTY diff, spec-pinned.
     */
   def diff(from: Long, to: Long): DataFrame = {
-    val sf = snapshot(Some(from)).getOrElse(
-      throw new IllegalStateException(s"no committed version $from at $root"))
-    val st = snapshot(Some(to)).getOrElse(
-      throw new IllegalStateException(s"no committed version $to at $root"))
+    val sf = committed(Some(from))
+    val st = committed(Some(to))
     val fromSet = sf.dirs.toSet
     val toSet = st.dirs.toSet
     def readDirs(dirs: Seq[String]): Option[DataFrame] =
@@ -200,32 +210,77 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
       expected + 1
     else throw VersionConflictException(expected)
 
-  /** Optimistic-retry commit: `change` maps the current dir list to the
-    * new one; on conflict the FRESH snapshot is re-read and the change
-    * reapplied — writers compose instead of clobbering. Data files are
-    * written once and reused across attempts (they are invisible until a
-    * manifest names them, so a lost race leaks nothing into readers).
+  /** A writer's prepared change, rebased onto the then-current head:
+    * the directory list to commit, or None when the prepared data is
+    * stale and must be prepared again.
     */
-  private def commitRetry(dataDirName: String, change: (Seq[String], String) => Seq[String],
-      maxAttempts: Int = 10): Long = {
-    var attempt = 0
+  private type Rebase = Option[Snapshot] => Option[Seq[String]]
+
+  private val MaxLostRaces = 10
+
+  /** The one optimistic commit loop every writer runs. `prepare` writes
+    * the writer's data directories against the head (None before the
+    * first commit) and returns its [[Rebase]], or None when there is
+    * nothing to commit (that head's version is returned). Each attempt
+    * rebases onto a freshly read head and publishes through
+    * [[tryCommit]]; a version conflict or a stale rebase is a lost race,
+    * and the writer gives up after [[MaxLostRaces]]. Prepared data is
+    * reused across conflicts: it is invisible until a manifest names it,
+    * so a lost race leaks nothing into readers.
+    */
+  private def commit(what: String)(prepare: Option[Snapshot] => Option[Rebase]): Long = {
+    var rebase: Option[Rebase] = None
+    var lost = 0
     while (true) {
-      val snap = snapshot()
-      val expected = snap.map(_.version).getOrElse(-1L)
-      val dirs = change(snap.map(_.dirs).getOrElse(Seq.empty), dataDirName)
-      try return tryCommit(expected, dirs)
-      catch {
-        case VersionConflictException(_) =>
-          attempt += 1
-          if (attempt >= maxAttempts)
-            throw new IllegalStateException(s"commit lost $maxAttempts races at $root")
+      if (rebase.isEmpty) {
+        val head = snapshot()
+        if (head.isEmpty) requireOwnLayout()
+        rebase = prepare(head)
+        if (rebase.isEmpty) return head.fold(-1L)(_.version)
       }
+      val cur = snapshot()
+      rebase.get(cur) match {
+        case Some(dirs) =>
+          try return tryCommit(cur.fold(-1L)(_.version), dirs)
+          catch { case VersionConflictException(_) => () }
+        case None => rebase = None
+      }
+      lost += 1
+      if (lost >= MaxLostRaces)
+        throw new IllegalStateException(s"$what lost $MaxLostRaces races at $root")
     }
     -1L // unreachable
   }
 
+  /** Before the first commit the root may hold only this format's own
+    * entries (`data/`, possibly with staged directories of a crashed
+    * first commit, and `_manifests/`). Anything else is a table written
+    * another way, e.g. plain parquet: a first commit would hide its rows
+    * from every read, so refuse before writing anything.
+    */
+  private def requireOwnLayout(): Unit = {
+    val foreign = graft.sources.HadoopFs.listNames(root).filterNot(Set("data", "_manifests"))
+    if (foreign.nonEmpty)
+      throw new IllegalStateException(
+        s"table at $root holds entries outside the snapshot layout " +
+          s"(${foreign.sorted.take(3).mkString(", ")}): refusing the first commit, " +
+          "which would hide them; migrate or move the old table first")
+  }
+
+  /** Rebase of a layout rewrite that read `inputs` and wrote `outputs`:
+    * directories committed since are kept; stale once any input is no
+    * longer current (a concurrent overwrite, compaction or delete
+    * replaced it, and publishing the rewrite could resurrect its rows).
+    */
+  private def replacing(inputs: Seq[String], outputs: Seq[String]): Rebase =
+    _.filter(cur => inputs.forall(cur.dirs.contains))
+      .map(cur => cur.dirs.filterNot(inputs.contains) ++ outputs)
+
+  /** Rebase of an append of directory `d`. */
+  private def appending(d: String): Rebase = cur => Some(cur.fold(Seq.empty[String])(_.dirs) :+ d)
+
   /** Append `df` as a new data directory (existing data untouched). */
-  def append(df: DataFrame): Long = commitRetry(writeData(df), (old, d) => old :+ d)
+  def append(df: DataFrame): Long = commit("append")(_ => Some(appending(writeData(df))))
 
   /** Append with a directory-level ZONE MAP: after writing, record
     * min/max of the (long-typed) `statsCols` in a `_stats.json` sidecar
@@ -240,9 +295,11 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     */
   def appendIndexed(df: DataFrame, statsCols: Seq[String],
       bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 17, bloomK: Int = 4): Long = {
-    val name = writeData(df)
-    writeSidecars(name, statsCols, bloomCols, bloomBits, bloomK)
-    commitRetry(name, (old, d) => old :+ d)
+    commit("append") { _ =>
+      val name = writeData(df)
+      writeSidecars(name, statsCols, bloomCols, bloomBits, bloomK)
+      Some(appending(name))
+    }
   }
 
   /** Record zone-map and Bloom sidecars for an already-written data
@@ -312,9 +369,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     */
   private[graft] def dirsMatching(colName: String, lo: Long, hi: Long,
       version: Option[Long] = None): Seq[String] = {
-    val snap = snapshot(version)
-      .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
-    snap.dirs.filter { d =>
+    committed(version).dirs.filter { d =>
       statsOf(d).get(colName) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true
@@ -352,9 +407,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     */
   private[graft] def dirsMatchingEq(colName: String, value: Long,
       version: Option[Long] = None): Seq[String] = {
-    val snap = snapshot(version)
-      .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
-    snap.dirs.filter { d =>
+    committed(version).dirs.filter { d =>
       val zoneOk = statsOf(d).get(colName) match {
         case Some((mn, mx)) => value >= mn && value <= mx
         case None => true
@@ -432,17 +485,15 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   }
 
   private def deleteRewrite(admit: Snapshot => Seq[String],
-      predicate: org.apache.spark.sql.Column, maxAttempts: Int = 10): Long = {
+      predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     // a DELETE removes rows the predicate MATCHES; a row where it
     // evaluates NULL did not match and must be KEPT — three-valued
     // logic makes bare not(p) drop those rows silently (NOT(null) =
     // null = filtered out), which in a takedown primitive is data loss
     val keepCond = coalesce(not(predicate), lit(true))
-    var outer = 0
-    while (outer < maxAttempts) {
-      val snap = snapshot()
-        .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
+    commit("deleteWhere") { head =>
+      val snap = head.getOrElse(noCommittedVersion())
       // sidecar-admitted candidates, then the matching-row probe: only
       // directories that HOLD a matching row are rewritten (a zone/Bloom
       // false positive costs a pushed-down probe read, never a write).
@@ -462,55 +513,52 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
             .collect().map(_.getString(0))
           candidates.filter(d => hitFiles.exists(_.contains(s"/$d/")))
         }
-      if (touched.isEmpty) return snap.version
-      // each touched directory rewrites independently — run them as
-      // CONCURRENT Spark jobs (needle deletes touch one dir; a wide
-      // takedown range can touch hundreds, and a sequential driver loop
-      // would serialize cluster-sized work behind driver round-trips)
-      import scala.collection.parallel.CollectionConverters._
-      val rewrites = touched.par.flatMap { d =>
-        // persist so the emptiness check and the write share ONE scan of
-        // the surviving rows (unpersisted as soon as the dir is written —
-        // on a wide takedown the double read would dominate the rewrite)
-        val kept = spark.read.parquet(dataPath(d)).filter(keepCond)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (kept.isEmpty) None // every row deleted: the dir just drops
-          else {
-            val name = writeData(kept)
-            // re-derive exactly the sidecars the source directory carried,
-            // including its Bloom geometry (not the defaults)
-            val blooms = bloomsOf(d)
-            val (bBits, bK) = blooms.headOption.map { case (_, bytes) =>
-              val (nbits, k, _) = graft.functions.GraftBloom.fromBytes(bytes)
-              (nbits, k)
-            }.getOrElse((1 << 17, 4))
-            writeSidecars(name, statsOf(d).keys.toSeq.sorted,
-              blooms.keys.toSeq.sorted, bBits, bK)
-            Some(d -> name)
-          }
-        } finally { kept.unpersist(false); () }
-      }.seq.toMap
-      var stale = false
-      var inner = 0
-      while (!stale && inner < maxAttempts) {
-        val cur = snapshot().get
-        if (!touched.forall(cur.dirs.contains)) {
-          // a directory this delete rewrote is no longer current (a
-          // concurrent overwrite/compaction replaced it): publishing the
-          // rewrite could resurrect rows the other writer removed —
-          // discard and redo against the fresh snapshot
-          stale = true
-        } else {
-          val dirs = cur.dirs.flatMap(d =>
-            if (!touched.contains(d)) Some(d) else rewrites.get(d))
-          try return tryCommit(cur.version, dirs)
-          catch { case VersionConflictException(_) => inner += 1 }
-        }
+      if (touched.isEmpty) None
+      else {
+        // each touched directory rewrites independently — run them as
+        // CONCURRENT Spark jobs (needle deletes touch one dir; a wide
+        // takedown range can touch hundreds, and a sequential driver loop
+        // would serialize cluster-sized work behind driver round-trips)
+        import scala.collection.parallel.CollectionConverters._
+        val rewrites = touched.par.flatMap { d =>
+          // persist so the emptiness check and the write share ONE scan of
+          // the surviving rows (unpersisted as soon as the dir is written —
+          // on a wide takedown the double read would dominate the rewrite)
+          val kept = spark.read.parquet(dataPath(d)).filter(keepCond)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            if (kept.isEmpty) None // every row deleted: the dir just drops
+            else {
+              val name = writeData(kept)
+              // re-derive exactly the sidecars the source directory carried,
+              // including its Bloom geometry (not the defaults)
+              val blooms = bloomsOf(d)
+              val (bBits, bK) = blooms.headOption.map { case (_, bytes) =>
+                val (nbits, k, _) = graft.functions.GraftBloom.fromBytes(bytes)
+                (nbits, k)
+              }.getOrElse((1 << 17, 4))
+              writeSidecars(name, statsOf(d).keys.toSeq.sorted,
+                blooms.keys.toSeq.sorted, bBits, bK)
+              Some(d -> name)
+            }
+          } finally { kept.unpersist(false); () }
+        }.seq.toMap
+        // a delete that empties the whole table keeps the table's schema:
+        // it commits one empty, schema-carrying directory instead of an
+        // empty manifest (which reads as a zero-column frame)
+        val emptied =
+          if (rewrites.isEmpty && snap.dirs.forall(touched.contains))
+            Some(writeData(read(Some(snap.version)).limit(0)))
+          else None
+        // stale once a touched directory is no longer current (a
+        // concurrent overwrite/compaction replaced it): publishing the
+        // rewrite could resurrect rows the other writer removed
+        Some(_.filter(cur => touched.forall(cur.dirs.contains)).flatMap { cur =>
+          val dirs = cur.dirs.flatMap(d => if (touched.contains(d)) rewrites.get(d) else Some(d))
+          if (dirs.nonEmpty) Some(dirs) else emptied.map(Seq(_))
+        })
       }
-      outer += 1
     }
-    throw new IllegalStateException(s"deleteWhere lost $maxAttempts races at $root")
   }
 
   /** Replace the table contents with `df` at the next version.
@@ -521,7 +569,10 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * merge) must use [[overwriteWith]], which recomputes from the fresh
     * snapshot on conflict instead of republishing a stale derivation.
     */
-  def overwrite(df: DataFrame): Long = commitRetry(writeData(df), (_, d) => Seq(d))
+  def overwrite(df: DataFrame): Long = commit("overwrite") { _ =>
+    val d = writeData(df)
+    Some(_ => Some(Seq(d)))
+  }
 
   /** RESTORE the table to historical `version`'s content, committed as
     * a NEW version — the recovery flip side of [[deleteWhere]] /
@@ -573,23 +624,15 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * earlier writer's change. Returns (committed version, the derived
     * frame as committed) — the frame is checkpointed, safe to count.
     */
-  def overwriteWith(derive: Option[DataFrame] => DataFrame, maxAttempts: Int = 10): (Long, DataFrame) = {
-    var attempt = 0
-    while (true) {
-      val snap = snapshot()
-      val expected = snap.map(_.version).getOrElse(-1L)
-      val derived = derive(snap.map(s => read(Some(s.version))))
+  def overwriteWith(derive: Option[DataFrame] => DataFrame): (Long, DataFrame) = {
+    var derived: DataFrame = null
+    val version = commit("read-modify-write") { head =>
+      derived = derive(head.map(s => read(Some(s.version))))
         .localCheckpoint(true) // pin the derivation to THIS snapshot's files
-      val dir = writeData(derived)
-      try return (tryCommit(expected, Seq(dir)), derived)
-      catch {
-        case VersionConflictException(_) =>
-          attempt += 1
-          if (attempt >= maxAttempts)
-            throw new IllegalStateException(s"read-modify-write lost $maxAttempts races at $root")
-      }
+      val d = writeData(derived)
+      Some(cur => if (cur.map(_.version) == head.map(_.version)) Some(Seq(d)) else None)
     }
-    throw new IllegalStateException("unreachable")
+    (version, derived)
   }
 
   /** Compact the table's physical layout: rewrite the current
@@ -615,33 +658,16 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   /** [[compact]] with a test seam fired between the rewrite and the
     * commit — specs inject a racing append/overwrite deterministically.
     */
-  private[graft] def compactWithHook(numPartitions: Int, beforeCommit: () => Unit,
-      maxAttempts: Int = 10): Long = {
-    var outer = 0
-    while (outer < maxAttempts) {
-      val snap = snapshot()
-        .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
-      if (snap.dirs.size <= 1) return snap.version
-      val c = writeData(read(Some(snap.version)).coalesce(numPartitions))
-      beforeCommit()
-      var stale = false
-      var inner = 0
-      while (!stale && inner < maxAttempts) {
-        val cur = snapshot().get
-        if (!snap.dirs.forall(cur.dirs.contains)) {
-          // a directory this rewrite folded in is no longer current: the
-          // compacted data may resurrect deleted rows — discard and redo
-          stale = true
-        } else {
-          val dirs = cur.dirs.filterNot(snap.dirs.contains) :+ c
-          try return tryCommit(cur.version, dirs)
-          catch { case VersionConflictException(_) => inner += 1 }
-        }
+  private[graft] def compactWithHook(numPartitions: Int, beforeCommit: () => Unit): Long =
+    commit("compaction") { head =>
+      val snap = head.getOrElse(noCommittedVersion())
+      if (snap.dirs.size <= 1) None
+      else {
+        val c = writeData(read(Some(snap.version)).coalesce(numPartitions))
+        beforeCommit()
+        Some(replacing(snap.dirs, Seq(c)))
       }
-      outer += 1
     }
-    throw new IllegalStateException(s"compaction lost $maxAttempts races at $root")
-  }
 
   /** Z-ORDER clustering rewrite: reorganize the whole table into
     * `buckets` data directories ordered by the bit-interleaved
@@ -662,61 +688,48 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * fold in untouched). Content is unchanged — `diff` across the
     * rewrite is empty, spec-pinned.
     */
-  def compactZordered(cols: Seq[String], buckets: Int = 8,
-      maxAttempts: Int = 10): Long = {
+  def compactZordered(cols: Seq[String], buckets: Int = 8): Long = {
     require(cols.nonEmpty && cols.size <= 4, s"1-4 cluster columns, got ${cols.size}")
     import org.apache.spark.sql.functions._
-    var outer = 0
-    while (outer < maxAttempts) {
-      val snap = snapshot()
-        .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
+    commit("z-order rewrite") { head =>
+      val snap = head.getOrElse(noCommittedVersion())
       val base = read(Some(snap.version))
-      if (base.isEmpty) return snap.version
-      // per-column observed range → 16-bit grid → interleaved z
-      val mmAggs = cols.flatMap(c => Seq(min(col(c)).cast("long"), max(col(c)).cast("long")))
-      val mm = base.agg(mmAggs.head, mmAggs.tail: _*).head()
-      val grids = cols.zipWithIndex.map { case (c, j) =>
-        val (lo, hi) = (mm.getLong(2 * j), mm.getLong(2 * j + 1))
-        val span = math.max(1L, hi - lo)
-        (((col(c).cast("long") - lit(lo)) * lit(65535L)) / lit(span)).as(s"__g$j")
-      }
-      val nc = cols.size
-      val withG = base.select(col("*") +: grids: _*)
-      val z = (0 until 16).foldLeft(lit(0L)) { (acc, i) =>
-        cols.indices.foldLeft(acc) { (a, j) =>
-          a.bitwiseOR(shiftleft(shiftright(col(s"__g$j"), i).bitwiseAND(lit(1L)),
-            i * nc + j))
+      if (base.isEmpty) None
+      else {
+        // per-column observed range → 16-bit grid → interleaved z
+        val mmAggs = cols.flatMap(c => Seq(min(col(c)).cast("long"), max(col(c)).cast("long")))
+        val mm = base.agg(mmAggs.head, mmAggs.tail: _*).head()
+        val grids = cols.zipWithIndex.map { case (c, j) =>
+          val (lo, hi) = (mm.getLong(2 * j), mm.getLong(2 * j + 1))
+          val span = math.max(1L, hi - lo)
+          (((col(c).cast("long") - lit(lo)) * lit(65535L)) / lit(span)).as(s"__g$j")
         }
-      }
-      val zdf = withG.withColumn("__z", z).localCheckpoint(true)
-      val cuts = zdf.stat
-        .approxQuantile("__z", (1 until buckets).map(_.toDouble / buckets).toArray, 0.001)
-        .map(_.toLong).distinct.sorted
-      val ranges = (Long.MinValue +: cuts.map(_ + 1)).zip(cuts :+ Long.MaxValue)
-      val newDirs = ranges.map { case (lo, hi) =>
-        val slice = zdf.filter(col("__z") >= lo && col("__z") <= hi)
-          .sortWithinPartitions(col("__z"))
-          .drop(("__z" +: cols.indices.map(j => s"__g$j")): _*)
-        val name = writeData(slice)
-        writeSidecars(name, cols)
-        name
-      }
-      // same stale/race rules as compact: a folded-in dir vanishing means
-      // a concurrent overwrite removed rows this rewrite would resurrect
-      var stale = false
-      var inner = 0
-      while (!stale && inner < maxAttempts) {
-        val cur = snapshot().get
-        if (!snap.dirs.forall(cur.dirs.contains)) stale = true
-        else {
-          val dirs = cur.dirs.filterNot(snap.dirs.contains) ++ newDirs
-          try return tryCommit(cur.version, dirs)
-          catch { case VersionConflictException(_) => inner += 1 }
+        val nc = cols.size
+        val withG = base.select(col("*") +: grids: _*)
+        val z = (0 until 16).foldLeft(lit(0L)) { (acc, i) =>
+          cols.indices.foldLeft(acc) { (a, j) =>
+            a.bitwiseOR(shiftleft(shiftright(col(s"__g$j"), i).bitwiseAND(lit(1L)),
+              i * nc + j))
+          }
         }
+        val zdf = withG.withColumn("__z", z).localCheckpoint(true)
+        val cuts = zdf.stat
+          .approxQuantile("__z", (1 until buckets).map(_.toDouble / buckets).toArray, 0.001)
+          .map(_.toLong).distinct.sorted
+        val ranges = (Long.MinValue +: cuts.map(_ + 1)).zip(cuts :+ Long.MaxValue)
+        val newDirs = ranges.map { case (lo, hi) =>
+          val slice = zdf.filter(col("__z") >= lo && col("__z") <= hi)
+            .sortWithinPartitions(col("__z"))
+            .drop(("__z" +: cols.indices.map(j => s"__g$j")): _*)
+          val name = writeData(slice)
+          writeSidecars(name, cols)
+          name
+        }
+        // same stale/race rules as compact: a folded-in dir vanishing means
+        // a concurrent overwrite removed rows this rewrite would resurrect
+        Some(replacing(snap.dirs, newDirs))
       }
-      outer += 1
     }
-    throw new IllegalStateException(s"z-order rewrite lost $maxAttempts races at $root")
   }
 
   /** Drop data directories no committed manifest references and
@@ -730,6 +743,9 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * pass 0 only when no writer can be active.
     */
   def vacuum(keepVersions: Int = 2, minAgeMs: Long = 3600_000L): Unit = {
+    // keeping no version would delete every manifest (and, past the age
+    // floor, every data directory): the table itself would be gone
+    require(keepVersions >= 1, s"vacuum must keep at least the head version, got $keepVersions")
     val versions = listVersions()
     val drop = versions.dropRight(keepVersions)
     val keep = versions.takeRight(keepVersions)

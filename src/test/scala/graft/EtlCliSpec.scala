@@ -20,9 +20,9 @@ class EtlCliSpec extends SparkSpecBase {
     assert(cfg.mode.contains(Pipeline.PostRace) && cfg.year.contains(2024) && cfg.force)
     val t = Main.parse(Array("--table", "orders", "--year", "1995", "--round", "3")).toOption.get
     assert(t.table.contains("orders") && t.year.contains(1995) && t.round.contains(3))
-    val w = Main.parse(Array("--table", "region", "--warehouse", "/tmp/w", "--source", "/tmp/s",
-      "--snapshot")).toOption.get
-    assert(w.warehouse == "/tmp/w" && w.source == "/tmp/s" && w.snapshot)
+    val w = Main.parse(Array("--table", "region", "--warehouse", "/tmp/w", "--source", "/tmp/s"))
+      .toOption.get
+    assert(w.warehouse == "/tmp/w" && w.source == "/tmp/s")
   }
 
   test("parse: usage errors are loud, never silent no-ops") {
@@ -49,13 +49,13 @@ class EtlCliSpec extends SparkSpecBase {
   }
 
   test("cli: --mode pre_season loads the dimension DAG in order, exit 0") {
-    val (runner, wh, _) = cliRunner()
+    val (runner, _, _) = cliRunner()
     val out = scala.collection.mutable.ListBuffer.empty[String]
     val code = Main.execute(Main.parse(Array("--mode", "pre_season")).toOption.get,
       runner, out.append(_))
     assert(code == 0)
     // region → nation → customer all published
-    assert(spark.read.parquet(s"$wh/customer").count() ==
+    assert(runner.table("customer").count() ==
       spark.read.parquet(s"$sfDir/customer.parquet").count())
     assert(out.count(_.startsWith("loaded")) == 3)
   }
@@ -74,13 +74,13 @@ class EtlCliSpec extends SparkSpecBase {
     val (runner, wh, store) = cliRunner()
     // establish a full orders load + its watermark first
     assert(Main.execute(Main.parse(Array("--mode", "post_race")).toOption.get, runner) == 0)
-    val before = spark.read.parquet(s"$wh/orders").count()
+    val before = runner.table("orders").count()
     val wmBefore = store.watermark("orders")
     val cfg = Main.parse(Array("--table", "orders", "--year", "1995", "--round", "3")).toOption.get
     val out = scala.collection.mutable.ListBuffer.empty[String]
     assert(Main.execute(cfg, runner, out.append(_)) == 0)
     // idempotent repair: same rows, nothing duplicated, watermark unchanged
-    assert(spark.read.parquet(s"$wh/orders").count() == before)
+    assert(runner.table("orders").count() == before)
     assert(store.watermark("orders") == wmBefore)
     // backfill reports the MERGED table count (its API contract: full
     // table for unpartitioned targets), and the repaired slice must be

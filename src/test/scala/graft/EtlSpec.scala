@@ -413,7 +413,7 @@ class EtlSpec extends SparkSpecBase {
     // parquet, no manifest exists yet
     Seq((99L, "STAGED", 9L)).toDF("id", "v", "ver")
       .write.parquet(s"$wh/tbl/data/d-inflight")
-    val runner = new PipelineRunner(spark, wh, store, uSpecs, ex, useSnapshotTables = true)
+    val runner = new PipelineRunner(spark, wh, store, uSpecs, ex)
     intercept[IllegalStateException] { runner.table("tbl") }
 
     // a run sees "no committed state" (not the staged rows) and publishes
@@ -424,14 +424,67 @@ class EtlSpec extends SparkSpecBase {
     assert(vs.sameElements(Array("fresh")),
       s"staged data must not leak into the first committed version, got ${vs.toSeq}")
 
-    // a snapshot-layout root read OUTSIDE snapshot mode goes through the
-    // manifest too: a second staged-but-uncommitted dir stays invisible
+    // a committed root reads through the manifest: a second
+    // staged-but-uncommitted dir stays invisible
     Seq((98L, "STAGED2", 9L)).toDF("id", "v", "ver")
       .write.parquet(s"$wh/tbl/data/d-inflight2")
-    val plainRunner = new PipelineRunner(spark, wh, store, uSpecs, ex, useSnapshotTables = false)
-    val vs2 = plainRunner.table("tbl").collect().map(_.getAs[String]("v"))
+    val vs2 = runner.table("tbl").collect().map(_.getAs[String]("v"))
     assert(vs2.sameElements(Array("fresh")),
       s"recursive parquet fallback must not read snapshot data dirs, got ${vs2.toSeq}")
+  }
+
+  test("a plain-parquet table root is refused before the first snapshot commit, its files untouched") {
+    import spark.implicits._
+    val (wh, md) = freshDirs()
+    val store = new MetadataStore(spark, md)
+    val uSpecs = Seq(Pipeline.TableSpec("tbl", Pipeline.PostRace, Nil,
+      Seq("id"), versionColumn = Some("ver")))
+    val ex: Map[String, Pipeline.Extract] = Map(
+      "tbl" -> ((s, _) => { import s.implicits._; Seq((3L, "c", 1L)).toDF("id", "v", "ver") }))
+    // a table written as plain parquet (no manifests, no data/ dir)
+    Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "v", "ver").write.parquet(s"$wh/tbl")
+    def listing(): Map[String, (Long, Long)] = {
+      val s = Files.walk(java.nio.file.Paths.get(s"$wh/tbl"))
+      try s.iterator().asScala.map(p => p.toString -> ((Files.size(p),
+        Files.getLastModifiedTime(p).toMillis))).toMap
+      finally s.close()
+    }
+    val before = listing()
+    val runner = new PipelineRunner(spark, wh, store, uSpecs, ex)
+    // committing v0 over the root would hide both legacy rows behind a
+    // manifest that lists only the fresh one
+    val e = intercept[IllegalStateException] { runner.run(Pipeline.PostRace) }
+    assert(e.getMessage.contains(s"$wh/tbl"), s"the error names the table: ${e.getMessage}")
+    assert(listing() == before, "the refusal writes nothing under the legacy root")
+    assert(spark.read.parquet(s"$wh/tbl").count() == 2, "the legacy rows are intact")
+    assert(store.currentStatus("tbl").contains("failed"))
+  }
+
+  test("a failing sync-log write rides on the load's error as suppressed; the load's error is rethrown") {
+    val (wh, md) = freshDirs()
+    // id reservations go through putIfAbsent: startSync's passes, the
+    // failed-run record's (the second) throws
+    def failingSecondPut(): graft.sources.StoreIO = {
+      val io = new graft.sources.InMemoryStoreIO()
+      io.failAfterCommit(2)
+      io
+    }
+    val boom: Pipeline.Extract = (_, _) => throw new RuntimeException("extract blew up")
+    val rSpecs = Seq(Pipeline.TableSpec("results", Pipeline.PostRace, Nil, Seq("id")))
+    def check(e: Exception): Unit = {
+      assert(e.getMessage == "extract blew up", s"the load's own error, got: ${e.getMessage}")
+      assert(e.getSuppressed.toSeq.map(_.getClass) == Seq(classOf[java.io.IOException]) &&
+        e.getSuppressed.head.getMessage.contains("injected crash"),
+        s"the log failure rides along: ${e.getSuppressed.toSeq}")
+    }
+    // runOne (mode runs)
+    val runner = new PipelineRunner(spark, wh,
+      new MetadataStore(spark, s"$md/a", io = failingSecondPut()), rSpecs, Map("results" -> boom))
+    check(intercept[RuntimeException] { runner.run(Pipeline.PostRace) })
+    // runSlice (backfills and scheduler steps)
+    val sliced = new PipelineRunner(spark, wh,
+      new MetadataStore(spark, s"$md/b", io = failingSecondPut()), rSpecs, Map("results" -> boom))
+    check(intercept[RuntimeException] { sliced.backfill("results", Map("round" -> 1)) })
   }
 
   test("snapshot mode: partitioned tables stay readable and mergeable (parquet path)") {
@@ -447,7 +500,7 @@ class EtlSpec extends SparkSpecBase {
       "fact_p" -> ((s, _) => { import s.implicits._; batch.toDF("id", "v", "ver", "day") }),
       "dim_u" -> ((s, _) => { import s.implicits._
         batch.map { case (i, v, ver, _) => (i, v, ver) }.toDF("id", "v", "ver") }))
-    val runner = new PipelineRunner(spark, wh, store, mixedSpecs, ex, useSnapshotTables = true)
+    val runner = new PipelineRunner(spark, wh, store, mixedSpecs, ex)
     runner.run(Pipeline.PostRace)
     // partitioned table: no manifest was (or should be) written; reads go
     // through plain partitioned parquet, not SnapshotTable

@@ -80,7 +80,7 @@ class SnapshotTableSpec extends SparkSpecBase {
     var batch = Seq((1L, "a", 1L), (2L, "b", 1L))
     val ex: Map[String, Pipeline.Extract] = Map(
       "dim" -> ((s, _) => { import s.implicits._; batch.toDF("id", "v", "ver") }))
-    val runner = new PipelineRunner(spark, wh, store, specs, ex, useSnapshotTables = true)
+    val runner = new PipelineRunner(spark, wh, store, specs, ex)
     runner.run(Pipeline.PreSeason, force = true)
     batch = Seq((2L, "B", 2L), (3L, "c", 1L))
     runner.run(Pipeline.PreSeason, force = true)
@@ -286,6 +286,18 @@ class SnapshotTableSpec extends SparkSpecBase {
     intercept[Exception] { t.read(Some(0L)).collect() } // vacuumed away
   }
 
+  test("vacuum refuses keepVersions = 0, leaving the head readable") {
+    val t = fresh()
+    t.append(Seq((1L, "a")).toDF("id", "v"))
+    t.append(Seq((2L, "b")).toDF("id", "v"))
+    // keeping no version would delete every manifest and, with the age
+    // floor lifted, every data directory
+    intercept[IllegalArgumentException] { t.vacuum(keepVersions = 0, minAgeMs = 0L) }
+    assert(t.currentVersion.contains(1L))
+    assert(t.read().collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    assert(t.read(Some(0L)).count() == 1, "history is untouched too")
+  }
+
   test("vacuum's data-plane age gate runs on the newest FILE mtime, not the directory stat") {
     val t = fresh()
     t.append(Seq((1L, "a")).toDF("id", "v")) // v0
@@ -355,5 +367,38 @@ class SnapshotTableSpec extends SparkSpecBase {
     t2.append(Seq((2L, "oops")).toDF("id", "x"))
     val e = intercept[org.apache.spark.SparkException] { t2.readMerged().collect() }
     assert(e.getMessage.toLowerCase.contains("merg"), s"expected a merge error, got: ${e.getMessage}")
+  }
+
+  test("one ETL table path: one commit loop, no plain-parquet publish, no --snapshot flag") {
+    import scala.jdk.CollectionConverters._
+    val blockComment = "(?s)/\\*.*?\\*/".r
+    val lineComment = "//[^\n]*".r
+    def code(p: java.nio.file.Path): String = lineComment.replaceAllIn(
+      blockComment.replaceAllIn(new String(Files.readAllBytes(p), "UTF-8"), ""), "")
+    val main = java.nio.file.Paths.get("src/main/scala")
+    // every tryCommit call sits in the commit engine or in restore
+    // (single-attempt by design); no writer hand-writes its own loop
+    val st = code(main.resolve("graft/etl/SnapshotTable.scala"))
+    val defName = "def (\\w+)".r
+    val callers = "tryCommit\\(".r.findAllMatchIn(st).map(_.start)
+      .filterNot(i => st.substring(0, i).endsWith("def "))
+      .map(i => defName.findAllMatchIn(st.substring(0, i)).toSeq.last.group(1)).toSet
+    assert(callers == Set("commit", "restoreWithHook"),
+      s"tryCommit outside the commit engine and restore: ${callers.mkString(", ")}")
+    // no publish path for unpartitioned tables besides SnapshotTable
+    val files = {
+      val s = Files.walk(main)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.nonEmpty, s"no sources under ${main.toAbsolutePath}")
+    val offenders = files.flatMap { f =>
+      val c = code(f)
+      Seq("atomicPublish", "hasSnapshotLayout").filter(c.contains).map(b => s"${f.getFileName}: $b")
+    }
+    assert(offenders.isEmpty, s"unpartitioned tables publish through SnapshotTable: ${offenders.mkString(", ")}")
+    // the CLI has no flag choosing between table paths
+    assert(!code(main.resolve("graft/etl/Main.scala")).contains("\"--snapshot\""))
+    assert(graft.etl.Main.parse(Array("--mode", "pre_season", "--snapshot")).isLeft)
   }
 }

@@ -97,6 +97,33 @@ class TakedownSpec extends SparkSpecBase {
       "appended rows survive a delete commit")
   }
 
+  test("deleting every row keeps the table's schema; a directory emptied beside survivors still drops") {
+    val st = fresh()
+    val v0 = st.appendIndexed(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"),
+      bloomCols = Seq("id"))
+    val columns = st.read().columns.toSeq
+    val v1 = st.deleteWhereRange("id", 0L, 10L)
+    assert(v1 == v0 + 1)
+    assert(st.read().columns.toSeq == columns, "the emptied table keeps its columns")
+    assert(st.read().count() == 0)
+    assert(st.readWhere("id", 0L, 10L).count() == 0)
+    assert(st.readWhereEq("id", 1L).count() == 0)
+    val d = st.diff(v0, v1).collect()
+    assert(d.map(r => (r.getLong(0), r.getAs[String]("change_type"))).sorted.toSeq ==
+      Seq((1L, "delete"), (2L, "delete")))
+    // a later append lands beside the schema-carrying empty directory
+    st.append(Seq((3L, "c")).toDF("id", "v"))
+    assert(st.read().collect().map(_.getLong(0)).toSeq == Seq(3L))
+
+    // with a surviving directory, an emptied one just drops
+    val st2 = fresh()
+    st2.appendIndexed(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
+    st2.appendIndexed(Seq((100L, "x")).toDF("id", "v"), Seq("id"))
+    val survivor = st2.snapshot().get.dirs.last
+    st2.deleteWhereRange("id", 0L, 10L)
+    assert(st2.snapshot().get.dirs == Seq(survivor))
+  }
+
   test("restore: one manifest commit returns the pre-delete state; history intact; refuses races and vacuumed targets") {
     val st = fresh()
     st.appendIndexed((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
