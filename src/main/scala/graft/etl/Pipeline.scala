@@ -436,19 +436,12 @@ final class MetadataStore(spark: SparkSession, root: String,
     // id-reservation markers at or below the folded log's max id are
     // spent (their rows are durably in the log); an age gate protects a
     // marker whose append is still in flight between reserve and write.
-    // `.exists`, not `.forall`: an unreadable mtime means KEEP — a
-    // transient stat failure must not age a live marker to infinity
+    // Orphaned `.tmp-*` siblings from a StoreIO publish that crashed
+    // between the temp write and its cleanup were never visible to any
+    // reader, so the age floor is their only rule
     val maxId = folded.agg(coalesce(max(col("id")), lit(0L))).as[Long].head()
-    io.list(idDir)
-      .filter(_.startsWith("id-")).filter(_.stripPrefix("id-").toLong <= maxId)
-      .filter(n => io.mtime(s"$idDir/$n").exists(_ <= cutoff))
-      .foreach(n => io.delete(s"$idDir/$n"))
-    // orphaned `.tmp-*` siblings from a StoreIO publish that crashed
-    // between the temp write and its cleanup — never visible to any
-    // reader, so the age floor is the only rule
-    io.list(idDir).filter(_.startsWith(".tmp-"))
-      .filter(n => io.mtime(s"$idDir/$n").exists(_ <= cutoff))
-      .foreach(n => io.delete(s"$idDir/$n"))
+    graft.sources.StoreIO.sweepAged(io, idDir, cutoff)(n =>
+      (n.startsWith("id-") && n.stripPrefix("id-").toLong <= maxId) || n.startsWith(".tmp-"))
   }
 
   /** Newest mtime anywhere under `p` (the path's own when childless).

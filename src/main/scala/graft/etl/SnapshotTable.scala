@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{PosixStoreIO, StoreIO}
+import graft.sources.{CommitLog, PosixStoreIO, StoreIO}
 
 /** Version-conflict signal for optimistic commits: the table advanced
   * between snapshot resolution and manifest publication. Writers re-read
@@ -18,14 +18,16 @@ final case class VersionConflictException(expected: Long)
   *
   *  - data files are IMMUTABLE parquet directories under `root/data/`;
   *    a write never mutates an existing file
-  *  - table state is a chain of manifests `root/_manifests/v{N}`; each
-  *    lists exactly the data directories visible at that version
-  *  - a commit is an ATOMIC create-new of manifest N+1 (hard-link
-  *    publish: `link(2)` fails with EEXIST if the version was taken) —
-  *    so of two racing writers exactly ONE wins; the loser sees
-  *    [[VersionConflictException]], re-reads the new snapshot and
-  *    reapplies its change (optimistic concurrency, no locks); every
-  *    writer runs the same commit loop ([[commit]])
+  *  - table state is a [[graft.sources.CommitLog]] of manifests under
+  *    `root/_manifests/` (the log a store's generation chain also
+  *    rides); each version lists exactly the data directories visible
+  *    at that version
+  *  - a commit is an ATOMIC create-new of manifest N+1, so of two racing
+  *    writers exactly ONE wins; the loser re-reads the new snapshot and
+  *    reapplies its change (optimistic concurrency, no locks). Every
+  *    writer hands the log the same prepare-once/rebase-per-attempt
+  *    transition ([[commit]]); `restore` alone commits once and surfaces
+  *    [[VersionConflictException]]
   *  - readers resolve a manifest once and then read only immutable
   *    files: every query sees one consistent snapshot regardless of
   *    concurrent commits (snapshot isolation); older versions stay
@@ -34,10 +36,10 @@ final case class VersionConflictException(expected: Long)
   *    `data/` and `_manifests/` (a plain-parquet table written another
   *    way): committing over it would hide its rows
   *
-  * Portability: every metadata-plane operation (manifest publish, list,
-  * read, sidecars, vacuum of manifests) goes through the injected
-  * [[graft.sources.StoreIO]] seam. The default [[PosixStoreIO]] commits
-  * with POSIX `link(2)` (shared filesystems); an object-store deployment
+  * Portability: every metadata-plane operation (the manifest log,
+  * sidecars) goes through the injected [[graft.sources.StoreIO]] seam.
+  * The default [[PosixStoreIO]] commits with POSIX `link(2)` (shared
+  * filesystems); an object-store deployment
   * implements the six StoreIO operations once — `putIfAbsent` as a
   * conditional PUT (`If-None-Match: *`) — and the whole table format
   * carries over unchanged. The DATA plane (immutable parquet dirs) is
@@ -62,29 +64,24 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   /** The table's root directory (specs inspect the on-disk layout). */
   def rootPath: String = root
 
-  private val manifestDir = s"$root/_manifests"
   private val dataDir = s"$root/data"
 
   private def dataPath(name: String): String = s"$dataDir/$name"
 
-  private def manifestPath(v: Long): String = f"$manifestDir/v$v%012d"
+  /** The manifest log: version N lists the data directories visible at N. */
+  private val log = new CommitLog[Snapshot](s"$root/_manifests", io,
+    _.dirs.mkString("\n").getBytes("UTF-8"),
+    (v, bytes) => Snapshot(v, new String(bytes, "UTF-8").split("\n", -1).toSeq.filter(_.nonEmpty)))
 
-  private def listVersions(): Seq[Long] =
-    io.list(manifestDir)
-      .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
-      .map(_.drop(1).toLong)
-      .sorted
+  def currentVersion: Option[Long] = log.versions().lastOption
 
-  def currentVersion: Option[Long] = listVersions().lastOption
-
-  /** Resolve one immutable snapshot (latest, or a pinned older version). */
-  def snapshot(version: Option[Long] = None): Option[Snapshot] = {
-    val v = version.orElse(currentVersion)
-    v.map { ver =>
-      val bytes = io.get(manifestPath(ver)).getOrElse(
-        throw new IllegalStateException(s"version $ver vanished at $root (vacuumed?)"))
-      Snapshot(ver, new String(bytes, "UTF-8").split("\n", -1).toSeq.filter(_.nonEmpty))
-    }
+  /** Resolve one immutable snapshot: the latest, or a pinned version,
+    * which fails loudly once vacuumed.
+    */
+  def snapshot(version: Option[Long] = None): Option[Snapshot] = version match {
+    case None => log.head()
+    case Some(v) => Some(log.at(v).getOrElse(
+      throw new IllegalStateException(s"version $v vanished at $root (vacuumed?)")))
   }
 
   /** The latest version committed at or before `tsMillis` — the
@@ -97,11 +94,11 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * read fails loudly, same as `read(Some(v))`).
     */
   def versionAsOf(tsMillis: Long): Option[Long] =
-    listVersions().filter { v =>
+    log.versions().filter { v =>
       // a concurrent vacuum may remove an old manifest between the
       // listing and this stat — a vanished version simply doesn't
       // qualify; it must not crash the lookup of versions that do
-      io.mtime(manifestPath(v)).exists(_ <= tsMillis)
+      log.committedAt(v).exists(_ <= tsMillis)
     }.lastOption
 
   /** Read the table as of a wall-clock instant (see [[versionAsOf]]). */
@@ -199,15 +196,12 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   }
 
   /** Publish `dirs` as version `expected + 1` (expected = -1 for the
-    * first commit). Atomic through the [[graft.sources.StoreIO]] seam:
-    * `putIfAbsent` commits name and content together — a concurrent
-    * commit of the same version loses deterministically and no reader
-    * ever sees a partial manifest (POSIX impl: temp file + `link(2)`;
-    * object stores: conditional PUT).
+    * first commit) through the [[CommitLog]]: a concurrent commit of the
+    * same version loses deterministically and no reader ever sees a
+    * partial manifest.
     */
   def tryCommit(expected: Long, dirs: Seq[String]): Long =
-    if (io.putIfAbsent(manifestPath(expected + 1), dirs.mkString("\n").getBytes("UTF-8")))
-      expected + 1
+    if (log.tryCommit(expected, Snapshot(expected + 1, dirs))) expected + 1
     else throw VersionConflictException(expected)
 
   /** A writer's prepared change, rebased onto the then-current head:
@@ -216,40 +210,25 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     */
   private type Rebase = Option[Snapshot] => Option[Seq[String]]
 
-  private val MaxLostRaces = 10
-
-  /** The one optimistic commit loop every writer runs. `prepare` writes
-    * the writer's data directories against the head (None before the
-    * first commit) and returns its [[Rebase]], or None when there is
-    * nothing to commit (that head's version is returned). Each attempt
-    * rebases onto a freshly read head and publishes through
-    * [[tryCommit]]; a version conflict or a stale rebase is a lost race,
-    * and the writer gives up after [[MaxLostRaces]]. Prepared data is
-    * reused across conflicts: it is invisible until a manifest names it,
-    * so a lost race leaks nothing into readers.
+  /** The transition every writer hands the manifest log's
+    * [[CommitLog.commit]]. `prepare` writes the writer's data
+    * directories against a head (None before the first commit) and
+    * returns its [[Rebase]], or None when there is nothing to commit (a
+    * no-op: that head's version is returned). Each attempt rebases the
+    * prepared change onto the fresh head and prepares again only when
+    * the rebase reports it stale. Prepared data is reused across lost
+    * races: it is invisible until a manifest names it, so a lost race
+    * leaks nothing into readers.
     */
   private def commit(what: String)(prepare: Option[Snapshot] => Option[Rebase]): Long = {
     var rebase: Option[Rebase] = None
-    var lost = 0
-    while (true) {
-      if (rebase.isEmpty) {
-        val head = snapshot()
+    log.commit(what) { head =>
+      rebase.flatMap(_(head)).orElse {
         if (head.isEmpty) requireOwnLayout()
         rebase = prepare(head)
-        if (rebase.isEmpty) return head.fold(-1L)(_.version)
-      }
-      val cur = snapshot()
-      rebase.get(cur) match {
-        case Some(dirs) =>
-          try return tryCommit(cur.fold(-1L)(_.version), dirs)
-          catch { case VersionConflictException(_) => () }
-        case None => rebase = None
-      }
-      lost += 1
-      if (lost >= MaxLostRaces)
-        throw new IllegalStateException(s"$what lost $MaxLostRaces races at $root")
+        rebase.flatMap(_(head))
+      }.map(Snapshot(-1L, _))
     }
-    -1L // unreachable
   }
 
   /** Before the first commit the root may hold only this format's own
@@ -746,25 +725,16 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     // keeping no version would delete every manifest (and, past the age
     // floor, every data directory): the table itself would be gone
     require(keepVersions >= 1, s"vacuum must keep at least the head version, got $keepVersions")
-    val versions = listVersions()
-    val drop = versions.dropRight(keepVersions)
-    val keep = versions.takeRight(keepVersions)
-    val live = keep.flatMap(v => snapshot(Some(v)).map(_.dirs).getOrElse(Seq.empty)).toSet
-    drop.foreach(v => io.delete(manifestPath(v)))
-    // orphaned `.tmp-*` siblings from a StoreIO publish that crashed
-    // between the temp write and its cleanup — never named by any
-    // manifest, so only the age floor (a commit in flight) applies;
-    // an unreadable mtime means KEEP
-    val tmpCutoff = System.currentTimeMillis() - math.max(minAgeMs, 3600_000L)
-    io.list(manifestDir).filter(_.startsWith(".tmp-"))
-      .filter(n => io.mtime(s"$manifestDir/$n").exists(_ <= tmpCutoff))
-      .foreach(n => io.delete(s"$manifestDir/$n"))
+    val now = System.currentTimeMillis()
+    // manifests carry no age gate: only the newest `keepVersions` survive
+    val live = log.trim(keepVersions, Long.MaxValue).flatMap(v => committed(Some(v)).dirs).toSet
+    log.sweepTmp(now, minAgeMs)
     // data-plane sweep: parquet dirs are Spark's (Hadoop FS) world, not
     // StoreIO's — the LIST, mtime gate and recursive DELETE all resolve
     // through the path's own filesystem connector (same layer the write
     // path used), so an `s3a://` table's unreferenced directories are
     // actually reclaimed instead of surviving a local-only walk forever
-    val cutoff = System.currentTimeMillis() - minAgeMs
+    val cutoff = now - minAgeMs
     val dd = new org.apache.hadoop.fs.Path(dataDir)
     val fs = dd.getFileSystem(graft.sources.HadoopFs.conf())
     if (fs.exists(dd)) {

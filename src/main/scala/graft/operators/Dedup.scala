@@ -158,7 +158,7 @@ object Dedup {
     * a rebuild never touches the live generation, so probes racing it
     * keep reading their resolved generation bit-identically
     * (spec-verified). Old generations are reclaimed by
-    * [[Warehouse.vacuumStoreGenerations]].
+    * [[Warehouse.vacuumGenerations]].
     */
   def buildSignatureStore(docs: DataFrame, name: String, numHashes: Int = 64,
       bands: Int = 16, buckets: Int = 0,
@@ -677,7 +677,7 @@ object Dedup {
     * still hold the removed rows until the store vacuum ages them out —
     * permanent erasure is this cascade plus
     * [[graft.sources.Warehouse.vacuumSegmentedStore]] /
-    * [[graft.sources.Warehouse.vacuumStoreGenerations]], exactly like
+    * [[graft.sources.Warehouse.vacuumGenerations]], exactly like
     * deleteWhere + table vacuum.
     *
     * SCOPE — records vs models: the cascade covers the stores whose

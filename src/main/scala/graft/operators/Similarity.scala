@@ -193,8 +193,9 @@ object Similarity {
     * corpus from disk, not all of it. The index is GENERATION-VERSIONED
     * with the dedup stores' claim/publish protocol, as a path store
     * ([[graft.sources.Warehouse.pathStore]]): data lands at
-    * `<path>/g<gen>` (centroids ride along at `_centroids` inside it, so
-    * a probe always pairs centroids with their exact assignments) and
+    * `<path>/g<gen>` (centroids beside it at
+    * [[graft.sources.Warehouse.pathGenModel]], so a probe always pairs
+    * centroids with their exact assignments) and
     * becomes visible only on publish — a rebuild racing live probes
     * clobbers nothing, and old generations are reclaimed by
     * [[vacuumIvfIndex]]. Returns the
@@ -207,11 +208,9 @@ object Similarity {
   def buildIvfIndexOf(emb: DataFrame, path: String, nlist: Int = 16): DataFrame = {
     val refined = kmeansCentroids(emb, nlist)
     Warehouse.build(Warehouse.pathStore(path)) { gen =>
-      val genPath = Warehouse.pathGenData(path, gen)
       assignNearest(emb, refined)
-        .write.mode("overwrite").partitionBy("cid").parquet(genPath)
-      // underscore prefix: parquet readers of the index root skip it
-      refined.write.mode("overwrite").parquet(s"$genPath/_centroids")
+        .write.mode("overwrite").partitionBy("cid").parquet(Warehouse.pathGenData(path, gen))
+      refined.write.mode("overwrite").parquet(Warehouse.pathGenModel(path, gen))
     }
     refined
   }
@@ -260,8 +259,7 @@ object Similarity {
     // winner's centroids.
     Warehouse.appendSegmentWith[DataFrame](Warehouse.pathStore(path),
       dedupeTag, inc.isEmpty,
-      prepare = base => assignNearest(inc, spark.read.parquet(
-        s"${Warehouse.pathGenData(path, base)}/_centroids")),
+      prepare = base => assignNearest(inc, spark.read.parquet(Warehouse.pathGenModel(path, base))),
       writeData = (gen, assigned) => assigned.write.mode("overwrite")
         .partitionBy("cid").parquet(Warehouse.pathGenData(path, gen)),
       beforePublish = beforePublish)
@@ -286,12 +284,11 @@ object Similarity {
     Warehouse.fold(Warehouse.pathStore(path))((base, segs) => Some((
       (base +: segs).map(g => spark.read.parquet(Warehouse.pathGenData(path, g)))
         .reduce(_ unionAll _),
-      spark.read.parquet(s"${Warehouse.pathGenData(path, base)}/_centroids"))))(
+      spark.read.parquet(Warehouse.pathGenModel(path, base)))))(
       write = { case (gen, (index, centroids)) =>
-        val genPath = Warehouse.pathGenData(path, gen)
         index.join(broadcast(ids), Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").partitionBy("cid").parquet(genPath)
-        centroids.write.mode("overwrite").parquet(s"$genPath/_centroids")
+          .write.mode("overwrite").partitionBy("cid").parquet(Warehouse.pathGenData(path, gen))
+        centroids.write.mode("overwrite").parquet(Warehouse.pathGenModel(path, gen))
       },
       beforePublish = () => ())
   }
@@ -362,8 +359,7 @@ object Similarity {
     // exactly its base as before; the set is pinned at plan time — a
     // concurrent rebuild/append changes nothing this plan reads.
     val (baseGen, segs) = Warehouse.pathStore(path).resolveSegmented()
-    val centroids = spark.read.parquet(
-      s"${Warehouse.pathGenData(path, baseGen)}/_centroids")
+    val centroids = spark.read.parquet(Warehouse.pathGenModel(path, baseGen))
     val index = (baseGen +: segs).map(g => spark.read.parquet(Warehouse.pathGenData(path, g)))
       .reduce(_ unionAll _)
     val wProbe = Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cid"))

@@ -159,16 +159,15 @@ object GenerationChain {
   }
 }
 
-/** The generation/segment/tag protocol as ONE versioned state chain,
-  * committed through the [[StoreIO]] create-new-or-fail primitive
-  * (impl selection per scheme/deployment: the WHICH IMPL table in
-  * [[StoreIO]]'s header) —
-  * [[graft.etl.SnapshotTable]]'s manifest-chain machinery applied to
-  * the warehouse store lifecycle. Each chain version `v{N}` holds the
-  * complete store state (generation entries + committed appender tags);
-  * every transition is an optimistic read-modify-write that commits the
-  * next version atomically, so of two racing writers exactly one wins
-  * and the loser re-derives against the winner's state.
+/** The generation/segment/tag protocol as ONE versioned state chain: a
+  * [[CommitLog]] (the log [[graft.etl.SnapshotTable]]'s manifests also
+  * ride) whose every version holds the complete store state (generation
+  * entries + committed appender tags) in the `v 1` text format below.
+  * Every transition is an optimistic read-modify-write through
+  * [[CommitLog.commit]], so of two racing writers exactly one wins and
+  * the loser re-derives against the winner's state. The chain adds the
+  * store's own rules on top: the lifecycle transitions, tag archives,
+  * and its retention (16 versions behind the head, a one-minute floor).
   *
   * This replaces the marker-file choreography (claim-/ready-/segof-/
   * tagdone- files) that produced three consecutive rounds of race
@@ -194,48 +193,24 @@ final class GenerationChain(dir: String, io: StoreIO,
     clock: () => Long = () => System.currentTimeMillis()) {
   import GenerationChain._
 
-  private def chainPath(v: Long): String = f"$dir/v$v%012d"
+  private val log = new CommitLog[State](dir, io, serialize, deserialize)
 
   /** Read the latest committed state (empty before the first commit). */
-  def state(): State = {
-    // a concurrent chain trim can delete an old version between the list
-    // and the read; only the LATEST matters and it is never trimmed, but
-    // retry defensively if it vanishes mid-read (a fresher one exists)
-    var attempts = 0
-    while (attempts < 10) {
-      val versions = io.list(dir)
-        .filter(n => n.length == 13 && n.startsWith("v") && n.drop(1).forall(_.isDigit))
-        .map(_.drop(1).toLong)
-      if (versions.isEmpty) return empty
-      val v = versions.max
-      io.get(chainPath(v)) match {
-        case Some(bytes) => return deserialize(v, bytes)
-        case None => attempts += 1
-      }
-    }
-    throw new IllegalStateException(s"generation chain at $dir is unreadable")
-  }
+  def state(): State = log.head().getOrElse(empty)
 
   /** Optimistic commit: `transition` maps the fresh state to the next
     * one (throwing to refuse — e.g. [[SupersededBaseException]] — is
     * the atomic-refusal path); on a version conflict the transition
-    * re-runs against the winner's state. Returns the committed state.
+    * re-runs against the winner's state. A transition that changes
+    * nothing (an idempotent burn of an absent entry, a vacuum pass with
+    * nothing eligible) publishes nothing — a chain version per no-op
+    * call would be pure churn for the trimmer.
     */
-  private def commit(transition: State => State): State = {
-    var attempts = 0
-    while (attempts < 100) {
-      val s = state()
-      val next = transition(s)
-      // no-op transitions (an idempotent burn of an absent entry, a
-      // vacuum pass with nothing eligible) publish nothing — a chain
-      // version per no-op call would be pure churn for the trimmer
-      if (next == s) return s
-      if (io.putIfAbsent(chainPath(s.version + 1), serialize(next)))
-        return next.copy(version = s.version + 1)
-      attempts += 1
-    }
-    throw new IllegalStateException(s"generation-chain commit lost 100 races at $dir")
-  }
+  private def commit(transition: State => State): Unit =
+    log.commit("generation-chain commit") { h =>
+      val s = h.getOrElse(empty)
+      Some(transition(s)).filter(_ != s)
+    }: Unit
 
   /** Claim the next free generation number (atomic: racing builders get
     * distinct numbers). Invisible to probes until published.
@@ -483,8 +458,10 @@ final class GenerationChain(dir: String, io: StoreIO,
     }
     compactTags()
     sweepArchives(now)
-    trimChain(now)
-    sweepTmp(now)
+    // readers only ever load the head, so a 16-version margin (plus a
+    // one-minute age floor against a reader mid list-then-get) is generous
+    log.trim(16, now - 60_000L)
+    log.sweepTmp(now)
   }
 
   /** Fold inline committed tags into one immutable archive file when
@@ -538,38 +515,11 @@ final class GenerationChain(dir: String, io: StoreIO,
     }
     val held = state()
     val referenced = held.tagFiles.toSet ++ held.retiredFiles.map(_._1)
-    // `.exists`, not `.forall`: an UNREADABLE mtime means "keep" — a
+    // an UNREADABLE mtime keeps the archive ([[StoreIO.sweepAged]]): a
     // just-written fold archive whose stat transiently fails must not
     // be swept before the fold's CAS references it (deleting it would
     // commit a state whose archived tags all read uncommitted)
-    io.list(dir).filter(_.startsWith("tags-")).filterNot(referenced.contains)
-      .filter(f => io.mtime(s"$dir/$f").exists(_ <= now - 3600_000L))
-      .foreach(f => io.delete(s"$dir/$f"))
+    StoreIO.sweepAged(io, dir, now - 3600_000L)(f =>
+      f.startsWith("tags-") && !referenced.contains(f))
   }
-
-  /** Drop chain versions well behind the head — readers only ever load
-    * the latest, so a 16-version margin (plus a one-minute age floor
-    * against a reader mid list-then-get) is generous. Unknown mtime
-    * means "keep", same as the archive sweep.
-    */
-  private def trimChain(now: Long): Unit = {
-    val versions = io.list(dir)
-      .filter(n => n.length == 13 && n.startsWith("v") && n.drop(1).forall(_.isDigit))
-      .map(_.drop(1).toLong).sorted
-    versions.dropRight(16)
-      .filter(v => io.mtime(chainPath(v)).exists(_ <= now - 60_000L))
-      .foreach(v => io.delete(chainPath(v)))
-  }
-
-  /** Reclaim orphaned `.tmp-*` siblings in the chain directory — the
-    * write half of a [[StoreIO]] publish that crashed between the temp
-    * write and its cleanup. They were never visible to any reader (the
-    * state parser only loads `v*` names; archives are only reached via
-    * `tagFiles`), so the only rule is the age floor against a publish
-    * in flight right now.
-    */
-  private def sweepTmp(now: Long): Unit =
-    io.list(dir).filter(_.startsWith(".tmp-"))
-      .filter(f => io.mtime(s"$dir/$f").exists(_ <= now - 3600_000L))
-      .foreach(f => io.delete(s"$dir/$f"))
 }

@@ -5,10 +5,11 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** The minimal storage contract the METADATA planes commit through —
-  * [[graft.etl.SnapshotTable]]'s manifest chain and [[Warehouse]]'s
-  * generation chain both publish state transitions exclusively via
-  * [[putIfAbsent]], so porting the whole store layer to an object store
-  * means implementing these six operations once:
+  * one [[CommitLog]] (under both [[graft.etl.SnapshotTable]]'s manifests
+  * and a store's [[GenerationChain]]) plus the ETL metadata store's id
+  * reservations are the only callers of [[putIfAbsent]], so porting the
+  * whole store layer to an object store means implementing these six
+  * operations once:
   *
   *   - `putIfAbsent`  → S3/GCS conditional PUT (`If-None-Match: *`)
   *   - `put`          → plain PUT (single-object overwrite is atomic)
@@ -96,6 +97,17 @@ object StoreIO {
       else None
     }
   }
+
+  /** The one age-gated sweep: delete each object directly under `dir`
+    * whose name `pick` accepts and whose mtime is at or before `cutoff`.
+    * An unknown mtime KEEPS the object — a transient stat failure must
+    * never age a live object to zero (leak-beats-loss; a kept orphan is
+    * re-examined by the next sweep).
+    */
+  def sweepAged(io: StoreIO, dir: String, cutoff: Long)(pick: String => Boolean): Unit =
+    io.list(dir).filter(pick)
+      .filter(n => io.mtime(s"$dir/$n").exists(_ <= cutoff))
+      .foreach(n => io.delete(s"$dir/$n"))
 
   /** Select the impl a deployment's scheme requires — the trait
     * header's impl-per-deployment table, encoded so a caller cannot

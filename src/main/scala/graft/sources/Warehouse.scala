@@ -227,13 +227,14 @@ object Warehouse {
       g => suffixes.foreach(s => drop(spark, storeTableName(name, g, s))))
 
   /** The path store at `root`, whose generation `g` is the directory
-    * [[pathGenData]]`(root, g)`. Deletes ride the Hadoop filesystem
+    * [[pathGenData]]`(root, g)` plus, when its build wrote one,
+    * [[pathGenModel]]`(root, g)`. Deletes ride the Hadoop filesystem
     * layer ([[HadoopFs]]) — the same connectors Spark wrote the parquet
     * through — so cleanup and vacuum reclaim on an object store too.
     */
   def pathStore(root: String): Store =
     Store(chainAt(chainDir(root, "_generations")), s"path store '$root'",
-      g => HadoopFs.deleteRecursive(pathGenData(root, g)): Unit)
+      g => Seq(pathGenData(root, g), pathGenModel(root, g)).foreach(HadoopFs.deleteRecursive))
 
   /** Data directory of generation `gen` under a path store's root
     * (scheme-preserving: the data plane reads/writes it through Spark's
@@ -244,6 +245,14 @@ object Warehouse {
       case None | Some("file") => s"${root.stripPrefix("file:")}/g$gen"
       case Some(_) => s"${root.stripSuffix("/")}/g$gen"
     }
+
+  /** The directory beside generation `gen`'s data for the model the
+    * generation was built with (the IVF centroids). Beside, not inside:
+    * a read of the data directory never sees it, and, not being
+    * underscore-prefixed, Spark does not treat it as a hidden path.
+    * Dropping the generation drops it too.
+    */
+  def pathGenModel(root: String, gen: Long): String = s"${pathGenData(root, gen)}-model"
 
   /** FULL BUILD: claim the next generation, `write` its data, publish it
     * — after which new probes resolve to it, while probes constructed
@@ -412,55 +421,16 @@ object Warehouse {
     s.liveBase.fold(Seq.empty[Long])(b =>
       s.entries.filter(e => e.status == GenerationChain.Published && e.gen < b).map(_.gen))
 
-  // The catalog-keyed table-store API: one-line calls on the chain of
-  // [[tableStore]].
+  // The catalog-keyed lookups: one-line calls on the chain of
+  // [[tableStore]]. Everything else goes through the handle itself.
 
   /** The generation-suffixed concrete table name. */
   def storeTableName(store: String, gen: Long, suffix: String): String =
     s"${store}__g${gen}_$suffix"
 
-  /** Claim the next free generation number for `store` (an atomic chain
-    * commit: of two racing builders each gets its own number). The
-    * claimed generation is invisible to probes until published.
-    */
-  def claimGeneration(spark: SparkSession, store: String): Long =
-    chainOf(spark, store).claim()
-
-  /** Publish a claimed generation as a FULL build: after this, new
-    * probes resolve to it. Probes constructed before the publish keep
-    * reading their own (still-on-disk) generation — snapshot semantics
-    * per probe plan.
-    */
-  def publishGeneration(spark: SparkSession, store: String, gen: Long): Unit =
-    chainOf(spark, store).publishFull(gen)
-
-  /** Publish a claimed generation as an APPEND SEGMENT of `base`,
-    * committing the appender's idempotence `tag` atomically with it.
-    * Throws [[SupersededBaseException]] — publishing nothing — when a
-    * rebuild superseded `base` first; the caller re-appends against the
-    * winner (its just-written tables were never visible, so it drops
-    * them and burns the claim immediately).
-    */
-  def publishSegment(spark: SparkSession, store: String, gen: Long, base: Long,
-      tag: Option[String] = None): Unit =
-    chainOf(spark, store).publishSegment(gen, base, tag)
-
   /** The latest PUBLISHED generation, if any. */
   def currentGeneration(spark: SparkSession, store: String): Option[Long] =
     chainOf(spark, store).state().current
-
-  /** True iff `tag`'s batch committed — it rode a segment publish that
-    * won its liveness race — the at-least-once replay check. Durable
-    * through rebuilds and vacuums.
-    */
-  def segmentTagPublished(spark: SparkSession, store: String, tag: String): Boolean =
-    chainOf(spark, store).tagCommitted(tag)
-
-  /** The base generation `gen` is a segment of, or None for full
-    * builds.
-    */
-  def segmentBase(spark: SparkSession, store: String, gen: Long): Option[Long] =
-    chainOf(spark, store).segmentBase(gen)
 
   /** [[Store.resolveSegmented]] of the table store `store`. */
   def resolveSegmented(spark: SparkSession, store: String): (Long, Seq[Long]) =
@@ -494,19 +464,6 @@ object Warehouse {
     suffixes.foreach(s => drop(spark, s"${store}_$s"))
     HadoopFs.deleteRecursive(dir): Unit
   }
-
-  /** Remove a claimed-but-unpublished generation's chain entry (after
-    * its tables are dropped) — the guard-trip/build-failure/lost-race
-    * cleanup, so a refused build doesn't permanently burn its
-    * generation number.
-    */
-  def burnClaim(spark: SparkSession, store: String, gen: Long): Unit =
-    chainOf(spark, store).burn(gen)
-
-  /** [[vacuumGenerations]] of the table store `store`. */
-  def vacuumStoreGenerations(spark: SparkSession, store: String,
-      suffixes: Seq[String], keep: Int = 1, minAgeMs: Long = 3600_000L): Unit =
-    vacuumGenerations(tableStore(spark, store, suffixes), keep, minAgeMs)
 
   /** [[vacuumSegmented]] of the table store `store`. */
   def vacuumSegmentedStore(spark: SparkSession, store: String,

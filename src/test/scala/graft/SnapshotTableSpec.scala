@@ -369,36 +369,66 @@ class SnapshotTableSpec extends SparkSpecBase {
     assert(e.getMessage.toLowerCase.contains("merg"), s"expected a merge error, got: ${e.getMessage}")
   }
 
-  test("one ETL table path: one commit loop, no plain-parquet publish, no --snapshot flag") {
-    import scala.jdk.CollectionConverters._
+  private val mainSrc = java.nio.file.Paths.get("src/main/scala")
+
+  /** A source file with its comments stripped. */
+  private def code(p: java.nio.file.Path): String = {
     val blockComment = "(?s)/\\*.*?\\*/".r
     val lineComment = "//[^\n]*".r
-    def code(p: java.nio.file.Path): String = lineComment.replaceAllIn(
+    lineComment.replaceAllIn(
       blockComment.replaceAllIn(new String(Files.readAllBytes(p), "UTF-8"), ""), "")
-    val main = java.nio.file.Paths.get("src/main/scala")
-    // every tryCommit call sits in the commit engine or in restore
-    // (single-attempt by design); no writer hand-writes its own loop
-    val st = code(main.resolve("graft/etl/SnapshotTable.scala"))
+  }
+
+  /** The names of the defs that call `name(` in `src`, its own def excluded. */
+  private def callers(src: String, name: String): Set[String] = {
     val defName = "def (\\w+)".r
-    val callers = "tryCommit\\(".r.findAllMatchIn(st).map(_.start)
-      .filterNot(i => st.substring(0, i).endsWith("def "))
-      .map(i => defName.findAllMatchIn(st.substring(0, i)).toSeq.last.group(1)).toSet
-    assert(callers == Set("commit", "restoreWithHook"),
-      s"tryCommit outside the commit engine and restore: ${callers.mkString(", ")}")
-    // no publish path for unpartitioned tables besides SnapshotTable
-    val files = {
-      val s = Files.walk(main)
+    (java.util.regex.Pattern.quote(name) + "\\(").r.findAllMatchIn(src).map(_.start)
+      .filterNot(i => src.substring(0, i).endsWith("def "))
+      .map(i => defName.findAllMatchIn(src.substring(0, i)).toSeq.last.group(1)).toSet
+  }
+
+  private def mainFiles(): List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(mainSrc)
+    val files =
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
-    }
-    assert(files.nonEmpty, s"no sources under ${main.toAbsolutePath}")
-    val offenders = files.flatMap { f =>
+    assert(files.nonEmpty, s"no sources under ${mainSrc.toAbsolutePath}")
+    files
+  }
+
+  test("one ETL table path: one commit loop, no plain-parquet publish, no --snapshot flag") {
+    // tryCommit is called only by restore (single-attempt by design) and
+    // by the table's own tryCommit, which delegates to the manifest log;
+    // the log's commit loop is its only other caller, so no writer
+    // hand-writes its own loop
+    val st = code(mainSrc.resolve("graft/etl/SnapshotTable.scala"))
+    assert(callers(st, "tryCommit") == Set("tryCommit", "restoreWithHook"),
+      s"tryCommit outside the commit log and restore: ${callers(st, "tryCommit").mkString(", ")}")
+    assert(callers(code(mainSrc.resolve("graft/sources/CommitLog.scala")), "tryCommit") == Set("commit"))
+    // no publish path for unpartitioned tables besides SnapshotTable
+    val offenders = mainFiles().flatMap { f =>
       val c = code(f)
       Seq("atomicPublish", "hasSnapshotLayout").filter(c.contains).map(b => s"${f.getFileName}: $b")
     }
     assert(offenders.isEmpty, s"unpartitioned tables publish through SnapshotTable: ${offenders.mkString(", ")}")
     // the CLI has no flag choosing between table paths
-    assert(!code(main.resolve("graft/etl/Main.scala")).contains("\"--snapshot\""))
+    assert(!code(mainSrc.resolve("graft/etl/Main.scala")).contains("\"--snapshot\""))
     assert(graft.etl.Main.parse(Array("--mode", "pre_season", "--snapshot")).isLeft)
+  }
+
+  test("one commit log: only StoreIO impls, CommitLog and the log-id reservation call putIfAbsent; only CommitLog names versions") {
+    val putters = mainFiles().flatMap { f =>
+      val c = code(f)
+      if (c.contains("putIfAbsent(")) Some(f.getFileName.toString -> c) else None
+    }.toMap
+    assert(putters.keySet == Set("StoreIO.scala", "HadoopFsStoreIO.scala", "CommitLog.scala", "Pipeline.scala"),
+      s"putIfAbsent outside the commit log: ${putters.keySet.toSeq.sorted.mkString(", ")}")
+    assert(callers(putters("CommitLog.scala"), "putIfAbsent") == Set("tryCommit"))
+    assert(callers(putters("Pipeline.scala"), "putIfAbsent") == Set("reserveId"),
+      "the metadata store reserves log ids through putIfAbsent and nothing else")
+    val versionFormats = mainFiles().filter(f => code(f).contains("%012d")).map(_.getFileName.toString)
+    assert(versionFormats == Seq("CommitLog.scala"),
+      s"the version file name is CommitLog's alone: ${versionFormats.mkString(", ")}")
   }
 }

@@ -76,6 +76,37 @@ class StoreIOSpec extends SparkSpecBase {
     assert(v >= 6L, "the five stolen versions are real commits in the chain, not retries in place")
   }
 
+  test("SnapshotTable's head read survives a rival commit and vacuum landing between its listing and its read; a pinned read of the vacuumed version still fails") {
+    import spark.implicits._
+    val inner = new InMemoryStoreIO()
+    val root = java.nio.file.Files.createTempDirectory("graft_vanish_").resolve("t").toString
+    val rival = new SnapshotTable(spark, root, inner)
+    rival.append(Seq((1L, "a")).toDF("k", "v"))
+    // the reader's first object read runs after a rival append and a
+    // vacuum that trims away the version the reader just listed as head
+    val raced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val io: StoreIO = new StoreIO {
+      def putIfAbsent(path: String, bytes: Array[Byte]): Boolean = inner.putIfAbsent(path, bytes)
+      def put(path: String, bytes: Array[Byte]): Unit = inner.put(path, bytes)
+      def get(path: String): Option[Array[Byte]] = {
+        if (raced.compareAndSet(false, true)) {
+          rival.append(Seq((2L, "b")).toDF("k", "v"))
+          rival.vacuum(1, 0L)
+        }
+        inner.get(path)
+      }
+      def list(dir: String): Seq[String] = inner.list(dir)
+      def delete(path: String): Boolean = inner.delete(path)
+      def mtime(path: String): Option[Long] = inner.mtime(path)
+    }
+    val table = new SnapshotTable(spark, root, io)
+    assert(table.read().collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L),
+      "the head read lists again and reads the newer head")
+    assert(raced.get() && table.currentVersion.contains(1L))
+    val e = intercept[IllegalStateException] { table.read(Some(0L)) }
+    assert(e.getMessage.contains("vanished"), s"a pinned read of a vacuumed version fails loudly: ${e.getMessage}")
+  }
+
   test("GenerationChain: crash AFTER the publish commit leaves the tag committed (replay skips); a lost race leaves nothing (replay re-appends)") {
     val io = new InMemoryStoreIO()
     val chain = new GenerationChain("/mem/chain", io)

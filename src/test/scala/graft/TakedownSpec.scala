@@ -373,7 +373,7 @@ class TakedownSpec extends SparkSpecBase {
       .select(col("vec_id"), col("cid")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     val beforeCentroids = spark.read
-      .parquet(s"${Warehouse.pathGenData(dir, b0)}/_centroids")
+      .parquet(Warehouse.pathGenModel(dir, b0))
       .collect().map(_.toString).sorted.toSeq
     val victims = Seq(3L, 7L, 11L)
     def queries = t.embeddings.filter(col("vec_id") < 10)
@@ -389,7 +389,7 @@ class TakedownSpec extends SparkSpecBase {
     assert(afterRows == beforeRows.filterNot(r => victims.contains(r._1)),
       "the new generation holds exactly the old rows minus the removed ids, cid routing intact")
     val afterCentroids = spark.read
-      .parquet(s"${Warehouse.pathGenData(dir, b1)}/_centroids")
+      .parquet(Warehouse.pathGenModel(dir, b1))
       .collect().map(_.toString).sorted.toSeq
     assert(afterCentroids == beforeCentroids, "removal never re-trains centroids")
     // probe semantics: the radius search after removal is the radius

@@ -103,14 +103,15 @@ class WarehouseModelSpec extends SparkSpecBase {
     Seq(1, 7, 42).foreach { seed =>
       val store = s"protomodel$seed"
       Warehouse.dropStore(spark, store, Seq("x"))
+      val chain = Warehouse.tableStore(spark, store, Seq("x")).chain
       sweep(seed, Proto(
-        claim = () => Warehouse.claimGeneration(spark, store),
-        publishFull = Warehouse.publishGeneration(spark, store, _),
-        publishSegment = (g, b, t) => Warehouse.publishSegment(spark, store, g, b, Some(t)),
-        burn = Warehouse.burnClaim(spark, store, _),
+        claim = () => chain.claim(),
+        publishFull = chain.publishFull,
+        publishSegment = (g, b, t) => chain.publishSegment(g, b, Some(t)),
+        burn = chain.burn,
         vacuum = () => Warehouse.vacuumSegmentedStore(spark, store, Seq("x"), minAgeMs = 0L),
         resolve = () => Warehouse.resolveSegmented(spark, store),
-        tagPublished = Warehouse.segmentTagPublished(spark, store, _)))
+        tagPublished = chain.tagCommitted))
       Warehouse.dropStore(spark, store, Seq("x"))
     }
   }

@@ -14,6 +14,10 @@ class WarehouseSpec extends SparkSpecBase {
   private def cleanTables(names: String*): Unit =
     names.foreach(Warehouse.drop(spark, _))
 
+  /** The generation chain of the table store `store`. */
+  private def chain(store: String): graft.sources.GenerationChain =
+    Warehouse.tableStore(spark, store, Nil).chain
+
   test("co-bucketed tables join without any shuffle exchange") {
     val t = Tables(spark, sfDir)
     cleanTables("wh_orders", "wh_lineitem")
@@ -246,7 +250,7 @@ class WarehouseSpec extends SparkSpecBase {
     // generation protocol — exactly what a store persisted before this
     // round looks like on disk
     Warehouse.dropStore(spark, "novlegacy", Seq("shdf"))
-    val gen = Warehouse.claimGeneration(spark, "novlegacy")
+    val gen = chain("novlegacy").claim()
     val dsh = t.documents.filter(col("doc_id") < 250)
       .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
       .filter(size(col("tokens")) >= 3)
@@ -254,7 +258,7 @@ class WarehouseSpec extends SparkSpecBase {
     Warehouse.writeBucketed(
       dsh.groupBy(col("h")).agg(count(lit(1)).as("df")),
       Warehouse.storeTableName("novlegacy", gen, "shdf"), "h", 32)
-    Warehouse.publishGeneration(spark, "novlegacy", gen)
+    chain("novlegacy").publishFull(gen)
     val batch = t.documents.filter(col("doc_id") >= 250)
     // no k column + no explicit k → loud refusal, never a silent all-novel read
     val e = intercept[IllegalArgumentException] {
@@ -338,7 +342,7 @@ class WarehouseSpec extends SparkSpecBase {
       "the re-fold must absorb the mid-fold segment's rows exactly")
     // the racing batch's tag stays committed (its rows ARE in the live
     // read set, via the re-fold) and the live set is one full build
-    assert(Warehouse.segmentTagPublished(spark, "foldrace", "race:0"))
+    assert(chain("foldrace").tagCommitted("race:0"))
     val (_, segsAfter) = Warehouse.resolveSegmented(spark, "foldrace")
     assert(segsAfter.isEmpty, "the fold's winner is a full build with no live segments")
     Seq("foldrace", "foldrace_ref").foreach(Warehouse.dropStore(spark, _, Seq("bands", "sigs")))
@@ -550,7 +554,7 @@ class WarehouseSpec extends SparkSpecBase {
 
     // vacuum reclaims everything but the current generation (minAgeMs=0:
     // no builder is active and no probe stays pinned past this line)
-    Warehouse.vacuumStoreGenerations(spark, "genstore", Seq("bands", "sigs"),
+    Warehouse.vacuumGenerations(Warehouse.tableStore(spark, "genstore", Seq("bands", "sigs")),
       keep = 1, minAgeMs = 0L)
     assert(!spark.catalog.tableExists(Warehouse.storeTableName("genstore", g1, "bands")) &&
       !spark.catalog.tableExists(Warehouse.storeTableName("genstore", g1, "sigs")),
@@ -570,27 +574,29 @@ class WarehouseSpec extends SparkSpecBase {
 
   test("vacuum age gate: a seconds-old superseded generation survives the default floor") {
     Warehouse.dropStore(spark, "agestore", Seq("x"))
-    val g1 = Warehouse.claimGeneration(spark, "agestore")
+    val g1 = chain("agestore").claim()
     Warehouse.writeBucketed(spark.range(3).toDF("id"),
       Warehouse.storeTableName("agestore", g1, "x"), "id", 2)
-    Warehouse.publishGeneration(spark, "agestore", g1)
-    val g2 = Warehouse.claimGeneration(spark, "agestore")
+    chain("agestore").publishFull(g1)
+    val g2 = chain("agestore").claim()
     Warehouse.writeBucketed(spark.range(5).toDF("id"),
       Warehouse.storeTableName("agestore", g2, "x"), "id", 2)
-    Warehouse.publishGeneration(spark, "agestore", g2)
+    chain("agestore").publishFull(g2)
     assert(chainEntry("agestore", g1).exists(_.supersededAt > 0L),
       "publishing g2 must stamp g1's superseded instant — the age-gate clock " +
         "runs from when a generation LEFT the live read set, not from its publish")
 
     // default minAgeMs (1 h): g1 left the live set seconds ago — a probe
     // could still be pinned to it, so vacuum must leave it alone
-    Warehouse.vacuumStoreGenerations(spark, "agestore", Seq("x"), keep = 1)
+    Warehouse.vacuumGenerations(Warehouse.tableStore(spark, "agestore", Seq("x")),
+      keep = 1, minAgeMs = 3600_000L)
     assert(spark.catalog.tableExists(Warehouse.storeTableName("agestore", g1, "x")),
       "the age gate must protect a freshly-superseded generation")
     assert(entryStatus("agestore", g1).contains("published"))
 
     // explicit 0 (caller asserts no pinned probes): g1 is reclaimed, g2 kept
-    Warehouse.vacuumStoreGenerations(spark, "agestore", Seq("x"), keep = 1, minAgeMs = 0L)
+    Warehouse.vacuumGenerations(Warehouse.tableStore(spark, "agestore", Seq("x")),
+      keep = 1, minAgeMs = 0L)
     assert(!spark.catalog.tableExists(Warehouse.storeTableName("agestore", g1, "x")))
     assert(spark.catalog.tableExists(Warehouse.storeTableName("agestore", g2, "x")))
     assert(chainEntry("agestore", g1).isEmpty,
@@ -603,10 +609,11 @@ class WarehouseSpec extends SparkSpecBase {
     // an in-flight FIRST build: a claim with half-written tables and
     // nothing published — vacuum must not treat it as burned (deleting
     // its tables would let the build publish a broken generation)
-    val g1 = Warehouse.claimGeneration(spark, "claimstore")
+    val g1 = chain("claimstore").claim()
     Warehouse.writeBucketed(spark.range(3).toDF("id"),
       Warehouse.storeTableName("claimstore", g1, "x"), "id", 2)
-    Warehouse.vacuumStoreGenerations(spark, "claimstore", Seq("x"), keep = 1, minAgeMs = 0L)
+    Warehouse.vacuumGenerations(Warehouse.tableStore(spark, "claimstore", Seq("x")),
+      keep = 1, minAgeMs = 0L)
     assert(entryStatus("claimstore", g1).contains("claimed"),
       "with nothing published, every claim may be an in-flight first build")
     assert(spark.catalog.tableExists(Warehouse.storeTableName("claimstore", g1, "x")),
@@ -616,10 +623,11 @@ class WarehouseSpec extends SparkSpecBase {
     // published generation is protected — with two concurrent appenders
     // both hold such claims, and sweeping the lower one would fail that
     // append mid-write under a minAgeMs=0 vacuum
-    Warehouse.publishGeneration(spark, "claimstore", g1)
-    val lower = Warehouse.claimGeneration(spark, "claimstore")
-    val upper = Warehouse.claimGeneration(spark, "claimstore")
-    Warehouse.vacuumStoreGenerations(spark, "claimstore", Seq("x"), keep = 1, minAgeMs = 0L)
+    chain("claimstore").publishFull(g1)
+    val lower = chain("claimstore").claim()
+    val upper = chain("claimstore").claim()
+    Warehouse.vacuumGenerations(Warehouse.tableStore(spark, "claimstore", Seq("x")),
+      keep = 1, minAgeMs = 0L)
     assert(entryStatus("claimstore", lower).contains("claimed") &&
       entryStatus("claimstore", upper).contains("claimed"),
       "claims above the newest published generation may all be in-flight builds — none is swept")
@@ -627,8 +635,9 @@ class WarehouseSpec extends SparkSpecBase {
       "the kept generation stays published")
     // once a later build PUBLISHES past a claim, that claim is provably
     // dead (its number can never be the live generation) and reclaimed
-    Warehouse.publishGeneration(spark, "claimstore", upper)
-    Warehouse.vacuumStoreGenerations(spark, "claimstore", Seq("x"), keep = 1, minAgeMs = 0L)
+    chain("claimstore").publishFull(upper)
+    Warehouse.vacuumGenerations(Warehouse.tableStore(spark, "claimstore", Seq("x")),
+      keep = 1, minAgeMs = 0L)
     assert(chainEntry("claimstore", lower).isEmpty,
       "a claim surpassed by a published generation is dead and reclaimed")
     Warehouse.dropStore(spark, "claimstore", Seq("x"))
@@ -725,6 +734,49 @@ class WarehouseSpec extends SparkSpecBase {
       "vacuumIvfIndex reclaims the superseded base and its segment")
     assert(graft.operators.Similarity.searchIvfIndex(t, root1).collect().map(key).toSeq == rebuilt,
       "the live base reads back identically after vacuum")
+  }
+
+  test("IVF centroids live beside their generation: no hidden-path read from build to vacuum, and vacuum reclaims them") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import graft.operators.Similarity
+    val t = Tables(spark, sfDir)
+    val emb = t.embeddings.select(col("vec_id"), col("embedding"))
+    val half = emb.count() / 2
+    val root = java.nio.file.Files.createTempDirectory("graft_ivfmodel_").resolve("idx").toString
+    // Spark logs this when every path a read names looks hidden (a `_`-
+    // or `.`-prefixed name), as a centroid directory inside a generation did
+    val ignored = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new AbstractAppender("ignored-path-reads", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("All paths were ignored"))
+          ignored.incrementAndGet(): Unit
+    }
+    counter.start()
+    val dataSourceLog = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource").asInstanceOf[CoreLogger]
+    dataSourceLog.addAppender(counter)
+    try {
+      Similarity.buildIvfIndexOf(emb.filter(col("vec_id") < half), root) // g1
+      Similarity.appendToIvfIndex(emb.filter(col("vec_id") >= half), root) // g2, segment of g1
+      assert(Similarity.searchIvfIndex(t, root).collect().nonEmpty)
+      Similarity.removeFromIvfIndex(spark.range(3L, 4L).toDF("vec_id"), root) // g3
+      assert(Similarity.searchIvfIndex(t, root).collect().nonEmpty)
+      Similarity.vacuumIvfIndex(root, minAgeMs = 0L)
+    } finally {
+      dataSourceLog.removeAppender(counter)
+      counter.stop()
+    }
+    assert(ignored.get() == 0, s"${ignored.get()} IVF reads named only hidden paths")
+    def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
+    assert(Warehouse.pathStore(root).resolveSegmented() == ((3L, Seq.empty[Long])))
+    assert(!exists(Warehouse.pathGenModel(root, 1L)) && !exists(Warehouse.pathGenData(root, 1L)) &&
+      !exists(Warehouse.pathGenData(root, 2L)),
+      "vacuum reclaims the superseded generations' data and centroids")
+    assert(exists(Warehouse.pathGenModel(root, 3L)), "the live generation keeps its centroids")
   }
 
   test("segment probes keep their pruning: cid PartitionFilters on EVERY IVF scan, bucket pruning on EVERY postings scan") {
@@ -953,7 +1005,7 @@ class WarehouseSpec extends SparkSpecBase {
       TextAnalysis.appendToBm25Store(
         t.documents.filter(col("doc_id") >= 100).drop("text"), "bm25burn")
     }
-    assert(Warehouse.segmentBase(spark, "bm25burn", 2L).isEmpty,
+    assert(chain("bm25burn").segmentBase(2L).isEmpty,
       "the failed append's segment mark must not survive its burned claim")
 
     // gen 2 is re-issuable; a FULL rebuild published under it must
@@ -1082,7 +1134,7 @@ class WarehouseSpec extends SparkSpecBase {
       "attempt 1 (gen 2) lost to the rebuild (gen 3); the re-append must publish gen 4")
     assert(Warehouse.resolveSegmented(spark, "bm25race") == ((3L, Seq(4L))),
       "the live read set is the winning rebuild plus the re-appended segment")
-    assert(Warehouse.segmentTagPublished(spark, "bm25race", "r:1"))
+    assert(chain("bm25race").tagCommitted("r:1"))
     assert(TextAnalysis.appendToBm25Store(batch, "bm25race", dedupeTag = Some("r:1")).isEmpty,
       "the re-appended batch's tag commits exactly once")
     assert(key(TextAnalysis.bm25AgainstStore(spark, "bm25race")) == key(TextAnalysis.bm25(t)),
@@ -1129,48 +1181,48 @@ class WarehouseSpec extends SparkSpecBase {
     val store = "tagproto"
     Warehouse.dropStore(spark, store, Seq("x"))
 
-    val g1 = Warehouse.claimGeneration(spark, store) // full build
-    Warehouse.publishGeneration(spark, store, g1)
-    val g2 = Warehouse.claimGeneration(spark, store) // segment of g1
-    Warehouse.publishSegment(spark, store, g2, g1, Some("commit:1"))
+    val g1 = chain(store).claim() // full build
+    chain(store).publishFull(g1)
+    val g2 = chain(store).claim() // segment of g1
+    chain(store).publishSegment(g2, g1, Some("commit:1"))
     // the tag commits ATOMICALLY with the publish — no confirmation
     // step, no window where the rows are live but the tag is not
-    assert(Warehouse.segmentTagPublished(spark, store, "commit:1"))
+    assert(chain(store).tagCommitted("commit:1"))
 
-    val g3 = Warehouse.claimGeneration(spark, store) // rebuild
-    Warehouse.publishGeneration(spark, store, g3)
-    assert(Warehouse.segmentTagPublished(spark, store, "commit:1"),
+    val g3 = chain(store).claim() // rebuild
+    chain(store).publishFull(g3)
+    assert(chain(store).tagCommitted("commit:1"),
       "a committed tag stays committed after the rebuild (the rebuild absorbed its batch)")
 
     // the old protocol's ORPHAN shape — an appender publishing a
     // segment of a superseded base — is now a REFUSED commit: the
     // publish throws, nothing becomes visible, the tag never commits
-    val g4 = Warehouse.claimGeneration(spark, store)
+    val g4 = chain(store).claim()
     intercept[SupersededBaseException] {
-      Warehouse.publishSegment(spark, store, g4, g1, Some("stale:1"))
+      chain(store).publishSegment(g4, g1, Some("stale:1"))
     }
-    assert(!Warehouse.segmentTagPublished(spark, store, "stale:1"),
+    assert(!chain(store).tagCommitted("stale:1"),
       "a refused publish must not commit its tag — the replay re-appends")
     assert(entryStatus(store, g4).contains("claimed"),
       "the refused generation is still just a claim (the appender burns it)")
-    Warehouse.burnClaim(spark, store, g4)
+    chain(store).burn(g4)
 
     // a live-base segment whose appender then crashes: its tag committed
     // at publish and STAYS committed through the next rebuild — under
     // atomic publish there is no 'unconfirmed' state to lose
-    val g5 = Warehouse.claimGeneration(spark, store)
-    Warehouse.publishSegment(spark, store, g5, g3, Some("crash:1"))
-    val g6 = Warehouse.claimGeneration(spark, store)
-    Warehouse.publishGeneration(spark, store, g6)
-    assert(Warehouse.segmentTagPublished(spark, store, "crash:1"),
+    val g5 = chain(store).claim()
+    chain(store).publishSegment(g5, g3, Some("crash:1"))
+    val g6 = chain(store).claim()
+    chain(store).publishFull(g6)
+    assert(chain(store).tagCommitted("crash:1"),
       "rows that were in the live read set at publish are never silently re-appended")
 
     // vacuum reclaims the superseded chain; every committed tag survives
     Warehouse.vacuumSegmentedStore(spark, store, Seq("x"), minAgeMs = 0L)
-    assert(Warehouse.segmentTagPublished(spark, store, "commit:1") &&
-      Warehouse.segmentTagPublished(spark, store, "crash:1"),
+    assert(chain(store).tagCommitted("commit:1") &&
+      chain(store).tagCommitted("crash:1"),
       "committed tags survive their segments' vacuum")
-    assert(!Warehouse.segmentTagPublished(spark, store, "stale:1"),
+    assert(!chain(store).tagCommitted("stale:1"),
       "vacuum never resurrects a refused tag")
     assert(chainEntry(store, g2).isEmpty && chainEntry(store, g3).isEmpty &&
       chainEntry(store, g5).isEmpty,
@@ -1178,14 +1230,14 @@ class WarehouseSpec extends SparkSpecBase {
 
     // claim protection: EVERY claim above the newest published generation
     // survives a minAgeMs=0 vacuum (two concurrent in-flight appends)
-    val c7 = Warehouse.claimGeneration(spark, store)
-    val c8 = Warehouse.claimGeneration(spark, store)
+    val c7 = chain(store).claim()
+    val c8 = chain(store).claim()
     Warehouse.vacuumSegmentedStore(spark, store, Seq("x"), minAgeMs = 0L)
     assert(entryStatus(store, c7).contains("claimed") &&
       entryStatus(store, c8).contains("claimed"),
       "in-flight claims above the newest published generation are never swept")
     // once a later build PUBLISHES, a dead lower claim is reclaimed
-    Warehouse.publishGeneration(spark, store, c8)
+    chain(store).publishFull(c8)
     Warehouse.vacuumSegmentedStore(spark, store, Seq("x"), minAgeMs = 0L)
     assert(chainEntry(store, c7).isEmpty,
       "a claim surpassed by a published generation is dead and reclaimed")
