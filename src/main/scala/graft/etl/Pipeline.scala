@@ -1,10 +1,8 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,8 +17,9 @@ import org.apache.spark.sql.functions._
   * unpartitioned table is a [[SnapshotTable]] (one atomic manifest
   * commit per load), a partitioned one merges per touched partition —
   * the merge is a window dedup (not per-row ON CONFLICT), and the
-  * metadata store is itself a small parquet table — everything scales
-  * by partitioning, and nothing iterates rows on the driver.
+  * sync log is a small driver-read commit log ([[MetadataStore]]) —
+  * table data scales by partitioning, and no table row is iterated on
+  * the driver.
   */
 object Pipeline {
 
@@ -274,82 +273,70 @@ object Freshness {
     }
 }
 
-/** Parquet-backed sync metadata (reference: metadata.py sync_status +
-  * sync_log). Two-phase: [[startSync]] appends a `running` row before
+/** Sync metadata (reference: metadata.py sync_status + sync_log) as one
+  * [[graft.sources.CommitLog]]: version N holds the whole log as of its
+  * N-th append. Two-phase: [[startSync]] appends a `running` row before
   * work begins, [[completeSync]] appends the terminal row referencing
   * it — so a hung or crashed run is VISIBLE as a trailing `running`
   * entry instead of silently absent (reference: start_sync/complete_sync,
-  * metadata.py:11-113). Tiny table; append-only. `clock` is injectable
-  * for deterministic specs.
+  * metadata.py:11-113).
+  *
+  * Every read is of the head on the driver and launches no Spark job: a
+  * deployment's log holds one row of under a hundred bytes per
+  * table-load, and the head is one listing plus one object read, the
+  * same precedent as a [[SnapshotTable]] manifest. An append is one commit
+  * whose transition assigns `id = max id + 1`, so racing appenders mint
+  * unique, dense ids through the log's put-if-absent; after it the log
+  * trims itself like a store's generation chain (16 versions, a
+  * one-minute floor). A parquet `sync_log` pile written by earlier
+  * versions is imported once, as the first version, and is never read
+  * or written again. `clock` is injectable for deterministic specs.
   */
 final class MetadataStore(spark: SparkSession, root: String,
     clock: () => Long = () => System.currentTimeMillis() / 1000,
     io: graft.sources.StoreIO = graft.sources.PosixStoreIO) {
-  import spark.implicits._
+  import MetadataStore._
 
-  private val logPath = s"$root/sync_log"
-  private val idDir = s"$root/sync_log_ids"
+  private lazy val log = {
+    val l = new graft.sources.CommitLog[Vector[LogRow]](s"$root/sync_log_v", io, encode, decode)
+    val legacy = s"$root/sync_log"
+    // the transition runs only on an empty log, so of two processes
+    // opening it at once exactly one imports
+    if (Files.exists(Paths.get(legacy)))
+      l.commit("sync-log import")(cur => if (cur.isEmpty) Some(readLegacy(legacy)) else None)
+    l
+  }
+
+  /** The parquet pile's rows, read the way its writer did: absent
+    * columns of older files read as null / epoch 0, and the bit-identical
+    * duplicates of an interrupted fold collapse.
+    */
+  private def readLegacy(path: String): Vector[LogRow] = {
+    import spark.implicits._
+    val raw = spark.read.option("mergeSchema", "true").parquet(path)
+    def orNull(c: String, t: String) = if (raw.columns.contains(c)) col(c) else lit(null).cast(t)
+    raw.select(col("id"), col("entity"), col("status"), col("records"), col("watermark"),
+        orNull("refId", "long").as("refId"), orNull("error", "string").as("error"),
+        coalesce(orNull("syncedAt", "long"), lit(0L)).as("syncedAt"))
+      .dropDuplicates().as[LogRow].collect().sortBy(_.id).toVector
+  }
 
   def nowSec: Long = clock()
 
-  private def readLog(): DataFrame =
-    if (Files.exists(Paths.get(logPath))) {
-      // tolerate logs written before the two-phase columns existed:
-      // absent columns read as null / epoch 0 instead of failing the
-      // typed resolve (mergeSchema so mixed-generation files coexist)
-      val raw = spark.read.option("mergeSchema", "true").parquet(logPath)
-      val withRef =
-        if (raw.columns.contains("refId")) raw
-        else raw.withColumn("refId", lit(null).cast("long"))
-      val withErr =
-        if (withRef.columns.contains("error")) withRef
-        else withRef.withColumn("error", lit(null).cast("string"))
-      val withTs =
-        if (withErr.columns.contains("syncedAt"))
-          withErr.withColumn("syncedAt", coalesce(col("syncedAt"), lit(0L)))
-        else withErr.withColumn("syncedAt", lit(0L))
-      // full-row dedup: ONLY [[compactLog]]'s fold-then-delete overlap
-      // window produces duplicates, and those are bit-identical rows —
-      // distinct entries always differ in id BY CONSTRUCTION
-      // ([[appendLog]] allocates ids through the StoreIO
-      // create-new-or-fail primitive, so two concurrent appenders can
-      // never mint the same id), so nothing real collapses
-      withTs.dropDuplicates()
-    } else spark.emptyDataset[MetadataStore.LogRow].toDF()
-
   def appendLog(entity: String, status: String, records: Long, watermark: Option[Long],
       refId: Option[Long] = None, error: Option[String] = None): Long = {
-    // floor via a distributed max — never materialize the log on the
-    // driver (a years-long deployment's log is one row per table-load;
-    // metadata-sized, but a full driver collect per append is a wart)
-    val logMax = readLog().agg(coalesce(max(col("id")), lit(0L))).as[Long].head()
-    val nextId = reserveId(logMax)
-    val row = MetadataStore.LogRow(nextId, entity, status, records, watermark, refId, error, clock())
-    // append-only: a crash mid-write can at worst lose THIS entry; an
-    // overwrite of the whole log would destroy every watermark if it died
-    // between delete and commit
-    Seq(row).toDS().toDF().repartition(1)
-      .write.mode(SaveMode.Append).parquet(logPath)
-    nextId
-  }
-
-  /** Reserve the next log id through the StoreIO create-new-or-fail
-    * primitive: a bare read-max-increment lets two concurrent appenders
-    * mint the same id and (when the rest of the row also matches — same
-    * entity, same clock second) write bit-identical rows that
-    * [[readLog]]'s dedup silently collapses to one. Racing reservations
-    * lose and probe upward, so ids are unique by construction; a marker
-    * whose append then crashed just burns a number. Markers at or below
-    * the folded log's max are swept, age-gated, by [[compactLog]].
-    * `floor` is the log's current max id (the distributed-max read).
-    */
-  private[graft] def reserveId(floor: Long): Long = {
-    val markerMax = io.list(idDir)
-      .filter(_.startsWith("id-")).map(_.stripPrefix("id-").toLong)
-      .maxOption.getOrElse(0L)
-    var nextId = math.max(floor, markerMax) + 1L
-    while (!io.putIfAbsent(s"$idDir/id-$nextId", Array.emptyByteArray)) nextId += 1L
-    nextId
+    var id = 0L
+    log.commit("sync-log append") { cur =>
+      val all = cur.getOrElse(Vector.empty)
+      id = all.map(_.id).maxOption.getOrElse(0L) + 1L
+      Some(all :+ LogRow(id, entity, status, records, watermark, refId, error, clock()))
+    }
+    // readers load only the head (and list again if a trim removes it
+    // mid-read), so the generation chain's retention is ample here too
+    val now = System.currentTimeMillis()
+    log.trim(16, now - 60_000L)
+    log.sweepTmp(now)
+    id
   }
 
   /** Phase 1: record the run as in-flight; returns the log id to close. */
@@ -365,11 +352,7 @@ final class MetadataStore(spark: SparkSession, root: String,
 
   /** Latest successful watermark per entity (reference: get_watermark). */
   def watermark(entity: String): Option[Long] =
-    readLog()
-      .filter(col("entity") === entity && col("status") === "success")
-      .orderBy(col("id").desc).limit(1)
-      .as[MetadataStore.LogRow].collect()
-      .headOption.flatMap(_.watermark)
+    history(entity).filter(_.status == "success").lastOption.flatMap(_.watermark)
 
   /** Wall-clock of the last successful sync (freshness-gate input). */
   def lastSuccessAt(entity: String): Option[Long] =
@@ -381,94 +364,9 @@ final class MetadataStore(spark: SparkSession, root: String,
   def currentStatus(entity: String): Option[String] =
     history(entity).lastOption.map(_.status)
 
-  def history(entity: String): Seq[MetadataStore.LogRow] =
-    // filtered BEFORE the collect: only this entity's rows reach the
-    // driver (the log itself can span every entity's full history)
-    readLog().filter(col("entity") === entity)
-      .as[MetadataStore.LogRow].collect().toSeq.sortBy(_.id)
-
-  /** Fold the append-only log pile into one parquet file. Every
-    * [[appendLog]] writes its own small file, so a years-long deployment
-    * accumulates one file per table-load — correct but increasingly slow
-    * to list and read. The fold preserves the log verbatim (same rows,
-    * same ids — watermarks, history and two-phase chains unchanged) and
-    * is crash-safe at every step:
-    *
-    *  1. stale staging dirs from crashed compactions are swept;
-    *  2. the CURRENT data files are snapshotted first — appends landing
-    *     during the fold write new files not in the snapshot and survive;
-    *  3. the fold is written to a SIBLING staging dir (invisible to
-    *     readers of the log path), then moved in under a distinct name —
-    *     from that instant the log briefly holds duplicates, which
-    *     readers drop ([[readLog]]'s full-row dedup), so a crash between
-    *     the move and the deletes loses nothing and corrupts nothing;
-    *  4. exactly the snapshotted files are deleted.
-    */
-  def compactLog(): Unit = {
-    val dir = Paths.get(logPath)
-    if (!Files.exists(dir)) return
-    val parent = dir.getParent
-    // stale-staging sweep: RECURSIVE (a compaction that died mid-parquet
-    // -write leaves nested _temporary/attempt dirs a flat delete would
-    // refuse, breaking every later compaction) and AGE-GATED on the
-    // NEWEST mtime found anywhere under the staging dir — the top-level
-    // dir's mtime freezes once _temporary subdirs exist, so a live
-    // compaction whose parquet write stalls past the floor would read
-    // as stale by the top-level stat alone and be deleted mid-write
-    val cutoff = System.currentTimeMillis() - 3600_000L
-    listFiles(parent)
-      .filter(_.getFileName.toString.startsWith(s"${dir.getFileName}.compacting-"))
-      .filter(p => newestMtime(p) <= cutoff)
-      .foreach(deleteRecursively)
-    val old = listFiles(dir).filter { p =>
-      val n = p.getFileName.toString
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (old.size <= 1) return
-    val staging = parent.resolve(s"${dir.getFileName}.compacting-${System.nanoTime()}")
-    val folded = readLog().localCheckpoint(true)
-    folded.repartition(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    listFiles(staging)
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .foreach(f => Files.move(f, dir.resolve(s"compact-${System.nanoTime()}-${f.getFileName}")))
-    old.foreach(Files.deleteIfExists(_))
-    deleteRecursively(staging)
-    // id-reservation markers at or below the folded log's max id are
-    // spent (their rows are durably in the log); an age gate protects a
-    // marker whose append is still in flight between reserve and write.
-    // Orphaned `.tmp-*` siblings from a StoreIO publish that crashed
-    // between the temp write and its cleanup were never visible to any
-    // reader, so the age floor is their only rule
-    val maxId = folded.agg(coalesce(max(col("id")), lit(0L))).as[Long].head()
-    graft.sources.StoreIO.sweepAged(io, idDir, cutoff)(n =>
-      (n.startsWith("id-") && n.stripPrefix("id-").toLong <= maxId) || n.startsWith(".tmp-"))
-  }
-
-  /** Newest mtime anywhere under `p` (the path's own when childless).
-    * An UNREADABLE stat reads as infinitely YOUNG (Long.MaxValue), so
-    * the staging sweep keeps what it cannot stat — the same
-    * keep-on-unknown rule every deletion age gate follows; a transient
-    * failure (or a child vanishing under a live compaction) must never
-    * age a directory to zero and get it swept mid-write.
-    */
-  private def newestMtime(p: Path): Long = {
-    val own = scala.util.Try(Files.getLastModifiedTime(p).toMillis)
-      .toOption.getOrElse(Long.MaxValue)
-    (own +: listFiles(p).map(newestMtime)).max
-  }
-
-  private def listFiles(dir: Path): Seq[Path] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) listFiles(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-    ()
-  }
+  /** The entity's rows in id order (appends land in id order). */
+  def history(entity: String): Seq[LogRow] =
+    log.head().getOrElse(Vector.empty).filter(_.entity == entity)
 
   /** The reference's `get_next_round_to_load` (metadata.py:150-190),
     * generalized to graft's Long period keys: the first calendar period
@@ -493,6 +391,31 @@ object MetadataStore {
   final case class LogRow(id: Long, entity: String, status: String, records: Long,
       watermark: Option[Long], refId: Option[Long] = None, error: Option[String] = None,
       syncedAt: Long = 0L)
+
+  /** One line per row, in id order: eight space-separated fields, the
+    * strings URL-encoded and an absent value as `~` (which URL encoding
+    * always escapes, so no present value reads as absent).
+    */
+  private def encode(rows: Vector[LogRow]): Array[Byte] = {
+    def str(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    rows.map { r =>
+      Seq(r.id, str(r.entity), str(r.status), r.records, r.watermark.getOrElse("~"),
+        r.refId.getOrElse("~"), r.error.fold("~")(str), r.syncedAt).mkString(" ")
+    }.mkString("\n").getBytes("UTF-8")
+  }
+
+  private def decode(version: Long, bytes: Array[Byte]): Vector[LogRow] = {
+    def str(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
+    def opt(s: String) = Option.when(s != "~")(s)
+    new String(bytes, "UTF-8").split("\n").iterator.filter(_.nonEmpty).map { line =>
+      line.split(" ", -1) match {
+        case Array(id, entity, status, records, wm, ref, err, at) =>
+          LogRow(id.toLong, str(entity), str(status), records.toLong, opt(wm).map(_.toLong),
+            opt(ref).map(_.toLong), opt(err).map(str), at.toLong)
+        case _ => throw new IllegalStateException(s"corrupt sync-log line in version $version: '$line'")
+      }
+    }.toVector
+  }
 }
 
 /** The orchestrator (reference: main.py run loop). Warehouse tables are
@@ -719,10 +642,16 @@ final class PipelineRunner(
       case None =>
         // read-modify-write: on a version conflict with a racing
         // runner, the merge re-derives against the winner's fresh
-        // snapshot — neither runner's increment is lost
-        val (_, published) = snapshotTable(spec.name).overwriteWith(existing =>
-          Pipeline.merge(existing, fresh, spec.keyColumns, spec.versionColumn))
-        published.count()
+        // snapshot — neither runner's increment is lost. Each attempt
+        // counts its rows in its own materializing job, and the last
+        // attempt is the committed one
+        var rows: Observation = null
+        snapshotTable(spec.name).overwriteWith { existing =>
+          rows = Observation()
+          Pipeline.merge(existing, fresh, spec.keyColumns, spec.versionColumn)
+            .observe(rows, count(lit(1)).as("rows"))
+        }
+        rows.get("rows").asInstanceOf[Long]
     }
 
   private def runOne(spec: Pipeline.TableSpec, force: Boolean,

@@ -1,8 +1,9 @@
 package graft.sources
 
 /** One versioned, optimistically committed state log over [[StoreIO]] —
-  * the protocol under both a store's [[GenerationChain]] and a
-  * [[graft.etl.SnapshotTable]]'s manifests. Version `N` is the object
+  * the protocol under a store's [[GenerationChain]], a
+  * [[graft.etl.SnapshotTable]]'s manifests and the ETL sync log
+  * ([[graft.etl.MetadataStore]]). Version `N` is the object
   * `dir/v<N>` (twelve zero-padded digits) holding the complete state;
   * the head is the highest version. A commit publishes `head + 1`
   * through [[StoreIO.putIfAbsent]], so of two racing writers exactly one

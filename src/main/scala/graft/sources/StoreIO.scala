@@ -5,11 +5,10 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** The minimal storage contract the METADATA planes commit through —
-  * one [[CommitLog]] (under both [[graft.etl.SnapshotTable]]'s manifests
-  * and a store's [[GenerationChain]]) plus the ETL metadata store's id
-  * reservations are the only callers of [[putIfAbsent]], so porting the
-  * whole store layer to an object store means implementing these six
-  * operations once:
+  * one [[CommitLog]] (under [[graft.etl.SnapshotTable]]'s manifests, a
+  * store's [[GenerationChain]] and the ETL sync log) is the only caller
+  * of [[putIfAbsent]], so porting the whole store layer to an object
+  * store means implementing these six operations once:
   *
   *   - `putIfAbsent`  → S3/GCS conditional PUT (`If-None-Match: *`)
   *   - `put`          → plain PUT (single-object overwrite is atomic)

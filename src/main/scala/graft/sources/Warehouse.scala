@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType, CatalogUtils}
 
 /** Bucketed warehouse tables — the co-located-join layout. Writing both
   * sides of a frequently-joined pair `bucketBy(n, key)` pins an
@@ -111,10 +112,14 @@ object Warehouse {
     * layout from this instead of trusting a caller-repeated parameter.
     */
   def bucketCount(spark: SparkSession, name: String): Option[Int] =
-    scala.util.Try(
-      spark.sql(s"DESCRIBE EXTENDED $name")
-        .filter(org.apache.spark.sql.functions.col("col_name") === "Num Buckets")
-        .head().getString(1).trim.toInt).toOption
+    catalogEntry(spark, name).flatMap(_.bucketSpec).map(_.numBuckets)
+
+  /** `name`'s entry in the session catalog, read on the driver without
+    * a Spark job; None when the table is absent or its entry unreadable.
+    */
+  private def catalogEntry(spark: SparkSession, name: String): Option[CatalogTable] =
+    scala.util.Try(spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(name))).toOption
 
   /** The bucket count store table `<name>__g<gen>_<suffix>` was built
     * with, for every append, fold and probe that must match the store's
@@ -486,13 +491,7 @@ object Warehouse {
     val existed = spark.catalog.tableExists(name)
     // Location AND Type from the catalog while the table still exists —
     // the data delete below is restricted to tables the warehouse OWNS
-    val described: Option[Map[String, String]] =
-      if (existed)
-        scala.util.Try(
-          spark.sql(s"DESCRIBE EXTENDED $name").collect()
-            .map(r => r.getString(0) -> Option(r.getString(1)).getOrElse(""))
-            .toMap).toOption
-      else None
+    val described = if (existed) catalogEntry(spark, name) else None
     spark.sql(s"DROP TABLE IF EXISTS $name")
     val warehouseRoot = spark.conf.get("spark.sql.warehouse.dir")
       .stripSuffix("/").stripPrefix("file:")
@@ -509,15 +508,16 @@ object Warehouse {
     //     the Hadoop FS layer (same connector that wrote it);
     //   - a resolved EXTERNAL/unknown-type location elsewhere →
     //     catalog-only drop, data untouched;
-    //   - an existing table whose DESCRIBE failed → location AND
-    //     ownership unknown → catalog-only drop (keep-on-unknown);
+    //   - an existing table whose catalog entry is unreadable →
+    //     location AND ownership unknown → catalog-only drop
+    //     (keep-on-unknown);
     //   - a table the catalog has already forgotten (orphaned dir from
     //     a prior JVM) → the managed-convention path under our root is
     //     the only candidate, and it is ours by construction.
     described match {
-      case Some(d) =>
-        val loc = d.get("Location").map(_.trim).filter(_.nonEmpty)
-        val managed = d.get("Type").exists(_.trim.equalsIgnoreCase("MANAGED"))
+      case Some(t) =>
+        val loc = t.storage.locationUri.map(CatalogUtils.URIToString).filter(_.nonEmpty)
+        val managed = t.tableType == CatalogTableType.MANAGED
         loc match {
           case Some(l) if managed || underWarehouse(l) =>
             HadoopFs.deleteRecursive(l): Unit
@@ -525,7 +525,7 @@ object Warehouse {
           case None =>
             if (managed) HadoopFs.deleteRecursive(fallback): Unit
         }
-      case None if existed => () // DESCRIBE failed: ownership unknown, keep
+      case None if existed => () // entry unreadable: ownership unknown, keep
       case None => HadoopFs.deleteRecursive(fallback): Unit
     }
   }

@@ -138,81 +138,135 @@ class EtlSpec extends SparkSpecBase {
     assert(store.currentStatus("dim_customer").contains("success"))
   }
 
-  test("compactLog folds the append pile to one file, preserving watermarks and history verbatim") {
+  /** The committed versions of `md`'s sync log. */
+  private def logVersions(io: graft.sources.StoreIO, md: String): Seq[String] =
+    io.list(s"$md/sync_log_v").filter(_.startsWith("v"))
+
+  test("sync-log trims keep history, ids, refIds, errors and watermarks unchanged") {
     val (_, md) = freshDirs()
-    val store = new MetadataStore(spark, md)
+    // every version reads as committed at epoch 0: all but the newest 16
+    // are past the one-minute floor at the first trim
+    val io = new graft.sources.InMemoryStoreIO(clock = () => 0L)
+    val store = new MetadataStore(spark, md, io = io)
     // a realistic chain: successes with advancing watermarks, a failure,
     // a two-phase running+terminal pair, a second entity
     val id1 = store.startSync("fact_events")
     store.completeSync("fact_events", id1, success = true, 10L, Some(100L))
     val id2 = store.startSync("fact_events")
-    store.completeSync("fact_events", id2, success = false, 0L, None, Some("boom"))
+    store.completeSync("fact_events", id2, success = false, 0L, None, Some("boom: a b\nc ~ %"))
     val id3 = store.startSync("fact_events")
     store.completeSync("fact_events", id3, success = true, 5L, Some(200L))
-    store.appendLog("dim_nation", "success", 25L, None)
-    val logDir = java.nio.file.Paths.get(s"$md/sync_log")
-    def dataFiles() = {
-      val s = java.nio.file.Files.list(logDir)
-      try s.iterator().asScala.toSeq.map(_.getFileName.toString)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-      finally s.close()
-    }
-    assert(dataFiles().size == 7, "one file per append before the fold")
+    store.appendLog("dim nation", "success", 25L, None)
     val historyBefore = store.history("fact_events")
-    val wmBefore = store.watermark("fact_events")
-    store.compactLog()
-    assert(dataFiles().size == 1, "the pile folds to one file")
-    assert(store.history("fact_events") == historyBefore,
-      "a compacted log preserves history verbatim — ids, statuses, refIds, errors")
-    assert(store.watermark("fact_events") == wmBefore && wmBefore.contains(200L))
-    assert(store.currentStatus("dim_nation").contains("success"))
-    // appends continue after the fold with the id chain intact
-    val id4 = store.appendLog("fact_events", "success", 1L, Some(300L))
-    assert(id4 == historyBefore.map(_.id).max + 2,
-      "next id continues from the folded log (dim_nation's row holds max)")
+    assert(historyBefore.map(_.id) == (1L to 6L))
+    assert(historyBefore.map(_.refId) == Seq(None, Some(1L), None, Some(3L), None, Some(5L)))
+    assert(historyBefore(3).error.contains("boom: a b\nc ~ %"), "strings round-trip verbatim")
+    (1 to 40).foreach(i => store.appendLog("dim_customer", "success", i.toLong, Some(i.toLong)))
+    assert(logVersions(io, md).size == 16, "the log trims itself to 16 versions")
+    val reopened = new MetadataStore(spark, md, io = io)
+    for (s <- Seq(store, reopened)) {
+      assert(s.history("fact_events") == historyBefore,
+        "trimmed versions preserve history verbatim — ids, statuses, refIds, errors")
+      assert(s.watermark("fact_events").contains(200L))
+      assert(s.currentStatus("dim nation").contains("success"))
+      assert(s.watermark("dim_customer").contains(40L))
+      assert(s.history("dim_customer").map(_.id) == (8L to 47L))
+    }
+    assert(reopened.appendLog("fact_events", "success", 1L, Some(300L)) == 48L,
+      "the id chain continues across trims")
     assert(store.watermark("fact_events").contains(300L))
-    // idempotent: a second fold (now 2 files) and a third (1 file, no-op)
-    store.compactLog()
-    assert(dataFiles().size == 1)
-    store.compactLog()
-    assert(store.watermark("fact_events").contains(300L))
-    // crash-window shape: a duplicate of the folded file (the move-in
-    // landed, the deletes did not) must not duplicate history
-    val f = logDir.resolve(dataFiles().head)
-    java.nio.file.Files.copy(f, logDir.resolve(s"compact-dup-${f.getFileName}"))
-    assert(store.history("fact_events") == store.history("fact_events").distinct &&
-      store.history("fact_events").size == 7,
-      "readers full-row-dedup the fold-overlap window")
-    store.compactLog()
-    assert(dataFiles().size == 1 && store.watermark("fact_events").contains(300L))
   }
 
-  test("concurrent log-id reservations never mint the same id") {
-    // the id is RESERVED through the StoreIO create-new-or-fail
-    // primitive: before this, two appenders racing the read-max-
-    // increment could write the same id — and when the rest of the row
-    // matched too (same entity, same clock second), readLog's full-row
-    // dedup silently collapsed both entries into one. The race window
-    // is the reservation itself, so that is what 4 threads hammer; the
-    // parquet append is the committer's (serial-writer) job.
+  test("4 threads x 5 racing appendLogs mint ids 1..20 with no duplicates") {
+    // every append is one optimistic commit whose transition assigns
+    // max id + 1: of two appenders racing for a version exactly one
+    // wins, and the loser re-derives its id from the winner's head
     val (_, md) = freshDirs()
     val store = new MetadataStore(spark, md)
     val minted = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val threads = (0 until 4).map { _ =>
-      new Thread(() => (0 until 5).foreach { _ =>
-        // every thread passes the SAME stale floor — the exact
-        // read-max-increment race shape
-        minted.add(store.reserveId(0L))
+    val threads = (0 until 4).map { t =>
+      new Thread(() => (0 until 5).foreach { i =>
+        minted.add(store.appendLog("entity_x", "success", 1L, Some(t * 10L + i)))
       })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
-    import scala.jdk.CollectionConverters._
     val ids = minted.asScala.toSeq
     assert(ids.size == 20 && ids.distinct.size == 20,
-      s"20 racing reservations must mint 20 distinct ids, got ${ids.sorted}")
+      s"20 racing appends must mint 20 distinct ids, got ${ids.sorted}")
     assert(ids.toSet == (1L to 20L).toSet, "ids stay dense from 1")
-    // and the next real append continues past every reservation
+    val logged = store.history("entity_x")
+    assert(logged.map(_.id) == (1L to 20L), "every append is in the log, once")
+    assert(logged.flatMap(_.watermark).toSet == (for (t <- 0 until 4; i <- 0 until 5)
+      yield t * 10L + i).toSet, "no racing append's row is lost")
     assert(store.appendLog("entity_x", "success", 1L, None) == 21L)
+  }
+
+  test("a crash at either put of a startSync/completeSync pair leaves a readable, untorn log") {
+    for (crashAt <- Seq(1, 2)) {
+      val (_, md) = freshDirs()
+      val io = new graft.sources.InMemoryStoreIO()
+      io.failAfterCommit(crashAt)
+      val store = new MetadataStore(spark, md, io = io)
+      val err = intercept[java.io.IOException] {
+        val id = store.startSync("results")
+        store.completeSync("results", id, success = true, 7L, Some(70L))
+      }
+      assert(err.getMessage.contains("injected crash"))
+      val after = new MetadataStore(spark, md, io = io)
+      val rows = after.history("results")
+      crashAt match {
+        case 1 =>
+          assert(rows.map(r => (r.id, r.status)) == Seq(1L -> "running"),
+            s"a crash after the start commit shows the run as running: $rows")
+          assert(after.watermark("results").isEmpty)
+        case 2 =>
+          assert(rows.map(r => (r.id, r.status, r.refId)) ==
+            Seq((1L, "running", None), (2L, "success", Some(1L))),
+            s"a crash after the terminal commit shows the run closed: $rows")
+          assert(after.watermark("results").contains(70L) && rows.last.records == 7L)
+      }
+      assert(after.appendLog("results", "success", 1L, Some(80L)) == crashAt + 1L,
+        "appends continue past the crash")
+    }
+  }
+
+  test("a parquet sync log from earlier versions imports once with its ids, watermarks and history") {
+    import spark.implicits._
+    val (_, md) = freshDirs()
+    val legacy = Seq(
+      MetadataStore.LogRow(1L, "fact_events", "running", 0L, None, syncedAt = 100L),
+      MetadataStore.LogRow(2L, "fact_events", "success", 10L, Some(500L), Some(1L), syncedAt = 101L),
+      MetadataStore.LogRow(3L, "dim_nation", "success", 25L, None, syncedAt = 102L),
+      // id 4 was burned by a reservation whose append crashed
+      MetadataStore.LogRow(5L, "fact_events", "failed", 0L, Some(500L), Some(4L),
+        Some("executor lost"), syncedAt = 103L))
+    // the parquet pile: one file per append
+    legacy.foreach(r => Seq(r).toDS().write.mode("append").parquet(s"$md/sync_log"))
+    val pile = java.nio.file.Paths.get(s"$md/sync_log")
+    def pileFiles(): Map[String, Long] = {
+      val s = Files.list(pile)
+      try s.iterator().asScala.map(p => p.getFileName.toString ->
+        Files.getLastModifiedTime(p).toMillis).toMap
+      finally s.close()
+    }
+    val before = pileFiles()
+    // two processes opening the log at once import it once
+    val stores = Seq.fill(2)(new MetadataStore(spark, md))
+    val threads = stores.map(s => new Thread(() => { s.history("fact_events"); () }))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(logVersions(graft.sources.PosixStoreIO, md).size == 1, "one import version")
+    for (s <- stores) {
+      assert(s.history("fact_events") == legacy.filter(_.entity == "fact_events"))
+      assert(s.history("dim_nation") == legacy.filter(_.entity == "dim_nation"))
+      assert(s.watermark("fact_events").contains(500L))
+      assert(s.currentStatus("fact_events").contains("failed"))
+      assert(s.lastSuccessAt("fact_events").contains(101L))
+    }
+    assert(stores.head.appendLog("fact_events", "success", 1L, Some(600L)) == 6L,
+      "the next append gets the legacy max id + 1")
+    assert(stores.last.watermark("fact_events").contains(600L))
+    assert(new MetadataStore(spark, md).history("fact_events").size == 4)
+    assert(pileFiles() == before, "the parquet pile is never written again")
   }
 
   test("single-table targeted run loads exactly one entity") {
@@ -374,6 +428,27 @@ class EtlSpec extends SparkSpecBase {
     assert(runner2.table("results").count() == history.length)
     intercept[IllegalArgumentException] { runner.backfill("nope", Map("round" -> 1)) }
     intercept[IllegalArgumentException] { runner.backfill("results", Map.empty) }
+  }
+
+  test("the sync log's records equal the published table's row count after a run and a backfill") {
+    val (wh, md) = freshDirs()
+    val store = new MetadataStore(spark, md)
+    val rSpecs = Seq(Pipeline.TableSpec("results", Pipeline.PostRace, Nil,
+      Seq("id"), versionColumn = Some("ver")))
+    var batch = Seq((1L, 1, "a", 1L), (2L, 1, "b", 1L), (3L, 2, "c", 1L))
+    val full: Map[String, Pipeline.Extract] = Map(
+      "results" -> ((s, _) => { import s.implicits._; batch.toDF("id", "round", "v", "ver") }))
+    val runner = new PipelineRunner(spark, wh, store, rSpecs, full)
+    def logged() = store.history("results").last
+    assert(runner.run(Pipeline.PostRace) == Map("results" -> 3L))
+    assert(logged().status == "success" && logged().records == runner.table("results").count())
+    // an upsert of one key plus one new key: the merged table grows by one
+    batch = Seq((2L, 1, "B", 2L), (4L, 2, "d", 1L))
+    runner.run(Pipeline.PostRace)
+    assert(logged().records == 4L && logged().records == runner.table("results").count())
+    batch = Seq((3L, 2, "C", 3L), (5L, 2, "e", 1L), (9L, 1, "outside the period", 1L))
+    assert(runner.backfill("results", Map("round" -> 2)) == 5L)
+    assert(logged().records == runner.table("results").count() && logged().records == 5L)
   }
 
   test("backfill keeps a watermark advanced concurrently, not its pre-backfill snapshot") {

@@ -57,7 +57,8 @@ class FanOutSpec extends SparkSpecBase {
     }
   }
 
-  test("no main source asks SQLConf.numShufflePartitions for a width") {
+  /** The main sources whose code, comments stripped, contains `token`. */
+  private def mainSourcesUsing(token: String): Seq[java.nio.file.Path] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = {
       val s = java.nio.file.Files.walk(root)
@@ -67,12 +68,23 @@ class FanOutSpec extends SparkSpecBase {
     assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
     val blockComment = "(?s)/\\*.*?\\*/".r
     val lineComment = "//[^\n]*".r
-    val offenders = files.filter { f =>
+    files.filter { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      lineComment.replaceAllIn(blockComment.replaceAllIn(src, ""), "")
-        .contains("numShufflePartitions")
+      lineComment.replaceAllIn(blockComment.replaceAllIn(src, ""), "").contains(token)
     }
+  }
+
+  test("no main source asks SQLConf.numShufflePartitions for a width") {
+    val offenders = mainSourcesUsing("numShufflePartitions")
     assert(offenders.isEmpty,
       s"use GraftSession.fanOut instead of numShufflePartitions in: ${offenders.mkString(", ")}")
+  }
+
+  test("no main source runs DESCRIBE EXTENDED for catalog metadata") {
+    // the command is two Spark jobs per call; the session catalog
+    // answers the same questions on the driver
+    val offenders = mainSourcesUsing("DESCRIBE EXTENDED")
+    assert(offenders.isEmpty,
+      s"read spark.sessionState.catalog instead of DESCRIBE EXTENDED in: ${offenders.mkString(", ")}")
   }
 }

@@ -417,16 +417,14 @@ class SnapshotTableSpec extends SparkSpecBase {
     assert(graft.etl.Main.parse(Array("--mode", "pre_season", "--snapshot")).isLeft)
   }
 
-  test("one commit log: only StoreIO impls, CommitLog and the log-id reservation call putIfAbsent; only CommitLog names versions") {
+  test("one commit log: only CommitLog and StoreIO impls use putIfAbsent or v%012d") {
     val putters = mainFiles().flatMap { f =>
       val c = code(f)
       if (c.contains("putIfAbsent(")) Some(f.getFileName.toString -> c) else None
     }.toMap
-    assert(putters.keySet == Set("StoreIO.scala", "HadoopFsStoreIO.scala", "CommitLog.scala", "Pipeline.scala"),
+    assert(putters.keySet == Set("StoreIO.scala", "HadoopFsStoreIO.scala", "CommitLog.scala"),
       s"putIfAbsent outside the commit log: ${putters.keySet.toSeq.sorted.mkString(", ")}")
     assert(callers(putters("CommitLog.scala"), "putIfAbsent") == Set("tryCommit"))
-    assert(callers(putters("Pipeline.scala"), "putIfAbsent") == Set("reserveId"),
-      "the metadata store reserves log ids through putIfAbsent and nothing else")
     val versionFormats = mainFiles().filter(f => code(f).contains("%012d")).map(_.getFileName.toString)
     assert(versionFormats == Seq("CommitLog.scala"),
       s"the version file name is CommitLog's alone: ${versionFormats.mkString(", ")}")
