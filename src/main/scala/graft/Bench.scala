@@ -97,12 +97,12 @@ object Bench {
           try {
             val df = fn(spark, sfDir)
             val built = System.nanoTime()
-            val plan = org.apache.spark.sql.classic.GraftInterop.analyzed(df)
+            val plan = org.apache.spark.sql.GraftSparkInterop.analyzed(df)
             val stripped = plan match {
               case org.apache.spark.sql.catalyst.plans.logical.Sort(_, true, child, _) => child
               case p => p
             }
-            org.apache.spark.sql.classic.GraftInterop.ofRows(spark, stripped)
+            org.apache.spark.sql.GraftSparkInterop.ofRows(spark, stripped)
               .write.format("noop").mode("overwrite").save()
             val done = System.nanoTime()
             val secs = (done - t0) / 1e9

@@ -24,10 +24,13 @@ import org.apache.spark.sql.SparkSession
   *
   * The engines are labelled once where they are centralised: the store
   * lifecycle (`store.build`, `store.fold`, `store.append` in
-  * [[graft.sources.Warehouse]]), connected-component propagation
-  * (`propagation.setup` and one `propagation.round` per loop iteration
-  * in `Dedup.clustersOfPairsCounted`) and BPE training (one `bpe.round`
-  * per merge round in `Bpe.train`).
+  * [[graft.sources.Warehouse]]), the iteration engine
+  * ([[graft.operators.Loop]]: one `<name>.round` per round of every
+  * driver loop — `propagation`, `pagerank`, `weighted_pagerank`,
+  * `personalized_pagerank`, `hop_distance`, `label_communities`,
+  * `kmeans`, `codebooks`), propagation's setup (`propagation.setup` in
+  * `Dedup.clustersOfPairsCounted`) and BPE training (one `bpe.round` per
+  * merge round in `Bpe.train`).
   */
 object Phase {
   /** The local property holding the open phase path. */
@@ -132,7 +135,7 @@ object Phase {
       * the events already posted.
       */
     def snapshot(): Map[String, Stats] = {
-      org.apache.spark.GraftSparkInterop.drainListenerBus(sc)
+      org.apache.spark.sql.GraftSparkInterop.drainListenerBus(sc)
       totals.asScala.toMap
     }
 

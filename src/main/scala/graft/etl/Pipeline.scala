@@ -121,14 +121,18 @@ object Pipeline {
         Some(spark.read.parquet(targetPath)
           .filter(col(partitionCol).isin(touched.toSeq: _*)))
       else None
+    // the eager checkpoint severs lineage from the files being replaced;
+    // its one job sees every row, so it also counts them
+    val rows = Observation()
     val merged = merge(existing, fresh, keys, version)
-      .localCheckpoint(eager = true) // sever lineage from files being replaced
+      .observe(rows, count(lit(1)).as("rows"))
+      .localCheckpoint(eager = true)
     merged.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(targetPath)
-    merged.count()
+    rows.get("rows").asInstanceOf[Long]
   }
 
   /** Thrown by extracts for non-retryable failures — the analog of the

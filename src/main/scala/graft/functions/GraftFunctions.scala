@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.classic.{GraftInterop => EU}
+import org.apache.spark.sql.{GraftSparkInterop => EU}
 
 /** Column-API and SQL-registry surface for graft's native expressions.
   * Everything here is a codegen'd Catalyst expression — no Scala UDFs on

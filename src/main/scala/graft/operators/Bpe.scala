@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftSparkInterop, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+import graft.GraftSession
 import graft.sources.Tables
 
 /** t13: BPE merge training (Sennrich et al. 2016) — the tokenizer-training
@@ -114,30 +115,21 @@ object Bpe {
     // AQE output coalescing (canChangeCachedPlanOutputPartitioning is
     // off), so under the wide start every round iterates 256 mostly-
     // empty cached partitions — measured t13 2.44 s -> 6.04 s quiet at
-    // sf0.1. Scope the loop back to the coalesce floor; the override
-    // must be in force BEFORE the first persist() below, because
-    // persist() bakes the cached plan's conf at call time.
-    val initKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    // an UNSET optional conf reads back as null (not an exception) on a
-    // session that never configured it — Option() folds both the null
-    // and the throwing path to None so restore unsets instead of
-    // attempting set(key, null), which requires a non-null value
-    val prevInit = Option(try spark.conf.get(initKey) catch { case _: Exception => null })
-    // the session's fan-out (GraftSession.fanOut), never SQLConf's
-    // numShufflePartitions getter: that returns initialPartitionNum
-    // itself when AQE coalescing is on, which would make this set a no-op
-    spark.conf.set(initKey, graft.GraftSession.fanOut(spark).toString)
-    def restoreInit(): Unit = prevInit match {
-      case Some(v) => spark.conf.set(initKey, v)
-      case None => spark.conf.unset(initKey)
-    }
-    var cached =
-      try {
-        wordFreq(t)
-          .withColumn("syms", initialSymbols(col("word")))
-          .select(col("word"), col("syms"), col("freq"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      } catch { case e: Throwable => restoreInit(); throw e }
+    // sf0.1. The chain is built and iterated in a child session whose
+    // wide start is the coalesce floor (the session's fan-out,
+    // GraftSession.fanOut — never SQLConf's numShufflePartitions getter,
+    // which returns initialPartitionNum itself while coalescing is on):
+    // persist() bakes the cached plan's conf at call time, and the
+    // caller's conf is never touched. The dict returns to the caller's
+    // session, where the cache manager both sessions share still serves
+    // and unpersists it.
+    val scoped = GraftSession.scoped(spark, Map(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        GraftSession.fanOut(spark).toString))
+    var cached = GraftSparkInterop.ofRows(scoped, wordFreq(t))
+      .withColumn("syms", initialSymbols(col("word")))
+      .select(col("word"), col("syms"), col("freq"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val steps = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     // ONE action per merge round: the round's best-pair collect is the
     // action that materializes the round's cache (computed FROM the
@@ -168,11 +160,10 @@ object Bpe {
       }
       cached.count() // the contract: the returned dict is materialized
       parent.foreach(_.unpersist())
-      restoreInit()
     } catch { case e: Throwable =>
-      restoreInit(); parent.foreach(_.unpersist()); cached.unpersist(); throw e
+      parent.foreach(_.unpersist()); cached.unpersist(); throw e
     }
-    (steps.toSeq, cached)
+    (steps.toSeq, GraftSparkInterop.ofRows(spark, cached))
   }
 
   /** The learned merge table: one row per merge step, in order. This is

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSparkInterop, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.functions.GraftFunctions._
 import graft.sources.{Tables, Warehouse}
 
@@ -1825,21 +1826,7 @@ object Dedup {
     // computes the full closure, so early truncation would also diverge
     // from verification)
     val spark = pairGraph.sparkSession
-    // static-planning window: the session conf is restored
-    // unconditionally, and the RETURNED frame plans after the last
-    // restore, so only the jobs materialized inside see the static
-    // config
-    def staticPlanning[A](parts: Int)(f: => A): A = {
-      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-      val widthWas = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try f finally {
-        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        spark.conf.set("spark.sql.shuffle.partitions", widthWas)
-      }
-    }
-    val (edges, labels0, latencyBound, parts) = graft.Phase("propagation.setup") {
+    val (edges, labels0) = graft.Phase("propagation.setup") {
       val pairs = pairGraph.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
       // Scale-adaptive loop layout (guide §2): derive the layout from the
       // MATERIALIZED edge count instead of inheriting a cluster-wide
@@ -1882,61 +1869,49 @@ object Dedup {
         else
           math.max(para.toLong,
             (nEdges + PropagationRowsPerPartition - 1) / PropagationRowsPerPartition).toInt
-      // the setup checkpoints are built statically in BOTH regimes: a
-      // checkpoint materialized under adaptive execution surfaces as
-      // UnknownPartitioning (measured — the per-round join then re-sorts
-      // and re-exchanges the edge side it was pinned to avoid), while a
-      // statically-planned one carries its hash partitioning and sort
-      // order into every round
-      val (e, l) = staticPlanning(parts) {
-        val l = pairs.select(col("doc_a").as("doc_id"))
-          .unionByName(pairs.select(col("doc_b").as("doc_id")))
-          .distinct().withColumn("label", col("doc_id"))
-          .localCheckpoint(true)
-        // pre-partitioning the edge list pays exactly when the per-round
-        // neighbor join will NOT broadcast the labeling: in the
-        // latency-bound regime (static SMJ rounds), and at vert counts
-        // past broadcast size (where each adaptive round would otherwise
-        // re-exchange + re-sort the 2|E| side every round). When the
-        // labeling is small enough that adaptive execution broadcasts it,
-        // the edge side is streamed in place and a setup
-        // shuffle-and-sort of millions of edge rows is pure overhead
-        // (measured +1.9 s on g4's ~2M-row edge list for zero per-round
-        // benefit).
-        val eBase = pairs
-          .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-        val e =
-          (if (latencyBound || l.count() > PropagationBroadcastableVerts)
-            eBase.repartition(parts, col("doc_b")).sortWithinPartitions("doc_b")
-          else eBase).localCheckpoint(true)
-        (e, l)
-      }
-      (e, l, latencyBound, parts)
+      // the setup checkpoints are built in a static child session in
+      // BOTH regimes: a checkpoint materialized under adaptive execution
+      // surfaces as UnknownPartitioning (measured — the per-round join
+      // then re-sorts and re-exchanges the edge side it was pinned to
+      // avoid), while a statically-planned one carries its hash
+      // partitioning and sort order into every round. The latency-bound
+      // rounds run in that child too; compute-bound rounds run in the
+      // caller's session. The caller's conf is never touched.
+      val static = GraftSession.scoped(spark, Map(
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> parts.toString))
+      val staticPairs = GraftSparkInterop.ofRows(static, pairs)
+      val l = staticPairs.select(col("doc_a").as("doc_id"))
+        .unionByName(staticPairs.select(col("doc_b").as("doc_id")))
+        .distinct().withColumn("label", col("doc_id"))
+        .localCheckpoint(true)
+      // pre-partitioning the edge list pays exactly when the per-round
+      // neighbor join will NOT broadcast the labeling: in the
+      // latency-bound regime (static SMJ rounds), and at vert counts
+      // past broadcast size (where each adaptive round would otherwise
+      // re-exchange + re-sort the 2|E| side every round). When the
+      // labeling is small enough that adaptive execution broadcasts it,
+      // the edge side is streamed in place and a setup
+      // shuffle-and-sort of millions of edge rows is pure overhead
+      // (measured +1.9 s on g4's ~2M-row edge list for zero per-round
+      // benefit).
+      val eBase = staticPairs
+        .unionByName(staticPairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      val e =
+        (if (latencyBound || l.count() > PropagationBroadcastableVerts)
+          eBase.repartition(parts, col("doc_b")).sortWithinPartitions("doc_b")
+        else eBase).localCheckpoint(true)
+      val roundSession = if (latencyBound) static else spark
+      (GraftSparkInterop.ofRows(roundSession, e), GraftSparkInterop.ofRows(roundSession, l))
     }
-    var labels = labels0
-    var converged = false
-    var iter = 0
-    def runLoop(): Unit =
-      while (!converged && iter < maxIter) graft.Phase("propagation.round") {
-        // LAZY checkpoint: the convergence count below is the action that
-        // materializes it, so each round costs ONE Spark job — and the
-        // sequential job count is the loop's dominant cost. (Materialization
-        // DOES truncate under AQE: rounds 1-13 of the stats-blowup
-        // investigation ran at constant 0.25 s on the lazy path, so the
-        // r15 eager detour was unnecessary and cost a job per round.)
-        val next = propagationRound(edges, labels).localCheckpoint(eager = false)
-        val changed = next.filter(col("label") =!= col("__old")).count()
-        // STATS RESET, load-bearing past ~15 rounds — see
-        // [[graft.operators.reframed]] (the count above already
-        // materialized the lazy checkpoint this re-frames over)
-        labels = reframed(next.drop("__old"))
-        converged = changed == 0
-        iter += 1
-      }
-    if (latencyBound) staticPlanning(parts)(runLoop()) else runLoop()
-    (labels
+    // each round is ONE Spark job: the round's checkpoint is lazy and the
+    // convergence count below materializes it
+    val (labels, rounds, converged) = Loop("propagation", labels0, maxIter,
+      changed = Some(_.filter(col("label") =!= col("__old")).count()))(
+      propagationRound(edges, _))
+    (GraftSparkInterop.ofRows(spark, labels)
       .select(col("doc_id"), col("label").as("cluster_id"))
-      .orderBy(col("cluster_id"), col("doc_id")), iter, converged)
+      .orderBy(col("cluster_id"), col("doc_id")), rounds, converged)
   }
 
   /** Target rows per partition for the propagation loop's derived

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Tables, Warehouse}
@@ -20,9 +20,9 @@ import graft.sources.{Tables, Warehouse}
   *  - PageRank is the canonical pregel-as-joins loop: each round is one
   *    equi-join (ranks ⋈ edges on src) plus one aggregation (sum by
   *    dst) — compact (node, rank) longs shuffle, never adjacency lists.
-  *    Lineage is cut per round (`localCheckpoint`) so the plan stays
-  *    flat at any iteration count. For graphs whose rank table outgrows
-  *    the broadcast pin, [[buildEdgeStore]] persists the edges bucketed
+  *    Every loop runs through [[Loop]], which cuts lineage per round
+  *    so the plan stays flat at any iteration count. For graphs whose
+  *    rank table outgrows the broadcast pin, [[buildEdgeStore]] persists the edges bucketed
   *    by src and the `*AgainstStore` loops co-locate the per-round join
   *    on that layout (edge side exchange-free — the deployment path
   *    measured in SURVEY.md's "Measured design decisions"); the loop
@@ -72,44 +72,63 @@ object Graph {
     * graph, exposed for crafted-graph specs and reuse.
     */
   def pagerankFromEdges(und: DataFrame, iters: Int, topK: Int): DataFrame = {
-    // symmetric closure; every node therefore appears as a src, so
-    // out-degree enumerates the node set and no dangling mass exists
-    val edges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(eager = true)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = true)
-    // src out-degree attached to every edge ONCE, outside the loop — the
-    // per-round work is then a single (ranks ⋈ edgesDeg) join + one
-    // aggregation, not a second node-sized join per round. deg is pinned
-    // broadcast like the loop's ranks (this is the dimension-sized-nodes
-    // path by contract): the checkpointed edges carry no stats, so
-    // without the pin the attach shuffle-writes the edge side first
-    val edgesDeg = edges.join(broadcast(deg), "src").localCheckpoint(eager = true)
-    pagerankCore(deg, edgesDeg, iters, topK, broadcastRanks = true)
+    val (deg, edgesDeg) = closureWithDegree(und, count(lit(1)).as("deg"), broadcastDeg = true)
+    pagerankCore("pagerank", deg, edgesDeg, iters, topK, broadcastRanks = true)
   }
 
-  /** The g1 loop over pre-built (deg, edgesDeg) frames — shared by the
-    * in-memory path (checkpointed inputs, ranks broadcast pinned) and
-    * the bucketed-store path (bucketed scans, shuffle-joined ranks).
+  /** Both directions of every undirected edge (`src`, `dst`, `extra`):
+    * every node appears as a src, so out-degree enumerates the node set
+    * and no dangling mass exists.
     */
-  private def pagerankCore(deg: DataFrame, edgesDeg: DataFrame,
-      iters: Int, topK: Int, broadcastRanks: Boolean): DataFrame = {
-    var ranks = deg.select(col("src").as("node"), lit(Rank0).as("rank"))
-    var i = 0
-    while (i < iters) {
-      // reframed: reset the checkpoint's inherited stats estimate every
-      // round — `iters` is caller-settable, and past ~15 rounds the
-      // compounding estimate stalls the driver in BigInt multiplication
-      // ([[graft.operators.reframed]]; IterativeStatsSpec pins this)
-      ranks = reframed(pagerankRound(ranks, edgesDeg, broadcastRanks)
-        .localCheckpoint(eager = true))
-      i += 1
-    }
+  private def bothWays(und: DataFrame, extra: String*): DataFrame =
+    und.select((Seq("src", "dst") ++ extra).map(col): _*)
+      .union(und.select(Seq(col("dst").as("src"), col("src").as("dst")) ++ extra.map(col): _*))
+
+  /** A loop's static side, checkpointed once: the closure and each
+    * src's `degree` over it.
+    */
+  private def closureAndDegree(und: DataFrame, degree: Column,
+      extra: String*): (DataFrame, DataFrame) = {
+    val edges = bothWays(und, extra: _*).localCheckpoint(eager = true)
+    (edges, edges.groupBy("src").agg(degree).localCheckpoint(eager = true))
+  }
+
+  /** The rank loops' `(deg, edgesDeg)`: the degree attached to every
+    * edge ONCE, so a round is one (ranks ⋈ edgesDeg) join + one
+    * aggregation. `broadcastDeg` pins the degree side broadcast like the
+    * loop's ranks: the checkpointed edges carry no stats, so without the
+    * pin the attach shuffle-writes the edge side first.
+    */
+  private def closureWithDegree(und: DataFrame, degree: Column, broadcastDeg: Boolean,
+      extra: String*): (DataFrame, DataFrame) = {
+    val (edges, deg) = closureAndDegree(und, degree, extra: _*)
+    (deg, edges.join(if (broadcastDeg) broadcast(deg) else deg, "src")
+      .localCheckpoint(eager = true))
+  }
+
+  /** The g1/g9 loop over pre-built (deg, edgesDeg) frames — shared by
+    * the in-memory path (checkpointed inputs, ranks broadcast pinned)
+    * and the bucketed-store path (bucketed scans, shuffle-joined ranks).
+    */
+  private def pagerankCore(name: String, deg: DataFrame, edgesDeg: DataFrame,
+      iters: Int, topK: Int, broadcastRanks: Boolean,
+      share: String = "rank div deg"): DataFrame = {
+    val (ranks, _, _) = Loop(name, deg.select(col("src").as("node"), lit(Rank0).as("rank")),
+      iters)(pagerankRound(_, edgesDeg, broadcastRanks, share))
+    topRanked(ranks, deg, topK)
+  }
+
+  /** The `topK` nodes by rank, ties by id: (part_key, deg, rank). */
+  private def topRanked(ranks: DataFrame, deg: DataFrame, topK: Int): DataFrame =
     ranks.join(deg, ranks("node") === deg("src"))
-      .select(col("node").as("part_key"), col("deg"), col("rank"))
+      .select(col("node").as("part_key"), col(deg.columns(1)), col("rank"))
       .orderBy(col("rank").desc, col("part_key"))
       .limit(topK)
-  }
+
+  /** The hub seed (highest degree, lowest id): one driver-side row. */
+  private def hub(deg: DataFrame): Option[Long] =
+    deg.orderBy(col(deg.columns(1)).desc, col("src")).limit(1)
+      .collect().headOption.map(_.getLong(0))
 
   /** One PageRank round. `broadcastRanks` (the default, correct while
     * the node set is dimension-sized — here it's parts) pins the
@@ -121,15 +140,17 @@ object Graph {
     * (dst, contrib) longs shuffle, with map-side partial sums
     * (PlanShapeSpec locks this). On a billion-node graph pass false:
     * the shuffle join co-locates if the edge table is bucketed by src
-    * (the deployment note above). Package-visible for the plan lock.
+    * (the deployment note above). `share` is the mass each edge carries
+    * before damping: g1 splits a rank equally over the degree, g9 by
+    * weight (`(rank * w) div wdeg`). Package-visible for the plan lock.
     */
   private[graft] def pagerankRound(ranks: DataFrame, edgesDeg: DataFrame,
-      broadcastRanks: Boolean = true): DataFrame =
+      broadcastRanks: Boolean = true, share: String = "rank div deg"): DataFrame =
     (if (broadcastRanks) broadcast(ranks) else ranks)
       .join(edgesDeg, col("node") === edgesDeg("src"))
       .groupBy(col("dst"))
       .agg((lit(Teleport) +
-        sum(expr(s"($Damping * (rank div deg)) div 100"))).as("rank"))
+        sum(expr(s"($Damping * ($share)) div 100"))).as("rank"))
       .select(col("dst").as("node"), col("rank"))
 
   /** Weighted undirected co-purchase edges: one row per unordered part
@@ -162,42 +183,14 @@ object Graph {
     */
   def weightedPagerankFromEdges(wund: DataFrame, iters: Int, topK: Int,
       broadcastRanks: Boolean = true): DataFrame = {
-    val edges = wund.select(col("src"), col("dst"), col("w"))
-      .union(wund.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .localCheckpoint(eager = true)
-    val wdeg = edges.groupBy("src").agg(sum(col("w")).as("wdeg"))
-      .localCheckpoint(eager = true)
-    // wdeg pinned broadcast under the same flag as the loop's ranks
-    // (g1's attach pin — see pagerankFromEdges)
-    val edgesW = edges
-      .join(if (broadcastRanks) broadcast(wdeg) else wdeg, "src")
-      .localCheckpoint(eager = true)
-    weightedPagerankCore(wdeg, edgesW, iters, topK, broadcastRanks)
+    val (wdeg, edgesW) =
+      closureWithDegree(wund, sum(col("w")).as("wdeg"), broadcastRanks, "w")
+    pagerankCore("weighted_pagerank", wdeg, edgesW, iters, topK, broadcastRanks,
+      WeightedShare)
   }
 
-  /** The g9 loop over pre-built (wdeg, edgesW) frames — shared with the
-    * bucketed-store path like [[pagerankCore]].
-    */
-  private def weightedPagerankCore(wdeg: DataFrame, edgesW: DataFrame,
-      iters: Int, topK: Int, broadcastRanks: Boolean): DataFrame = {
-    var ranks = wdeg.select(col("src").as("node"), lit(Rank0).as("rank"))
-    var i = 0
-    while (i < iters) {
-      // reframed: per-round stats reset ([[graft.operators.reframed]])
-      ranks = reframed((if (broadcastRanks) broadcast(ranks) else ranks)
-        .join(edgesW, col("node") === edgesW("src"))
-        .groupBy(col("dst"))
-        .agg((lit(Teleport) +
-          sum(expr(s"($Damping * ((rank * w) div wdeg)) div 100"))).as("rank"))
-        .select(col("dst").as("node"), col("rank"))
-        .localCheckpoint(eager = true))
-      i += 1
-    }
-    ranks.join(wdeg, ranks("node") === wdeg("src"))
-      .select(col("node").as("part_key"), col("wdeg"), col("rank"))
-      .orderBy(col("rank").desc, col("part_key"))
-      .limit(topK)
-  }
+  /** g9's per-edge share of a rank (g1's is `rank div deg`). */
+  private val WeightedShare = "(rank * w) div wdeg"
 
   // ---------------------------------------------------------------------
   // Bucketed edge store — the billion-node deployment path. The
@@ -224,10 +217,9 @@ object Graph {
     val und = copurchaseEdges(t)
     val wund = weightedCopurchaseEdges(t)
     val spark = und.sparkSession
-    val edges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
+    val edges = bothWays(und)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val wedges = wund.select(col("src"), col("dst"), col("w"))
-      .union(wund.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+    val wedges = bothWays(wund, "w")
     val wdeg = wedges.groupBy("src").agg(sum(col("w")).as("wdeg"))
     Warehouse.build(Warehouse.tableStore(spark, store, Seq("edges", "wedges"))) { gen =>
       // independent frames — publish both tables concurrently
@@ -265,7 +257,8 @@ object Graph {
   def pagerankAgainstStore(spark: SparkSession, store: String = "graphedges",
       iters: Int = 5, topK: Int = 100): DataFrame = {
     val edgesDeg = storeTable(spark, store, "edges")
-    pagerankCore(storeDeg(edgesDeg, "deg"), edgesDeg, iters, topK, broadcastRanks = false)
+    pagerankCore("pagerank", storeDeg(edgesDeg, "deg"), edgesDeg, iters, topK,
+      broadcastRanks = false)
   }
 
   /** g9 against the persisted store ([[pagerankAgainstStore]]'s shape on
@@ -274,7 +267,8 @@ object Graph {
   def weightedPagerankAgainstStore(spark: SparkSession, store: String = "graphedges",
       iters: Int = 5, topK: Int = 100): DataFrame = {
     val edgesW = storeTable(spark, store, "wedges")
-    weightedPagerankCore(storeDeg(edgesW, "wdeg"), edgesW, iters, topK, broadcastRanks = false)
+    pagerankCore("weighted_pagerank", storeDeg(edgesW, "wdeg"), edgesW, iters, topK,
+      broadcastRanks = false, WeightedShare)
   }
 
   /** g5 against the persisted store — the frontier starts seed-only, so
@@ -302,14 +296,7 @@ object Graph {
 
   def personalizedFromEdges(und: DataFrame, iters: Int, topK: Int,
       broadcastRanks: Boolean = true): DataFrame = {
-    val edges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(eager = true)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = true)
-    // deg pinned broadcast under the loop's flag (g1's attach pin)
-    val edgesDeg = edges
-      .join(if (broadcastRanks) broadcast(deg) else deg, "src")
-      .localCheckpoint(eager = true)
+    val (deg, edgesDeg) = closureWithDegree(und, count(lit(1)).as("deg"), broadcastRanks)
     personalizedCore(deg, edgesDeg, iters, topK, broadcastRanks)
   }
 
@@ -319,31 +306,18 @@ object Graph {
   private def personalizedCore(deg: DataFrame, edgesDeg: DataFrame,
       iters: Int, topK: Int, broadcastRanks: Boolean): DataFrame = {
     val spark = deg.sparkSession
-    // the hub seed: one driver-side row, bounded by construction; an
-    // empty graph yields an empty result like pagerankFromEdges, not a
-    // crash
-    val seedOpt = deg.orderBy(col("deg").desc, col("src")).limit(1)
-      .collect().headOption.map(_.getLong(0))
-    seedOpt match {
+    // an empty graph yields an empty result like pagerankFromEdges, not
+    // a crash
+    hub(deg) match {
       case None =>
         spark.range(0).select(col("id").as("part_key"),
           col("id").as("deg"), col("id").as("rank"))
       case Some(seed) =>
         def seedRow(amount: Long): DataFrame =
           spark.range(1).select(lit(seed).as("node"), lit(amount).as("rank"))
-        var ranks = seedRow(Rank0)
-        var i = 0
-        while (i < iters) {
-          // reframed: per-round stats reset ([[graft.operators.reframed]])
-          ranks = reframed(pprRound(ranks, edgesDeg, seedRow(Teleport), broadcastRanks)
-            .localCheckpoint(eager = true))
-          i += 1
-        }
-        ranks.filter(col("rank") > 0)
-          .join(deg, ranks("node") === deg("src"))
-          .select(col("node").as("part_key"), col("deg"), col("rank"))
-          .orderBy(col("rank").desc, col("part_key"))
-          .limit(topK)
+        val (ranks, _, _) = Loop("personalized_pagerank", seedRow(Rank0), iters)(
+          pprRound(_, edgesDeg, seedRow(Teleport), broadcastRanks))
+        topRanked(ranks.filter(col("rank") > 0), deg, topK)
     }
   }
 
@@ -361,28 +335,19 @@ object Graph {
     hopDistanceFromEdges(copurchaseEdges(t), maxHops)
 
   def hopDistanceFromEdges(und: DataFrame, maxHops: Int): DataFrame = {
-    val edges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(eager = true)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = true)
+    val (edges, deg) = closureAndDegree(und, count(lit(1)).as("deg"))
     val spark = und.sparkSession
-    val seedOpt = deg.orderBy(col("deg").desc, col("src")).limit(1)
-      .collect().headOption.map(_.getLong(0))
-    seedOpt match {
+    hub(deg) match {
       case None =>
         spark.range(0).select(col("id").as("node"), col("id").as("hops"))
       case Some(seed) =>
-        var dist = spark.range(1).select(lit(seed).as("node"), lit(0L).as("hops"))
-        var i = 0
-        while (i < maxHops) {
+        val (dist, _, _) = Loop("hop_distance",
+          spark.range(1).select(lit(seed).as("node"), lit(0L).as("hops")), maxHops) { dist =>
           val relaxed = dist
             .join(edges, dist("node") === edges("src"))
             .select(col("dst").as("node"), (col("hops") + 1).as("hops"))
-          // reframed: per-round stats reset ([[graft.operators.reframed]])
-          dist = reframed(dist.unionByName(relaxed)
+          dist.unionByName(relaxed)
             .groupBy(col("node")).agg(min(col("hops")).as("hops"))
-            .localCheckpoint(eager = true))
-          i += 1
         }
         dist.orderBy(col("hops"), col("node"))
     }
@@ -412,21 +377,18 @@ object Graph {
     */
   def labelCommunitiesFromEdges(und: DataFrame, rounds: Int,
       broadcastLabels: Boolean = true): DataFrame = {
-    val edges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(eager = true)
-    var labels = edges.select(col("src").as("node")).distinct()
+    val edges = bothWays(und).localCheckpoint(eager = true)
+    val seeds = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint(eager = true)
-    var i = 0
-    while (i < rounds) {
-      // the label table is node-sized and the checkpointed loop inputs
-      // carry no stats: without the static broadcast pin the planner
-      // sort-merge-joins and shuffle-WRITES the edge side every round
-      // before AQE converts (g1's measured lesson — pagerankRound). On
-      // a billion-node graph pass broadcastLabels = false and bucket
-      // the edge table by dst.
-      // reframed: per-round stats reset ([[graft.operators.reframed]])
-      labels = reframed(edges.join(
+    // the label table is node-sized and the checkpointed loop inputs
+    // carry no stats: without the static broadcast pin the planner
+    // sort-merge-joins and shuffle-WRITES the edge side every round
+    // before AQE converts (g1's measured lesson — pagerankRound). On a
+    // billion-node graph pass broadcastLabels = false and bucket the
+    // edge table by dst.
+    val (labels, _, _) = Loop("label_communities", seeds, rounds) { labels =>
+      edges.join(
           if (broadcastLabels) broadcast(labels) else labels,
           edges("dst") === labels("node"))
         .groupBy(edges("src"), col("label"))
@@ -434,8 +396,6 @@ object Graph {
         .groupBy(col("src"))
         .agg(max_by(col("label"), struct(col("c"), (-col("label")).as("nl"))).as("label"))
         .select(col("src").as("node"), col("label"))
-        .localCheckpoint(eager = true))
-      i += 1
     }
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("community_size"))
     labels.join(sizes, Seq("label"))
@@ -517,7 +477,7 @@ object Graph {
 
   private[graft] def trianglesFromEdges(und: DataFrame,
       broadcastClosing: Boolean = true, knownEdges: Option[Long] = None): DataFrame = {
-    val sym = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = bothWays(und)
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("n"), col("deg"))
     // order endpoints by (degree, id): lo → hi (explicit lexicographic
@@ -683,7 +643,7 @@ object Graph {
       broadcastClosing: Boolean = true): DataFrame = {
     val tri = triangleCountsFromEdges(und, broadcastClosing)
       .select(col("part_key"), col("n_tri"))
-    val deg = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
+    val deg = bothWays(und)
       .groupBy(col("src")).agg(count(lit(1)).as("deg"))
     deg.filter(col("deg") >= 2)
       .join(tri, deg("src") === tri("part_key"), "left")
@@ -713,26 +673,13 @@ object Graph {
   /** g4 over any undirected edge list + node universe — exposed for
     * crafted-graph specs. `oracleRounds`: the gate's DuckDB oracle
     * replays a FIXED number of pointer-jumping generations; when set,
-    * the operator asserts it converged within that budget (the round
-    * count `clustersOfPairsCounted` exposes) instead of silently
-    * assuming it — on a pathological long-chain graph the fixed-budget
-    * oracle would otherwise report a spurious divergence.
+    * the operator asserts it converged within that budget
+    * ([[Dedup.clustersOfPairs]]).
     */
   def componentsFromEdges(und: DataFrame, nodes: DataFrame,
       oracleRounds: Option[Int] = None): DataFrame = {
-    val (clusters, rounds, converged) = Dedup.clustersOfPairsCounted(
-      und.select(col("src").as("doc_a"), col("dst").as("doc_b")))
-    // rounds includes the final no-change detection iteration (see
-    // Dedup.clustersOfPairs): budget-compare the converged-by round —
-    // valid only when the loop actually converged (maxIter exit while
-    // still productive would undercount by one and mask divergence)
-    oracleRounds.foreach(b => require(converged,
-      s"g4 propagation hit its round cap unconverged — the $b-generation " +
-        "oracle replay cannot match an unconverged labeling"))
-    oracleRounds.foreach(b => require(rounds - 1 <= b,
-      s"g4 propagation converged in ${rounds - 1} productive rounds > the " +
-        s"oracle's $b-generation replay budget — regenerate g4ComponentsSql " +
-        "with more iters"))
+    val clusters = Dedup.clustersOfPairs(
+      und.select(col("src").as("doc_a"), col("dst").as("doc_b")), oracleRounds = oracleRounds)
     val labeled = clusters
       .select(col("doc_id").as("node"), col("cluster_id").as("cid"))
     nodes

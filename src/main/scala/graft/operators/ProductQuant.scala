@@ -40,7 +40,7 @@ object ProductQuant {
   import Similarity.KmeansQuantScale
 
   /** (vec_id, sub, q): quantized subvectors, one row per subspace. */
-  private[operators] def subvectors(emb: DataFrame, m: Int, subDim: Int): DataFrame = {
+  private[graft] def subvectors(emb: DataFrame, m: Int, subDim: Int): DataFrame = {
     val subCols = (0 until m).map(s =>
       quantize_vec(slice(col("embedding"), s * subDim + 1, subDim), KmeansQuantScale)
         .cast("array<double>"))
@@ -68,21 +68,19 @@ object ProductQuant {
     * oracle-replayable (`WHERE vec_id < trainSize` in the SQL twin).
     * Returns (sub, cid, centroid: array<double> of exact integers).
     */
-  private[operators] def codebooks(sv: DataFrame, nlist: Int, iters: Int,
+  private[graft] def codebooks(sv: DataFrame, nlist: Int, iters: Int,
       trainSize: Long): DataFrame = {
     val tv = sv.filter(col("vec_id") < trainSize)
     val seeds = tv.filter(col("vec_id") < nlist)
       .select(col("sub"), col("vec_id").cast("int").as("cid"), col("q").as("centroid"),
         lit(1L).as("pop"))
-    var centroids = seeds
-    var i = 0
-    while (i < iters) {
-      // `pop` = the training members whose coordinates formed this sum —
-      // the divisor that turns the integer-sum centroid into a mean.
-      // Cosine consumers (assignment, the raw ADC) ignore it; the
-      // residual ADC divides by it so codes with different populations
-      // score on the same scale.
-      centroids = assignCodes(tv, centroids)
+    // `pop` = the training members whose coordinates formed this sum —
+    // the divisor that turns the integer-sum centroid into a mean.
+    // Cosine consumers (assignment, the raw ADC) ignore it; the
+    // residual ADC divides by it so codes with different populations
+    // score on the same scale.
+    Loop("codebooks", seeds, iters) { centroids =>
+      assignCodes(tv, centroids)
         .join(tv, Seq("vec_id", "sub"))
         .select(col("sub"), col("cid"), posexplode(col("q")))
         .groupBy(col("sub"), col("cid"), col("pos"))
@@ -91,10 +89,7 @@ object ProductQuant {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("sumv")))),
           s => s.getField("sumv")).as("centroid"),
           max(col("npos")).as("pop"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    centroids
+    }._1
   }
 
   /** Nearest codebook entry per (vec_id, sub): cosine argmax via map-side

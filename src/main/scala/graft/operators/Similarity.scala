@@ -101,24 +101,19 @@ object Similarity {
     val seeds = emb.filter(col("vec_id") < nlist)
       .select(col("vec_id").cast("int").as("cid"),
         quantize_vec(col("embedding"), KmeansQuantScale).cast("array<double>").as("centroid"))
-    var centroids = seeds
-    var i = 0
-    while (i < iters) {
-      // per-dimension sum via posexplode + partial-agg: (cid, dim) keyed
-      // shuffle of scalars — never a row holding a whole cluster's
-      // vectors (a collect_list there blows a single row past executor
-      // memory at corpus scale). Reassembly is nlist×dim tiny structs.
-      centroids = assignNearest(emb, centroids)
+    // per-dimension sum via posexplode + partial-agg: (cid, dim) keyed
+    // shuffle of scalars — never a row holding a whole cluster's
+    // vectors (a collect_list there blows a single row past executor
+    // memory at corpus scale). Reassembly is nlist×dim tiny structs.
+    Loop("kmeans", seeds, iters) { centroids =>
+      assignNearest(emb, centroids)
         .select(col("cid"), posexplode(quantize_vec(col("embedding"), KmeansQuantScale)))
         .groupBy(col("cid"), col("pos"))
         .agg(sum(col("col")).as("sumv"))
         .groupBy(col("cid"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("sumv")))),
           s => s.getField("sumv").cast("double")).as("centroid"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    centroids
+    }._1
   }
 
   /** s2: IVF probe. Multi-iteration k-means over `nlist` deterministic

@@ -26,22 +26,20 @@ package object operators {
   }
 
   /** Rebuild a (checkpointed) frame over its own RDD, dropping the
-    * producing plan's INHERITED `sizeInBytes` estimate — the shared fix
-    * for the iterative-loop stats blowup (diagnosed r15 in the d6
-    * min-label engine): a `localCheckpoint` keeps its producer's
-    * estimated stats, each round's joins MULTIPLY those BigInts, and
-    * the estimate's digit count roughly triples per round — by round
-    * ~20 the driver sits in million-digit `BigInteger.multiply` inside
-    * the stats visitor (measured 0.25 s → 200 s per round; jstack
-    * pinned Toom-Cook multiplication). Re-framing over the checkpointed
-    * RDD resets every round to flat default stats; the extra row
-    * conversion is a few longs per node per round — noise next to the
-    * round's own shuffles — and AQE still sizes joins from RUNTIME
-    * shuffle stats, so no planning quality is lost. Every iterative
-    * loop whose round output feeds the next round's join must pass its
-    * per-round frame through this (the g-family loops take
-    * caller-settable `iters`, so "only runs 4 rounds today" is not a
-    * defense); IterativeStatsSpec pins the invariant.
+    * producing plan's INHERITED `sizeInBytes` estimate — the fix for the
+    * iterative-loop stats blowup (diagnosed r15 in the d6 min-label
+    * engine): a `localCheckpoint` keeps its producer's estimated stats,
+    * each round's joins MULTIPLY those BigInts, and the estimate's digit
+    * count roughly triples per round — by round ~20 the driver sits in
+    * million-digit `BigInteger.multiply` inside the stats visitor
+    * (measured 0.25 s → 200 s per round; jstack pinned Toom-Cook
+    * multiplication). Re-framing over the checkpointed RDD resets every
+    * round to flat default stats; the extra row conversion is a few
+    * longs per node per round — noise next to the round's own shuffles —
+    * and AQE still sizes joins from RUNTIME shuffle stats, so no
+    * planning quality is lost. Only [[Loop]] calls it, once per round,
+    * so every loop keeps the invariant whatever its caller-settable
+    * round count; IterativeStatsSpec pins it.
     */
   private[graft] def reframed(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)

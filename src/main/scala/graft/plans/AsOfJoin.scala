@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
-import org.apache.spark.sql.classic.GraftInterop
+import org.apache.spark.sql.GraftSparkInterop
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
 
@@ -199,8 +199,8 @@ object AsOfJoinPlans {
     val spark = left.sparkSession
     ensureRegistered(spark)
     val renamed = right.toDF(right.columns.map(rightPrefix + _).toIndexedSeq: _*)
-    val lPlan = GraftInterop.analyzed(left)
-    val rPlan = GraftInterop.analyzed(renamed)
+    val lPlan = GraftSparkInterop.analyzed(left)
+    val rPlan = GraftSparkInterop.analyzed(renamed)
     def attr(plan: LogicalPlan, name: String): Attribute =
       plan.output.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"column $name not in ${plan.output.map(_.name)}"))
@@ -218,6 +218,6 @@ object AsOfJoinPlans {
     require(lTime.dataType == rTime.dataType,
       s"as-of join time type mismatch: ${lTime.dataType.catalogString} vs ${rTime.dataType.catalogString}")
     val node = AsOfJoin(lPlan, rPlan, lKeys, rKeys, lTime, rTime, strict)
-    GraftInterop.ofRows(spark, node)
+    GraftSparkInterop.ofRows(spark, node)
   }
 }

@@ -56,7 +56,7 @@ class ApproxTopKSpec extends SparkSpecBase {
 
   test("serialize/deserialize round-trips the sketch") {
     val agg = graft.functions.ApproxTopKTokens(
-      org.apache.spark.sql.classic.GraftInterop.expression(lit(Array("x"))), 5, 16)
+      org.apache.spark.sql.GraftSparkInterop.expression(lit(Array("x"))), 5, 16)
     val sk = new SpaceSavingSketch(16)
     Seq("a", "a", "b", "c").foreach(sk.add(_))
     val back = agg.deserialize(agg.serialize(sk))

@@ -58,7 +58,11 @@ class FanOutSpec extends SparkSpecBase {
   }
 
   /** The main sources whose code, comments stripped, contains `token`. */
-  private def mainSourcesUsing(token: String): Seq[java.nio.file.Path] = {
+  private def mainSourcesUsing(token: String): Seq[java.nio.file.Path] =
+    mainSourcesMatching(java.util.regex.Pattern.quote(token))
+
+  /** The main sources whose code, comments stripped, matches `regex`. */
+  private def mainSourcesMatching(regex: String): Seq[java.nio.file.Path] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = {
       val s = java.nio.file.Files.walk(root)
@@ -70,7 +74,7 @@ class FanOutSpec extends SparkSpecBase {
     val lineComment = "//[^\n]*".r
     files.filter { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      lineComment.replaceAllIn(blockComment.replaceAllIn(src, ""), "").contains(token)
+      regex.r.findFirstIn(lineComment.replaceAllIn(blockComment.replaceAllIn(src, ""), "")).isDefined
     }
   }
 
@@ -86,5 +90,21 @@ class FanOutSpec extends SparkSpecBase {
     val offenders = mainSourcesUsing("DESCRIBE EXTENDED")
     assert(offenders.isEmpty,
       s"read spark.sessionState.catalog instead of DESCRIBE EXTENDED in: ${offenders.mkString(", ")}")
+  }
+
+  test("no main source sets or unsets a session conf") {
+    // work that needs another conf runs in GraftSession.scoped's child,
+    // whose conf is written once at creation; flipping a live session's
+    // conf leaks into every query the session runs concurrently
+    val offenders = mainSourcesMatching("""conf\.(set|unset)\(""")
+    assert(offenders.isEmpty,
+      s"plan under GraftSession.scoped instead of conf.set/unset in: ${offenders.mkString(", ")}")
+  }
+
+  test("only the iteration engine re-frames a loop's round") {
+    val offenders = mainSourcesMatching("""(?<!def )reframed\(""")
+      .filterNot(_.endsWith("graft/operators/Loop.scala"))
+    assert(offenders.isEmpty,
+      s"run the loop through graft.operators.Loop instead of calling reframed in: ${offenders.mkString(", ")}")
   }
 }

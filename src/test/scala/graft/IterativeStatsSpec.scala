@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * `sizeInBytes` estimate into the next round. The r15 diagnosis (d6's
   * min-label engine): the estimate's digit count roughly triples per
   * round, and by round ~20 the driver stalls in million-digit BigInt
-  * multiplication inside the stats visitor. The fix is now a shared
-  * helper applied to EVERY iterative loop; this spec pins both the
-  * helper's effect and a 30-round loop's health — `iters` is
+  * multiplication inside the stats visitor. The fix is a shared helper
+  * the iteration engine ([[graft.operators.Loop]]) applies to every
+  * round; this spec pins the helper's effect, a 30-round loop's health
+  * and the training loops' outputs at 10 iterations — `iters` is
   * caller-settable, so "the default only runs 5 rounds" is no defense.
   */
 class IterativeStatsSpec extends SparkSpecBase {
@@ -56,5 +57,22 @@ class IterativeStatsSpec extends SparkSpecBase {
     // generous wall bound: the failure mode is minutes-per-round BigInt
     // planning, not a slow shuffle — this is a 60-node graph
     assert(secs < 180.0, f"30 rounds took $secs%.1f s — per-round cost is compounding")
+  }
+
+  /** The corpus embeddings the IVF and PQ training loops read. */
+  private def embeddings = graft.sources.Tables(spark, sfDir).embeddings
+    .select(col("vec_id"), col("embedding"))
+
+  test("k-means training at 10 iterations returns centroids with flat stats") {
+    val centroids = graft.operators.Similarity.kmeansCentroids(embeddings, nlist = 16, iters = 10)
+    assert(statsDigits(centroids) <= 20,
+      s"the centroid frame's estimate must not compound per round, got ${statsDigits(centroids)} digits")
+  }
+
+  test("PQ codebook training at 10 iterations returns codebooks with flat stats") {
+    val sv = graft.operators.ProductQuant.subvectors(embeddings, m = 4, subDim = 16)
+    val books = graft.operators.ProductQuant.codebooks(sv, nlist = 16, iters = 10, trainSize = 1024L)
+    assert(statsDigits(books) <= 20,
+      s"the codebook frame's estimate must not compound per round, got ${statsDigits(books)} digits")
   }
 }

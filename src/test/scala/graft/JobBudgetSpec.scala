@@ -13,12 +13,16 @@ import graft.sources.Tables
   */
 class JobBudgetSpec extends SparkSpecBase {
 
-  /** The jobs `body` launches, counted under a fresh phase path. */
+  /** The jobs `body` launches, counted under a fresh phase path and
+    * the engine phases nested in it.
+    */
   private def jobsOf(path: String)(body: => Unit): Long = {
     val r = Phase.record(spark)
     try {
       Phase(path)(body)
-      r.snapshot().get(path).fold(0L)(_.jobs)
+      r.snapshot().collect {
+        case (p, s) if p == path || p.startsWith(s"$path/") => s.jobs
+      }.sum
     } finally r.close()
   }
 
@@ -49,5 +53,35 @@ class JobBudgetSpec extends SparkSpecBase {
     // measured: 9 jobs, all of them the two loads' merge checkpoints and
     // data writes; the sync log and the row counts add none
     assert(jobs <= 9L, s"run + backfill launched $jobs jobs, budget 9")
+  }
+
+  test("one partitioned publish stays within its job budget") {
+    import spark.implicits._
+    val target = Files.createTempDirectory("graft_part_").toString + "/t"
+    val initial = (0 until 40).map(i => (i.toLong, i % 4, 1L, s"v$i"))
+      .toDF("id", "day", "ver", "payload")
+    Pipeline.mergeIntoPartitioned(spark, target, initial, Seq("id"), Some("ver"), "day")
+    val fresh = (30 until 50).map(i => (i.toLong, i % 4, 2L, s"w$i"))
+      .toDF("id", "day", "ver", "payload")
+    var rows = 0L
+    val jobs = jobsOf("budget.partitioned") {
+      rows = Pipeline.mergeIntoPartitioned(spark, target, fresh, Seq("id"), Some("ver"), "day")
+    }
+    assert(rows == 50L, "the publish reports the touched partitions' merged rows")
+    // 8 when the row count was a count() after the checkpoint; the
+    // checkpoint's Observation now supplies it
+    assert(jobs <= 7L, s"one partitioned publish launched $jobs jobs, budget 7")
+  }
+
+  test("a 99-hop propagation stays within its job budget") {
+    import spark.implicits._
+    val pairs = (0L until 99L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    var rounds = 0
+    val jobs = jobsOf("budget.propagation") {
+      rounds = graft.operators.Dedup.clustersOfPairsCounted(pairs)._2
+    }
+    assert(rounds == 9, s"the path closes in 9 rounds, got $rounds")
+    // measured: 5 setup jobs plus 19 over the 9 rounds
+    assert(jobs <= 24L, s"the 99-hop propagation launched $jobs jobs, budget 24")
   }
 }

@@ -2,7 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import graft.operators.Dedup
+import org.apache.spark.sql.functions._
+
+import graft.operators.{Bpe, Dedup, Graph, ProductQuant, Similarity}
 import graft.sources.Warehouse
 
 /** The measurement instrument ([[Phase]]): scopes label jobs with a
@@ -84,6 +86,30 @@ class PhaseSpec extends SparkSpecBase {
     assert(stats("path99/propagation.round").jobs >= rounds, "every round runs a job")
     assert(stats("path99/propagation.setup").instances == 1)
     assert(stats("path99/propagation.setup").jobs >= 1)
+  }
+
+  test("every Loop caller records one <name>.round instance per round; BPE keeps bpe.round") {
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (4L, 6L))
+      .toDF("src", "dst")
+    val t = sources.Tables(spark, sfDir)
+    val emb = t.embeddings.select(col("vec_id"), col("embedding"))
+    val loops: Seq[(String, Int, () => Any)] = Seq(
+      ("pagerank", 5, () => Graph.pagerankFromEdges(und, iters = 5, topK = 3).collect()),
+      ("weighted_pagerank", 3, () => Graph.weightedPagerankFromEdges(
+        und.withColumn("w", lit(2L)), iters = 3, topK = 3).collect()),
+      ("personalized_pagerank", 4, () => Graph.personalizedFromEdges(und, iters = 4, topK = 3).collect()),
+      ("hop_distance", 6, () => Graph.hopDistanceFromEdges(und, maxHops = 6).collect()),
+      ("label_communities", 4, () => Graph.labelCommunitiesFromEdges(und, rounds = 4).collect()),
+      ("kmeans", 2, () => Similarity.kmeansCentroids(emb, nlist = 8, iters = 2).collect()),
+      ("codebooks", 2, () => ProductQuant.codebooks(ProductQuant.subvectors(emb, 4, 16),
+        nlist = 8, iters = 2, trainSize = 256L).collect()),
+      ("bpe", 3, () => Bpe.train(t, 3)._2.unpersist()))
+    for ((name, rounds, run) <- loops) {
+      val stats = recorded(Phase("caller")(run(): Unit))
+      val round = stats.get(s"caller/$name.round")
+      assert(round.exists(_.instances == rounds), s"$name: $rounds round instances, got $round")
+      assert(round.exists(_.jobs >= rounds), s"$name: every round runs a job, got $round")
+    }
   }
 
   test("a table store's build, append and fold each record one instance of their phase with jobs") {

@@ -1,9 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Join, Repartition, RepartitionByExpression}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, SparkPlanInfo}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.operators.{Curation, Dedup, Graph, Multimodal, Relational, Similarity, TextAnalysis}
 import graft.sources.Tables
@@ -341,7 +345,7 @@ class PlanShapeSpec extends SparkSpecBase {
       // bridge; the old reflective lookup skipped the drain silently on
       // a method-name miss), then confirm the count is quiescent so a
       // late-reported stage job can't slip past the assertion
-      org.apache.spark.GraftSparkInterop.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.GraftSparkInterop.drainListenerBus(spark.sparkContext)
       var last = -1; var stable = 0
       while (stable < 3) {
         Thread.sleep(200)
@@ -403,6 +407,75 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(inputs.nonEmpty, s"expected the (dst) aggregation exchange:\n$explain")
     assert(inputs.forall(i => !i.contains("src")),
       s"an exchange carries edge rows (src column) — edges must never shuffle in a round:\n$explain")
+  }
+
+  /** The physical plans of the SQL executions `body` starts under a
+    * phase path ending in `phase`, read off the context's listener bus:
+    * a SparkContext listener sees the queries of every session, a child
+    * session's included, where a session's QueryExecutionListener would
+    * miss them.
+    */
+  private def startedPlans(phase: String)(body: => Unit): Seq[SparkPlanInfo] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlanInfo)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => seen.add(s.description -> s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try graft.Phase("plan_lock")(body)
+    finally {
+      org.apache.spark.sql.GraftSparkInterop.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq.collect { case (d, p) if d.endsWith(phase) => p }
+  }
+
+  private def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+
+  /** A 99-hop path pair graph whose ESTIMATED size is far past the
+    * broadcast threshold, as candidate pairs out of LSH joins are at
+    * bench scale: the 1:1 self-joins keep the rows and multiply the
+    * estimate, so the neighbor join sort-merges instead of broadcasting
+    * the tiny edge list.
+    */
+  private def inflatedPath99: DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val path = (0L until 99L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    (1 to 4).foldLeft(path) { (df, i) =>
+      df.join(path.select(col("doc_a"), col("doc_b").as(s"b$i")), "doc_a")
+        .select(col("doc_a"), col("doc_b"))
+    }
+  }
+
+  test("propagation round, latency-bound: the checkpointed edge scan feeds its join with no exchange and no sort") {
+    val pairs = inflatedPath99
+    val rounds = startedPlans("propagation.round")(Dedup.clustersOfPairsCounted(pairs): Unit)
+      .filter(nodes(_).exists(_.nodeName.endsWith("Join")))
+    assert(rounds.nonEmpty, "every round plans its joins under propagation.round")
+    def isEdgeScan(n: SparkPlanInfo): Boolean =
+      n.simpleString.replaceAll("#\\d+L?", "") == "Scan ExistingRDD[doc_a,doc_b]"
+    // the nodes from `n` down to the edge scan, when n's subtree holds it
+    def pathToEdges(n: SparkPlanInfo): Option[Seq[SparkPlanInfo]] =
+      if (isEdgeScan(n)) Some(Seq(n))
+      else n.children.iterator.flatMap(pathToEdges).nextOption().map(n +: _)
+    for (round <- rounds) {
+      assert(!nodes(round).exists(_.nodeName == "AdaptiveSparkPlan"),
+        "latency-bound rounds plan statically while the caller's session keeps AQE on")
+      val feeds = for {
+        join <- nodes(round) if join.nodeName.endsWith("Join")
+        child <- join.children
+        path <- pathToEdges(child)
+      } yield join.nodeName -> path
+      assert(feeds.nonEmpty && feeds.forall(_._1 == "SortMergeJoin"),
+        s"the edge scan feeds a sort-merge join: ${feeds.map(_._1)}")
+      for ((_, path) <- feeds) assert(
+        !path.exists(n => n.nodeName.contains("Exchange") || n.nodeName == "Sort"),
+        s"the edge side re-exchanged or re-sorted: ${path.map(_.simpleString).mkString(" <- ")}")
+    }
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 
   test("q36 cube: the 4-way Expand runs over finest-grain partials, never raw lineitem") {

@@ -1415,7 +1415,7 @@ class WarehouseSpec extends SparkSpecBase {
         }.count(): Unit
       })))
     finally {
-      org.apache.spark.GraftSparkInterop.drainListenerBus(sc)
+      org.apache.spark.sql.GraftSparkInterop.drainListenerBus(sc)
       sc.removeSparkListener(listener)
     }
     assert((System.nanoTime() - t0) / 1e9 < 45, "the sibling did not run to its deadline")
