@@ -147,10 +147,9 @@ object SparkEntry {
       val half = t.documents.filter(col("doc_id") < 250)
       Dedup.buildSignatureStore(half, "d19_sigs")
       Dedup.buildClusterStoreFromSignatureStore(s, "d19_sigs", "d19_clusters")
-      // threshold passed EXPLICITLY (the build call's 0.5 default): at
-      // scale factors where the corpus half yields zero pairs the labels
-      // table is EMPTY and the 0.0 DERIVE sentinel refuses by design —
-      // the maintain must continue the build's clustering definition
+      // threshold passed EXPLICITLY (the build call's 0.5 default): it
+      // validates against the store's recorded build threshold — the
+      // maintain must continue the build's clustering definition
       Dedup.maintainClustersAgainstStore("d19_clusters", "d19_sigs",
         t.documents.filter(col("doc_id") >= 250), threshold = 0.5,
         oracleRounds = Some(OracleReplicas.PointerJumpIters))

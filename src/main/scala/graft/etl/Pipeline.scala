@@ -294,20 +294,25 @@ object Freshness {
   * trims itself like a store's generation chain (16 versions, a
   * one-minute floor). A parquet `sync_log` pile written by earlier
   * versions is imported once, as the first version, and is never read
-  * or written again. `clock` is injectable for deterministic specs.
+  * or written again; the trim that retires that version deletes the
+  * pile and its `sync_log_ids` reservations. `clock` is injectable for
+  * deterministic specs.
   */
 final class MetadataStore(spark: SparkSession, root: String,
     clock: () => Long = () => System.currentTimeMillis() / 1000,
     io: graft.sources.StoreIO = graft.sources.PosixStoreIO) {
   import MetadataStore._
 
+  /** The earlier versions' parquet pile and its id reservations. */
+  private val legacyDirs = Seq("sync_log", "sync_log_ids").map(d => Paths.get(root, d))
+
   private lazy val log = {
     val l = new graft.sources.CommitLog[Vector[LogRow]](s"$root/sync_log_v", io, encode, decode)
-    val legacy = s"$root/sync_log"
     // the transition runs only on an empty log, so of two processes
     // opening it at once exactly one imports
-    if (Files.exists(Paths.get(legacy)))
-      l.commit("sync-log import")(cur => if (cur.isEmpty) Some(readLegacy(legacy)) else None)
+    if (Files.exists(legacyDirs.head))
+      l.commit("sync-log import")(cur =>
+        if (cur.isEmpty) Some(readLegacy(legacyDirs.head.toString)) else None)
     l
   }
 
@@ -340,6 +345,10 @@ final class MetadataStore(spark: SparkSession, root: String,
     val now = System.currentTimeMillis()
     log.trim(16, now - 60_000L)
     log.sweepTmp(now)
+    // the pile's import is version 0: once a trim has retired it, the log
+    // is long non-empty, so no opener imports again and the pile goes
+    if (legacyDirs.exists(Files.exists(_)) && log.committedAt(0L).isEmpty)
+      legacyDirs.foreach(d => graft.sources.HadoopFs.deleteRecursive(d.toString))
     id
   }
 

@@ -267,7 +267,7 @@ object Bpe {
     // if a rebuild publishes mid-plan
     val gen = Warehouse.resolveGeneration(spark, name)
     val dict = Warehouse.table(spark, Warehouse.storeTableName(name, gen, "dict"))
-    val storeBuckets = Warehouse.storedBuckets(spark, name, gen, "dict", buckets)
+    val storeBuckets = Warehouse.storeLayout(spark, "BPE dict", name, gen, "dict", buckets).buckets
     val merges = Warehouse.table(spark, Warehouse.storeTableName(name, gen, "merges"))
       .orderBy(col("step")).collect() // ≤ numMerges rows — bounded
     // probe keys carry a distinct name so the plan (and its spec) can

@@ -153,6 +153,11 @@ object Dedup {
     * probing the store is bit-equivalent to recomputing — spec-verified
     * against [[minhashIncremental]].
     *
+    * The signature length and band count are the store's layout record
+    * (`numHashes`, `bands` — [[Warehouse.writeBucketed]]'s catalog
+    * properties, beside the bucket spec): appends, folds and probes read
+    * them back instead of trusting a caller-repeated parameter.
+    *
     * GENERATIONS: each build writes fresh `<name>__g<N>_{sigs,bands}`
     * tables and atomically publishes N only when both are complete
     * ([[Warehouse.build]]) —
@@ -164,8 +169,10 @@ object Dedup {
   def buildSignatureStore(docs: DataFrame, name: String, numHashes: Int = 64,
       bands: Int = 16, buckets: Int = 0,
       maxBandBucket: Option[Long] = Some(QuadraticGuardDefault)): Unit = {
+    val layout = Warehouse.Layout(buckets,
+      Map("numHashes" -> numHashes.toString, "bands" -> bands.toString))
     Warehouse.build(signatureStore(docs.sparkSession, name)) { gen =>
-      writeSignatureGeneration(docs, name, gen, numHashes, bands, buckets, maxBandBucket)
+      writeSignatureGeneration(docs, name, gen, layout, maxBandBucket)
     }: Unit
   }
 
@@ -188,11 +195,8 @@ object Dedup {
     * cleanup unpublishes.
     */
   private def writeSignatureGeneration(docs: DataFrame, name: String, gen: Long,
-      numHashes: Int, bands: Int, buckets: Int,
-      maxBandBucket: Option[Long]): Unit = {
+      layout: Warehouse.Layout, maxBandBucket: Option[Long]): Unit = {
     val spark = docs.sparkSession
-    val sigsT = Warehouse.storeTableName(name, gen, "sigs")
-    val bandsT = Warehouse.storeTableName(name, gen, "bands")
     // hash the batch text ONCE into an eager checkpoint, then publish
     // the sigs table and the band index from the same frame
     // CONCURRENTLY (guide §2.6): both write jobs are mostly fixed cost
@@ -204,13 +208,31 @@ object Dedup {
     val hashed = spreadIfNarrow(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
       .filter(size(col("tokens")) > 1)
-      .select(col("doc_id"), shingle_minhash(col("tokens"), 2, numHashes, 42L).as("sig"))
+      .select(col("doc_id"),
+        shingle_minhash(col("tokens"), 2, layout.int("numHashes"), 42L).as("sig"))
       .localCheckpoint(true)
-    val banded = hashed.select(col("doc_id"), posexplode(sig_bands(col("sig"), bands)))
+    writeSignatureTables(spark, name, gen, layout, hashed, bandsOf(hashed, layout),
+      maxBandBucket)
+  }
+
+  /** The band index of (doc_id, sig) rows under `layout`'s band count,
+    * in the build's (band_idx, band_hash, doc_id) column order.
+    */
+  private def bandsOf(sigs: DataFrame, layout: Warehouse.Layout): DataFrame =
+    sigs.select(col("doc_id"), posexplode(sig_bands(col("sig"), layout.int("bands"))))
       .select(col("pos").as("band_idx"), col("col").as("band_hash"), col("doc_id"))
+
+  /** Publish one generation's sigs and band index CONCURRENTLY under
+    * `layout` (both frames must depend only on inputs that exist before
+    * either write), then run the quadratic guard over the band index.
+    */
+  private def writeSignatureTables(spark: SparkSession, name: String, gen: Long,
+      layout: Warehouse.Layout, sigs: DataFrame, bands: DataFrame,
+      maxBandBucket: Option[Long]): Unit = {
+    val bandsT = Warehouse.storeTableName(name, gen, "bands")
     Warehouse.writeBucketedConcurrently(Seq(
-      (hashed, sigsT, "doc_id", buckets),
-      (banded, bandsT, "band_hash", buckets)))
+      (sigs, Warehouse.storeTableName(name, gen, "sigs"), "doc_id"),
+      (bands, bandsT, "band_hash")), layout.buckets, layout.constants)
     checkBandBuckets(spark, name, bandsT, maxBandBucket)
   }
 
@@ -233,31 +255,10 @@ object Dedup {
       }
     }
 
-  /** The signature-store layout constants, derived FROM THE STORE's
-    * base generation (signature length from the stored array, band
-    * count from the band index, bucket count from catalog metadata) —
-    * appenders and folds must match the base exactly or co-partitioned
-    * probing and the probe threshold silently break, so a
-    * caller-repeated parameter is never trusted and unreadable metadata
-    * fails loudly.
-    */
-  private def signatureLayoutOf(spark: SparkSession, name: String,
-      base: Long): (Int, Int, Int) = {
-    val sigsT = Warehouse.storeTableName(name, base, "sigs")
-    val bandsT = Warehouse.storeTableName(name, base, "bands")
-    val numHashes = Warehouse.table(spark, sigsT)
-      .select(size(col("sig")).as("n")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(throw new IllegalStateException(
-        s"signature store '$name' base generation $base has an empty sigs table — " +
-          "cannot derive the signature length; rebuild the base"))
-    val bands = Warehouse.table(spark, bandsT)
-      .agg((max(col("band_idx")) + 1).cast("int").as("b")).collect()
-      .headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
-      .getOrElse(throw new IllegalStateException(
-        s"signature store '$name' base generation $base has an empty band index — " +
-          "cannot derive the band count; rebuild the base"))
-    (numHashes, bands, Warehouse.storedBuckets(spark, name, base, "bands", 0))
-  }
+  /** The signature store's layout: its base generation's record. */
+  private def signatureLayout(spark: SparkSession, name: String, base: Long,
+      values: Seq[Warehouse.Given] = Nil, buckets: Int = 0): Warehouse.Layout =
+    Warehouse.storeLayout(spark, "signature", name, base, "bands", buckets, values)
 
   /** Segment-append for the SIGNATURE store — the t23/s11 incremental
     * model at the dedup layer: a batch of NEW documents lands as a
@@ -277,13 +278,11 @@ object Dedup {
       dedupeTag: Option[String] = None,
       maxBandBucket: Option[Long] = Some(QuadraticGuardDefault)): Option[Long] = {
     val spark = docs.sparkSession
-    Warehouse.appendSegmentWith[(Int, Int, Int)](signatureStore(spark, name),
+    Warehouse.appendSegmentWith[Warehouse.Layout](signatureStore(spark, name),
       dedupeTag, docs.isEmpty,
-      prepare = base => signatureLayoutOf(spark, name, base),
-      writeData = (gen, layout) => {
-        val (numHashes, bands, buckets) = layout
-        writeSignatureGeneration(docs, name, gen, numHashes, bands, buckets, maxBandBucket)
-      })
+      prepare = base => signatureLayout(spark, name, base),
+      writeData = (gen, layout) =>
+        writeSignatureGeneration(docs, name, gen, layout, maxBandBucket))
   }
 
   /** COMPACT the segmented signature store (optionally absorbing one
@@ -292,7 +291,7 @@ object Dedup {
     * union the batch's freshly-hashed signatures (doc_id-deduped, so an
     * at-least-once replay is idempotent), and the band index derives
     * from reading the new sigs table back. Every layout constant comes
-    * FROM THE STORE ([[signatureLayoutOf]]). Publishing the full build
+    * from the store's record ([[Warehouse.storeLayout]]). Publishing the full build
     * supersedes the folded segments ([[Warehouse.vacuumSegmentedStore]]
     * reclaims them age-gated) — the maintenance step that bounds the
     * per-probe segment count, exactly [[appendToSignatureStore]]'s
@@ -329,7 +328,8 @@ object Dedup {
         val fresh = spreadIfNarrow(batch.select(col("doc_id"), col("text")))
           .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
           .filter(size(col("tokens")) > 1)
-          .select(col("doc_id"), shingle_minhash(col("tokens"), 2, layout._1, 42L).as("sig"))
+          .select(col("doc_id"),
+            shingle_minhash(col("tokens"), 2, layout.int("numHashes"), 42L).as("sig"))
         oldSigs.unionByName(fresh).dropDuplicates("doc_id")
       },
       maxBandBucket, beforePublish)
@@ -371,13 +371,12 @@ object Dedup {
     * fold-vs-append note on [[growSignatureStore]]).
     */
   private def refoldSignatureStore(spark: SparkSession, name: String,
-      fold: (DataFrame, (Int, Int, Int)) => DataFrame,
+      fold: (DataFrame, Warehouse.Layout) => DataFrame,
       maxBandBucket: Option[Long], beforePublish: () => Unit,
       foldBands: Option[DataFrame => DataFrame] = None): Unit =
     Warehouse.fold(signatureStore(spark, name))(
-      prepare = (base, segs) => Some((base +: segs, signatureLayoutOf(spark, name, base))))(
+      prepare = (base, segs) => Some((base +: segs, signatureLayout(spark, name, base))))(
       write = { case (gen, (gens, layout)) =>
-        val (_, bands, buckets) = layout
         // generations union BY NAME: a band index written by an older
         // takedown fold carries (doc_id, band_idx, band_hash), and a
         // positional union with a segment's (band_idx, band_hash, doc_id)
@@ -385,7 +384,6 @@ object Dedup {
         def stored(sfx: String) = gens
           .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, sfx)))
           .reduce(_ unionByName _)
-        val bandsT = Warehouse.storeTableName(name, gen, "bands")
         // the band index: a fold that only FILTERS rows (takedown) passes
         // `foldBands` and the stored index is filtered the same way —
         // the stored bands derive row-for-row from the stored sigs, so
@@ -403,17 +401,11 @@ object Dedup {
           case Some(fb) => (fold(stored("sigs"), layout), fb(stored("bands")))
           case None =>
             val foldedSigs = fold(stored("sigs"), layout).localCheckpoint(true)
-            (foldedSigs,
-              foldedSigs.select(col("doc_id"), posexplode(sig_bands(col("sig"), bands)))
-                .select(col("pos").as("band_idx"), col("col").as("band_hash"),
-                  col("doc_id")))
+            (foldedSigs, bandsOf(foldedSigs, layout))
         }
-        Warehouse.writeBucketedConcurrently(Seq(
-          (sigsDf, Warehouse.storeTableName(name, gen, "sigs"), "doc_id", buckets),
-          (bandsDf, bandsT, "band_hash", buckets)))
         // the same quadratic guard as the full build — a batch can mint a
         // corpus-hot bucket too
-        checkBandBuckets(spark, name, bandsT, maxBandBucket)
+        writeSignatureTables(spark, name, gen, layout, sigsDf, bandsDf, maxBandBucket)
       },
       beforePublish)
 
@@ -424,8 +416,8 @@ object Dedup {
     * O(batch × collisions) plus a store read; the batch's own text is
     * hashed exactly once.
     *
-    * LAYOUT: the probe's numHashes/bands/buckets derive FROM THE STORE
-    * ([[signatureLayoutOf]] — pass 0, the default) exactly like the
+    * LAYOUT: the probe's numHashes/bands/buckets derive from the store's
+    * record ([[Warehouse.storeLayout]] — pass 0, the default) exactly like the
     * append and fold paths: a probe hashed with parameters that differ
     * from the store's build silently misses duplicates (band/bucket
     * mismatch, sig_agreement over different-length arrays). A nonzero
@@ -442,17 +434,12 @@ object Dedup {
     // ([[appendToSignatureStore]]; a no-append store reads exactly its
     // base as before)
     val (base, segs) = Warehouse.resolveSegmented(spark, name)
-    val (storeHashes, storeBands, storeBuckets) = signatureLayoutOf(spark, name, base)
-    Seq(("numHashes", numHashes, storeHashes), ("bands", bands, storeBands),
-      ("buckets", buckets, storeBuckets)).foreach { case (what, given, stored) =>
-      require(given == 0 || given == stored,
-        s"probe $what=$given differs from signature store '$name''s built " +
-          s"layout ($stored) — the probe would silently miss duplicates; " +
-          "pass 0 to derive the layout from the store")
-    }
-    probeSignatureStoreWithSigs(spark, name, base, segs,
-      (storeHashes, storeBands, storeBuckets),
-      hashedSigsOf(newDocs, storeHashes), threshold)
+    val miss = "the probe would silently miss duplicates"
+    val layout = signatureLayout(spark, name, base, Seq(
+      Warehouse.Given("numHashes", numHashes, miss),
+      Warehouse.Given("bands", bands, miss)), buckets)
+    probeSignatureStoreWithSigs(spark, name, base, segs, layout,
+      hashedSigsOf(newDocs, layout.int("numHashes")), threshold)
       .orderBy(col("new_id"), col("dup_of"))
   }
 
@@ -464,16 +451,16 @@ object Dedup {
     * its presentation sort.
     */
   private def probeSignatureStoreWithSigs(spark: SparkSession, name: String,
-      base: Long, segs: Seq[Long], layout: (Int, Int, Int),
+      base: Long, segs: Seq[Long], layout: Warehouse.Layout,
       sigs: DataFrame, threshold: Double): DataFrame = {
-    val (nh, bnds, bkts) = layout
     val gens = base +: segs
     val freshSigs = sigs.select(col("doc_id").as("new_id"), col("sig").as("sig_a"))
     // fresh band keys carry distinct names so the plan (and its spec)
     // can tell the batch-side exchange from a store-side one
-    val freshBands = freshSigs.select(col("new_id"), posexplode(sig_bands(col("sig_a"), bnds)))
+    val freshBands = freshSigs
+      .select(col("new_id"), posexplode(sig_bands(col("sig_a"), layout.int("bands"))))
       .select(col("new_id"), col("pos").as("fband_idx"), col("col").as("fband_hash"))
-      .repartition(bkts, col("fband_hash"))
+      .repartition(layout.buckets, col("fband_hash"))
     // per-GENERATION joins unioned, not a join against a unioned store:
     // a union of bucketed tables loses its bucketing and would shuffle
     // the whole corpus index on every ingest — joining each generation's
@@ -499,7 +486,7 @@ object Dedup {
           .select(col("doc_id").as("dup_of"), col("sig").as("sig_b")), Seq("dup_of"))
     }.reduce(_ unionAll _)
       .withColumn("est_jaccard",
-        sig_agreement(col("sig_a"), col("sig_b")).cast("double") / nh)
+        sig_agreement(col("sig_a"), col("sig_b")).cast("double") / layout.int("numHashes"))
       .filter(col("est_jaccard") >= threshold)
       .select(col("new_id"), col("dup_of"), round(col("est_jaccard"), 4).as("est_jaccard"))
   }
@@ -509,23 +496,43 @@ object Dedup {
     * connected-component labeling (d6's output, min doc_id per
     * component) written once per generation as `<name>_labels(doc_id,
     * cluster_id)` bucketed on doc_id, under the claim/publish protocol.
+    * The build's pair threshold is the store's layout record
+    * (`threshold`, beside the bucket spec), so every maintain, relabel
+    * and publish continues the same clustering definition.
     * [[maintainClustersAgainstStore]] absorbs each ingest batch against
     * it without ever re-pairing history.
     */
   def buildClusterStore(docs: DataFrame, name: String, numHashes: Int = 64,
       bands: Int = 16, threshold: Double = 0.5, buckets: Int = 0,
-      maxIter: Int = 100): Unit = {
-    Warehouse.build(clusterStore(docs.sparkSession, name)) { gen =>
-      Warehouse.writeBucketed(
-        clustersOfPairs(minhashPairsOf(docs, numHashes, bands, threshold)
-          .select(col("doc_a"), col("doc_b")), maxIter)
-          .withColumn("threshold", lit(threshold)),
-        Warehouse.storeTableName(name, gen, "labels"), "doc_id", buckets)
-    }: Unit
-  }
+      maxIter: Int = 100): Unit =
+    publishClusters(docs.sparkSession, name,
+      Warehouse.Layout(buckets, Map("threshold" -> threshold.toString)))(
+      clustersOfPairs(minhashPairsOf(docs, numHashes, bands, threshold)
+        .select(col("doc_a"), col("doc_b")), maxIter))
 
   private def clusterStore(spark: SparkSession, name: String): Warehouse.Store =
     Warehouse.tableStore(spark, name, Seq("labels"))
+
+  /** Publish (doc_id, cluster_id) `labels`, computed inside the build,
+    * as the cluster store's next FULL generation under `layout`.
+    */
+  private def publishClusters(spark: SparkSession, name: String,
+      layout: Warehouse.Layout)(labels: => DataFrame): Unit =
+    Warehouse.build(clusterStore(spark, name)) { gen =>
+      Warehouse.writeBucketed(labels.select(col("doc_id"), col("cluster_id")),
+        Warehouse.storeTableName(name, gen, "labels"), "doc_id",
+        layout.buckets, layout.constants)
+    }: Unit
+
+  /** The cluster store's layout at `gen`; a nonzero `threshold`
+    * validates against the recorded one.
+    */
+  private def clusterLayout(spark: SparkSession, name: String, gen: Long,
+      threshold: Double, buckets: Int = 0): Warehouse.Layout =
+    Warehouse.storeLayout(spark, "cluster", name, gen, "labels", buckets,
+      Seq(Warehouse.Given("threshold", threshold,
+        "the batch would cluster under a different pair definition than the store",
+        "recorded build threshold")))
 
   /** [[buildClusterStore]] FROM an already-published signature store —
     * the composition a real ingest loop runs: the corpus's signatures
@@ -573,11 +580,9 @@ object Dedup {
       .filter(sig_agreement(col("sig_a"), col("sig_b")).cast("double") /
         size(col("sig_a")) >= threshold)
       .select(col("doc_a"), col("doc_b"))
-    Warehouse.build(clusterStore(spark, name)) { gen =>
-      Warehouse.writeBucketed(
-        clustersOfPairs(pairs, maxIter).withColumn("threshold", lit(threshold)),
-        Warehouse.storeTableName(name, gen, "labels"), "doc_id", buckets)
-    }: Unit
+    publishClusters(spark, name,
+      Warehouse.Layout(buckets, Map("threshold" -> threshold.toString)))(
+      clustersOfPairs(pairs, maxIter))
   }
 
   /** TAKEDOWN at the cluster layer: relabel the components AFTER the
@@ -596,58 +601,14 @@ object Dedup {
       maxIter: Int = 100): Unit = {
     // the relabel must use the BUILD's threshold and bucket layout or
     // the published labeling silently diverges from "rebuild over the
-    // filtered corpus" — both derive from the store itself (the r17
-    // rule: a caller-repeated parameter is never trusted); explicit
-    // nonzero values validate against the recorded ones, and a legacy
-    // store (built before the recorded-threshold column) requires them
-    val gen = Warehouse.resolveGeneration(spark, clusterStore)
-    val (recorded, hasCol) = clusterThresholdOf(spark, clusterStore, gen)
-    val th = resolveClusterThreshold(clusterStore, threshold, recorded, hasCol)
-    val storeBuckets = Warehouse.storedBuckets(spark, clusterStore, gen, "labels", buckets)
+    // filtered corpus" — both come from the store's record (a
+    // caller-repeated parameter is never trusted; explicit nonzero
+    // values validate against it)
+    val layout = clusterLayout(spark, clusterStore,
+      Warehouse.resolveGeneration(spark, clusterStore), threshold, buckets)
     buildClusterStoreFromSignatureStore(spark, sigStore, clusterStore,
-      th, storeBuckets, maxIter)
+      layout.double("threshold"), layout.buckets, maxIter)
   }
-
-  /** The build threshold generation `gen`'s labels table records —
-    * (value, columnPresent). (None, false) = LEGACY pre-column store;
-    * (None, true) = the table is EMPTY (a full takedown: the recorded
-    * value left with the rows); the distinction keeps the error
-    * messages honest, exactly the novelty/substring-k rule.
-    */
-  private def clusterThresholdOf(spark: SparkSession, name: String,
-      gen: Long): (Option[Double], Boolean) = {
-    val tbl = Warehouse.table(spark, Warehouse.storeTableName(name, gen, "labels"))
-    val hasCol = tbl.columns.contains("threshold")
-    val rec =
-      if (!hasCol) None
-      else tbl.select(col("threshold")).limit(1).collect().headOption.map(_.getDouble(0))
-    (rec, hasCol)
-  }
-
-  /** Shared resolve: recorded wins (explicit nonzero validates), an
-    * EMPTY stamped store demands an explicit value with an honest
-    * message, a legacy store keeps the caller's.
-    */
-  private def resolveClusterThreshold(name: String, given: Double,
-      recorded: Option[Double], hasCol: Boolean): Double =
-    recorded match {
-      case Some(st) =>
-        require(given == 0.0 || given == st,
-          s"threshold=$given differs from cluster store '$name''s " +
-            s"recorded build threshold ($st) — pass 0.0 to derive")
-        st
-      case None if hasCol =>
-        require(given > 0.0,
-          s"cluster store '$name' is EMPTY, so its recorded threshold left " +
-            "with its rows — pass the build's threshold explicitly")
-        given
-      case None =>
-        require(given > 0.0,
-          s"cluster store '$name' predates the recorded-threshold column " +
-            "and no explicit threshold was passed — pass the build's threshold " +
-            "(a different one merges or splits clusters the build kept apart)")
-        given
-    }
 
   /** The dedup store family a [[removeDocs]] takedown cascades through
     * — name each persisted store the deployment maintains; None skips
@@ -739,11 +700,9 @@ object Dedup {
     val gen = Warehouse.resolveGeneration(spark, clusterStore)
     // the batch's pair threshold must be the STORE's (a different one
     // would absorb the batch under a different clustering definition
-    // than the labels being continued): recorded values win — explicit
-    // nonzero validates, 0.0 derives; a pre-column legacy store keeps
-    // the caller's value as before
-    val (recTh, hasThCol) = clusterThresholdOf(spark, clusterStore, gen)
-    val th = resolveClusterThreshold(clusterStore, threshold, recTh, hasThCol)
+    // than the labels being continued): the recorded value wins —
+    // explicit nonzero validates, 0.0 derives
+    val th = clusterLayout(spark, clusterStore, gen, threshold).double("threshold")
     val starEdges = Warehouse
       .table(spark, Warehouse.storeTableName(clusterStore, gen, "labels"))
       .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
@@ -755,20 +714,15 @@ object Dedup {
     // loop's eager checkpoint, where the public forms' presentation
     // sorts were two wasted range exchanges.
     val (sbase, ssegs) = Warehouse.resolveSegmented(spark, sigStore)
-    val layout = signatureLayoutOf(spark, sigStore, sbase)
-    val (storeHashes, storeBands, _) = layout
-    Seq(("numHashes", numHashes, storeHashes), ("bands", bands, storeBands))
-      .foreach { case (what, given, stored) =>
-        require(given == 0 || given == stored,
-          s"maintain $what=$given differs from signature store '$sigStore''s " +
-            s"built layout ($stored) — the batch would pair under a different " +
-            "hash geometry than the store; pass 0 to derive the layout")
-      }
-    val sigs = hashedSigsOf(batch, storeHashes)
+    val geometry = "the batch would pair under a different hash geometry than the store"
+    val layout = signatureLayout(spark, sigStore, sbase, Seq(
+      Warehouse.Given("numHashes", numHashes, geometry),
+      Warehouse.Given("bands", bands, geometry)))
+    val sigs = hashedSigsOf(batch, layout.int("numHashes"))
     val cross = probeSignatureStoreWithSigs(spark, sigStore, sbase, ssegs,
       layout, sigs, th)
       .select(col("new_id").as("doc_a"), col("dup_of").as("doc_b"))
-    val fresh = minhashPairsOfSigs(sigs, storeHashes, storeBands, th)
+    val fresh = minhashPairsOfSigs(sigs, layout.int("numHashes"), layout.int("bands"), th)
       .select(col("doc_a"), col("doc_b"))
     clustersOfPairs(starEdges.unionByName(cross).unionByName(fresh),
       maxIter, oracleRounds)
@@ -776,41 +730,24 @@ object Dedup {
 
   /** Publish a maintained labeling as the cluster store's next FULL
     * generation (labels are a complete snapshot, not a segment) —
-    * the write half of the d19 ingest loop.
+    * the write half of the d19 ingest loop. A maintained generation
+    * CONTINUES the store's clustering, so it carries the prior
+    * generation's layout record forward (explicit nonzero values
+    * validate against it); a FIRST publish records the caller's
+    * threshold, which it therefore requires, and buckets (defaulting to
+    * the session's fan-out, as every build does).
     */
   def publishMaintainedClusters(labels: DataFrame, name: String,
       buckets: Int = 0, threshold: Double = 0.0): Unit = {
     val spark = labels.sparkSession
-    // continuity: a maintained generation CONTINUES the store's
-    // clustering, so BOTH layout constants carry forward — the recorded
-    // threshold stamps the new generation (an explicit value validates;
-    // an EMPTY prior demands one; a legacy prior stays legacy unless one
-    // is given) and the bucket count derives from the prior generation
-    // (caller-repeated parameters are never trusted); a FIRST publish
-    // takes the caller's values (buckets defaulting to the session's
-    // fan-out, as every build does)
-    val prior = Warehouse.currentGeneration(spark, name)
-    val useBuckets = prior match {
-      case Some(g) => Warehouse.storedBuckets(spark, name, g, "labels", buckets)
-      case None => buckets
+    val layout = Warehouse.currentGeneration(spark, name) match {
+      case Some(g) => clusterLayout(spark, name, g, threshold, buckets)
+      case None =>
+        require(threshold > 0.0, s"cluster store '$name' has no generation to " +
+          "continue — pass the threshold its labels were clustered at")
+        Warehouse.Layout(buckets, Map("threshold" -> threshold.toString))
     }
-    val stampTh: Option[Double] = prior match {
-      case Some(g) =>
-        val (rec, hasCol) = clusterThresholdOf(spark, name, g)
-        (rec, hasCol) match {
-          case (Some(_), _) | (None, true) =>
-            Some(resolveClusterThreshold(name, threshold, rec, hasCol))
-          case (None, false) => // legacy prior: upgrade only when told
-            if (threshold > 0.0) Some(threshold) else None
-        }
-      case None => if (threshold > 0.0) Some(threshold) else None
-    }
-    val stamped = stampTh.fold(labels)(th =>
-      labels.select(col("doc_id"), col("cluster_id")).withColumn("threshold", lit(th)))
-    Warehouse.build(clusterStore(spark, name)) { gen =>
-      Warehouse.writeBucketed(stamped,
-        Warehouse.storeTableName(name, gen, "labels"), "doc_id", useBuckets)
-    }: Unit
+    publishClusters(spark, name, layout)(labels)
   }
 
   /** d3: SimHash near-dup. 64-bit signature map-side; pigeonhole banding
@@ -1056,14 +993,14 @@ object Dedup {
     * a warehouse table bucketed on the hash (`<name>_shdf`), under the
     * dedup stores' claim/publish protocol. An ingest batch probes it
     * co-partitioned — corpus text is never re-tokenized and the store
-    * side never shuffles. The shingle width k rides along as an
-    * RLE-constant column (the substring store's rule) so appenders and
-    * probes derive it from the store.
+    * side never shuffles. The shingle width k is the store's layout
+    * record (beside the bucket spec), so appenders and probes derive it
+    * from the store, also once a takedown has emptied it.
     */
   def buildNoveltyStore(docs: DataFrame, name: String, k: Int = 3,
       buckets: Int = 0): Unit = {
     Warehouse.build(noveltyStore(docs.sparkSession, name)) { gen =>
-      writeNoveltyGeneration(docs, name, gen, k, buckets)
+      writeNoveltyGeneration(docs, name, gen, Warehouse.Layout(buckets, Map("k" -> k.toString)))
     }: Unit
   }
 
@@ -1071,70 +1008,36 @@ object Dedup {
     Warehouse.tableStore(spark, name, Seq("shdf"))
 
   /** ONE definition of a novelty-store generation's content — the
-    * (h, df, k) distinct-doc frequency table bucketed on the hash —
+    * (h, df) distinct-doc frequency table bucketed on the hash —
     * shared by the full build and the segment append. df is ADDITIVE
     * across disjoint doc sets (the NEW-doc_ids append contract), so
     * base ∪ segments merged by sum is bit-identical to a one-shot build
     * over the union corpus (t23's stats rule at shingle granularity).
     */
   private def writeNoveltyGeneration(docs: DataFrame, name: String, gen: Long,
-      k: Int, buckets: Int): Unit = {
-    val dfT = Warehouse.storeTableName(name, gen, "shdf")
+      layout: Warehouse.Layout): Unit = {
+    val k = layout.int("k")
     val dsh = spreadIfNarrow(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
       .filter(size(col("tokens")) >= k)
       .select(col("doc_id"), explode(array_distinct(shingle_hashes(col("tokens"), k))).as("h"))
-    Warehouse.writeBucketed(
-      dsh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .select(col("h"), col("df"), lit(k).as("k")),
-      dfT, "h", buckets)
+    writeNoveltyTable(dsh.groupBy(col("h")).agg(count(lit(1)).as("df")), name, gen, layout)
   }
 
-  /** Layout of the novelty store at `gens` (base first): buckets and
-    * the k-column presence come from the base; the recorded k comes
-    * from the FIRST generation holding a row — a base emptied by a full
-    * takedown still derives k from a populated append segment instead
-    * of misreading the store as empty/legacy.
+  private def writeNoveltyTable(hdf: DataFrame, name: String, gen: Long,
+      layout: Warehouse.Layout): Unit =
+    Warehouse.writeBucketed(hdf, Warehouse.storeTableName(name, gen, "shdf"), "h",
+      layout.buckets, layout.constants)
+
+  /** The novelty store's layout at `base`; a nonzero `k` or `buckets`
+    * validates against the record.
     */
-  private def noveltyLayoutOf(spark: SparkSession, name: String,
-      gens: Seq[Long]): (Option[Int], Int, Boolean) = {
-    val buckets = Warehouse.storedBuckets(spark, name, gens.head, "shdf", 0)
-    val hasKCol = Warehouse
-      .table(spark, Warehouse.storeTableName(name, gens.head, "shdf"))
-      .columns.contains("k")
-    val kOpt =
-      if (!hasKCol) None
-      else gens.view.flatMap { g =>
-        Warehouse.table(spark, Warehouse.storeTableName(name, g, "shdf"))
-          .select(col("k")).limit(1).collect().headOption.map(_.getInt(0))
-      }.headOption
-    (kOpt, buckets, hasKCol)
-  }
-
-  // hasKCol distinguishes a LEGACY store (no k column) from an EMPTY
-  // one (column present, value gone with the rows — e.g. a takedown
-  // that removed every doc): the former's error names the migration,
-  // the latter's asks for the build k and is safe to satisfy (an empty
-  // index probes identically under any width)
-  private def resolveNoveltyK(name: String, given: Int, stored: Option[Int],
-      hasKCol: Boolean): Int =
-    stored match {
-      case Some(sk) =>
-        require(given == 0 || given == sk,
-          s"k=$given differs from novelty store '$name''s built width ($sk) — " +
-            "probe hashes would never match the index (every shingle reads novel); pass 0 to derive")
-        sk
-      case None if hasKCol =>
-        require(given > 0,
-          s"novelty store '$name' is EMPTY, so its recorded k left with its rows — " +
-            "pass the build's k explicitly (the probe's own shingling needs the width)")
-        given
-      case None =>
-        require(given > 0,
-          s"novelty store '$name' predates the recorded-k column and no explicit " +
-            "k was passed — pass the build's k (it must match or every shingle reads novel)")
-        given
-    }
+  private def noveltyLayout(spark: SparkSession, name: String, base: Long,
+      k: Int = 0, buckets: Int = 0): Warehouse.Layout =
+    Warehouse.storeLayout(spark, "novelty", name, base, "shdf", buckets,
+      Seq(Warehouse.Given("k", k,
+        "probe hashes would never match the index (every shingle reads novel)",
+        "built width")))
 
   /** Segment-append for the NOVELTY store: the batch's own distinct-doc
     * df table lands as an O(batch) SEGMENT in the base's layout through
@@ -1146,19 +1049,10 @@ object Dedup {
   def appendToNoveltyStore(docs: DataFrame, name: String,
       dedupeTag: Option[String] = None, k: Int = 0): Option[Long] = {
     val spark = docs.sparkSession
-    Warehouse.appendSegmentWith[(Int, Int)](noveltyStore(spark, name),
+    Warehouse.appendSegmentWith[Warehouse.Layout](noveltyStore(spark, name),
       dedupeTag, docs.isEmpty,
-      prepare = base => {
-        // span the base's published segments too: a base emptied by a
-        // takedown still derives k from a populated segment (this is a
-        // LAYOUT read only — publish liveness stays chain-guarded)
-        val (curBase, curSegs) = Warehouse.resolveSegmented(spark, name)
-        val gens = if (curBase == base) base +: curSegs else Seq(base)
-        val (kOpt, buckets, hasK) = noveltyLayoutOf(spark, name, gens)
-        (resolveNoveltyK(name, k, kOpt, hasK), buckets)
-      },
-      writeData = (gen, layout) =>
-        writeNoveltyGeneration(docs, name, gen, layout._1, layout._2))
+      prepare = base => noveltyLayout(spark, name, base, k),
+      writeData = (gen, layout) => writeNoveltyGeneration(docs, name, gen, layout))
   }
 
   /** COMPACT the segmented novelty store: merge base ∪ segments by
@@ -1171,14 +1065,9 @@ object Dedup {
     */
   def growNoveltyStore(name: String, spark: SparkSession): Unit =
     Warehouse.fold(noveltyStore(spark, name))(
-      prepare = (base, segs) => {
-        val (kOpt, buckets, _) = noveltyLayoutOf(spark, name, base +: segs)
-        Some((summedNoveltyDf(spark, name, base +: segs), kOpt, buckets))
-      })(
-      write = { case (gen, (folded, kOpt, buckets)) =>
-        Warehouse.writeBucketed(withNoveltyK(folded, kOpt),
-          Warehouse.storeTableName(name, gen, "shdf"), "h", buckets)
-      },
+      prepare = (base, segs) =>
+        Some((summedNoveltyDf(spark, name, base +: segs), noveltyLayout(spark, name, base))))(
+      write = { case (gen, (folded, layout)) => writeNoveltyTable(folded, name, gen, layout) },
       beforePublish = () => ())
 
   /** The (h, df) sum-merge of a novelty store's generations `gens`. */
@@ -1188,10 +1077,6 @@ object Dedup {
         .select(col("h"), col("df")))
       .reduce(_ unionAll _)
       .groupBy(col("h")).agg(sum(col("df")).as("df"))
-
-  /** Re-attach the recorded k column (absent on a legacy store). */
-  private def withNoveltyK(hdf: DataFrame, kOpt: Option[Int]): DataFrame =
-    kOpt.fold(hdf)(sk => hdf.select(col("h"), col("df"), lit(sk).as("k")))
 
   /** d15 at ingest: the NEW batch's novelty AGAINST the persisted
     * corpus index — a shingle is novel when the corpus has never seen
@@ -1203,26 +1088,21 @@ object Dedup {
   def noveltyAgainstStore(name: String, newDocs: DataFrame, k: Int = 0,
       buckets: Int = 0): DataFrame = {
     val spark = newDocs.sparkSession
-    // layout derives FROM THE STORE (0 = derive; nonzero validates):
-    // buckets from catalog metadata, k from the recorded constant
-    // column. Segment-aware resolve, ONCE: a shingle is SEEN iff any
+    // layout derives from the store's record (0 = derive; nonzero
+    // validates). Segment-aware resolve, ONCE: a shingle is SEEN iff any
     // live generation holds it — per-generation co-partitioned LEFT
     // joins (the fresh exchange is physically reused across branches),
     // novel = unseen in every one (df is additive across the disjoint
     // generation doc sets, so presence-anywhere is exactly the
     // one-shot df > 0).
     val (base, segs) = Warehouse.resolveSegmented(spark, name)
-    val (kOpt, storeBuckets, hasK) = noveltyLayoutOf(spark, name, base +: segs)
-    require(buckets == 0 || buckets == storeBuckets,
-      s"probe buckets=$buckets differs from store '$name''s built layout " +
-        s"($storeBuckets) — the probe side would join mis-partitioned; pass 0 " +
-        "to derive the layout from the store")
-    val kk = resolveNoveltyK(name, k, kOpt, hasK)
+    val layout = noveltyLayout(spark, name, base, k, buckets)
+    val kk = layout.int("k")
     val fresh = spreadIfNarrow(newDocs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
       .filter(size(col("tokens")) >= kk)
       .select(col("doc_id"), explode(array_distinct(shingle_hashes(col("tokens"), kk))).as("fh"))
-      .repartition(storeBuckets, col("fh"))
+      .repartition(layout.buckets, col("fh"))
     // CHAINED per-generation left joins, each co-partitioned on the
     // bucket key (store h unique per generation, so row counts are
     // preserved) — a union-then-regroup would add a batch-side
@@ -1269,16 +1149,17 @@ object Dedup {
     val spark = removedDocs.sparkSession
     Warehouse.fold(noveltyStore(spark, name))(
       prepare = (base, segs) => {
-        val (kOpt, buckets, hasK) = noveltyLayoutOf(spark, name, base +: segs)
-        val oldDf = summedNoveltyDf(spark, name, base +: segs)
+        val layout = noveltyLayout(spark, name, base, k)
         // a removal from a fully-EMPTY store is a no-op (the subtraction
-        // result is empty under any k) — return before demanding a k the
-        // emptied store can no longer record, so a second takedown through
-        // the removeDocs cascade never wedges mid-cascade
-        if (kOpt.isEmpty && oldDf.isEmpty) None
-        else Some((oldDf, kOpt, resolveNoveltyK(name, k, kOpt, hasK), buckets))
+        // result is empty): publish nothing. The emptiness check stops
+        // at the first generation holding a row
+        val gens = base +: segs
+        if (gens.forall(g => Warehouse.table(spark,
+            Warehouse.storeTableName(name, g, "shdf")).isEmpty)) None
+        else Some((summedNoveltyDf(spark, name, gens), layout))
       })(
-      write = { case (gen, (oldDf, kOpt, kk, buckets)) =>
+      write = { case (gen, (oldDf, layout)) =>
+        val kk = layout.int("k")
         // dedupe by doc_id like every sibling remover: a doc listed twice
         // (two opt-out lists concatenated) would otherwise subtract its
         // shingles' df twice — dropping rows the filtered corpus still
@@ -1292,8 +1173,7 @@ object Dedup {
         val subtracted = oldDf.join(rdf, Seq("h"), "left")
           .select(col("h"), (col("df") - coalesce(col("rdf"), lit(0L))).as("df"))
           .filter(col("df") > 0)
-        Warehouse.writeBucketed(withNoveltyK(subtracted, kOpt),
-          Warehouse.storeTableName(name, gen, "shdf"), "h", buckets)
+        writeNoveltyTable(subtracted, name, gen, layout)
       },
       beforePublish = () => ())
   }
@@ -1537,17 +1417,18 @@ object Dedup {
     * — corpus text is never re-tokenized and the store side never
     * shuffles. Same FNV shingle kernel as d9/d10, so probing is
     * bit-equivalent to the in-job recompute (spec-verified). The
-    * shingle width `k` rides along as a constant column (RLE-compressed
-    * to nothing in parquet — the dl_sum precedent): k is baked into
-    * every hash, so appenders and probes DERIVE it from the store
-    * instead of trusting a caller-repeated parameter (a drifted k means
-    * probe hashes never collide — a silent total miss).
+    * shingle width `k` is the store's layout record (beside the bucket
+    * spec): k is baked into every hash, so appenders and probes DERIVE
+    * it from the store instead of trusting a caller-repeated parameter
+    * (a drifted k means probe hashes never collide — a silent total
+    * miss).
     */
   def buildSubstringStore(docs: DataFrame, name: String, k: Int = 8,
       buckets: Int = 0,
       maxDf: Option[Long] = Some(QuadraticGuardDefault)): Unit = {
     Warehouse.build(substringStore(docs.sparkSession, name)) { gen =>
-      writeSubstringGeneration(docs, name, gen, k, buckets, maxDf)
+      writeSubstringGeneration(docs, name, gen,
+        Warehouse.Layout(buckets, Map("k" -> k.toString)), maxDf)
     }: Unit
   }
 
@@ -1555,7 +1436,7 @@ object Dedup {
     Warehouse.tableStore(spark, name, Seq("shingles"))
 
   /** ONE definition of a substring-store generation's content — the
-    * (h, doc_id, pos, k) occurrence table bucketed on the hash — shared
+    * (h, doc_id, pos) occurrence table bucketed on the hash — shared
     * by the full build and the segment append so the tokenize→shingle
     * chain cannot drift between them. The quadratic maxDf guard (ON by
     * default, same shape as the signature store's): a shingle occupying
@@ -1564,16 +1445,16 @@ object Dedup {
     * caller's guarded cleanup unpublishes.
     */
   private def writeSubstringGeneration(docs: DataFrame, name: String, gen: Long,
-      k: Int, buckets: Int, maxDf: Option[Long]): Unit = {
+      layout: Warehouse.Layout, maxDf: Option[Long]): Unit = {
     val spark = docs.sparkSession
     val shinglesT = Warehouse.storeTableName(name, gen, "shingles")
+    val k = layout.int("k")
     val psh = spreadIfNarrow(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
       .filter(size(col("tokens")) >= k)
       .select(col("doc_id"), posexplode(shingle_hashes(col("tokens"), k)))
-      .select(col("col").as("h"), col("doc_id"), (col("pos") + 1).as("pos"),
-        lit(k).as("k"))
-    Warehouse.writeBucketed(psh, shinglesT, "h", buckets)
+      .select(col("col").as("h"), col("doc_id"), (col("pos") + 1).as("pos"))
+    Warehouse.writeBucketed(psh, shinglesT, "h", layout.buckets, layout.constants)
     maxDf.foreach { m =>
       val worst = Warehouse.table(spark, shinglesT)
         .groupBy(col("h")).agg(count(lit(1)).as("n"))
@@ -1588,49 +1469,14 @@ object Dedup {
     }
   }
 
-  /** [[noveltyLayoutOf]]'s substring twin: k from the first generation
-    * holding a row, buckets/column presence from the base. A
-    * pre-k-column legacy store returns k = None — the caller's explicit
-    * k then stands, documented must-match (nothing to validate against).
+  /** The substring store's layout at `base`; a nonzero `k` or
+    * `buckets` validates against the record.
     */
-  private def substringLayoutOf(spark: SparkSession, name: String,
-      gens: Seq[Long]): (Option[Int], Int, Boolean) = {
-    val buckets = Warehouse.storedBuckets(spark, name, gens.head, "shingles", 0)
-    val hasKCol = Warehouse
-      .table(spark, Warehouse.storeTableName(name, gens.head, "shingles"))
-      .columns.contains("k")
-    val kOpt =
-      if (!hasKCol) None
-      else gens.view.flatMap { g =>
-        Warehouse.table(spark, Warehouse.storeTableName(name, g, "shingles"))
-          .select(col("k")).limit(1).collect().headOption.map(_.getInt(0))
-      }.headOption
-    (kOpt, buckets, hasKCol)
-  }
-
-  /** Resolve the probe/append shingle width against the store: derive
-    * when the store records k (0 = derive; nonzero validates), fall
-    * back to the caller's explicit k on a legacy store.
-    */
-  private def resolveSubstringK(name: String, given: Int, stored: Option[Int],
-      hasKCol: Boolean): Int =
-    stored match {
-      case Some(sk) =>
-        require(given == 0 || given == sk,
-          s"k=$given differs from substring store '$name''s built width ($sk) — " +
-            "hashes would never collide (a silent total miss); pass 0 to derive")
-        sk
-      case None if hasKCol =>
-        require(given > 0,
-          s"substring store '$name' is EMPTY, so its recorded k left with its rows — " +
-            "pass the build's k explicitly (probe shingling needs the width)")
-        given
-      case None =>
-        require(given > 0,
-          s"substring store '$name' predates the recorded-k column and no explicit " +
-            "k was passed — pass the build's k (it must match or hashes never collide)")
-        given
-    }
+  private def substringLayout(spark: SparkSession, name: String, base: Long,
+      k: Int = 0, buckets: Int = 0): Warehouse.Layout =
+    Warehouse.storeLayout(spark, "substring", name, base, "shingles", buckets,
+      Seq(Warehouse.Given("k", k, "hashes would never collide (a silent total miss)",
+        "built width")))
 
   /** Segment-append for the SUBSTRING store — the r17 signature-store
     * pattern verbatim at occurrence granularity: a batch of NEW
@@ -1649,17 +1495,10 @@ object Dedup {
       dedupeTag: Option[String] = None, k: Int = 0,
       maxDf: Option[Long] = Some(QuadraticGuardDefault)): Option[Long] = {
     val spark = docs.sparkSession
-    Warehouse.appendSegmentWith[(Int, Int)](substringStore(spark, name),
+    Warehouse.appendSegmentWith[Warehouse.Layout](substringStore(spark, name),
       dedupeTag, docs.isEmpty,
-      prepare = base => {
-        // see appendToNoveltyStore: layout spans published segments
-        val (curBase, curSegs) = Warehouse.resolveSegmented(spark, name)
-        val gens = if (curBase == base) base +: curSegs else Seq(base)
-        val (kOpt, buckets, hasK) = substringLayoutOf(spark, name, gens)
-        (resolveSubstringK(name, k, kOpt, hasK), buckets)
-      },
-      writeData = (gen, layout) =>
-        writeSubstringGeneration(docs, name, gen, layout._1, layout._2, maxDf))
+      prepare = base => substringLayout(spark, name, base, k),
+      writeData = (gen, layout) => writeSubstringGeneration(docs, name, gen, layout, maxDf))
   }
 
   /** COMPACT the segmented substring store: fold base ∪ published
@@ -1684,14 +1523,14 @@ object Dedup {
   private def refoldSubstringStore(spark: SparkSession, name: String,
       fold: DataFrame => DataFrame, beforePublish: () => Unit): Unit =
     Warehouse.fold(substringStore(spark, name))(
-      prepare = (base, segs) => Some((base +: segs,
-        Warehouse.storedBuckets(spark, name, base, "shingles", 0))))(
-      write = { case (gen, (gens, buckets)) =>
+      prepare = (base, segs) => Some((base +: segs, substringLayout(spark, name, base))))(
+      write = { case (gen, (gens, layout)) =>
         Warehouse.writeBucketed(
           fold(gens.map(g =>
             Warehouse.table(spark, Warehouse.storeTableName(name, g, "shingles")))
             .reduce(_ unionAll _)),
-          Warehouse.storeTableName(name, gen, "shingles"), "h", buckets)
+          Warehouse.storeTableName(name, gen, "shingles"), "h",
+          layout.buckets, layout.constants)
       },
       beforePublish)
 
@@ -1704,18 +1543,12 @@ object Dedup {
   def substringSpansAgainstStore(name: String, newDocs: DataFrame, k: Int = 0,
       minSpanTokens: Int = 16, buckets: Int = 0): DataFrame = {
     val spark = newDocs.sparkSession
-    // the layout derives FROM THE STORE (0 = derive; nonzero
-    // validates): buckets from catalog metadata, k from the recorded
-    // constant column (legacy stores without it require the caller's
-    // explicit k — documented must-match). Segment-aware resolve, ONCE,
-    // pins every store-side read to one immutable snapshot.
+    // the layout derives from the store's record (0 = derive; nonzero
+    // validates). Segment-aware resolve, ONCE, pins every store-side
+    // read to one immutable snapshot.
     val (base, segs) = Warehouse.resolveSegmented(spark, name)
-    val (kOpt, storeBuckets, hasK) = substringLayoutOf(spark, name, base +: segs)
-    require(buckets == 0 || buckets == storeBuckets,
-      s"probe buckets=$buckets differs from store '$name''s built layout " +
-        s"($storeBuckets) — the probe side would join mis-partitioned; pass 0 " +
-        "to derive the layout from the store")
-    val kk = resolveSubstringK(name, k, kOpt, hasK)
+    val layout = substringLayout(spark, name, base, k, buckets)
+    val kk = layout.int("k")
     // batch-side columns carry distinct names so the plan (and spec) can
     // tell the batch exchange from a store-side one; the fresh side
     // repartitions ONCE and the per-generation co-partitioned joins
@@ -1726,7 +1559,7 @@ object Dedup {
       .filter(size(col("tokens")) >= kk)
       .select(col("doc_id"), posexplode(shingle_hashes(col("tokens"), kk)))
       .select(col("col").as("fh"), col("doc_id").as("new_id"), (col("pos") + 1).as("pos_new"))
-      .repartition(storeBuckets, col("fh"))
+      .repartition(layout.buckets, col("fh"))
     // per-GENERATION joins unioned, not a join against a unioned store
     // (a union of bucketed tables loses its bucketing — the whole index
     // would re-shuffle per ingest); a (new_id, dup_of) pair's matches
@@ -1763,8 +1596,12 @@ object Dedup {
     */
   def removeFromSubstringStore(docIds: DataFrame, name: String): Unit = {
     val ids = docIds.select(col("doc_id")).distinct().localCheckpoint(true)
+    // the USING join moves doc_id first; the select restores the
+    // build's (h, doc_id, pos) order, which a later fold's positional
+    // union with an append segment relies on
     refoldSubstringStore(docIds.sparkSession, name,
-      _.join(broadcast(ids), Seq("doc_id"), "left_anti"), () => ())
+      _.join(broadcast(ids), Seq("doc_id"), "left_anti")
+        .select(col("h"), col("doc_id"), col("pos")), () => ())
   }
 
   /** d6: near-duplicate clusters — connected components over the LSH

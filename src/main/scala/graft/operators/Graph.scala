@@ -225,10 +225,9 @@ object Graph {
       // independent frames — publish both tables concurrently
       // (guide §2.6, the signature-store pattern)
       Warehouse.writeBucketedConcurrently(Seq(
-        (edges.join(deg, "src"),
-          Warehouse.storeTableName(store, gen, "edges"), "src", buckets),
-        (wedges.join(wdeg, "src"),
-          Warehouse.storeTableName(store, gen, "wedges"), "src", buckets)))
+        (edges.join(deg, "src"), Warehouse.storeTableName(store, gen, "edges"), "src"),
+        (wedges.join(wdeg, "src"), Warehouse.storeTableName(store, gen, "wedges"), "src")),
+        buckets)
     }
   }
 

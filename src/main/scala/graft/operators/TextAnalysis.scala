@@ -889,7 +889,7 @@ object TextAnalysis {
     // the append instead of guessing.
     Warehouse.appendSegmentWith[Int](bm25Store(spark, name),
       dedupeTag, docs.isEmpty,
-      prepare = base => Warehouse.storedBuckets(spark, name, base, "postings", 0),
+      prepare = base => Warehouse.storeLayout(spark, "BM25", name, base, "postings").buckets,
       writeData = (gen, layout) => writeBm25Generation(docs, name, gen, layout),
       beforePublish = beforePublish)
   }
@@ -920,7 +920,7 @@ object TextAnalysis {
       .localCheckpoint(true)
     val ids = removed.select(col("doc_id"))
     Warehouse.fold(bm25Store(spark, name))((base, segs) =>
-      Some((base +: segs, Warehouse.storedBuckets(spark, name, base, "postings", 0))))(
+      Some((base +: segs, Warehouse.storeLayout(spark, "BM25", name, base, "postings").buckets)))(
       write = { case (gen, (gens, buckets)) =>
         val oldPostings = gens
           .map(g => Warehouse.table(spark, Warehouse.storeTableName(name, g, "postings")))

@@ -12,12 +12,16 @@ import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType, Ca
   * Exchange on either side). At 100 TB this converts the nightly
   * fact⋈fact join from a full-network shuffle into a local merge.
   *
-  * Bucketed tables live in the session catalog (`saveAsTable`). The
-  * bucket count follows one rule: a build writes the session's fan-out
-  * ([[graft.GraftSession.fanOut]], `spark.sql.shuffle.partitions`)
+  * Bucketed tables live in the session catalog (`saveAsTable`). A
+  * store's layout is one record in each table's catalog entry: the
+  * bucket spec holds the bucket count, and the store's build constants
+  * (signature length and band count, shingle width, cluster threshold)
+  * sit beside it as storage properties. A build writes the session's
+  * fan-out ([[graft.GraftSession.fanOut]], `spark.sql.shuffle.partitions`)
   * unless the caller passes an explicit count, and every append, fold
-  * and probe derives the count from the store's own catalog metadata
-  * ([[storedBuckets]]), never from a caller default.
+  * and probe reads the whole record back with [[storeLayout]] — on the
+  * driver, without a Spark job, and intact on a table a takedown
+  * emptied — never from a caller default or from the rows.
   */
 object Warehouse {
 
@@ -37,11 +41,19 @@ object Warehouse {
     * the cluster once per deployment; appends and folds pass the count
     * their base was built with, so every generation of a store shares
     * one layout.
+    *
+    * `constants` is the store's layout record: each build constant lands
+    * as a storage property of the table's catalog entry, beside the
+    * bucket spec, where [[storeLayout]] reads it back. Appends and folds
+    * pass on the record they read, so it survives every generation,
+    * including one with no rows.
     */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit = {
+  def writeBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int,
+      constants: Map[String, String] = Map.empty): Unit = {
     val n = if (buckets > 0) buckets else graft.GraftSession.fanOut(df.sparkSession)
     df.repartition(n, org.apache.spark.sql.functions.col(bucketCol))
       .write
+      .options(constants.map { case (k, v) => s"$LayoutPrefix$k" -> v })
       .mode(SaveMode.Overwrite)
       .bucketBy(n, bucketCol)
       .sortBy(bucketCol)
@@ -61,9 +73,10 @@ object Warehouse {
     * settle, so the caller's unpublish/cleanup path sees a stable
     * state.
     */
-  private[graft] def writeBucketedConcurrently(
-      writes: Seq[(DataFrame, String, String, Int)]): Unit =
-    runConcurrently(writes.map { case (df, t, c, n) => () => writeBucketed(df, t, c, n) })
+  private[graft] def writeBucketedConcurrently(writes: Seq[(DataFrame, String, String)],
+      buckets: Int, constants: Map[String, String] = Map.empty): Unit =
+    runConcurrently(writes.map { case (df, t, c) =>
+      () => writeBucketed(df, t, c, buckets, constants) })
 
   /** The thread mechanics behind [[writeBucketedConcurrently]], for
     * publishes whose sides are not both bucketed (e.g. the BM25
@@ -107,13 +120,6 @@ object Warehouse {
 
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
-  /** The bucket count a table was written with, from catalog metadata
-    * (None for unbucketed/unknown) — appenders derive the base build's
-    * layout from this instead of trusting a caller-repeated parameter.
-    */
-  def bucketCount(spark: SparkSession, name: String): Option[Int] =
-    catalogEntry(spark, name).flatMap(_.bucketSpec).map(_.numBuckets)
-
   /** `name`'s entry in the session catalog, read on the driver without
     * a Spark job; None when the table is absent or its entry unreadable.
     */
@@ -121,27 +127,60 @@ object Warehouse {
     scala.util.Try(spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(name))).toOption
 
-  /** The bucket count store table `<name>__g<gen>_<suffix>` was built
-    * with, for every append, fold and probe that must match the store's
-    * layout: `given == 0` derives it from catalog metadata (unreadable
-    * metadata fails loudly — a guessed layout silently voids
-    * co-partitioning); a nonzero `given` is validated against the
-    * stored count, so caller-vs-store drift fails loudly too.
+  /** The storage-property prefix of a store's recorded build constants. */
+  private val LayoutPrefix = "graft.layout."
+
+  /** One store generation's layout: the bucket count of its catalog
+    * bucket spec and the build constants [[writeBucketed]] recorded
+    * beside it. `of` names the generation in a refusal: a constant the
+    * record lacks cannot be derived, so reading it fails loudly.
     */
-  private[graft] def storedBuckets(spark: SparkSession, name: String, gen: Long,
-      suffix: String, given: Int): Int = {
-    val stored = bucketCount(spark, storeTableName(name, gen, suffix))
-      .getOrElse(throw new IllegalStateException(
-        s"store '$name' generation $gen has unreadable bucket metadata on " +
-          s"'$suffix' — refusing an append, fold or probe whose partitioning could " +
-          "diverge from the store (co-partitioned probing would silently void); " +
-          "rebuild the store"))
-    require(given == 0 || given == stored,
-      s"probe buckets=$given differs from store '$name''s built layout " +
-        s"($stored) — the probe side would join mis-partitioned; pass 0 " +
-        "to derive the layout from the store")
-    stored
+  final case class Layout(buckets: Int, constants: Map[String, String], of: String = "") {
+    def apply(key: String): String = constants.getOrElse(key, throw new IllegalStateException(
+      s"$of records no build '$key' — refusing an append, fold or probe whose layout " +
+        "could diverge from the store; rebuild the store"))
+    def int(key: String): Int = apply(key).toInt
+    def double(key: String): Double = apply(key).toDouble
   }
+
+  /** A caller's value for recorded build constant `key`. `what` names
+    * the recorded value in a refusal, `why` says what a drift breaks.
+    */
+  final case class Given(key: String, value: Double, why: String,
+      what: String = "built layout")
+
+  /** The layout of `kind` store `store`'s generation `gen`, from the
+    * catalog entry of its table `<store>__g<gen>_<suffix>`: one driver
+    * read, no Spark job. One rule covers every value a caller passes
+    * (`buckets` and each of `values`): 0 derives the recorded value, and
+    * a nonzero one must equal it, so caller-vs-store drift fails loudly
+    * instead of silently voiding co-partitioning or hash matching. A
+    * table without a bucket spec, or without a record of a constant in
+    * `values`, refuses with the rebuild hint.
+    */
+  private[graft] def storeLayout(spark: SparkSession, kind: String, store: String,
+      gen: Long, suffix: String, buckets: Int = 0, values: Seq[Given] = Nil): Layout = {
+    val of = s"$kind store '$store' generation $gen ('$suffix')"
+    val entry = catalogEntry(spark, storeTableName(store, gen, suffix))
+      .filter(_.bucketSpec.nonEmpty).getOrElse(throw new IllegalStateException(
+        s"$of has unreadable bucket metadata — refusing an append, fold or probe whose " +
+          "partitioning could diverge from the store (co-partitioned probing would " +
+          "silently void); rebuild the store"))
+    val layout = Layout(entry.bucketSpec.get.numBuckets, entry.storage.properties.collect {
+      case (k, v) if k.startsWith(LayoutPrefix) => k.stripPrefix(LayoutPrefix) -> v
+    }, of)
+    (Given("buckets", buckets, "the probe side would join mis-partitioned") +: values)
+      .foreach { g =>
+        val rec = if (g.key == "buckets") layout.buckets.toString else layout(g.key)
+        require(g.value == 0 || g.value == rec.toDouble,
+          s"${g.key}=${shown(g.value)} differs from $kind store '$store''s ${g.what} " +
+            s"($rec) — ${g.why}; pass 0 to derive the layout from the store")
+      }
+    layout
+  }
+
+  /** A given value as its caller wrote it: whole numbers without `.0`. */
+  private def shown(v: Double): String = if (v.isWhole) v.toLong.toString else v.toString
 
   // ---------------------------------------------------------------------
   // Store generations — atomic publish for multi-table stores.

@@ -249,6 +249,9 @@ class EtlSpec extends SparkSpecBase {
         Files.getLastModifiedTime(p).toMillis).toMap
       finally s.close()
     }
+    // the id reservations an earlier version kept beside the pile
+    Files.createDirectories(java.nio.file.Paths.get(s"$md/sync_log_ids"))
+    Files.createFile(java.nio.file.Paths.get(s"$md/sync_log_ids/4"))
     val before = pileFiles()
     // two processes opening the log at once import it once
     val stores = Seq.fill(2)(new MetadataStore(spark, md))
@@ -267,6 +270,21 @@ class EtlSpec extends SparkSpecBase {
     assert(stores.last.watermark("fact_events").contains(600L))
     assert(new MetadataStore(spark, md).history("fact_events").size == 4)
     assert(pileFiles() == before, "the parquet pile is never written again")
+    // age the import version past the trim's one-minute floor, then push
+    // it out of the newest 16: the trim that retires it deletes the pile
+    // and the reservations
+    Files.setLastModifiedTime(java.nio.file.Paths.get(s"$md/sync_log_v/v000000000000"),
+      java.nio.file.attribute.FileTime.fromMillis(0L))
+    (1 to 16).foreach(i => stores.head.appendLog("dim_region", "success", i.toLong, None))
+    assert(!logVersions(graft.sources.PosixStoreIO, md).contains("v000000000000"))
+    assert(!Files.exists(pile) && !Files.exists(java.nio.file.Paths.get(s"$md/sync_log_ids")),
+      "both legacy directories go with the import version")
+    // reopening reads the log as it stands and imports nothing again
+    val versions = logVersions(graft.sources.PosixStoreIO, md)
+    val reopened = new MetadataStore(spark, md)
+    assert(reopened.history("fact_events") == stores.head.history("fact_events"))
+    assert(reopened.history("fact_events").size == 4 && reopened.history("dim_region").size == 16)
+    assert(logVersions(graft.sources.PosixStoreIO, md) == versions, "no second import")
   }
 
   test("single-table targeted run loads exactly one entity") {

@@ -45,14 +45,14 @@ class FanOutSpec extends SparkSpecBase {
         (b: Int) => TextAnalysis.buildBm25Store(docs, "fan_bm25", buckets = b)),
       ("fan_bpe", Seq("dict", "merges"), "dict",
         (b: Int) => Bpe.buildDictStore(t, "fan_bpe", numMerges = 2, buckets = b)))
-    def built(name: String, suffix: String): Option[Int] = Warehouse.bucketCount(spark,
-      Warehouse.storeTableName(name, Warehouse.resolveGeneration(spark, name), suffix))
+    def built(name: String, suffix: String): Int = Warehouse.storeLayout(spark,
+      "fan-out", name, Warehouse.resolveGeneration(spark, name), suffix).buckets
     for ((name, suffixes, bucketed, build) <- stores) {
       Warehouse.dropStore(spark, name, suffixes)
       build(0)
-      assert(built(name, bucketed).contains(width), s"$name default build")
+      assert(built(name, bucketed) == width, s"$name default build")
       build(8)
-      assert(built(name, bucketed).contains(8), s"$name explicit buckets = 8")
+      assert(built(name, bucketed) == 8, s"$name explicit buckets = 8")
       Warehouse.dropStore(spark, name, suffixes)
     }
   }
@@ -106,5 +106,14 @@ class FanOutSpec extends SparkSpecBase {
       .filterNot(_.endsWith("graft/operators/Loop.scala"))
     assert(offenders.isEmpty,
       s"run the loop through graft.operators.Loop instead of calling reframed in: ${offenders.mkString(", ")}")
+  }
+
+  test("only the warehouse names the store layout record's property prefix") {
+    // a store's build constants are read and written through
+    // Warehouse.writeBucketed and Warehouse.storeLayout alone; an
+    // operator touching the catalog properties itself would fork the rule
+    val users = mainSourcesUsing("graft.layout.")
+    assert(users.map(_.toString) == Seq("src/main/scala/graft/sources/Warehouse.scala"),
+      s"only Warehouse may name the layout prefix, found in: ${users.mkString(", ")}")
   }
 }

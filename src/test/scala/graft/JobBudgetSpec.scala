@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.etl.{MetadataStore, Pipeline, PipelineRunner}
+import graft.operators.Dedup
 import graft.sources.Tables
 
 /** Driver-job budgets, counted with [[Phase.record]]: each case pins the
@@ -83,5 +84,60 @@ class JobBudgetSpec extends SparkSpecBase {
     assert(rounds == 9, s"the path closes in 9 rounds, got $rounds")
     // measured: 5 setup jobs plus 19 over the 9 rounds
     assert(jobs <= 24L, s"the 99-hop propagation launched $jobs jobs, budget 24")
+  }
+
+  // The store layer. Each store is built outside the counted phase; the
+  // counted operation is the call plus, for a probe, collecting its rows.
+  // Reading the store's layout launches no job.
+  private def docs(lo: Int, hi: Int) =
+    Tables(spark, sfDir).documents.filter(col("doc_id") >= lo && col("doc_id") < hi)
+
+  /** Jobs of `op` against a store `build` made fresh over docs < 200. */
+  private def storeJobs(name: String, suffixes: Seq[String], build: => Unit)(
+      op: => Unit): Long = {
+    graft.sources.Warehouse.dropStore(spark, name, suffixes)
+    build
+    try jobsOf(s"budget.$name")(op)
+    finally graft.sources.Warehouse.dropStore(spark, name, suffixes)
+  }
+
+  private def signatureJobs(name: String)(op: => Unit): Long =
+    storeJobs(name, Seq("sigs", "bands"), Dedup.buildSignatureStore(docs(0, 200), name))(op)
+
+  test("a signature-store probe stays within its job budget") {
+    val jobs = signatureJobs("budget_sig_probe") {
+      Dedup.minhashIncrementalAgainstStore("budget_sig_probe", docs(200, 250)).collect()
+    }
+    assert(jobs <= 8L, s"the signature probe launched $jobs jobs, budget 8")
+  }
+
+  test("a signature-store append stays within its job budget") {
+    val jobs = signatureJobs("budget_sig_append") {
+      Dedup.appendToSignatureStore(docs(200, 250), "budget_sig_append")
+    }
+    assert(jobs <= 9L, s"the signature append launched $jobs jobs, budget 9")
+  }
+
+  test("a signature-store takedown fold stays within its job budget") {
+    val jobs = signatureJobs("budget_sig_fold") {
+      Dedup.removeFromSignatureStore(docs(0, 20).select(col("doc_id")), "budget_sig_fold")
+    }
+    assert(jobs <= 7L, s"the signature takedown fold launched $jobs jobs, budget 7")
+  }
+
+  test("a novelty-store probe stays within its job budget") {
+    val jobs = storeJobs("budget_nov_probe", Seq("shdf"),
+      Dedup.buildNoveltyStore(docs(0, 200), "budget_nov_probe")) {
+      Dedup.noveltyAgainstStore("budget_nov_probe", docs(200, 250)).collect()
+    }
+    assert(jobs <= 10L, s"the novelty probe launched $jobs jobs, budget 10")
+  }
+
+  test("a substring-store probe stays within its job budget") {
+    val jobs = storeJobs("budget_sub_probe", Seq("shingles"),
+      Dedup.buildSubstringStore(docs(0, 200), "budget_sub_probe")) {
+      Dedup.substringSpansAgainstStore("budget_sub_probe", docs(200, 250)).collect()
+    }
+    assert(jobs <= 5L, s"the substring probe launched $jobs jobs, budget 5")
   }
 }

@@ -73,9 +73,9 @@ class SessionScopeSpec extends SparkSpecBase {
       assert(raced == solo, "the labeling must not depend on concurrent work in the session")
       // a default build takes the session's width; a conf flipped by the
       // loop would have leaked its width into the racing build's buckets
-      val built = Warehouse.bucketCount(spark,
-        Warehouse.storeTableName(name, Warehouse.resolveGeneration(spark, name), "bands"))
-      assert(built.contains(spark.conf.get("spark.sql.shuffle.partitions").toInt), s"$built")
+      val built = Warehouse.storeLayout(spark, "signature", name,
+        Warehouse.resolveGeneration(spark, name), "bands").buckets
+      assert(built == spark.conf.get("spark.sql.shuffle.partitions").toInt, s"$built")
     } finally Warehouse.dropStore(spark, name, Seq("sigs", "bands"))
   }
 

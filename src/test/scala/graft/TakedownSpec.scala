@@ -434,21 +434,42 @@ class TakedownSpec extends SparkSpecBase {
     Seq("tk_nov2", "tk_nov2_ref").foreach(Warehouse.dropStore(spark, _, Seq("shdf")))
   }
 
-  test("a full takedown leaves an EMPTY novelty store that probes under the build k and says so when k is omitted") {
+  test("a full takedown keeps the recorded k: novelty and substring probes derive it") {
     Warehouse.dropStore(spark, "tk_nov3", Seq("shdf"))
+    Warehouse.dropStore(spark, "tk_sub3", Seq("shingles"))
     val small = corpus.filter(col("doc_id") < 20)
     Dedup.buildNoveltyStore(small, "tk_nov3")
     Dedup.removeFromNoveltyStore(small.select(col("doc_id"), col("text")), "tk_nov3")
-    // the recorded k left with the rows: deriving must say EMPTY (not
-    // "predates the recorded-k column"), and the build k still probes
-    val e = intercept[IllegalArgumentException](
-      Dedup.noveltyAgainstStore("tk_nov3", probeBatch.limit(5)))
-    assert(e.getMessage.contains("EMPTY"))
-    val scored = Dedup.noveltyAgainstStore("tk_nov3", probeBatch.limit(5), k = 3).collect()
-    assert(scored.nonEmpty && scored.forall(r =>
-      r.getAs[Long]("n_shingles") == 0 || r.getAs[Double]("novelty_frac") == 1.0),
+    Dedup.buildSubstringStore(small, "tk_sub3")
+    Dedup.removeFromSubstringStore(small.select(col("doc_id")), "tk_sub3")
+    def table(name: String, sfx: String) =
+      spark.table(Warehouse.storeTableName(name, Warehouse.resolveGeneration(spark, name), sfx))
+    assert(table("tk_nov3", "shdf").isEmpty && table("tk_sub3", "shingles").isEmpty)
+    assert(table("tk_nov3", "shdf").columns.toSeq == Seq("h", "df"),
+      "k is a layout record, never a column")
+    assert(table("tk_sub3", "shingles").columns.toSeq == Seq("h", "doc_id", "pos"))
+    // the emptied novelty store still derives its build k = 3: the probe
+    // without k shingles exactly like the one naming it
+    val batch = probeBatch.limit(5)
+    def scores(df: DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_shingles"),
+        r.getAs[Double]("novelty_frac"))).toSet
+    val derived = scores(Dedup.noveltyAgainstStore("tk_nov3", batch))
+    assert(derived.nonEmpty && derived == scores(Dedup.noveltyAgainstStore("tk_nov3", batch, k = 3)))
+    assert(derived.forall { case (_, n, f) => n == 0 || f == 1.0 },
       "an empty index scores every probed shingle novel")
+    // the substring store derives its build k = 8 and finds no spans
+    assert(Dedup.substringSpansAgainstStore("tk_sub3", batch).isEmpty)
+    Dedup.substringSpansAgainstStore("tk_sub3", batch, k = 8).collect()
+    // drifted explicit widths still refuse with their messages
+    val eN = intercept[IllegalArgumentException](
+      Dedup.noveltyAgainstStore("tk_nov3", batch, k = 5))
+    assert(eN.getMessage.contains("built width") && eN.getMessage.contains("pass 0 to derive"))
+    val eS = intercept[IllegalArgumentException](
+      Dedup.substringSpansAgainstStore("tk_sub3", batch, k = 5))
+    assert(eS.getMessage.contains("differs from substring store"))
     Warehouse.dropStore(spark, "tk_nov3", Seq("shdf"))
+    Warehouse.dropStore(spark, "tk_sub3", Seq("shingles"))
   }
 
   test("BM25 removal handles a legacy (n_docs, avgdl)-only stats table, and removing every doc reproduces the empty rebuild's stats") {
@@ -561,30 +582,55 @@ class TakedownSpec extends SparkSpecBase {
     Warehouse.dropStore(spark, "tk_nov4", Seq("shdf"))
   }
 
-  test("an emptied base derives k from a populated append segment; a drifted explicit k refuses (no silent total-miss)") {
+  test("after a full takedown an append takes the recorded k; a drifted explicit k refuses") {
     Warehouse.dropStore(spark, "tk_nov5", Seq("shdf"))
     val small = corpus.filter(col("doc_id") < 20)
     Dedup.buildNoveltyStore(small, "tk_nov5", k = 3)
     Dedup.removeFromNoveltyStore(small.select(col("doc_id"), col("text")), "tk_nov5")
-    // the empty store demands an explicit k for the first append...
     val batch = corpus.filter(col("doc_id") >= 20 && col("doc_id") < 40)
       .select(col("doc_id"), col("text"))
-    Dedup.appendToNoveltyStore(batch, "tk_nov5", k = 5)
-    // ...after which the layout derives k=5 FROM THE SEGMENT even though
-    // the base generation is empty (a base-only read would misreport the
-    // store as empty and let a wrong explicit k probe k=3 shingles
-    // against a k=5 index — zero collisions, everything falsely novel)
+    // a drifted k refuses before anything publishes (an index at k = 5
+    // would never match the k = 3 probes)
+    val e = intercept[IllegalArgumentException](
+      Dedup.appendToNoveltyStore(batch, "tk_nov5", k = 5))
+    assert(e.getMessage.contains("built width"))
+    assert(Warehouse.resolveSegmented(spark, "tk_nov5")._2.isEmpty)
+    // the append without k takes the recorded 3, and probing the
+    // absorbed batch itself finds every shingle seen
+    assert(Dedup.appendToNoveltyStore(batch, "tk_nov5").nonEmpty)
     val probed = Dedup.noveltyAgainstStore("tk_nov5", batch).collect()
     assert(probed.nonEmpty && probed.forall(r =>
       r.getAs[Long]("n_shingles") == 0 || r.getAs[Double]("novelty_frac") == 0.0),
-      "probing the absorbed batch itself under the derived k finds every shingle seen")
-    val e = intercept[IllegalArgumentException](
-      Dedup.noveltyAgainstStore("tk_nov5", batch, k = 3))
-    assert(e.getMessage.contains("built width"))
+      "the segment was written at the recorded k")
     Warehouse.dropStore(spark, "tk_nov5", Seq("shdf"))
   }
 
-  test("maintain on an EMPTIED cluster store refuses a defaulted threshold; publish derives the store's bucket layout") {
+  test("substring takedown → append → grow probes identically to a one-shot rebuild") {
+    def key(df: DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("dup_of"),
+        r.getAs[Int]("start_new"), r.getAs[Int]("start_old"),
+        r.getAs[Long]("span_tokens"))).toSet
+    Warehouse.dropStore(spark, "tk_sub4", Seq("shingles"))
+    Warehouse.dropStore(spark, "tk_sub4_ref", Seq("shingles"))
+    Dedup.buildSubstringStore(corpus.filter(col("doc_id") < 200), "tk_sub4")
+    Dedup.removeFromSubstringStore(
+      corpus.filter(col("doc_id") >= 100 && col("doc_id") < 150).select(col("doc_id")), "tk_sub4")
+    // the takedown fold keeps the build's column order, so the grow
+    // fold's positional union with the segment lines up
+    val folded = Warehouse.resolveGeneration(spark, "tk_sub4")
+    assert(spark.table(Warehouse.storeTableName("tk_sub4", folded, "shingles"))
+      .columns.toSeq == Seq("h", "doc_id", "pos"))
+    Dedup.appendToSubstringStore(corpus.filter(col("doc_id") >= 200), "tk_sub4")
+    Dedup.growSubstringStore("tk_sub4", spark)
+    Dedup.buildSubstringStore(corpus.filter(col("doc_id") < 100 || col("doc_id") >= 150),
+      "tk_sub4_ref")
+    val got = key(Dedup.substringSpansAgainstStore("tk_sub4", probeBatch))
+    assert(got == key(Dedup.substringSpansAgainstStore("tk_sub4_ref", probeBatch)))
+    assert(got.nonEmpty)
+    Seq("tk_sub4", "tk_sub4_ref").foreach(Warehouse.dropStore(spark, _, Seq("shingles")))
+  }
+
+  test("maintain on an emptied cluster store derives the recorded threshold; publish keeps the layout") {
     Warehouse.dropStore(spark, "tk_cl2_sig", Seq("bands", "sigs"))
     Warehouse.dropStore(spark, "tk_cl2", Seq("labels"))
     val half = corpus.filter(col("doc_id") < 50)
@@ -598,22 +644,26 @@ class TakedownSpec extends SparkSpecBase {
       batch, threshold = 0.0)
     Dedup.publishMaintainedClusters(labels, "tk_cl2")
     val g1 = Warehouse.resolveGeneration(spark, "tk_cl2")
-    assert(Warehouse.bucketCount(spark,
-      Warehouse.storeTableName("tk_cl2", g1, "labels")).contains(16),
-      "the maintained generation keeps the build's bucket count")
-    // and it carried the recorded threshold forward
-    val th = spark.table(Warehouse.storeTableName("tk_cl2", g1, "labels"))
-      .select(col("threshold")).limit(1).collect().head.getDouble(0)
-    assert(th == 0.7)
+    val layout = Warehouse.storeLayout(spark, "cluster", "tk_cl2", g1, "labels")
+    assert(layout.buckets == 16, "the maintained generation keeps the build's bucket count")
+    // and it carried the recorded threshold forward, as a layout record
+    assert(layout.double("threshold") == 0.7)
+    assert(spark.table(Warehouse.storeTableName("tk_cl2", g1, "labels"))
+      .columns.toSeq == Seq("doc_id", "cluster_id"))
     // empty the store: the takedown relabel over the emptied sig store
     Dedup.removeFromSignatureStore(half.select(col("doc_id")).distinct(), "tk_cl2_sig")
     Dedup.removeFromClusterStore(spark, "tk_cl2", "tk_cl2_sig")
-    // an EMPTIED stamped store must NOT silently fall back to the 0.5
-    // default (the silent clustering-definition drift); it demands an
-    // explicit threshold with an honest message
+    val g2 = Warehouse.resolveGeneration(spark, "tk_cl2")
+    assert(spark.table(Warehouse.storeTableName("tk_cl2", g2, "labels")).isEmpty)
+    // the emptied store still records 0.7: a defaulted maintain derives
+    // it (never the 0.5 default) and equals the explicit 0.7 one
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"))).toSet
+    assert(rows(Dedup.maintainClustersAgainstStore("tk_cl2", "tk_cl2_sig", corpus)) ==
+      rows(Dedup.maintainClustersAgainstStore("tk_cl2", "tk_cl2_sig", corpus, threshold = 0.7)))
     val eM = intercept[IllegalArgumentException](
-      Dedup.maintainClustersAgainstStore("tk_cl2", "tk_cl2_sig", batch))
-    assert(eM.getMessage.contains("EMPTY"))
+      Dedup.maintainClustersAgainstStore("tk_cl2", "tk_cl2_sig", batch, threshold = 0.5))
+    assert(eM.getMessage.contains("recorded build threshold"))
     Seq("tk_cl2_sig").foreach(Warehouse.dropStore(spark, _, Seq("bands", "sigs")))
     Seq("tk_cl2").foreach(Warehouse.dropStore(spark, _, Seq("labels")))
   }

@@ -242,38 +242,36 @@ class WarehouseSpec extends SparkSpecBase {
     Seq("novseg", "novseg_ref").foreach(Warehouse.dropStore(spark, _, Seq("shdf")))
   }
 
-  test("legacy stores without the recorded-k column: explicit k stands, missing k fails loudly") {
+  test("a store table written without a layout record refuses with the rebuild message") {
     import org.apache.spark.sql.functions.{col, count, explode, lit, size, array_distinct}
     import graft.functions.GraftFunctions.{ws_tokens, shingle_hashes}
     val t = Tables(spark, sfDir)
-    // hand-write a pre-k-column novelty store (h, df only) under the
-    // generation protocol — exactly what a store persisted before this
-    // round looks like on disk
-    Warehouse.dropStore(spark, "novlegacy", Seq("shdf"))
-    val gen = chain("novlegacy").claim()
+    // hand-write a novelty generation (h, df) bucketed like a build but
+    // with no recorded k, and publish it under the generation protocol
+    Warehouse.dropStore(spark, "novbare", Seq("shdf"))
+    val gen = chain("novbare").claim()
     val dsh = t.documents.filter(col("doc_id") < 250)
       .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
       .filter(size(col("tokens")) >= 3)
       .select(col("doc_id"), explode(array_distinct(shingle_hashes(col("tokens"), 3))).as("h"))
     Warehouse.writeBucketed(
       dsh.groupBy(col("h")).agg(count(lit(1)).as("df")),
-      Warehouse.storeTableName("novlegacy", gen, "shdf"), "h", 32)
-    chain("novlegacy").publishFull(gen)
+      Warehouse.storeTableName("novbare", gen, "shdf"), "h", 32)
+    chain("novbare").publishFull(gen)
     val batch = t.documents.filter(col("doc_id") >= 250)
-    // no k column + no explicit k → loud refusal, never a silent all-novel read
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Dedup.noveltyAgainstStore("novlegacy", batch)
+    // neither a derived nor an explicit k probes a store whose width is
+    // unknown: a guessed one reads every shingle novel
+    for (k <- Seq(0, 3)) {
+      val e = intercept[IllegalStateException](
+        graft.operators.Dedup.noveltyAgainstStore("novbare", batch, k = k))
+      assert(e.getMessage.contains("rebuild the store") && e.getMessage.contains("'k'"),
+        e.getMessage)
     }
-    assert(e.getMessage.contains("predates the recorded-k column"))
-    // the caller's explicit k stands and probes correctly
-    Warehouse.dropStore(spark, "novlegacy_ref", Seq("shdf"))
-    graft.operators.Dedup.buildNoveltyStore(
-      t.documents.filter(col("doc_id") < 250), "novlegacy_ref")
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("novelty_frac"))).toSet
-    assert(key(graft.operators.Dedup.noveltyAgainstStore("novlegacy", batch, k = 3)) ==
-      key(graft.operators.Dedup.noveltyAgainstStore("novlegacy_ref", batch)))
-    Seq("novlegacy", "novlegacy_ref").foreach(Warehouse.dropStore(spark, _, Seq("shdf")))
+    val eA = intercept[IllegalStateException](
+      graft.operators.Dedup.appendToNoveltyStore(batch, "novbare", k = 3))
+    assert(eA.getMessage.contains("rebuild the store"))
+    assert(Warehouse.resolveSegmented(spark, "novbare")._2.isEmpty, "nothing published")
+    Warehouse.dropStore(spark, "novbare", Seq("shdf"))
   }
 
   test("drop deletes managed data but never an external table's foreign location") {
@@ -940,8 +938,8 @@ class WarehouseSpec extends SparkSpecBase {
       "the store must be unchanged after the replayed append")
     // the derived bucket layout: the segment must carry the BASE's 8
     // buckets, not the session's default fan-out
-    assert(Warehouse.bucketCount(spark,
-      Warehouse.storeTableName("bm25replay", first.get, "postings")).contains(8),
+    assert(Warehouse.storeLayout(spark, "BM25", "bm25replay", first.get, "postings")
+      .buckets == 8,
       "the segment must inherit the base build's bucket layout")
     Warehouse.dropStore(spark, "bm25replay", Seq("postings", "stats"))
 
