@@ -28,6 +28,9 @@ object GraftSession {
     * graft picks explicitly ([[fanOut]]): range-partitioned rankings,
     * the as-of join's clustering, and the default bucket count of every
     * persisted store.
+    *
+    * The codegen cache holds [[CodegenCacheEntries]] compiled classes;
+    * see there.
     */
   def builder(master: String = "local[32]", shufflePartitions: Int = 32,
       initialPartitions: Int =
@@ -61,7 +64,28 @@ object GraftSession {
       // filtered postings unions) return, priced into the audited
       // plans.
       .config("spark.sql.unionOutputPartitioning", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
+
+  /** Size of Spark's JVM-wide cache of compiled generated classes (a
+    * static conf: the first session of the JVM fixes it). Spark keys the
+    * cache by (class loader, generated code), and a
+    * [[scoped]] child runs its tasks under its own executor class
+    * loader, so a child's classes are cached apart from its caller's.
+    * Spark's default of 100 entries is below graft's working set. One
+    * sf0.01 `dc3_canonical` call uses ~115 generated classes, the five
+    * keys of perfbench's `analytics_mix` ~185, and a whole
+    * `analytics_mix` run ~320 (set-up, ETL syncs, standings reads and
+    * the keys; 4 cores). At 100 every dc3 call missed the cache, and
+    * ~0.9 s of its ~2.2 s went to the compiler. Measured per timed
+    * `analytics_mix` iteration: 250 entries still recompiled 25–80
+    * classes; 500 and 1000 both compiled only the 2–4 whose code is new
+    * each round (literals of that round's sync). 500 is the smallest
+    * round size that holds the working set. Each cached class keeps its
+    * bytecode in metaspace (a few KB to tens of KB, so a few MB at the
+    * cap); a JVM run with `-XX:MaxMetaspaceSize` must leave room for it.
+    */
+  val CodegenCacheEntries: Int = 500
 
   /** The ONE fan-out rule: every partition count graft picks
     * explicitly — range-partition widths (`Ranking`, `AsOfJoin`) and

@@ -233,6 +233,16 @@ object Pipeline {
     * rewritten (dynamic partition overwrite).
     */
   def merge(existing: Option[DataFrame], fresh: DataFrame, keys: Seq[String],
+      version: Option[String]): DataFrame =
+    ranked(existing, fresh, keys, version).filter(col(Rank) === 1).drop(Rank)
+
+  /** The rank column of [[ranked]]: 1 marks a key's winner. */
+  private[etl] val Rank = "__rn"
+
+  /** [[merge]] before its filter: every existing and fresh row, numbered
+    * within its key in [[Rank]].
+    */
+  private[etl] def ranked(existing: Option[DataFrame], fresh: DataFrame, keys: Seq[String],
       version: Option[String]): DataFrame = {
     val unioned = existing match {
       case Some(e) =>
@@ -242,10 +252,7 @@ object Pipeline {
     }
     val ordering = (version.map(col(_).desc_nulls_last).toSeq :+ col("__gen").desc)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(ordering: _*)
-    unioned
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__gen")
+    unioned.withColumn(Rank, row_number().over(w)).drop("__gen")
   }
 }
 
@@ -434,10 +441,13 @@ object MetadataStore {
 /** The orchestrator (reference: main.py run loop). Warehouse tables are
   * dirs under `warehouseRoot`; each run is extract → merge → publish →
   * metadata, in dependency order. An unpartitioned table is a
-  * [[SnapshotTable]]: every load is one read-modify-write manifest
-  * commit, so racing runners compose instead of clobbering, every load
-  * is a version ([[tableAt]]), and readers see one snapshot. A
-  * partitioned table merges in place per touched partition
+  * [[SnapshotTable]]: every load is one keyed-merge manifest commit
+  * ([[SnapshotTable.mergeKeyed]]), which writes the increment's winners
+  * and rewrites only the directories holding rows they replace, so a
+  * post-race sync of new keys writes the increment, not a copy of the
+  * table. Racing runners compose instead of clobbering, every load is a
+  * version ([[tableAt]]), and readers see one snapshot. A partitioned
+  * table merges in place per touched partition
   * ([[Pipeline.mergeIntoPartitioned]]); a `mergeSink` replaces both.
   */
 final class PipelineRunner(
@@ -637,7 +647,7 @@ final class PipelineRunner(
 
   /** The shared merge→publish tail of [[runOne]] and [[backfill]]:
     * partitioned tables merge in place per touched partition; every
-    * other table commits a read-modify-write snapshot version. Returns
+    * other table commits a keyed-merge snapshot version. Returns
     * the merged row count (touched partitions for partitioned tables,
     * full table otherwise).
     */
@@ -653,18 +663,10 @@ final class PipelineRunner(
         Pipeline.mergeIntoPartitioned(spark, targetPath(spec.name), fresh,
           spec.keyColumns, spec.versionColumn, pc)
       case None =>
-        // read-modify-write: on a version conflict with a racing
-        // runner, the merge re-derives against the winner's fresh
-        // snapshot — neither runner's increment is lost. Each attempt
-        // counts its rows in its own materializing job, and the last
-        // attempt is the committed one
-        var rows: Observation = null
-        snapshotTable(spec.name).overwriteWith { existing =>
-          rows = Observation()
-          Pipeline.merge(existing, fresh, spec.keyColumns, spec.versionColumn)
-            .observe(rows, count(lit(1)).as("rows"))
-        }
-        rows.get("rows").asInstanceOf[Long]
+        // a keyed merge: on a version conflict with a racing runner it
+        // re-merges against the winner's snapshot, so neither runner's
+        // increment is lost
+        snapshotTable(spec.name).mergeKeyed(fresh, spec.keyColumns, spec.versionColumn)._2
     }
 
   private def runOne(spec: Pipeline.TableSpec, force: Boolean,

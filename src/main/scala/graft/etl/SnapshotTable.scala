@@ -13,8 +13,9 @@ final case class VersionConflictException(expected: Long)
   extends RuntimeException(s"snapshot version $expected was superseded by a concurrent commit")
 
 /** A minimal snapshot-isolated table format — the one way
-  * [[PipelineRunner]] publishes an unpartitioned table — re-expressing at
-  * file level what Delta/Iceberg-class formats do with transaction logs:
+  * [[PipelineRunner]] publishes an unpartitioned table, through the
+  * keyed merge [[mergeKeyed]] — re-expressing at file level what
+  * Delta/Iceberg-class formats do with transaction logs:
   *
   *  - data files are IMMUTABLE parquet directories under `root/data/`;
   *    a write never mutates an existing file
@@ -545,8 +546,9 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * overwrites, the later version's content stands (each remains
     * readable at its own version; nothing tears). A writer whose new
     * content DEPENDS on the current content (read-modify-write, e.g. a
-    * merge) must use [[overwriteWith]], which recomputes from the fresh
-    * snapshot on conflict instead of republishing a stale derivation.
+    * merge) must use [[overwriteWith]] or [[mergeKeyed]], which
+    * recompute from the fresh snapshot on conflict instead of
+    * republishing a stale derivation.
     */
   def overwrite(df: DataFrame): Long = commit("overwrite") { _ =>
     val d = writeData(df)
@@ -612,6 +614,74 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
       Some(cur => if (cur.map(_.version) == head.map(_.version)) Some(Seq(d)) else None)
     }
     (version, derived)
+  }
+
+  /** Keyed merge: [[Pipeline.merge]]'s last-write-wins upsert of `fresh`
+    * on `keys`, committed as a version that writes only what changed.
+    * The winners of `fresh`, plus the surviving rows of every directory
+    * that lost at least one row to them, land as ONE new directory; every
+    * other directory stays in the manifest by reference. A sync of new
+    * keys therefore writes the increment alone, and a revision rewrites
+    * the directories holding the revised keys, not the table.
+    *
+    * One job reads the table once: the merged frame is checkpointed,
+    * and an `Observation` on that same job yields the table's row count
+    * and the directories that lost rows. A merge that neither adds a
+    * winner nor replaces a row commits nothing and returns the head's
+    * version. A merge whose result schema differs from the table's
+    * rewrites every directory, since a plain [[read]] takes its schema
+    * from one file. Each merge adds at most one directory; [[compact]]
+    * bounds the count.
+    *
+    * Concurrency is [[overwriteWith]]'s: any commit since the merge
+    * read its snapshot makes the attempt stale, and it merges again
+    * against the winner's. Two merges can never both keep a key.
+    * Returns (committed version, the merged table's row count).
+    */
+  def mergeKeyed(fresh: DataFrame, keys: Seq[String], version: Option[String]): (Long, Long) =
+    mergeKeyedWithHook(fresh, keys, version, () => ())
+
+  /** [[mergeKeyed]] with a test seam fired between the data write and
+    * the commit: specs inject a racing commit deterministically.
+    */
+  private[graft] def mergeKeyedWithHook(fresh: DataFrame, keys: Seq[String],
+      version: Option[String], beforeCommit: () => Unit): (Long, Long) = {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{col, collect_set, count, element_at, input_file_name,
+      lit, split, when}
+    val Dir = "__graft_dir"
+    val dir = col(Dir)
+    val rank = col(Pipeline.Rank)
+    var rows = 0L
+    val committedVersion = commit("keyed merge") { head =>
+      val live = head.filter(_.dirs.nonEmpty)
+      // each existing row carries its directory: the parent of its file
+      val existing = live.map(s => read(Some(s.version))
+        .withColumn(Dir, element_at(split(input_file_name(), "/"), -2)))
+      val stats = Observation()
+      val merged = Pipeline.ranked(existing,
+          fresh.withColumn(Dir, lit(null).cast("string")), keys, version)
+        .observe(stats, count(when(rank === 1, 1)).as("rows"),
+          count(when(rank === 1 && dir.isNull, 1)).as("fresh"),
+          collect_set(when(rank > 1, dir)).as("lost"))
+        .filter(rank === 1).drop(Pipeline.Rank)
+        .localCheckpoint(true)
+      val m = stats.get
+      rows = m("rows").asInstanceOf[Long]
+      val all = live.fold(Seq.empty[String])(_.dirs)
+      def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType.catalogString)
+      val touched =
+        if (existing.forall(e => shape(e) == shape(merged))) m("lost").asInstanceOf[Iterable[String]].toSet
+        else all.toSet
+      if (head.isDefined && touched.isEmpty && m("fresh") == 0L) None
+      else {
+        val d = writeData(merged.filter(dir.isNull || dir.isin(touched.toSeq: _*)).drop(Dir))
+        beforeCommit()
+        val dirs = all.filterNot(touched) :+ d
+        Some(cur => if (cur.map(_.version) == head.map(_.version)) Some(dirs) else None)
+      }
+    }
+    (committedVersion, rows)
   }
 
   /** Compact the table's physical layout: rewrite the current

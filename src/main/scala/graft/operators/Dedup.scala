@@ -195,7 +195,7 @@ object Dedup {
     * cleanup unpublishes.
     */
   private def writeSignatureGeneration(docs: DataFrame, name: String, gen: Long,
-      layout: Warehouse.Layout, maxBandBucket: Option[Long]): Unit = {
+      layout: Warehouse.Layout, maxBandBucket: Option[Long]): Long = {
     val spark = docs.sparkSession
     // hash the batch text ONCE into an eager checkpoint, then publish
     // the sigs table and the band index from the same frame
@@ -205,7 +205,8 @@ object Dedup {
     // will contain — so the hash→band chain keeps its single
     // definition. (Measured: the two sequential publishes were ~2/3 of
     // every store phase's wall at sf0.1.)
-    val hashed = spreadIfNarrow(docs.select(col("doc_id"), col("text")))
+    val (input, rows) = counted(spreadIfNarrow(docs.select(col("doc_id"), col("text"))))
+    val hashed = input
       .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
       .filter(size(col("tokens")) > 1)
       .select(col("doc_id"),
@@ -213,6 +214,7 @@ object Dedup {
       .localCheckpoint(true)
     writeSignatureTables(spark, name, gen, layout, hashed, bandsOf(hashed, layout),
       maxBandBucket)
+    rows()
   }
 
   /** The band index of (doc_id, sig) rows under `layout`'s band count,
@@ -279,7 +281,7 @@ object Dedup {
       maxBandBucket: Option[Long] = Some(QuadraticGuardDefault)): Option[Long] = {
     val spark = docs.sparkSession
     Warehouse.appendSegmentWith[Warehouse.Layout](signatureStore(spark, name),
-      dedupeTag, docs.isEmpty,
+      dedupeTag,
       prepare = base => signatureLayout(spark, name, base),
       writeData = (gen, layout) =>
         writeSignatureGeneration(docs, name, gen, layout, maxBandBucket))
@@ -1015,13 +1017,15 @@ object Dedup {
     * over the union corpus (t23's stats rule at shingle granularity).
     */
   private def writeNoveltyGeneration(docs: DataFrame, name: String, gen: Long,
-      layout: Warehouse.Layout): Unit = {
+      layout: Warehouse.Layout): Long = {
     val k = layout.int("k")
-    val dsh = spreadIfNarrow(docs.select(col("doc_id"), col("text")))
+    val (input, rows) = counted(spreadIfNarrow(docs.select(col("doc_id"), col("text"))))
+    val dsh = input
       .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
       .filter(size(col("tokens")) >= k)
       .select(col("doc_id"), explode(array_distinct(shingle_hashes(col("tokens"), k))).as("h"))
     writeNoveltyTable(dsh.groupBy(col("h")).agg(count(lit(1)).as("df")), name, gen, layout)
+    rows()
   }
 
   private def writeNoveltyTable(hdf: DataFrame, name: String, gen: Long,
@@ -1050,7 +1054,7 @@ object Dedup {
       dedupeTag: Option[String] = None, k: Int = 0): Option[Long] = {
     val spark = docs.sparkSession
     Warehouse.appendSegmentWith[Warehouse.Layout](noveltyStore(spark, name),
-      dedupeTag, docs.isEmpty,
+      dedupeTag,
       prepare = base => noveltyLayout(spark, name, base, k),
       writeData = (gen, layout) => writeNoveltyGeneration(docs, name, gen, layout))
   }
@@ -1445,11 +1449,12 @@ object Dedup {
     * caller's guarded cleanup unpublishes.
     */
   private def writeSubstringGeneration(docs: DataFrame, name: String, gen: Long,
-      layout: Warehouse.Layout, maxDf: Option[Long]): Unit = {
+      layout: Warehouse.Layout, maxDf: Option[Long]): Long = {
     val spark = docs.sparkSession
     val shinglesT = Warehouse.storeTableName(name, gen, "shingles")
     val k = layout.int("k")
-    val psh = spreadIfNarrow(docs.select(col("doc_id"), col("text")))
+    val (input, rows) = counted(spreadIfNarrow(docs.select(col("doc_id"), col("text"))))
+    val psh = input
       .select(col("doc_id"), ws_tokens(col("text")).as("tokens"))
       .filter(size(col("tokens")) >= k)
       .select(col("doc_id"), posexplode(shingle_hashes(col("tokens"), k)))
@@ -1467,6 +1472,7 @@ object Dedup {
             "(cap with d9's maxDf upstream or opt out with maxDf = None)")
       }
     }
+    rows()
   }
 
   /** The substring store's layout at `base`; a nonzero `k` or
@@ -1496,7 +1502,7 @@ object Dedup {
       maxDf: Option[Long] = Some(QuadraticGuardDefault)): Option[Long] = {
     val spark = docs.sparkSession
     Warehouse.appendSegmentWith[Warehouse.Layout](substringStore(spark, name),
-      dedupeTag, docs.isEmpty,
+      dedupeTag,
       prepare = base => substringLayout(spark, name, base, k),
       writeData = (gen, layout) => writeSubstringGeneration(docs, name, gen, layout, maxDf))
   }
@@ -1617,9 +1623,11 @@ object Dedup {
       oracleRounds: Option[Int] = None): DataFrame =
     // edges from the LSH pair graph — the pair source that scales (d4's
     // exact graph costs Σdf² and is the ground-truth/verify path, not the
-    // production one). The propagation is identical for any edge source.
-    clustersOfPairs(minhashLsh(t).select(col("doc_a"), col("doc_b")), maxIter,
-      oracleRounds)
+    // production one). The propagation is identical for any edge source,
+    // so it takes the unordered pairs: d2's presentation sort would be a
+    // range exchange the propagation's checkpoint throws away.
+    clustersOfPairs(minhashPairsOfSigs(hashedSigsOf(t.documents, 64), 64, 16, 0.5)
+      .select(col("doc_a"), col("doc_b")), maxIter, oracleRounds)
 
   /** The d6 propagation over ANY undirected pair graph (doc_a, doc_b) —
     * minhash pairs (d6 itself), embedding-cosine pairs (dc8's semantic
@@ -1664,7 +1672,8 @@ object Dedup {
     // from verification)
     val spark = pairGraph.sparkSession
     val (edges, labels0) = graft.Phase("propagation.setup") {
-      val pairs = pairGraph.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
+      val (counting, pairCount) = counted(pairGraph.select(col("doc_a"), col("doc_b")))
+      val pairs = counting.localCheckpoint(true)
       // Scale-adaptive loop layout (guide §2): derive the layout from the
       // MATERIALIZED edge count instead of inheriting a cluster-wide
       // default that is 32× too wide at bench scale and could be 1000×
@@ -1692,7 +1701,7 @@ object Dedup {
       // `localCheckpoint` preserves both), so no round ever exchanges or
       // sorts the 2|E| edge rows again. Only label-sized streams move per
       // round.
-      val nEdges = 2L * pairs.count()
+      val nEdges = 2L * pairCount()
       val para = spark.sparkContext.defaultParallelism
       val latencyBound = nEdges < PropagationRowsPerCoreFloor * para
       val parts =
@@ -1718,10 +1727,10 @@ object Dedup {
         "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> parts.toString))
       val staticPairs = GraftSparkInterop.ofRows(static, pairs)
-      val l = staticPairs.select(col("doc_a").as("doc_id"))
+      val (labeling, verts) = counted(staticPairs.select(col("doc_a").as("doc_id"))
         .unionByName(staticPairs.select(col("doc_b").as("doc_id")))
-        .distinct().withColumn("label", col("doc_id"))
-        .localCheckpoint(true)
+        .distinct().withColumn("label", col("doc_id")))
+      val l = labeling.localCheckpoint(true)
       // pre-partitioning the edge list pays exactly when the per-round
       // neighbor join will NOT broadcast the labeling: in the
       // latency-bound regime (static SMJ rounds), and at vert counts
@@ -1735,7 +1744,7 @@ object Dedup {
       val eBase = staticPairs
         .unionByName(staticPairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       val e =
-        (if (latencyBound || l.count() > PropagationBroadcastableVerts)
+        (if (latencyBound || verts() > PropagationBroadcastableVerts)
           eBase.repartition(parts, col("doc_b")).sortWithinPartitions("doc_b")
         else eBase).localCheckpoint(true)
       val roundSession = if (latencyBound) static else spark

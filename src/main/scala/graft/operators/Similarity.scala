@@ -245,18 +245,23 @@ object Similarity {
     val spark = inc.sparkSession
     // the whole retry/cleanup protocol lives ONCE in
     // [[graft.sources.Warehouse.appendSegmentWith]] (committed-tag
-    // skip, empty-increment guard — checked on the raw increment since
-    // assignNearest is row-preserving, BEFORE any base resolve/centroid
-    // read — atomic publish-or-refuse, and the provably-unpublished
+    // skip, empty-increment guard — the raw increment's rows, counted by
+    // the segment write itself since assignNearest is row-preserving —
+    // atomic publish-or-refuse, and the provably-unpublished
     // cleanup guard). This wrapper contributes the IVF specifics: the
     // batch is assigned against the LIVE base's frozen centroids, per
     // attempt, so a re-append after a lost race routes against the
     // winner's centroids.
-    Warehouse.appendSegmentWith[DataFrame](Warehouse.pathStore(path),
-      dedupeTag, inc.isEmpty,
-      prepare = base => assignNearest(inc, spark.read.parquet(Warehouse.pathGenModel(path, base))),
-      writeData = (gen, assigned) => assigned.write.mode("overwrite")
-        .partitionBy("cid").parquet(Warehouse.pathGenData(path, gen)),
+    Warehouse.appendSegmentWith[(DataFrame, () => Long)](Warehouse.pathStore(path),
+      dedupeTag,
+      prepare = base => {
+        val (input, rows) = counted(inc)
+        (assignNearest(input, spark.read.parquet(Warehouse.pathGenModel(path, base))), rows)
+      },
+      writeData = { case (gen, (assigned, rows)) =>
+        assigned.write.mode("overwrite").partitionBy("cid").parquet(Warehouse.pathGenData(path, gen))
+        rows()
+      },
       beforePublish = beforePublish)
   }
 

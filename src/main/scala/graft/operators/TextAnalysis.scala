@@ -823,10 +823,11 @@ object TextAnalysis {
     * union corpus.
     */
   private def writeBm25Generation(docs: DataFrame, name: String, gen: Long,
-      buckets: Int): Unit = {
+      buckets: Int): Long = {
     import graft.sources.Warehouse
     val toks = ws_tokens(col("text"))
-    val perDoc = spreadIfNarrow(docs.select(col("doc_id"), col("text")))
+    val (input, rows) = counted(spreadIfNarrow(docs.select(col("doc_id"), col("text"))))
+    val perDoc = input
       .select(col("doc_id"), size(toks).cast("double").as("dl"), toks.as("toks"))
       .localCheckpoint(true)
     val postings = perDoc
@@ -845,6 +846,7 @@ object TextAnalysis {
           sum(col("dl")).as("dl_sum"))
         .write.format("parquet")
         .saveAsTable(Warehouse.storeTableName(name, gen, "stats"))))
+    rows()
   }
 
   /** t23: INCREMENTAL index ingest — append a batch of new documents to
@@ -888,7 +890,7 @@ object TextAnalysis {
     // never a caller-repeated parameter; unreadable metadata refuses
     // the append instead of guessing.
     Warehouse.appendSegmentWith[Int](bm25Store(spark, name),
-      dedupeTag, docs.isEmpty,
+      dedupeTag,
       prepare = base => Warehouse.storeLayout(spark, "BM25", name, base, "postings").buckets,
       writeData = (gen, layout) => writeBm25Generation(docs, name, gen, layout),
       beforePublish = beforePublish)

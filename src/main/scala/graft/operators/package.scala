@@ -1,9 +1,19 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Shared plumbing for the operator family. */
 package object operators {
+
+  /** `df` plus a row count taken by whichever job first evaluates it (an
+    * eager checkpoint, a table write): `rows()` blocks until that job has
+    * run, and no count() action is ever added.
+    */
+  private[graft] def counted(df: DataFrame): (DataFrame, () => Long) = {
+    val o = Observation()
+    (df.observe(o, count(lit(1)).as("rows")), () => o.get("rows").asInstanceOf[Long])
+  }
 
   /** Spread a narrow scan over all cores ONLY when it actually is narrow.
     *

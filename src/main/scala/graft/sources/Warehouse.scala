@@ -359,42 +359,46 @@ object Warehouse {
     *
     *   1. a committed `dedupeTag` means the batch already landed —
     *      skip (the tag commits atomically with its segment's publish);
-    *   2. an empty increment publishes nothing;
-    *   3. loop: resolve the live base → `prepare` the per-attempt
+    *   2. loop: resolve the live base → `prepare` the per-attempt
     *      context (bucket layout, centroids) → claim → `writeData` →
     *      `beforePublish` (test seam) → atomic publish;
+    *   3. `writeData` returns the batch's row count, observed on its own
+    *      write job (no separate emptiness action): an empty increment
+    *      reclaims the claimed generation and publishes nothing;
     *   4. [[SupersededBaseException]] = lost the race BEFORE anything
     *      became visible: reclaim the never-published generation and
     *      re-append against the winner (bounded at 5 attempts);
     *   5. any other failure runs the guarded cleanup and rethrows.
     */
   private[graft] def appendSegmentWith[C](store: Store,
-      dedupeTag: Option[String], isEmpty: => Boolean,
+      dedupeTag: Option[String],
       prepare: Long => C,
-      writeData: (Long, C) => Unit,
+      writeData: (Long, C) => Long,
       beforePublish: () => Unit = () => ()): Option[Long] =
     graft.Phase("store.append") {
       var published = Option.empty[Long]
-      if (!dedupeTag.exists(store.chain.tagCommitted) && !isEmpty) {
-        var attempt = 0
-        while (published.isEmpty) {
-          val (base, _) = store.resolveSegmented()
-          val ctx = prepare(base)
-          val gen = store.chain.claim()
-          try {
-            writeData(gen, ctx)
+      var done = dedupeTag.exists(store.chain.tagCommitted)
+      var attempt = 0
+      while (!done) {
+        val (base, _) = store.resolveSegmented()
+        val ctx = prepare(base)
+        val gen = store.chain.claim()
+        try {
+          if (writeData(gen, ctx) == 0L) reclaim(store, gen)
+          else {
             beforePublish()
             store.chain.publishSegment(gen, base, dedupeTag)
             published = Some(gen)
-          } catch {
-            case _: SupersededBaseException =>
-              reclaim(store, gen)
-              attempt += 1
-              require(attempt < 5,
-                s"${store.what}: append lost to $attempt consecutive concurrent rebuilds — " +
-                  "aborting (the batch is safe to replay)")
-            case e: Throwable => failed(store, gen, e)
           }
+          done = true
+        } catch {
+          case _: SupersededBaseException =>
+            reclaim(store, gen)
+            attempt += 1
+            require(attempt < 5,
+              s"${store.what}: append lost to $attempt consecutive concurrent rebuilds — " +
+                "aborting (the batch is safe to replay)")
+          case e: Throwable => failed(store, gen, e)
         }
       }
       published

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.etl.{MetadataStore, Pipeline, PipelineRunner}
+import graft.etl.{MetadataStore, Pipeline, PipelineRunner, SnapshotTable}
 import graft.sources.{CsvSource, Tables}
 
 class EtlSpec extends SparkSpecBase {
@@ -813,5 +813,97 @@ class EtlSpec extends SparkSpecBase {
     // absolute period keys of a NEW calendar all sort past the watermark,
     // so its first period resolves — no special-case branch needed
     assert(store.nextPeriod("fact_rounds", Seq(202401L, 202402L)).contains(202401L))
+  }
+
+  /** The data directories of `table`'s head (None: a pinned version). */
+  private def dirsOf(wh: String, table: String, version: Option[Long] = None): Seq[String] =
+    new SnapshotTable(spark, s"$wh/$table").snapshot(version).get.dirs
+
+  test("a post-race sync of new keys keeps every directory of the previous version") {
+    val (wh, md) = freshDirs()
+    val store = new MetadataStore(spark, md)
+    val runner = new PipelineRunner(spark, wh, store, specs, extracts())
+    val wm = 1705276800L
+    runner.run(Pipeline.PostRace, newWatermark = Some(wm))
+    val before = dirsOf(wh, "fact_events")
+    val n = runner.run(Pipeline.PostRace)("fact_events")
+    val after = dirsOf(wh, "fact_events")
+    assert(before.forall(after.contains), "every directory of the previous version stays by reference")
+    assert(after.size == before.size + 1, "the increment lands as one new directory")
+    val added = new SnapshotTable(spark, s"$wh/fact_events").read()
+    assert(n == added.count() && n == Tables(spark, sfDir).events.count())
+    assert(store.history("fact_events").last.records == n)
+  }
+
+  test("a backfill replaces only the directories holding revised keys") {
+    import spark.implicits._
+    val (wh, md) = freshDirs()
+    val store = new MetadataStore(spark, md)
+    val rSpecs = Seq(Pipeline.TableSpec("results", Pipeline.PostRace, Nil,
+      Seq("id"), versionColumn = Some("ver")))
+    var batch = Seq((1L, 1, "a", 1L), (2L, 1, "b", 1L))
+    val full: Map[String, Pipeline.Extract] = Map(
+      "results" -> ((s, _) => { import s.implicits._; batch.toDF("id", "round", "v", "ver") }))
+    val runner = new PipelineRunner(spark, wh, store, rSpecs, full)
+    runner.run(Pipeline.PostRace)
+    val round1 = dirsOf(wh, "results")
+    batch = Seq((3L, 2, "c", 1L), (4L, 2, "d", 1L))
+    runner.run(Pipeline.PostRace)
+    val round2 = dirsOf(wh, "results").filterNot(round1.contains)
+    batch = Seq((5L, 3, "e", 1L))
+    runner.run(Pipeline.PostRace)
+    val round3 = dirsOf(wh, "results").filterNot((round1 ++ round2).contains)
+    assert(Seq(round1, round2, round3).map(_.size) == Seq(1, 1, 1))
+
+    // round 2 revises key 3; the extract also carries round-1 rows the
+    // period filter must drop
+    batch = Seq((3L, 2, "C", 2L), (1L, 1, "CLOBBER", 9L))
+    assert(runner.backfill("results", Map("round" -> 2)) == 5L)
+    val head = dirsOf(wh, "results")
+    assert((round1 ++ round3).forall(head.contains), "directories without a revised key stay")
+    assert(!head.contains(round2.head), "the directory holding the revised key is replaced")
+    assert(head.size == 3)
+    val rows = runner.table("results").as[(Long, Int, String, Long)].collect().sortBy(_._1).toSeq
+    assert(rows == Seq((1L, 1, "a", 1L), (2L, 1, "b", 1L), (3L, 2, "C", 2L),
+      (4L, 2, "d", 1L), (5L, 3, "e", 1L)))
+    assert(store.history("results").last.records == 5L)
+  }
+
+  test("keyed merges over seeded deliveries equal Pipeline.merge over the full table") {
+    import spark.implicits._
+    val (wh, md) = freshDirs()
+    val store = new MetadataStore(spark, md)
+    val rSpecs = Seq(Pipeline.TableSpec("results", Pipeline.PostRace, Nil,
+      Seq("id"), versionColumn = Some("ver")))
+    val rnd = new scala.util.Random(7)
+    var batch = Seq.empty[(Long, Long, String)]
+    val full: Map[String, Pipeline.Extract] = Map(
+      "results" -> ((s, _) => { import s.implicits._; batch.toDF("id", "ver", "v") }))
+    val runner = new PipelineRunner(spark, wh, store, rSpecs, full)
+    var expected = Seq.empty[(Long, Long, String)]
+    (1 to 8).foreach { d =>
+      // distinct ids per delivery: a mix of new keys and revisions of old
+      // ones, each revision at a random (possibly older) version
+      batch = rnd.shuffle((0L until 40L).toList).take(3 + rnd.nextInt(8))
+        .map(id => (id, rnd.nextInt(4).toLong, s"d$d-$id"))
+      val prev = if (expected.isEmpty) None else Some(expected.toDF("id", "ver", "v"))
+      expected = Pipeline.merge(prev, batch.toDF("id", "ver", "v"), Seq("id"), Some("ver"))
+        .as[(Long, Long, String)].collect().toSeq.sortBy(_._1)
+      val n = runner.run(Pipeline.PostRace)("results")
+      val table = runner.table("results").select("id", "ver", "v")
+        .as[(Long, Long, String)].collect().toSeq.sortBy(_._1)
+      assert(table == expected, s"delivery $d: the keyed merge diverged from Pipeline.merge")
+      assert(n == expected.size && store.history("results").last.records == n,
+        s"delivery $d: the sync log's records must equal the table's row count")
+    }
+
+    // vacuum keeps every directory the head references
+    val st = new SnapshotTable(spark, s"$wh/results")
+    val head = st.snapshot().get.dirs
+    st.vacuum(keepVersions = 1, minAgeMs = 0L)
+    head.foreach(d => assert(Files.exists(java.nio.file.Paths.get(s"$wh/results/data/$d")),
+      s"vacuum removed $d, which the head references"))
+    assert(runner.table("results").select("id", "ver", "v")
+      .as[(Long, Long, String)].collect().toSeq.sortBy(_._1) == expected)
   }
 }

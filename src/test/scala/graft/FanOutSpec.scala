@@ -116,4 +116,13 @@ class FanOutSpec extends SparkSpecBase {
     assert(users.map(_.toString) == Seq("src/main/scala/graft/sources/Warehouse.scala"),
       s"only Warehouse may name the layout prefix, found in: ${users.mkString(", ")}")
   }
+
+  test("only the session factory names a codegen conf key") {
+    // the codegen cache is JVM-wide and sized once, from the working set
+    // GraftSession.CodegenCacheEntries records; a second writer of a
+    // codegen key would fork that rule
+    val users = mainSourcesUsing("spark.sql.codegen.")
+    assert(users.map(_.toString) == Seq("src/main/scala/graft/GraftSession.scala"),
+      s"only GraftSession may name a spark.sql.codegen key, found in: ${users.mkString(", ")}")
+  }
 }

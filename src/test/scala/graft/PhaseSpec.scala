@@ -124,8 +124,8 @@ class PhaseSpec extends SparkSpecBase {
       val stats = recorded {
         Phase("lifecycle") {
           Warehouse.build(store)(write(_, Seq(1L, 2L)))
-          Warehouse.appendSegmentWith[Unit](store, None, isEmpty = false,
-            prepare = _ => (), writeData = (g, _) => write(g, Seq(3L)))
+          Warehouse.appendSegmentWith[Unit](store, None,
+            prepare = _ => (), writeData = (g, _) => { write(g, Seq(3L)); 1L })
           Warehouse.fold(store)((base, segs) => Some(base +: segs))(
             write = (g, gens) => write(g, gens.flatMap(read)), beforePublish = () => ())
         }

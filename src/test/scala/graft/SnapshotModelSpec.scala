@@ -93,4 +93,68 @@ class SnapshotModelSpec extends SparkSpecBase {
       }
     }
   }
+
+  test("racing keyed merges keep one row per key and lose no update") {
+    import spark.implicits._
+    // keyed merges on k (version v: the larger v wins) interleaved with
+    // blind appends, which plant duplicate keys for the next merge to
+    // collapse. Every second merge is raced: between its data write and
+    // its commit another keyed merge commits, so the first must merge
+    // again against the winner's snapshot. The model of a merge is the
+    // largest v per key over the table and the batch.
+    Seq(5, 13).foreach { seed =>
+      val rnd = new Random(seed)
+      val root = java.nio.file.Files
+        .createTempDirectory(s"graft_keyedmodel$seed").resolve("t").toString
+      val st =
+        if (seed == 5) new SnapshotTable(spark, root)
+        else new SnapshotTable(spark, root, new graft.sources.InMemoryStoreIO())
+      def batch(): Seq[(Long, Long)] =
+        Seq.fill(1 + rnd.nextInt(6))((rnd.nextInt(12).toLong, rnd.nextInt(100).toLong))
+          .groupBy(_._1).map(_._2.head).toSeq
+      def keyed(rows: Seq[(Long, Long)]): Seq[(Long, Long)] =
+        rows.groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2).max) }.toSeq.sorted
+      def merge(b: Seq[(Long, Long)]): Long =
+        st.mergeKeyed(b.toDF("k", "v"), Seq("k"), Some("v"))._1
+      def readBack(v: Option[Long]): Seq[(Long, Long)] =
+        st.read(v).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+      var current: Seq[(Long, Long)] = Seq.empty
+      var history = Map.empty[Long, Seq[(Long, Long)]]
+      (1 to 12).foreach { i =>
+        if (i % 4 == 1) {
+          val b = batch()
+          val v = st.append(b.toDF("k", "v"))
+          current = (current ++ b).sorted
+          history += v -> current
+        } else if (i % 2 == 0) {
+          val b = batch()
+          val v = merge(b)
+          current = keyed(current ++ b)
+          history += v -> current
+        } else {
+          // a carries a key no batch draws, so it always changes the table
+          val (a, b) = (batch() :+ ((100L + i, 0L)), batch())
+          var raced = false
+          val (v, rows) = st.mergeKeyedWithHook(a.toDF("k", "v"), Seq("k"), Some("v"), () =>
+            if (!raced) {
+              raced = true
+              val rival = merge(b)
+              history += rival -> keyed(current ++ b)
+            })
+          assert(raced, s"[seed $seed] the rival merge ran")
+          current = keyed(current ++ b ++ a)
+          history += v -> current
+          assert(rows == current.size, s"[seed $seed] the merge counts the table it committed")
+        }
+        val now = readBack(None)
+        assert(now == current, s"[seed $seed] op $i: the head diverged from the model")
+        if (i % 4 != 1)
+          assert(now.map(_._1).distinct.size == now.size, s"[seed $seed] op $i: a key is duplicated")
+        history.foreach { case (v, rows) =>
+          assert(readBack(Some(v)) == rows, s"[seed $seed] version $v no longer reads its content")
+        }
+      }
+    }
+  }
 }

@@ -548,9 +548,9 @@ class StoreIOSpec extends SparkSpecBase {
           throw new RuntimeException("injected crash mid-delete"))): Unit
       })
     val res = graft.sources.Warehouse.appendSegmentWith[Long](store,
-      dedupeTag = Some("batch:1"), isEmpty = false,
+      dedupeTag = Some("batch:1"),
       prepare = identity,
-      writeData = (g, _) => { written += g; () },
+      writeData = (g, _) => { written += g; 1L },
       beforePublish = () => {
         if (!rivalFired) {
           rivalFired = true

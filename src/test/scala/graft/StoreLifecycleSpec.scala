@@ -50,8 +50,8 @@ class StoreLifecycleSpec extends SparkSpecBase {
 
   /** Append `ids` as a segment of the live base. */
   private def append(k: Kind, ids: Seq[Long]): Unit =
-    Warehouse.appendSegmentWith[Unit](k.store, None, isEmpty = false,
-      prepare = _ => (), writeData = (g, _) => k.write(g, ids)): Unit
+    Warehouse.appendSegmentWith[Unit](k.store, None,
+      prepare = _ => (), writeData = (g, _) => { k.write(g, ids); ids.size.toLong }): Unit
 
   /** Fold base ∪ segments into the next full generation, running
     * `beforePublish` before each conditional publish. Returns the
