@@ -240,19 +240,30 @@ object Pipeline {
   private[etl] val Rank = "__rn"
 
   /** [[merge]] before its filter: every existing and fresh row, numbered
-    * within its key in [[Rank]].
+    * within its key in [[Rank]]. A fresh row equal on the columns `same`
+    * to its key's existing row is a re-delivery: it ranks behind that
+    * row, so it replaces nothing (the merged content is the same either
+    * way; a keyed merge then writes only the rows that changed).
     */
   private[etl] def ranked(existing: Option[DataFrame], fresh: DataFrame, keys: Seq[String],
-      version: Option[String]): DataFrame = {
+      version: Option[String], same: Seq[String] = Nil): DataFrame = {
+    val gen = col("__gen")
+    val byKey = Window.partitionBy(keys.map(col): _*)
     val unioned = existing match {
       case Some(e) =>
         // old rows rank behind fresh rows at equal version
-        e.withColumn("__gen", lit(0)).unionByName(fresh.withColumn("__gen", lit(1)), allowMissingColumns = true)
+        val u = e.withColumn("__gen", lit(0))
+          .unionByName(fresh.withColumn("__gen", lit(1)), allowMissingColumns = true)
+        if (same.isEmpty) u
+        else {
+          val row = struct(same.map(col): _*)
+          val old = first(when(gen === 0, row), ignoreNulls = true).over(byKey)
+          u.withColumn("__gen", when(gen === 1 && (row <=> old), lit(-1)).otherwise(gen))
+        }
       case None => fresh.withColumn("__gen", lit(1))
     }
-    val ordering = (version.map(col(_).desc_nulls_last).toSeq :+ col("__gen").desc)
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ordering: _*)
-    unioned.withColumn(Rank, row_number().over(w)).drop("__gen")
+    val ordering = (version.map(col(_).desc_nulls_last).toSeq :+ gen.desc)
+    unioned.withColumn(Rank, row_number().over(byKey.orderBy(ordering: _*))).drop("__gen")
   }
 }
 
@@ -443,9 +454,9 @@ object MetadataStore {
   * metadata, in dependency order. An unpartitioned table is a
   * [[SnapshotTable]]: every load is one keyed-merge manifest commit
   * ([[SnapshotTable.mergeKeyed]]), which writes the increment's winners
-  * and rewrites only the directories holding rows they replace, so a
-  * post-race sync of new keys writes the increment, not a copy of the
-  * table. Racing runners compose instead of clobbering, every load is a
+  * and a delete file hiding the rows they replace, so a sync writes the
+  * increment, not a copy of the table or of the directories it revises.
+  * Racing runners compose instead of clobbering, every load is a
   * version ([[tableAt]]), and readers see one snapshot. A partitioned
   * table merges in place per touched partition
   * ([[Pipeline.mergeIntoPartitioned]]); a `mergeSink` replaces both.

@@ -22,7 +22,10 @@ final case class VersionConflictException(expected: Long)
   *  - table state is a [[graft.sources.CommitLog]] of manifests under
   *    `root/_manifests/` (the log a store's generation chain also
   *    rides); each version lists exactly the data directories visible
-  *    at that version
+  *    at that version, plus the delete files that hide single rows of
+  *    them (merge-on-read: a keyed merge records the rows it replaces
+  *    instead of rewriting their directories; every read filters them
+  *    out, and a [[compact]] folds them away)
   *  - a commit is an ATOMIC create-new of manifest N+1, so of two racing
   *    writers exactly ONE wins; the loser re-reads the new snapshot and
   *    reapplies its change (optimistic concurrency, no locks). Every
@@ -60,7 +63,18 @@ final case class VersionConflictException(expected: Long)
   */
 final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = PosixStoreIO) {
 
-  final case class Snapshot(version: Long, dirs: Seq[String])
+  /** One version: `dirs` are its manifest entries, the data directories
+    * ([[Snapshot.data]]) and the delete files ([[Snapshot.deletes]]).
+    */
+  final case class Snapshot(version: Long, dirs: Seq[String]) {
+    def data: Seq[String] = dirs.filterNot(isDeletes)
+    def deletes: Seq[String] = dirs.filter(isDeletes)
+  }
+
+  /** A delete file's entry name: `x-<id>`, a directory under `data/`
+    * holding one `_deletes` file (data directories are `d-<id>`).
+    */
+  private def isDeletes(entry: String): Boolean = entry.startsWith("x-")
 
   /** The table's root directory (specs inspect the on-disk layout). */
   def rootPath: String = root
@@ -124,11 +138,73 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
 
   private def readWith(version: Option[Long], mergeSchema: Boolean): DataFrame = {
     val snap = committed(version)
-    if (snap.dirs.isEmpty) spark.emptyDataFrame
-    else {
-      val r = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
-      r.parquet(snap.dirs.map(d => dataPath(d)): _*)
+    if (snap.data.isEmpty) spark.emptyDataFrame
+    else scan(snap, snap.data, mergeSchema)
+  }
+
+  /** The data directory a scanned row came from: its file's parent. */
+  private def dirOfRow: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{element_at, input_file_name, split}
+    element_at(split(input_file_name(), "/"), -2)
+  }
+
+  /** A deleted row's identity: its directory and its key as JSON. A
+    * keyed merge records the rows it replaces in this form, and every
+    * read compares each row's own against them. Each key is JSON'd as
+    * its full string form (binary as hex): `to_json` of a timestamp
+    * keeps milliseconds only, and two keys must never share an id.
+    */
+  private def rowId(schema: org.apache.spark.sql.types.StructType, dir: org.apache.spark.sql.Column,
+      keys: Seq[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, concat, hex, lit, struct, to_json}
+    val exact = keys.map { k =>
+      (if (schema(k).dataType == org.apache.spark.sql.types.BinaryType) hex(col(k))
+       else col(k).cast("string")).as(k)
     }
+    concat(dir, lit("\t"), to_json(struct(exact: _*)))
+  }
+
+  /** Read data directories `dirs` of `snap`, minus the rows its delete
+    * files hide. The delete files are read on the driver and applied as
+    * a filter, so a read launches no job of its own for them.
+    */
+  private def scan(snap: Snapshot, dirs: Seq[String], mergeSchema: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.not
+    val r = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
+    val scanned = dirs.toSet
+    deletesOf(snap).foldLeft(r.parquet(dirs.map(d => dataPath(d)): _*)) { case (df, (keys, ids)) =>
+      val hit = ids.filter(id => scanned(id.takeWhile(_ != '\t')))
+      if (hit.isEmpty) df else df.filter(not(rowId(df.schema, dirOfRow, keys).isin(hit.toSeq: _*)))
+    }
+  }
+
+  /** The rows `snap`'s delete files hide, grouped by the key columns
+    * their ids were taken on.
+    */
+  private def deletesOf(snap: Snapshot): Map[Seq[String], Set[String]] =
+    snap.deletes.map { x =>
+      val bytes = io.get(s"${dataPath(x)}/$DeletesFile").getOrElse(
+        throw new IllegalStateException(s"delete file $x is gone at $root (vacuumed?)"))
+      val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(bytes))
+      val lines = try new String(in.readAllBytes(), "UTF-8").split("\n", -1).toSeq finally in.close()
+      (lines.head.split("\t").toSeq, lines.tail.filter(_.nonEmpty).toSet)
+    }.groupMapReduce(_._1)(_._2)(_ ++ _)
+
+  private val DeletesFile = "_deletes.gz"
+
+  /** Write a delete file hiding the rows `ids` (see [[rowId]]): the key
+    * columns, then one id a line, gzipped (ids of one directory share
+    * its name as a prefix). Returns its entry name. Like a data
+    * directory it is invisible until a manifest names it.
+    */
+  private def writeDeletes(keys: Seq[String], ids: Seq[String]): String = {
+    val name = s"x-${java.util.UUID.randomUUID().toString.take(18)}"
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.util.zip.GZIPOutputStream(bytes)
+    try out.write((keys.mkString("\t") +: ids.sorted).mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    io.put(s"${dataPath(name)}/$DeletesFile", bytes.toByteArray)
+    name
   }
 
   /** SCHEMA-EVOLUTION read: the union schema across every committed
@@ -158,24 +234,26 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * append's diff therefore scans just that append, never table
     * history (the Delta/Iceberg CDF shortcut at file granularity). A
     * compaction rewrite shares no dirs, so both rewritten sides are
-    * read — and cancel to an EMPTY diff, spec-pinned.
+    * read — and cancel to an EMPTY diff, spec-pinned. Versions whose
+    * delete files differ hide different rows of the directories they
+    * share, so their diff reads both versions whole.
     */
   def diff(from: Long, to: Long): DataFrame = {
     val sf = committed(Some(from))
     val st = committed(Some(to))
-    val fromSet = sf.dirs.toSet
-    val toSet = st.dirs.toSet
-    def readDirs(dirs: Seq[String]): Option[DataFrame] =
-      if (dirs.isEmpty) None
-      else Some(spark.read.parquet(dirs.map(d => dataPath(d)): _*))
-    val added = readDirs(st.dirs.filterNot(fromSet))
-    val removed = readDirs(sf.dirs.filterNot(toSet))
+    val sameDeletes = sf.deletes.toSet == st.deletes.toSet
+    val fromSet = if (sameDeletes) sf.data.toSet else Set.empty[String]
+    val toSet = if (sameDeletes) st.data.toSet else Set.empty[String]
+    def readDirs(snap: Snapshot, dirs: Seq[String]): Option[DataFrame] =
+      if (dirs.isEmpty) None else Some(scan(snap, dirs))
+    val added = readDirs(st, st.data.filterNot(fromSet))
+    val removed = readDirs(sf, sf.data.filterNot(toSet))
     import org.apache.spark.sql.functions.lit
     (added, removed) match {
       case (None, None) =>
         // identical manifests (or both empty): an empty, SCHEMA-FUL diff
         // when any side has data, else the canonical empty frame
-        readDirs(st.dirs).orElse(readDirs(sf.dirs)) match {
+        readDirs(st, st.data).orElse(readDirs(sf, sf.data)) match {
           case Some(any) => any.limit(0).withColumn("change_type", lit(""))
           case None => spark.emptyDataFrame
         }
@@ -349,7 +427,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     */
   private[graft] def dirsMatching(colName: String, lo: Long, hi: Long,
       version: Option[Long] = None): Seq[String] = {
-    committed(version).dirs.filter { d =>
+    committed(version).data.filter { d =>
       statsOf(d).get(colName) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true
@@ -365,7 +443,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     val dirs = dirsMatching(colName, lo, hi, version)
     val base =
       if (dirs.isEmpty) read(version).limit(0)
-      else spark.read.parquet(dirs.map(d => dataPath(d)): _*)
+      else scan(committed(version), dirs)
     base.filter(col(colName) >= lo && col(colName) <= hi)
   }
 
@@ -387,7 +465,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     */
   private[graft] def dirsMatchingEq(colName: String, value: Long,
       version: Option[Long] = None): Seq[String] = {
-    committed(version).dirs.filter { d =>
+    committed(version).data.filter { d =>
       val zoneOk = statsOf(d).get(colName) match {
         case Some((mn, mx)) => value >= mn && value <= mx
         case None => true
@@ -412,7 +490,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     val dirs = dirsMatchingEq(colName, value, version)
     val base =
       if (dirs.isEmpty) read(version).limit(0)
-      else spark.read.parquet(dirs.map(d => dataPath(d)): _*)
+      else scan(committed(version), dirs)
     base.filter(col(colName) === value)
   }
 
@@ -442,7 +520,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * from the fresh snapshot.
     */
   def deleteWhere(predicate: org.apache.spark.sql.Column): Long =
-    deleteRewrite(snap => snap.dirs, predicate)
+    deleteRewrite(snap => snap.data, predicate)
 
   /** [[deleteWhere]] for a `[lo, hi]` range on a zone-mapped column:
     * candidates prune to the directories whose recorded zones admit the
@@ -487,7 +565,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
         if (candidates.isEmpty) Seq.empty[String]
         else {
           import org.apache.spark.sql.functions.input_file_name
-          val hitFiles = spark.read.parquet(candidates.map(dataPath): _*)
+          val hitFiles = scan(snap, candidates)
             .filter(predicate)
             .select(input_file_name().as("f")).distinct()
             .collect().map(_.getString(0))
@@ -504,7 +582,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
           // persist so the emptiness check and the write share ONE scan of
           // the surviving rows (unpersisted as soon as the dir is written —
           // on a wide takedown the double read would dominate the rewrite)
-          val kept = spark.read.parquet(dataPath(d)).filter(keepCond)
+          val kept = scan(snap, Seq(d)).filter(keepCond)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             if (kept.isEmpty) None // every row deleted: the dir just drops
@@ -527,7 +605,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
         // it commits one empty, schema-carrying directory instead of an
         // empty manifest (which reads as a zero-column frame)
         val emptied =
-          if (rewrites.isEmpty && snap.dirs.forall(touched.contains))
+          if (rewrites.isEmpty && snap.data.forall(touched.contains))
             Some(writeData(read(Some(snap.version)).limit(0)))
           else None
         // stale once a touched directory is no longer current (a
@@ -535,7 +613,8 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
         // rewrite could resurrect rows the other writer removed
         Some(_.filter(cur => touched.forall(cur.dirs.contains)).flatMap { cur =>
           val dirs = cur.dirs.flatMap(d => if (touched.contains(d)) rewrites.get(d) else Some(d))
-          if (dirs.nonEmpty) Some(dirs) else emptied.map(Seq(_))
+          // delete files alone hold no rows (and no schema)
+          if (dirs.exists(!isDeletes(_))) Some(dirs) else emptied.map(Seq(_))
         })
       }
     }
@@ -589,7 +668,10 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     val dd = new org.apache.hadoop.fs.Path(dataDir)
     val fs = dd.getFileSystem(graft.sources.HadoopFs.conf())
     target.dirs.foreach { d =>
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dataPath(d))))
+      val present =
+        if (isDeletes(d)) io.get(s"${dataPath(d)}/$DeletesFile").isDefined
+        else fs.exists(new org.apache.hadoop.fs.Path(dataPath(d)))
+      if (!present)
         throw new IllegalArgumentException(
           s"restore: version $version's data directory $d is gone (vacuumed) — cannot restore")
     }
@@ -617,21 +699,24 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   }
 
   /** Keyed merge: [[Pipeline.merge]]'s last-write-wins upsert of `fresh`
-    * on `keys`, committed as a version that writes only what changed.
-    * The winners of `fresh`, plus the surviving rows of every directory
-    * that lost at least one row to them, land as ONE new directory; every
-    * other directory stays in the manifest by reference. A sync of new
-    * keys therefore writes the increment alone, and a revision rewrites
-    * the directories holding the revised keys, not the table.
+    * on `keys`, committed as a version that writes only what changed:
+    * the winners of `fresh` land as ONE new directory, the rows they
+    * replace are hidden by ONE delete file (merge-on-read), and every
+    * existing directory stays in the manifest by reference. A sync
+    * writes the increment alone, whether it adds new keys or revises
+    * old ones, so what a merge stores follows what it was given, not
+    * the size of the directories its keys happen to live in. A fresh
+    * row equal in every column to the row it would replace is a
+    * re-delivery and replaces nothing.
     *
     * One job reads the table once: the merged frame is checkpointed,
     * and an `Observation` on that same job yields the table's row count
-    * and the directories that lost rows. A merge that neither adds a
+    * and the ids of the replaced rows. A merge that neither adds a
     * winner nor replaces a row commits nothing and returns the head's
     * version. A merge whose result schema differs from the table's
     * rewrites every directory, since a plain [[read]] takes its schema
-    * from one file. Each merge adds at most one directory; [[compact]]
-    * bounds the count.
+    * from one file. Each merge adds at most one directory and one
+    * delete file; [[compact]] folds both away.
     *
     * Concurrency is [[overwriteWith]]'s: any commit since the merge
     * read its snapshot makes the attempt stale, and it merges again
@@ -647,37 +732,47 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   private[graft] def mergeKeyedWithHook(fresh: DataFrame, keys: Seq[String],
       version: Option[String], beforeCommit: () => Unit): (Long, Long) = {
     import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{col, collect_set, count, element_at, input_file_name,
-      lit, split, when}
+    import org.apache.spark.sql.functions.{col, collect_set, count, lit, when}
     val Dir = "__graft_dir"
     val dir = col(Dir)
     val rank = col(Pipeline.Rank)
     var rows = 0L
     val committedVersion = commit("keyed merge") { head =>
-      val live = head.filter(_.dirs.nonEmpty)
+      val live = head.filter(_.data.nonEmpty)
       // each existing row carries its directory: the parent of its file
-      val existing = live.map(s => read(Some(s.version))
-        .withColumn(Dir, element_at(split(input_file_name(), "/"), -2)))
+      val existing = live.map(s => read(Some(s.version)).withColumn(Dir, dirOfRow))
+      // map columns cannot be compared: a table holding one replaces
+      // re-delivered rows too
+      val same = Option.when(!fresh.schema.catalogString.contains("map<"))(fresh.columns.toSeq)
       val stats = Observation()
-      val merged = Pipeline.ranked(existing,
-          fresh.withColumn(Dir, lit(null).cast("string")), keys, version)
+      val ranked = Pipeline.ranked(existing,
+        fresh.withColumn(Dir, lit(null).cast("string")), keys, version, same.getOrElse(Nil))
+      val merged = ranked
         .observe(stats, count(when(rank === 1, 1)).as("rows"),
           count(when(rank === 1 && dir.isNull, 1)).as("fresh"),
-          collect_set(when(rank > 1, dir)).as("lost"))
+          // a fresh loser has no directory, so its id is null
+          collect_set(when(rank > 1, rowId(ranked.schema, dir, keys))).as("replaced"))
         .filter(rank === 1).drop(Pipeline.Rank)
         .localCheckpoint(true)
       val m = stats.get
       rows = m("rows").asInstanceOf[Long]
+      val replaced = m("replaced").asInstanceOf[Iterable[String]].toSeq
       val all = live.fold(Seq.empty[String])(_.dirs)
       def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType.catalogString)
-      val touched =
-        if (existing.forall(e => shape(e) == shape(merged))) m("lost").asInstanceOf[Iterable[String]].toSet
-        else all.toSet
-      if (head.isDefined && touched.isEmpty && m("fresh") == 0L) None
-      else {
-        val d = writeData(merged.filter(dir.isNull || dir.isin(touched.toSeq: _*)).drop(Dir))
+      if (!existing.forall(e => shape(e) == shape(merged))) {
+        // a changed schema rewrites the whole table as one directory
+        val d = writeData(merged.drop(Dir))
         beforeCommit()
-        val dirs = all.filterNot(touched) :+ d
+        Some(cur => if (cur.map(_.version) == head.map(_.version)) Some(Seq(d)) else None)
+      } else if (head.isDefined && replaced.isEmpty && m("fresh") == 0L) None
+      else {
+        // rows replaced by another existing row (duplicates a blind append
+        // planted) need a delete file but no directory
+        val d = Option.when(head.isEmpty || m("fresh") != 0L)(
+          writeData(merged.filter(dir.isNull).drop(Dir)))
+        val x = Option.when(replaced.nonEmpty)(writeDeletes(keys, replaced))
+        beforeCommit()
+        val dirs = all ++ d ++ x
         Some(cur => if (cur.map(_.version) == head.map(_.version)) Some(dirs) else None)
       }
     }
@@ -687,7 +782,8 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   /** Compact the table's physical layout: rewrite the current
     * snapshot's data directories into `numPartitions` coalesced files
     * and commit a manifest referencing only the rewrite — the lakehouse
-    * OPTIMIZE maintenance step. A long-lived table accretes one
+    * OPTIMIZE maintenance step. The rewrite reads through the delete
+    * files, so it drops them too. A long-lived table accretes one
     * directory per append; at 100 TB that's the small-files problem
     * (listing cost, tiny scans, scheduler overhead), and compaction
     * restores a dense layout WITHOUT changing content: `coalesce`, not

@@ -835,7 +835,7 @@ class EtlSpec extends SparkSpecBase {
     assert(store.history("fact_events").last.records == n)
   }
 
-  test("a backfill replaces only the directories holding revised keys") {
+  test("a backfill keeps every directory and writes only the revised keys") {
     import spark.implicits._
     val (wh, md) = freshDirs()
     val store = new MetadataStore(spark, md)
@@ -855,14 +855,19 @@ class EtlSpec extends SparkSpecBase {
     val round3 = dirsOf(wh, "results").filterNot((round1 ++ round2).contains)
     assert(Seq(round1, round2, round3).map(_.size) == Seq(1, 1, 1))
 
-    // round 2 revises key 3; the extract also carries round-1 rows the
-    // period filter must drop
-    batch = Seq((3L, 2, "C", 2L), (1L, 1, "CLOBBER", 9L))
+    // round 2 revises key 3 and re-delivers key 4 unchanged; the extract
+    // also carries round-1 rows the period filter must drop
+    batch = Seq((3L, 2, "C", 2L), (4L, 2, "d", 1L), (1L, 1, "CLOBBER", 9L))
     assert(runner.backfill("results", Map("round" -> 2)) == 5L)
     val head = dirsOf(wh, "results")
-    assert((round1 ++ round3).forall(head.contains), "directories without a revised key stay")
-    assert(!head.contains(round2.head), "the directory holding the revised key is replaced")
-    assert(head.size == 3)
+    assert((round1 ++ round2 ++ round3).forall(head.contains), "every directory stays by reference")
+    val added = head.filterNot((round1 ++ round2 ++ round3).contains)
+    assert(added.size == 2, s"one directory and one delete file, got $added")
+    val (deletes, data) = added.partition(_.startsWith("x-"))
+    assert(spark.read.parquet(s"$wh/results/data/${data.head}").as[(Long, Int, String, Long)]
+      .collect().toSeq == Seq((3L, 2, "C", 2L)),
+      "the new directory holds the revised key alone; the re-delivered row replaces nothing")
+    assert(deletes.size == 1)
     val rows = runner.table("results").as[(Long, Int, String, Long)].collect().sortBy(_._1).toSeq
     assert(rows == Seq((1L, 1, "a", 1L), (2L, 1, "b", 1L), (3L, 2, "C", 2L),
       (4L, 2, "d", 1L), (5L, 3, "e", 1L)))

@@ -139,6 +139,41 @@ class SnapshotTableSpec extends SparkSpecBase {
     assert(t.compact() == v)
   }
 
+  test("keyed merge: delete files hide replaced rows on every read path; compact folds them") {
+    val t = fresh()
+    t.appendIndexed(Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)).toDF("id", "v", "ver"),
+      Seq("id"), Seq("id"))
+    val v0 = t.currentVersion.get
+    val (v1, n) = t.mergeKeyed(Seq((2L, "B", 2L), (4L, "d", 1L)).toDF("id", "v", "ver"),
+      Seq("id"), Some("ver"))
+    assert(n == 4L, "the merge reports the table's row count")
+    assert(t.mergeKeyed(Seq((3L, "c", 1L)).toDF("id", "v", "ver"), Seq("id"), Some("ver"))._1 == v1,
+      "a re-delivered row replaces nothing, so the merge commits nothing")
+    val snap = t.snapshot().get
+    assert(snap.data.size == 2 && snap.deletes.size == 1,
+      "the indexed directory stays; one delete file hides (2, b)")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "v").as[(Long, String)].collect().toSeq.sorted
+    val merged = Seq((1L, "a"), (2L, "B"), (3L, "c"), (4L, "d"))
+    assert(rows(t.read()) == merged)
+    assert(rows(t.readMerged()) == merged)
+    assert(rows(t.readWhere("id", 2L, 2L)) == Seq((2L, "B")), "zone-map reads honor the delete file")
+    assert(rows(t.readWhereEq("id", 2L)) == Seq((2L, "B")), "Bloom reads honor the delete file")
+    assert(t.diff(v0, v1).select("id", "v", "change_type").as[(Long, String, String)].collect()
+      .toSet == Set((2L, "b", "delete"), (2L, "B", "insert"), (4L, "d", "insert")),
+      "the update surfaces as its delete + insert pair")
+    // the copy-on-write delete rewrites the indexed directory through the
+    // delete file: the hidden (2, b) must not come back
+    t.deleteWhereEq("id", 1L)
+    assert(rows(t.read()) == merged.tail)
+    t.compact()
+    val compacted = t.snapshot().get
+    assert(compacted.data.size == 1 && compacted.deletes.isEmpty, "compaction folds the delete file")
+    assert(rows(t.read()) == merged.tail)
+    assert(rows(t.read(Some(v0))) == Seq((1L, "a"), (2L, "b"), (3L, "c")),
+      "the version before the merge stays readable")
+  }
+
   test("compact preserves an append that races the rewrite") {
     val t = fresh()
     (0 until 3).foreach(i => t.append(Seq((i.toLong, "x")).toDF("id", "v")))
