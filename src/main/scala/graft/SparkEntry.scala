@@ -319,20 +319,20 @@ object SparkEntry {
       // the corpus-table HALF of a takedown through the gate (d22 is
       // the derived-store half): three zone-mapped appends build a
       // SnapshotTable from the documents slice, a copy-on-write
-      // deleteWhereRange removes the takedown range (rewriting ONLY the
-      // admitting directory — the other two survive under their old
-      // names), and the post-delete read must equal DuckDB's filtered
-      // scan. A wrong rewrite (lost rows, resurrected rows, a
-      // mis-pruned directory) fails the oracle, not just a spec
+      // deleteWhere of a Where.Range removes the takedown range
+      // (rewriting ONLY the admitting directory — the other two survive
+      // under their old names), and the post-delete read must equal
+      // DuckDB's filtered scan. A wrong rewrite (lost rows, resurrected
+      // rows, a mis-pruned directory) fails the oracle, not just a spec
       import org.apache.spark.sql.functions.col
       val t = Tables(s, dir)
       val root = java.nio.file.Files.createTempDirectory("graft_q40_").toString + "/t"
       val st = new graft.etl.SnapshotTable(s, root)
       val docs = t.documents.select(col("doc_id"), col("source"), col("n_chars"))
-      st.appendIndexed(docs.filter(col("doc_id") < 150), Seq("doc_id"))
-      st.appendIndexed(docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), Seq("doc_id"))
-      st.appendIndexed(docs.filter(col("doc_id") >= 300), Seq("doc_id"))
-      st.deleteWhereRange("doc_id", 160L, 240L)
+      st.append(docs.filter(col("doc_id") < 150), Seq("doc_id"))
+      st.append(docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), Seq("doc_id"))
+      st.append(docs.filter(col("doc_id") >= 300), Seq("doc_id"))
+      st.deleteWhere(graft.etl.Where.Range("doc_id", 160L, 240L))
       st.read().orderBy(col("doc_id"))
     }),
     "q41_restore" -> ((s, dir) => {
@@ -349,10 +349,10 @@ object SparkEntry {
       val root = java.nio.file.Files.createTempDirectory("graft_q41_").toString + "/t"
       val st = new graft.etl.SnapshotTable(s, root)
       val docs = t.documents.select(col("doc_id"), col("source"), col("n_chars"))
-      st.appendIndexed(docs.filter(col("doc_id") < 150), Seq("doc_id"))
-      st.appendIndexed(docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), Seq("doc_id"))
-      val beforeDelete = st.appendIndexed(docs.filter(col("doc_id") >= 300), Seq("doc_id"))
-      st.deleteWhereRange("doc_id", 160L, 240L)
+      st.append(docs.filter(col("doc_id") < 150), Seq("doc_id"))
+      st.append(docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), Seq("doc_id"))
+      val beforeDelete = st.append(docs.filter(col("doc_id") >= 300), Seq("doc_id"))
+      st.deleteWhere(graft.etl.Where.Range("doc_id", 160L, 240L))
       st.restore(beforeDelete)
       st.read().orderBy(col("doc_id"))
     }),

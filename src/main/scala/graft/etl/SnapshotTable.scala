@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession, functions => F}
 
+import graft.functions.GraftBloom
 import graft.sources.{CommitLog, PosixStoreIO, StoreIO}
 
 /** Version-conflict signal for optimistic commits: the table advanced
@@ -11,6 +12,55 @@ import graft.sources.{CommitLog, PosixStoreIO, StoreIO}
   */
 final case class VersionConflictException(expected: Long)
   extends RuntimeException(s"snapshot version $expected was superseded by a concurrent commit")
+
+/** The rows a [[SnapshotTable]] read or delete selects. Each case
+  * carries both its exact row filter (`rows`) and the test that admits a
+  * data directory from its sidecars (`admits`), so what a delete filters
+  * and what it prunes can never disagree. A directory without the
+  * sidecar a case looks at is always admitted: skipping is never unsafe.
+  */
+sealed trait Where {
+  def rows: Column
+
+  /** Whether a directory whose zone map is `zone` and whose Bloom
+    * filters are `bloom` (both by column) can hold a selected row.
+    */
+  private[etl] def admits(zone: String => Option[(Long, Long)],
+      bloom: String => Option[Array[Byte]]): Boolean = true
+}
+
+object Where {
+  /** Any predicate: every directory is read. */
+  final case class Rows(predicate: Column) extends Where {
+    def rows: Column = predicate
+  }
+
+  /** `col` in `[lo, hi]`: directories whose zone map excludes the range
+    * are skipped.
+    */
+  final case class Range(col: String, lo: Long, hi: Long) extends Where {
+    def rows: Column = F.col(col) >= lo && F.col(col) <= hi
+    override private[etl] def admits(zone: String => Option[(Long, Long)],
+        bloom: String => Option[Array[Byte]]): Boolean =
+      zone(col).forall { case (mn, mx) => mx >= lo && mn <= hi }
+  }
+
+  /** `col = value`: directories whose zone map excludes the value, or
+    * whose Bloom filter says it is absent (no false negatives), are
+    * skipped — for an id or hash column, whose min/max spans everything,
+    * only the Bloom prunes at all.
+    */
+  final case class Eq(col: String, value: Long) extends Where {
+    def rows: Column = F.col(col) === value
+    override private[etl] def admits(zone: String => Option[(Long, Long)],
+        bloom: String => Option[Array[Byte]]): Boolean =
+      zone(col).forall { case (mn, mx) => value >= mn && value <= mx } &&
+        bloom(col).forall { bytes =>
+          val (nbits, k, words) = GraftBloom.fromBytes(bytes)
+          GraftBloom.probe(words, nbits, k, value)
+        }
+  }
+}
 
 /** A minimal snapshot-isolated table format — the one way
   * [[PipelineRunner]] publishes an unpartitioned table, through the
@@ -36,6 +86,10 @@ final case class VersionConflictException(expected: Long)
   *    files: every query sees one consistent snapshot regardless of
   *    concurrent commits (snapshot isolation); older versions stay
   *    readable (time travel) until explicitly vacuumed
+  *  - an append may record zone-map and Bloom sidecars in its data
+  *    directory; a [[Where]] prunes a [[read]] or a [[deleteWhere]] by
+  *    them, and every read of a data directory goes through one private
+  *    `scan`, which applies the delete files
   *  - the first commit refuses a root that already holds anything but
   *    `data/` and `_manifests/` (a plain-parquet table written another
   *    way): committing over it would hide its rows
@@ -100,13 +154,13 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   }
 
   /** The latest version committed at or before `tsMillis` — the
-    * manifest hard-link's mtime IS the commit instant (each tryCommit
+    * manifest hard-link's mtime IS the commit instant (each commit
     * writes a fresh temp file immediately before linking). Time travel
     * by wall clock: "what did this table look like when that run
-    * started". Among versions with mtime ≤ `tsMillis` the HIGHEST wins,
-    * so pathological clock skew between racing writers can widen but
-    * never un-order a pick; vacuumed versions are simply gone (their
-    * read fails loudly, same as `read(Some(v))`).
+    * started" is `read(Some(v))` with this `v`. Among versions with
+    * mtime ≤ `tsMillis` the HIGHEST wins, so pathological clock skew
+    * between racing writers can widen but never un-order a pick;
+    * vacuumed versions are simply gone (their read fails loudly).
     */
   def versionAsOf(tsMillis: Long): Option[Long] =
     log.versions().filter { v =>
@@ -116,17 +170,34 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
       log.committedAt(v).exists(_ <= tsMillis)
     }.lastOption
 
-  /** Read the table as of a wall-clock instant (see [[versionAsOf]]). */
-  def readAsOf(tsMillis: Long): DataFrame =
-    read(Some(versionAsOf(tsMillis).getOrElse(throw new IllegalStateException(
-      s"no version committed at or before $tsMillis at $root"))))
-
-  /** Read the table at a snapshot. Every file in the manifest is
-    * immutable, so the returned DataFrame is stable under concurrent
-    * commits — snapshot isolation without any read lock.
+  /** Read the rows `where` selects at a snapshot (the head, or a pinned
+    * version). Every file in the manifest is immutable, so the returned
+    * DataFrame is stable under concurrent commits — snapshot isolation
+    * without any read lock. Only the directories `where` admits
+    * ([[dirsMatching]]) are listed and read: on object storage every
+    * skipped directory saves its LIST and footer round-trips.
+    *
+    * `mergeSchema` is the SCHEMA-EVOLUTION read: the union schema across
+    * every read directory, with rows from pre-evolution appends
+    * null-filled in the columns they predate. A plain read samples ONE
+    * file for the schema, so a column added by a later append can
+    * silently VANISH from the result if the sampled file predates it —
+    * evolution is an explicit, loud choice: widened schemas merge, and a
+    * TYPE conflict on a same-named column fails the read with Spark's
+    * merge error instead of returning either type silently. Cost: one
+    * footer read per file instead of per sample.
     */
-  def read(version: Option[Long] = None): DataFrame =
-    readWith(version, mergeSchema = false)
+  def read(version: Option[Long] = None, where: Where = Where.Rows(F.lit(true)),
+      mergeSchema: Boolean = false): DataFrame = {
+    val snap = committed(version)
+    if (snap.data.isEmpty) spark.emptyDataFrame
+    else {
+      val dirs = dirsMatching(where, snap)
+      // no directory can match: an empty frame with the table's schema
+      if (dirs.isEmpty) scan(snap, snap.data, mergeSchema).limit(0)
+      else scan(snap, dirs, mergeSchema).filter(where.rows)
+    }
+  }
 
   private def noCommittedVersion(version: Option[Long] = None): Nothing =
     throw new IllegalStateException(
@@ -136,17 +207,8 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   private def committed(version: Option[Long] = None): Snapshot =
     snapshot(version).getOrElse(noCommittedVersion(version))
 
-  private def readWith(version: Option[Long], mergeSchema: Boolean): DataFrame = {
-    val snap = committed(version)
-    if (snap.data.isEmpty) spark.emptyDataFrame
-    else scan(snap, snap.data, mergeSchema)
-  }
-
   /** The data directory a scanned row came from: its file's parent. */
-  private def dirOfRow: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{element_at, input_file_name, split}
-    element_at(split(input_file_name(), "/"), -2)
-  }
+  private def dirOfRow: Column = F.element_at(F.split(F.input_file_name(), "/"), -2)
 
   /** A deleted row's identity: its directory and its key as JSON. A
     * keyed merge records the rows it replaces in this form, and every
@@ -154,27 +216,33 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * its full string form (binary as hex): `to_json` of a timestamp
     * keeps milliseconds only, and two keys must never share an id.
     */
-  private def rowId(schema: org.apache.spark.sql.types.StructType, dir: org.apache.spark.sql.Column,
-      keys: Seq[String]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, concat, hex, lit, struct, to_json}
+  private def rowId(schema: org.apache.spark.sql.types.StructType, dir: Column,
+      keys: Seq[String]): Column = {
     val exact = keys.map { k =>
-      (if (schema(k).dataType == org.apache.spark.sql.types.BinaryType) hex(col(k))
-       else col(k).cast("string")).as(k)
+      (if (schema(k).dataType == org.apache.spark.sql.types.BinaryType) F.hex(F.col(k))
+       else F.col(k).cast("string")).as(k)
     }
-    concat(dir, lit("\t"), to_json(struct(exact: _*)))
+    F.concat(dir, F.lit("\t"), F.to_json(F.struct(exact: _*)))
   }
 
   /** Read data directories `dirs` of `snap`, minus the rows its delete
-    * files hide. The delete files are read on the driver and applied as
-    * a filter, so a read launches no job of its own for them.
+    * files hide: the only code that reads a data directory. The delete
+    * files are read on the driver and applied as a filter, so a read
+    * launches no job of its own for them; a row's id is built only when
+    * its directory is one a delete file names.
     */
   private def scan(snap: Snapshot, dirs: Seq[String], mergeSchema: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.not
     val r = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
     val scanned = dirs.toSet
     deletesOf(snap).foldLeft(r.parquet(dirs.map(d => dataPath(d)): _*)) { case (df, (keys, ids)) =>
-      val hit = ids.filter(id => scanned(id.takeWhile(_ != '\t')))
-      if (hit.isEmpty) df else df.filter(not(rowId(df.schema, dirOfRow, keys).isin(hit.toSeq: _*)))
+      val hit = ids.filter(id => scanned(id.takeWhile(_ != '\t'))).toSeq
+      if (hit.isEmpty) df
+      else {
+        // one array literal: unlike an IN list, its generated code does
+        // not change with the number of directories named
+        val named = F.array_contains(F.typedLit(hit.map(_.takeWhile(_ != '\t')).distinct), dirOfRow)
+        df.filter(!(named && rowId(df.schema, dirOfRow, keys).isin(hit: _*)))
+      }
     }
   }
 
@@ -207,21 +275,6 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     name
   }
 
-  /** SCHEMA-EVOLUTION read: the union schema across every committed
-    * directory, with rows from pre-evolution appends null-filled in the
-    * columns they predate. Plain [[read]] samples ONE file for the
-    * schema, so after `append(df.withColumn("new_col", …))` a column
-    * added by a later append can silently VANISH from the result if the
-    * sampled file predates it — this read exists so evolution is an
-    * explicit, loud choice: widened schemas merge, and a TYPE conflict
-    * on a same-named column fails the read with Spark's merge error
-    * instead of returning either type silently (spec-asserted).
-    * Cost: one footer read per file instead of per sample — pay it on
-    * evolved tables, keep [[read]] for fixed-schema ones.
-    */
-  def readMerged(version: Option[Long] = None): DataFrame =
-    readWith(version, mergeSchema = true)
-
   /** Row-level CHANGES between two committed versions (CDC/change-data-
     * feed semantics without a key): multiset row differences tagged
     * `change_type` = `insert` (in `to`, not in `from`) or `delete` (in
@@ -248,38 +301,79 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
       if (dirs.isEmpty) None else Some(scan(snap, dirs))
     val added = readDirs(st, st.data.filterNot(fromSet))
     val removed = readDirs(sf, sf.data.filterNot(toSet))
-    import org.apache.spark.sql.functions.lit
     (added, removed) match {
       case (None, None) =>
         // identical manifests (or both empty): an empty, SCHEMA-FUL diff
         // when any side has data, else the canonical empty frame
         readDirs(st, st.data).orElse(readDirs(sf, sf.data)) match {
-          case Some(any) => any.limit(0).withColumn("change_type", lit(""))
+          case Some(any) => any.limit(0).withColumn("change_type", F.lit(""))
           case None => spark.emptyDataFrame
         }
-      case (Some(a), None) => a.withColumn("change_type", lit("insert"))
-      case (None, Some(r)) => r.withColumn("change_type", lit("delete"))
+      case (Some(a), None) => a.withColumn("change_type", F.lit("insert"))
+      case (None, Some(r)) => r.withColumn("change_type", F.lit("delete"))
       case (Some(a), Some(r)) =>
-        a.exceptAll(r).withColumn("change_type", lit("insert"))
-          .unionByName(r.exceptAll(a).withColumn("change_type", lit("delete")))
+        a.exceptAll(r).withColumn("change_type", F.lit("insert"))
+          .unionByName(r.exceptAll(a).withColumn("change_type", F.lit("delete")))
     }
   }
 
-  /** Write `df` as a new immutable data directory; returns its name.
-    * Not yet visible — only a committed manifest publishes it.
+  /** Bloom sidecar geometry: 2^17 bits (16 KiB) and 4 probes per column
+    * and directory. A probe decodes the geometry from each blob.
     */
-  private def writeData(df: DataFrame): String = {
+  private val BloomBits = 1 << 17
+  private val BloomK = 4
+
+  /** Write `df` as a new immutable data directory, with a zone-map
+    * sidecar (`_stats.json`: min/max of each long-typed `zoneCols`
+    * column) and a Bloom sidecar (`_bloom.json`: one filter per
+    * `bloomCols` column) inside it — underscore files, which parquet
+    * readers ignore. Returns its name and row count. Not yet visible:
+    * only a committed manifest publishes it.
+    *
+    * The row count and the sidecars' aggregates ride an `Observation`
+    * on the write job itself, so the input is evaluated exactly once
+    * and nothing is read back. A 0-row write records no sidecar, and a
+    * column NULL in every row gets no zone: a column without one is
+    * never pruned on.
+    */
+  private def writeData(df: DataFrame, zoneCols: Seq[String] = Nil,
+      bloomCols: Seq[String] = Nil): (String, Long) = {
+    import graft.functions.GraftFunctions.bloom_build
     val name = s"d-${java.util.UUID.randomUUID().toString.take(18)}"
-    df.write.parquet(dataPath(name))
-    name
+    val path = dataPath(name)
+    val zones = zoneCols.zipWithIndex.flatMap { case (c, i) =>
+      Seq(F.min(F.col(c)).cast("long").as(s"lo$i"), F.max(F.col(c)).cast("long").as(s"hi$i"))
+    }
+    val blooms = bloomCols.zipWithIndex.map { case (c, i) =>
+      bloom_build(F.col(c).cast("long"), BloomBits, BloomK).as(s"bloom$i")
+    }
+    val stats = Observation()
+    df.observe(stats, F.count(F.lit(1)).as("rows"), zones ++ blooms: _*).write.parquet(path)
+    val m = stats.get
+    val rows = m("rows").asInstanceOf[Long]
+    def sidecar(file: String, entries: Seq[Option[String]]): Unit =
+      if (rows > 0 && entries.exists(_.nonEmpty))
+        io.put(s"$path/$file", entries.flatten.mkString("{", ",", "}").getBytes("UTF-8"))
+    sidecar("_stats.json", zoneCols.zipWithIndex.map { case (c, i) =>
+      (m(s"lo$i"), m(s"hi$i")) match {
+        case (lo: Long, hi: Long) => Some(s""""$c":{"min":$lo,"max":$hi}""")
+        case _ => None
+      }
+    })
+    sidecar("_bloom.json", bloomCols.zipWithIndex.map { case (c, i) =>
+      Option(m(s"bloom$i").asInstanceOf[Array[Byte]])
+        .map(b => s""""$c":"${java.util.Base64.getEncoder.encodeToString(b)}"""")
+    })
+    (name, rows)
   }
 
   /** Publish `dirs` as version `expected + 1` (expected = -1 for the
     * first commit) through the [[CommitLog]]: a concurrent commit of the
     * same version loses deterministically and no reader ever sees a
-    * partial manifest.
+    * partial manifest. Only `restore` commits this way; every other
+    * writer runs [[commit]]'s loop.
     */
-  def tryCommit(expected: Long, dirs: Seq[String]): Long =
+  private def tryCommit(expected: Long, dirs: Seq[String]): Long =
     if (log.tryCommit(expected, Snapshot(expected + 1, dirs))) expected + 1
     else throw VersionConflictException(expected)
 
@@ -334,81 +428,23 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     _.filter(cur => inputs.forall(cur.dirs.contains))
       .map(cur => cur.dirs.filterNot(inputs.contains) ++ outputs)
 
+
   /** Rebase of an append of directory `d`. */
   private def appending(d: String): Rebase = cur => Some(cur.fold(Seq.empty[String])(_.dirs) :+ d)
 
-  /** Append `df` as a new data directory (existing data untouched). */
-  def append(df: DataFrame): Long = commit("append")(_ => Some(appending(writeData(df))))
-
-  /** Append with a directory-level ZONE MAP: after writing, record
-    * min/max of the (long-typed) `statsCols` in a `_stats.json` sidecar
-    * inside the data directory (underscore prefix — parquet readers
-    * ignore it). [[readWhere]] then prunes whole directories whose
-    * range cannot match BEFORE any file listing or footer I/O — the
-    * data-skipping layer that matters on object storage, where a
-    * 100 TB table's read cost starts at the LIST call; parquet footers
-    * still prune row groups inside the directories that survive. The
-    * stats pass reads the just-written files back (footer-cheap
-    * min/max), so the input frame is evaluated exactly once.
+  /** Append `df` as a new data directory (existing data untouched),
+    * recording a zone map on each of `zoneCols` and a Bloom filter on
+    * each of `bloomCols` (see [[writeData]]). A [[Where]] then prunes
+    * whole directories BEFORE any file listing or footer I/O — the
+    * data-skipping layer that matters on object storage, where a 100 TB
+    * table's read cost starts at the LIST call; parquet footers still
+    * prune row groups inside the directories that survive. A zone map
+    * cannot prune a point lookup on a column whose values interleave
+    * across appends (ids, hashes); a 16 KiB Bloom filter per directory
+    * can.
     */
-  def appendIndexed(df: DataFrame, statsCols: Seq[String],
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 17, bloomK: Int = 4): Long = {
-    commit("append") { _ =>
-      val name = writeData(df)
-      writeSidecars(name, statsCols, bloomCols, bloomBits, bloomK)
-      Some(appending(name))
-    }
-  }
-
-  /** Record zone-map and Bloom sidecars for an already-written data
-    * directory (shared by [[appendIndexed]] and [[compactZordered]]).
-    * The stats pass reads the just-written files back (footer-cheap
-    * min/max), so the input frame is evaluated exactly once.
-    *
-    * Bloom sidecar per column: the equality-predicate complement of
-    * the zone map — min/max cannot prune a point lookup on a column
-    * whose values interleave across appends (ids, hashes); a 16 KiB
-    * filter per directory can. No false negatives, so skipping on a
-    * negative probe is always safe.
-    */
-  private def writeSidecars(name: String, statsCols: Seq[String],
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 17, bloomK: Int = 4): Unit = {
-    val dirPath = dataPath(name)
-    val back = spark.read.parquet(dirPath)
-    if (!back.isEmpty) {
-      if (statsCols.nonEmpty) {
-        val aggs = statsCols.flatMap(c =>
-          Seq(org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col(c)).cast("long"),
-            org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col(c)).cast("long")))
-        val row = back.agg(aggs.head, aggs.tail: _*).head()
-        // a column that is NULL in every surviving row (reachable since
-        // the delete keep-side retains NULL-evaluating rows) has no
-        // zone — OMIT its entry: a stat-less column is never pruned on,
-        // so skipping stays safe, where an unboxed getLong would NPE
-        val entries = statsCols.zipWithIndex.flatMap { case (c, i) =>
-          if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) None
-          else Some(s""""$c":{"min":${row.getLong(2 * i)},"max":${row.getLong(2 * i + 1)}}""")
-        }
-        if (entries.nonEmpty)
-          io.put(s"$dirPath/_stats.json", entries.mkString("{", ",", "}").getBytes("UTF-8"))
-      }
-      if (bloomCols.nonEmpty) {
-        import graft.functions.GraftFunctions.bloom_build
-        val aggs = bloomCols.map(c =>
-          bloom_build(org.apache.spark.sql.functions.col(c).cast("long"), bloomBits, bloomK))
-        val row = back.agg(aggs.head, aggs.tail: _*).head()
-        val entries = bloomCols.zipWithIndex.flatMap { case (c, i) =>
-          if (row.isNullAt(i)) None // all-NULL column: no filter, never pruned
-          else Some {
-            val b64 = java.util.Base64.getEncoder.encodeToString(row.getAs[Array[Byte]](i))
-            s""""$c":"$b64""""
-          }
-        }
-        if (entries.nonEmpty)
-          io.put(s"$dirPath/_bloom.json", entries.mkString("{", ",", "}").getBytes("UTF-8"))
-      }
-    }
-  }
+  def append(df: DataFrame, zoneCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long =
+    commit("append")(_ => Some(appending(writeData(df, zoneCols, bloomCols)._1)))
 
   private val StatsEntryRe = """"([^"]+)":\{"min":(-?\d+),"max":(-?\d+)\}""".r
 
@@ -419,34 +455,6 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
         .map(m => m.group(1) -> ((m.group(2).toLong, m.group(3).toLong))).toMap
     }
 
-  /** The directories a `[lo, hi]` range scan on `colName` must read at
-    * a snapshot: a directory is skipped ONLY when its recorded zone
-    * says no row can match; directories without stats (plain appends,
-    * compaction rewrites) are always read — skipping is never unsafe.
-    * Exposed for specs to assert the pruning itself, not just results.
-    */
-  private[graft] def dirsMatching(colName: String, lo: Long, hi: Long,
-      version: Option[Long] = None): Seq[String] = {
-    committed(version).data.filter { d =>
-      statsOf(d).get(colName) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-  }
-
-  /** Range-scan `colName` in `[lo, hi]` with zone-map directory
-    * pruning, then the exact filter on the survivors.
-    */
-  def readWhere(colName: String, lo: Long, hi: Long, version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val dirs = dirsMatching(colName, lo, hi, version)
-    val base =
-      if (dirs.isEmpty) read(version).limit(0)
-      else scan(committed(version), dirs)
-    base.filter(col(colName) >= lo && col(colName) <= hi)
-  }
-
   private val BloomEntryRe = """"([^"]+)":"([A-Za-z0-9+/=]+)"""".r
 
   private def bloomsOf(dir: String): Map[String, Array[Byte]] =
@@ -456,187 +464,81 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
         .map(m => m.group(1) -> java.util.Base64.getDecoder.decode(m.group(2))).toMap
     }
 
-  /** The directories a point lookup `colName = value` must read at a
-    * snapshot: a directory is skipped when its zone map excludes the
-    * value OR its Bloom sidecar says the value is definitely absent
-    * (no false negatives ⇒ skipping is never unsafe). Directories with
-    * neither sidecar (plain appends, compaction rewrites) are always
-    * read. Exposed for specs to assert the pruning itself.
+  /** The data directories of `snap` that `where` admits from their
+    * sidecars: the directories a read or a delete of `where` must look
+    * at. A sidecar is read only when `where` asks for it. Exposed for
+    * specs to assert the pruning itself.
     */
-  private[graft] def dirsMatchingEq(colName: String, value: Long,
-      version: Option[Long] = None): Seq[String] = {
-    committed(version).data.filter { d =>
-      val zoneOk = statsOf(d).get(colName) match {
-        case Some((mn, mx)) => value >= mn && value <= mx
-        case None => true
-      }
-      zoneOk && (bloomsOf(d).get(colName) match {
-        case Some(bytes) =>
-          val (nbits, k, words) = graft.functions.GraftBloom.fromBytes(bytes)
-          graft.functions.GraftBloom.probe(words, nbits, k, value)
-        case None => true
-      })
-    }
-  }
-
-  /** Point lookup `colName = value` with zone-map AND Bloom-sidecar
-    * directory pruning, then the exact filter on the survivors — the
-    * needle-in-100-TB read: on object storage every skipped directory
-    * saves its LIST and footer round-trips, and for an id/hash column
-    * (where min/max spans everything) only the Bloom prunes at all.
-    */
-  def readWhereEq(colName: String, value: Long, version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val dirs = dirsMatchingEq(colName, value, version)
-    val base =
-      if (dirs.isEmpty) read(version).limit(0)
-      else scan(committed(version), dirs)
-    base.filter(col(colName) === value)
-  }
+  private[graft] def dirsMatching(where: Where, snap: Snapshot = committed()): Seq[String] =
+    snap.data.filter(d => where.admits(c => statsOf(d).get(c), c => bloomsOf(d).get(c)))
 
   /** Row-level DELETE, copy-on-write — the takedown/right-to-be-
     * forgotten primitive (opt-out lists, legal removals): rewrite ONLY
-    * the data directories that actually hold matching rows, publish the
-    * untouched directories plus the rewrites as a new version. Earlier
-    * versions keep the deleted rows readable (time travel) until
-    * [[vacuum]] ages them out — PERMANENT erasure is deleteWhere + a
-    * vacuum with `keepVersions` small enough to drop every pre-delete
-    * manifest; document retention accordingly. `diff(before, after)`
-    * shows exactly the deleted multiset (change_type = delete).
+    * the data directories that actually hold rows `where` selects,
+    * publish the untouched directories plus the rewrites as a new
+    * version. Earlier versions keep the deleted rows readable (time
+    * travel) until [[vacuum]] ages them out — PERMANENT erasure is
+    * deleteWhere + a vacuum with `keepVersions` small enough to drop
+    * every pre-delete manifest; document retention accordingly.
+    * `diff(before, after)` shows exactly the deleted multiset
+    * (change_type = delete). A row where the predicate evaluates NULL
+    * did not match and is kept.
     *
-    * Candidate selection: a cheap matching-row probe per directory
-    * (parquet footer/row-group pushdown applies), so a needle delete
-    * rewrites one directory, not the table. Use [[deleteWhereRange]] /
-    * [[deleteWhereEq]] to prune candidates from zone-map/Bloom sidecars
-    * BEFORE any data read — on a 100 TB table the probe scan itself is
-    * the cost, and the sidecar variants skip it for every directory
-    * whose recorded zones/filters exclude the predicate.
+    * Candidates are the directories `where` admits from their sidecars
+    * (a [[Where.Range]] or [[Where.Eq]] skips the rest with no data
+    * I/O — on a 100 TB table the probe scan itself is the cost), then
+    * ONE distributed probe job keeps those that hold a matching row, so
+    * a needle delete rewrites one directory, not the table.
     *
-    * Rewritten directories re-derive the sidecars their source carried
-    * (same columns), so data-skipping keeps working after the delete.
-    * Concurrency follows [[compact]]'s rules: concurrent appends fold
-    * in untouched; if a touched directory vanished (concurrent
+    * Each rewrite records the sidecars its source directory carried, so
+    * data-skipping keeps working after the delete. A rewrite that keeps
+    * no row drops its directory; when every data directory empties, one
+    * such rewrite stays as the table's empty, schema-carrying directory.
+    * Concurrency follows [[compact]]'s rules: concurrent appends fold in
+    * untouched; if a touched directory vanished (concurrent
     * overwrite/compaction) the rewrite is stale — discarded and redone
     * from the fresh snapshot.
     */
-  def deleteWhere(predicate: org.apache.spark.sql.Column): Long =
-    deleteRewrite(snap => snap.data, predicate)
-
-  /** [[deleteWhere]] for a `[lo, hi]` range on a zone-mapped column:
-    * candidates prune to the directories whose recorded zones admit the
-    * range — no data I/O at all for the rest.
-    */
-  def deleteWhereRange(colName: String, lo: Long, hi: Long): Long = {
-    import org.apache.spark.sql.functions.col
-    deleteRewrite(snap => dirsMatching(colName, lo, hi, Some(snap.version)),
-      col(colName) >= lo && col(colName) <= hi)
-  }
-
-  /** [[deleteWhere]] for a point predicate on a Bloom-indexed column:
-    * candidates prune by zone map AND Bloom sidecar (no false
-    * negatives, so skipping is always safe) — the needle-takedown path.
-    */
-  def deleteWhereEq(colName: String, value: Long): Long = {
-    import org.apache.spark.sql.functions.col
-    deleteRewrite(snap => dirsMatchingEq(colName, value, Some(snap.version)),
-      col(colName) === value)
-  }
-
-  private def deleteRewrite(admit: Snapshot => Seq[String],
-      predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    // a DELETE removes rows the predicate MATCHES; a row where it
-    // evaluates NULL did not match and must be KEPT — three-valued
-    // logic makes bare not(p) drop those rows silently (NOT(null) =
-    // null = filtered out), which in a takedown primitive is data loss
-    val keepCond = coalesce(not(predicate), lit(true))
+  def deleteWhere(where: Where): Long = {
+    // NOT(NULL) is NULL, which a bare filter(not(p)) would drop: in a
+    // takedown primitive that is data loss
+    val keep = F.coalesce(!where.rows, F.lit(true))
     commit("deleteWhere") { head =>
       val snap = head.getOrElse(noCommittedVersion())
-      // sidecar-admitted candidates, then the matching-row probe: only
-      // directories that HOLD a matching row are rewritten (a zone/Bloom
-      // false positive costs a pushed-down probe read, never a write).
-      // ONE distributed job probes every candidate together —
-      // input_file_name() maps hits back to their directories (names
-      // are UUIDs, so the /<name>/ segment match is unambiguous); a
-      // per-directory driver loop would run thousands of tiny jobs on
-      // a 100 TB table
-      val candidates = admit(snap)
-      val touched =
-        if (candidates.isEmpty) Seq.empty[String]
-        else {
-          import org.apache.spark.sql.functions.input_file_name
-          val hitFiles = scan(snap, candidates)
-            .filter(predicate)
-            .select(input_file_name().as("f")).distinct()
-            .collect().map(_.getString(0))
-          candidates.filter(d => hitFiles.exists(_.contains(s"/$d/")))
-        }
+      // input_file_name() maps hits back to their directories (names are
+      // UUIDs, so the /<name>/ segment match is unambiguous)
+      val candidates = dirsMatching(where, snap)
+      val hitFiles =
+        if (candidates.isEmpty) Array.empty[String]
+        else scan(snap, candidates).filter(where.rows)
+          .select(F.input_file_name()).distinct().collect().map(_.getString(0))
+      val touched = candidates.filter(d => hitFiles.exists(_.contains(s"/$d/")))
       if (touched.isEmpty) None
       else {
-        // each touched directory rewrites independently — run them as
-        // CONCURRENT Spark jobs (needle deletes touch one dir; a wide
-        // takedown range can touch hundreds, and a sequential driver loop
-        // would serialize cluster-sized work behind driver round-trips)
+        // each touched directory rewrites as its own CONCURRENT Spark job:
+        // a wide takedown range can touch hundreds, and a sequential
+        // driver loop would serialize cluster-sized work
         import scala.collection.parallel.CollectionConverters._
-        val rewrites = touched.par.flatMap { d =>
-          // persist so the emptiness check and the write share ONE scan of
-          // the surviving rows (unpersisted as soon as the dir is written —
-          // on a wide takedown the double read would dominate the rewrite)
-          val kept = scan(snap, Seq(d)).filter(keepCond)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            if (kept.isEmpty) None // every row deleted: the dir just drops
-            else {
-              val name = writeData(kept)
-              // re-derive exactly the sidecars the source directory carried,
-              // including its Bloom geometry (not the defaults)
-              val blooms = bloomsOf(d)
-              val (bBits, bK) = blooms.headOption.map { case (_, bytes) =>
-                val (nbits, k, _) = graft.functions.GraftBloom.fromBytes(bytes)
-                (nbits, k)
-              }.getOrElse((1 << 17, 4))
-              writeSidecars(name, statsOf(d).keys.toSeq.sorted,
-                blooms.keys.toSeq.sorted, bBits, bK)
-              Some(d -> name)
-            }
-          } finally { kept.unpersist(false); () }
+        val rewrites = touched.par.map { d =>
+          d -> writeData(scan(snap, Seq(d)).filter(keep),
+            statsOf(d).keys.toSeq.sorted, bloomsOf(d).keys.toSeq.sorted)
         }.seq.toMap
-        // a delete that empties the whole table keeps the table's schema:
-        // it commits one empty, schema-carrying directory instead of an
-        // empty manifest (which reads as a zero-column frame)
-        val emptied =
-          if (rewrites.isEmpty && snap.data.forall(touched.contains))
-            Some(writeData(read(Some(snap.version)).limit(0)))
-          else None
+        val kept = rewrites.collect { case (d, (name, rows)) if rows > 0 => d -> name }
         // stale once a touched directory is no longer current (a
         // concurrent overwrite/compaction replaced it): publishing the
         // rewrite could resurrect rows the other writer removed
-        Some(_.filter(cur => touched.forall(cur.dirs.contains)).flatMap { cur =>
-          val dirs = cur.dirs.flatMap(d => if (touched.contains(d)) rewrites.get(d) else Some(d))
+        Some(_.filter(cur => touched.forall(cur.dirs.contains)).map { cur =>
+          val dirs = cur.dirs.flatMap(d => if (touched.contains(d)) kept.get(d) else Some(d))
           // delete files alone hold no rows (and no schema)
-          if (dirs.exists(!isDeletes(_))) Some(dirs) else emptied.map(Seq(_))
+          if (dirs.exists(!isDeletes(_))) dirs else Seq(rewrites(touched.head)._1)
         })
       }
     }
   }
 
-  /** Replace the table contents with `df` at the next version.
-    * NOTE: overwrite is last-writer-wins BY DEFINITION — of two racing
-    * overwrites, the later version's content stands (each remains
-    * readable at its own version; nothing tears). A writer whose new
-    * content DEPENDS on the current content (read-modify-write, e.g. a
-    * merge) must use [[overwriteWith]] or [[mergeKeyed]], which
-    * recompute from the fresh snapshot on conflict instead of
-    * republishing a stale derivation.
-    */
-  def overwrite(df: DataFrame): Long = commit("overwrite") { _ =>
-    val d = writeData(df)
-    Some(_ => Some(Seq(d)))
-  }
-
   /** RESTORE the table to historical `version`'s content, committed as
     * a NEW version — the recovery flip side of [[deleteWhere]] /
-    * [[overwrite]]: a mistaken delete or overwrite is undone by ONE
+    * [[overwriteWith]]: a mistaken delete or overwrite is undone by ONE
     * manifest commit naming the old version's (immutable, still-present)
     * data directories, no data rewrite at any scale. History stays
     * intact — the mistaken version remains readable, and
@@ -686,13 +588,14 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * — so concurrent read-modify-writes COMPOSE instead of losing the
     * earlier writer's change. Returns (committed version, the derived
     * frame as committed) — the frame is checkpointed, safe to count.
+    * A blind replace is `overwriteWith(_ => df)`.
     */
   def overwriteWith(derive: Option[DataFrame] => DataFrame): (Long, DataFrame) = {
     var derived: DataFrame = null
     val version = commit("read-modify-write") { head =>
       derived = derive(head.map(s => read(Some(s.version))))
         .localCheckpoint(true) // pin the derivation to THIS snapshot's files
-      val d = writeData(derived)
+      val (d, _) = writeData(derived)
       Some(cur => if (cur.map(_.version) == head.map(_.version)) Some(Seq(d)) else None)
     }
     (version, derived)
@@ -731,7 +634,6 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     */
   private[graft] def mergeKeyedWithHook(fresh: DataFrame, keys: Seq[String],
       version: Option[String], beforeCommit: () => Unit): (Long, Long) = {
-    import org.apache.spark.sql.Observation
     import org.apache.spark.sql.functions.{col, collect_set, count, lit, when}
     val Dir = "__graft_dir"
     val dir = col(Dir)
@@ -761,7 +663,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
       def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType.catalogString)
       if (!existing.forall(e => shape(e) == shape(merged))) {
         // a changed schema rewrites the whole table as one directory
-        val d = writeData(merged.drop(Dir))
+        val (d, _) = writeData(merged.drop(Dir))
         beforeCommit()
         Some(cur => if (cur.map(_.version) == head.map(_.version)) Some(Seq(d)) else None)
       } else if (head.isDefined && replaced.isEmpty && m("fresh") == 0L) None
@@ -769,7 +671,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
         // rows replaced by another existing row (duplicates a blind append
         // planted) need a delete file but no directory
         val d = Option.when(head.isEmpty || m("fresh") != 0L)(
-          writeData(merged.filter(dir.isNull).drop(Dir)))
+          writeData(merged.filter(dir.isNull).drop(Dir))._1)
         val x = Option.when(replaced.nonEmpty)(writeDeletes(keys, replaced))
         beforeCommit()
         val dirs = all ++ d ++ x
@@ -808,7 +710,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
       val snap = head.getOrElse(noCommittedVersion())
       if (snap.dirs.size <= 1) None
       else {
-        val c = writeData(read(Some(snap.version)).coalesce(numPartitions))
+        val (c, _) = writeData(read(Some(snap.version)).coalesce(numPartitions))
         beforeCommit()
         Some(replacing(snap.dirs, Seq(c)))
       }
@@ -820,7 +722,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * zone-map sidecars on ALL of them. After a linear sort only the
     * leading column's zones are narrow; after a Z-order rewrite a
     * range scan on ANY of the clustered columns prunes directories
-    * ([[readWhere]]), because the space-filling curve keeps every
+    * (a [[read]] of a [[Where.Range]]), because the space-filling curve keeps every
     * dimension locally bounded within each z-range — the
     * OPTIMIZE ZORDER BY of the lakehouse formats, at directory
     * granularity.
@@ -866,9 +768,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
           val slice = zdf.filter(col("__z") >= lo && col("__z") <= hi)
             .sortWithinPartitions(col("__z"))
             .drop(("__z" +: cols.indices.map(j => s"__g$j")): _*)
-          val name = writeData(slice)
-          writeSidecars(name, cols)
-          name
+          writeData(slice, cols)._1
         }
         // same stale/race rules as compact: a folded-in dir vanishing means
         // a concurrent overwrite removed rows this rewrite would resurrect

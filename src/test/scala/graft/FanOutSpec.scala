@@ -61,21 +61,25 @@ class FanOutSpec extends SparkSpecBase {
   private def mainSourcesUsing(token: String): Seq[java.nio.file.Path] =
     mainSourcesMatching(java.util.regex.Pattern.quote(token))
 
+  private val mainRoot = java.nio.file.Paths.get("src/main/scala")
+
+  /** A source file's code, comments stripped. */
+  private def code(f: java.nio.file.Path): String = {
+    val blockComment = "(?s)/\\*.*?\\*/".r
+    val lineComment = "//[^\n]*".r
+    val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    lineComment.replaceAllIn(blockComment.replaceAllIn(src, ""), "")
+  }
+
   /** The main sources whose code, comments stripped, matches `regex`. */
   private def mainSourcesMatching(regex: String): Seq[java.nio.file.Path] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
     val files = {
-      val s = java.nio.file.Files.walk(root)
+      val s = java.nio.file.Files.walk(mainRoot)
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
     }
-    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
-    val blockComment = "(?s)/\\*.*?\\*/".r
-    val lineComment = "//[^\n]*".r
-    files.filter { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      regex.r.findFirstIn(lineComment.replaceAllIn(blockComment.replaceAllIn(src, ""), "")).isDefined
-    }
+    assert(files.nonEmpty, s"no sources under ${mainRoot.toAbsolutePath}")
+    files.filter(f => regex.r.findFirstIn(code(f)).isDefined)
   }
 
   test("no main source asks SQLConf.numShufflePartitions for a width") {
@@ -124,5 +128,17 @@ class FanOutSpec extends SparkSpecBase {
     val users = mainSourcesUsing("spark.sql.codegen.")
     assert(users.map(_.toString) == Seq("src/main/scala/graft/GraftSession.scala"),
       s"only GraftSession may name a spark.sql.codegen key, found in: ${users.mkString(", ")}")
+  }
+
+  test("only SnapshotTable's scan reads the table's data") {
+    // one read path: every read, delete probe, rewrite and diff goes
+    // through scan, which applies the delete files
+    val src = code(mainRoot.resolve("graft/etl/SnapshotTable.scala"))
+    val defs = "(?m)^  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r.findAllMatchIn(src).toSeq
+    val bodies = defs.zip(defs.drop(1).map(_.start) :+ src.length)
+    val readers = "spark\\.read".r.findAllMatchIn(src).map(m =>
+      bodies.collectFirst { case (d, end) if d.start <= m.start && m.start < end => d.group(1) }
+        .getOrElse("<outside any def>")).toSet
+    assert(readers == Set("scan"), s"spark.read outside scan, in: ${readers.mkString(", ")}")
   }
 }

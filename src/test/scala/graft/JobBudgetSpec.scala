@@ -169,6 +169,21 @@ class JobBudgetSpec extends SparkSpecBase {
     } finally r.close()
   }
 
+  test("q40_delete_where stays within its job budget") {
+    val jobs = jobsOf("budget.q40")(runKey("q40_delete_where"))
+    // measured: 30 while each sidecar write read its directory back
+    // (an emptiness check plus a min/max job) and each delete rewrite
+    // checked emptiness before writing; the write's Observation now
+    // supplies the row count and the sidecars
+    assert(jobs <= 13L, s"one q40_delete_where call launched $jobs jobs, budget 13")
+  }
+
+  test("q41_restore stays within its job budget") {
+    val jobs = jobsOf("budget.q41")(runKey("q41_restore"))
+    // measured: 23 with the read-back sidecars (see q40)
+    assert(jobs <= 11L, s"one q41_restore call launched $jobs jobs, budget 11")
+  }
+
   /** Generated classes compiled while `body` runs. */
   private def compiles(body: => Unit): Long = {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount

@@ -54,7 +54,7 @@ class SnapshotModelSpec extends SparkSpecBase {
             history += v -> current
           case 4 | 5 =>
             val b = batch()
-            val v = st.overwrite(b.toDF("k", "v"))
+            val (v, _) = st.overwriteWith(_ => b.toDF("k", "v"))
             current = b.sorted
             history += v -> current
           case 6 if st.currentVersion.isDefined && current.nonEmpty =>

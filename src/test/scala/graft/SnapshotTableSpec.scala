@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions.{col, sum}
 
-import graft.etl.{SnapshotTable, VersionConflictException}
+import graft.etl.{SnapshotTable, VersionConflictException, Where}
 
 class SnapshotTableSpec extends SparkSpecBase {
   import spark.implicits._
@@ -20,13 +20,13 @@ class SnapshotTableSpec extends SparkSpecBase {
     assert((v0, v1) == (0L, 1L))
     assert(t.read().count() == 2)
     assert(t.read(Some(0L)).count() == 1, "older snapshots stay readable")
-    val v2 = t.overwrite(Seq((9L, "z")).toDF("id", "v"))
+    val v2 = t.overwriteWith(_ => Seq((9L, "z")).toDF("id", "v"))._1
     assert(v2 == 2L)
     assert(t.read().collect().map(_.getLong(0)).toSeq == Seq(9L))
     assert(t.read(Some(1L)).count() == 2, "overwrite does not destroy history")
   }
 
-  test("time travel by wall clock: readAsOf resolves the version live at that instant") {
+  test("time travel by wall clock: versionAsOf resolves the version live at that instant") {
     val t = fresh()
     t.append(Seq((1L, "a")).toDF("id", "v")) // v0
     Thread.sleep(25)
@@ -34,25 +34,26 @@ class SnapshotTableSpec extends SparkSpecBase {
     Thread.sleep(25)
     t.append(Seq((2L, "b")).toDF("id", "v")) // v1
     assert(t.versionAsOf(mid) == Some(0L))
-    assert(t.readAsOf(mid).collect().map(_.getLong(0)).toSeq == Seq(1L))
+    assert(t.read(t.versionAsOf(mid)).collect().map(_.getLong(0)).toSeq == Seq(1L))
     assert(t.versionAsOf(System.currentTimeMillis()) == Some(1L))
-    assert(t.readAsOf(System.currentTimeMillis()).count() == 2)
-    // before the first commit there is nothing to travel to
+    assert(t.read(t.versionAsOf(System.currentTimeMillis())).count() == 2)
+    // before the first commit there is nothing to travel to, and a
+    // pinned read of a version never committed fails loudly
     assert(t.versionAsOf(mid - 3600_000L).isEmpty)
-    intercept[IllegalStateException] { t.readAsOf(mid - 3600_000L) }
+    intercept[IllegalStateException] { t.read(Some(2L)) }
   }
 
   test("a stale commit loses deterministically; the retry path composes changes") {
     val t = fresh()
     t.append(Seq((1L, "a")).toDF("id", "v")) // v0
-    // a writer that resolved v0 but finds v1 published must conflict
     t.append(Seq((2L, "b")).toDF("id", "v")) // v1
+    // a restore that resolved v1 but finds v2 published must conflict
     intercept[VersionConflictException] {
-      t.tryCommit(expected = 0L, dirs = Seq("phantom-dir"))
+      t.restoreWithHook(0L, () => { t.append(Seq((3L, "c")).toDF("id", "v")); () }) // v2
     }
     // the retrying append re-reads fresh state: nothing is lost
-    t.append(Seq((3L, "c")).toDF("id", "v")) // v2
-    assert(t.read().collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+    t.append(Seq((4L, "d")).toDF("id", "v")) // v3
+    assert(t.read().collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 4L))
   }
 
   test("concurrent appends from many threads all land; reads see consistent snapshots") {
@@ -106,7 +107,7 @@ class SnapshotTableSpec extends SparkSpecBase {
     assert(d10 == Set((3L, "c", "delete")))
     // overwrite replacing (2,b) with (2,B): CDF shows the update as its
     // delete+insert pair; untouched rows cancel
-    val v2 = t.overwrite(Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("id", "v"))
+    val v2 = t.overwriteWith(_ => Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("id", "v"))._1
     val d12 = t.diff(v1, v2).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     assert(d12 == Set((2L, "b", "delete"), (2L, "B", "insert")))
@@ -141,7 +142,7 @@ class SnapshotTableSpec extends SparkSpecBase {
 
   test("keyed merge: delete files hide replaced rows on every read path; compact folds them") {
     val t = fresh()
-    t.appendIndexed(Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)).toDF("id", "v", "ver"),
+    t.append(Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)).toDF("id", "v", "ver"),
       Seq("id"), Seq("id"))
     val v0 = t.currentVersion.get
     val (v1, n) = t.mergeKeyed(Seq((2L, "B", 2L), (4L, "d", 1L)).toDF("id", "v", "ver"),
@@ -156,15 +157,16 @@ class SnapshotTableSpec extends SparkSpecBase {
       df.select("id", "v").as[(Long, String)].collect().toSeq.sorted
     val merged = Seq((1L, "a"), (2L, "B"), (3L, "c"), (4L, "d"))
     assert(rows(t.read()) == merged)
-    assert(rows(t.readMerged()) == merged)
-    assert(rows(t.readWhere("id", 2L, 2L)) == Seq((2L, "B")), "zone-map reads honor the delete file")
-    assert(rows(t.readWhereEq("id", 2L)) == Seq((2L, "B")), "Bloom reads honor the delete file")
+    assert(rows(t.read(mergeSchema = true)) == merged)
+    assert(rows(t.read(where = Where.Range("id", 2L, 2L))) == Seq((2L, "B")),
+      "zone-map reads honor the delete file")
+    assert(rows(t.read(where = Where.Eq("id", 2L))) == Seq((2L, "B")), "Bloom reads honor the delete file")
     assert(t.diff(v0, v1).select("id", "v", "change_type").as[(Long, String, String)].collect()
       .toSet == Set((2L, "b", "delete"), (2L, "B", "insert"), (4L, "d", "insert")),
       "the update surfaces as its delete + insert pair")
     // the copy-on-write delete rewrites the indexed directory through the
     // delete file: the hidden (2, b) must not come back
-    t.deleteWhereEq("id", 1L)
+    t.deleteWhere(Where.Eq("id", 1L))
     assert(rows(t.read()) == merged.tail)
     t.compact()
     val compacted = t.snapshot().get
@@ -190,7 +192,7 @@ class SnapshotTableSpec extends SparkSpecBase {
     (0 until 3).foreach(i => t.append(Seq((i.toLong, "x")).toDF("id", "v")))
     var fired = false
     t.compactWithHook(1, () => {
-      if (!fired) { fired = true; t.overwrite(Seq((7L, "only")).toDF("id", "v")); () }
+      if (!fired) { fired = true; t.overwriteWith(_ => Seq((7L, "only")).toDF("id", "v"))._1; () }
     })
     assert(t.read().collect().map(_.getLong(0)).toSeq == Seq(7L),
       "the overwrite's deletion must not be resurrected by a stale compaction")
@@ -203,43 +205,43 @@ class SnapshotTableSpec extends SparkSpecBase {
     (0 until 8).foreach { chunk =>
       val rows = (chunk * 512 until (chunk + 1) * 512)
         .map(i => (i.toLong / 64L, i.toLong % 64L))
-      t.appendIndexed(rows.toDF("a", "b"), Seq("a", "b"))
+      t.append(rows.toDF("a", "b"), Seq("a", "b"))
     }
-    val preDirsB = t.dirsMatching("b", 10, 12)
+    val preDirsB = t.dirsMatching(Where.Range("b", 10, 12))
     assert(preDirsB.size == 8, "row-major appends cannot prune on b")
     val vPre = t.currentVersion.get
     val vZ = t.compactZordered(Seq("a", "b"), buckets = 8)
     // pruning now works on BOTH dimensions
-    val dirsA = t.dirsMatching("a", 10, 12)
-    val dirsB = t.dirsMatching("b", 10, 12)
+    val dirsA = t.dirsMatching(Where.Range("a", 10, 12))
+    val dirsB = t.dirsMatching(Where.Range("b", 10, 12))
     val all = t.snapshot(Some(vZ)).get.dirs.size
     assert(all >= 4, s"rewrite must produce multiple dirs, got $all")
     assert(dirsA.size < all, s"a-scan must prune: ${dirsA.size} of $all")
     assert(dirsB.size < all, s"b-scan must prune: ${dirsB.size} of $all")
     // scans stay exact on both columns
-    assert(t.readWhere("a", 10, 12).count() == 3 * 64)
-    assert(t.readWhere("b", 10, 12).count() == 3 * 64)
-    assert(t.readWhere("a", 10, 12).agg(sum(col("b"))).head().getLong(0) ==
+    assert(t.read(where = Where.Range("a", 10, 12)).count() == 3 * 64)
+    assert(t.read(where = Where.Range("b", 10, 12)).count() == 3 * 64)
+    assert(t.read(where = Where.Range("a", 10, 12)).agg(sum(col("b"))).head().getLong(0) ==
       3L * (0 until 64).map(_.toLong).sum)
     // a pure reorganization is not a change
     assert(t.diff(vPre, vZ).count() == 0L, "z-order rewrite diffs empty")
   }
 
-  test("zone maps: readWhere prunes whole directories and stays exact") {
+  test("zone maps: a Range read prunes whole directories and stays exact") {
     val t = fresh()
-    t.appendIndexed((0L until 10L).map(i => (i, s"a$i")).toDF("id", "v"), Seq("id"))
-    t.appendIndexed((100L until 110L).map(i => (i, s"b$i")).toDF("id", "v"), Seq("id"))
-    t.appendIndexed((200L until 210L).map(i => (i, s"c$i")).toDF("id", "v"), Seq("id"))
+    t.append((0L until 10L).map(i => (i, s"a$i")).toDF("id", "v"), Seq("id"))
+    t.append((100L until 110L).map(i => (i, s"b$i")).toDF("id", "v"), Seq("id"))
+    t.append((200L until 210L).map(i => (i, s"c$i")).toDF("id", "v"), Seq("id"))
     // the middle range must read exactly one directory
-    assert(t.dirsMatching("id", 100L, 150L).size == 1,
+    assert(t.dirsMatching(Where.Range("id", 100L, 150L)).size == 1,
       "two of three directories must be zone-skipped")
-    assert(t.readWhere("id", 100L, 150L).collect().map(_.getLong(0)).sorted.toSeq
+    assert(t.read(where = Where.Range("id", 100L, 150L)).collect().map(_.getLong(0)).sorted.toSeq
       == (100L until 110L))
     // a range outside every zone reads nothing and returns empty
-    assert(t.dirsMatching("id", 500L, 600L).isEmpty)
-    assert(t.readWhere("id", 500L, 600L).count() == 0)
+    assert(t.dirsMatching(Where.Range("id", 500L, 600L)).isEmpty)
+    assert(t.read(where = Where.Range("id", 500L, 600L)).count() == 0)
     // results are IDENTICAL to the unpruned filter (pruning is exact)
-    val pruned = t.readWhere("id", 5L, 205L).collect()
+    val pruned = t.read(where = Where.Range("id", 5L, 205L)).collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     val full = t.read().filter(
         org.apache.spark.sql.functions.col("id") >= 5L
@@ -250,16 +252,16 @@ class SnapshotTableSpec extends SparkSpecBase {
 
   test("zone maps: stat-less directories are never skipped (plain append, compaction)") {
     val t = fresh()
-    t.appendIndexed((0L until 10L).map(i => (i, "x")).toDF("id", "v"), Seq("id"))
+    t.append((0L until 10L).map(i => (i, "x")).toDF("id", "v"), Seq("id"))
     t.append(Seq((999L, "plain")).toDF("id", "v")) // no sidecar
-    assert(t.dirsMatching("id", 900L, 1000L).size == 1,
+    assert(t.dirsMatching(Where.Range("id", 900L, 1000L)).size == 1,
       "the stat-less dir must be read, the indexed out-of-range dir skipped")
-    assert(t.readWhere("id", 900L, 1000L).collect().map(_.getLong(0)).toSeq == Seq(999L))
+    assert(t.read(where = Where.Range("id", 900L, 1000L)).collect().map(_.getLong(0)).toSeq == Seq(999L))
     // after compaction the rewrite has no stats — everything is read,
     // nothing is wrong, and re-indexing is a policy choice
     t.compact()
-    assert(t.dirsMatching("id", 900L, 1000L).size == 1)
-    assert(t.readWhere("id", 900L, 1000L).collect().map(_.getLong(0)).toSeq == Seq(999L))
+    assert(t.dirsMatching(Where.Range("id", 900L, 1000L)).size == 1)
+    assert(t.read(where = Where.Range("id", 900L, 1000L)).collect().map(_.getLong(0)).toSeq == Seq(999L))
   }
 
   test("bloom sidecars: point lookups prune dirs a zone map cannot") {
@@ -267,19 +269,19 @@ class SnapshotTableSpec extends SparkSpecBase {
     // ids INTERLEAVE across appends (evens vs odds over the same range):
     // every directory's [min,max] spans every probe value, so the zone
     // map alone prunes NOTHING — the equality case the bloom exists for
-    t.appendIndexed((0L until 200L by 2).map(i => (i, "even")).toDF("id", "v"),
+    t.append((0L until 200L by 2).map(i => (i, "even")).toDF("id", "v"),
       Seq("id"), bloomCols = Seq("id"))
-    t.appendIndexed((1L until 200L by 2).map(i => (i, "odd")).toDF("id", "v"),
+    t.append((1L until 200L by 2).map(i => (i, "odd")).toDF("id", "v"),
       Seq("id"), bloomCols = Seq("id"))
-    assert(t.dirsMatching("id", 42L, 42L).size == 2, "zone maps cannot split interleaved ids")
-    assert(t.dirsMatchingEq("id", 42L).size == 1, "the bloom must prune the odd dir")
-    assert(t.readWhereEq("id", 42L).collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(t.dirsMatching(Where.Range("id", 42L, 42L)).size == 2, "zone maps cannot split interleaved ids")
+    assert(t.dirsMatching(Where.Eq("id", 42L)).size == 1, "the bloom must prune the odd dir")
+    assert(t.read(where = Where.Eq("id", 42L)).collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       == Seq((42L, "even")))
     // absent value: possibly zero dirs (false positives allowed), empty result always
-    assert(t.readWhereEq("id", 4242L).count() == 0)
+    assert(t.read(where = Where.Eq("id", 4242L)).count() == 0)
     // results identical to the unpruned filter for every probed value
     (0L until 10L).foreach { v =>
-      val pruned = t.readWhereEq("id", v).collect().map(_.getLong(0)).toSeq
+      val pruned = t.read(where = Where.Eq("id", v)).collect().map(_.getLong(0)).toSeq
       val full = t.read().filter(org.apache.spark.sql.functions.col("id") === v)
         .collect().map(_.getLong(0)).toSeq
       assert(pruned == full)
@@ -288,21 +290,21 @@ class SnapshotTableSpec extends SparkSpecBase {
 
   test("bloom sidecars: sidecar-less directories are never skipped") {
     val t = fresh()
-    t.appendIndexed((0L until 10L).map(i => (i, "x")).toDF("id", "v"),
+    t.append((0L until 10L).map(i => (i, "x")).toDF("id", "v"),
       Seq("id"), bloomCols = Seq("id"))
     t.append(Seq((999L, "plain")).toDF("id", "v")) // no sidecars at all
-    assert(t.dirsMatchingEq("id", 999L).size == 1,
+    assert(t.dirsMatching(Where.Eq("id", 999L)).size == 1,
       "the sidecar-less dir must be read; the indexed dir is bloom- AND zone-skipped")
-    assert(t.readWhereEq("id", 999L).collect().map(_.getLong(0)).toSeq == Seq(999L))
+    assert(t.read(where = Where.Eq("id", 999L)).collect().map(_.getLong(0)).toSeq == Seq(999L))
     t.compact() // rewrite has no sidecars — read everything, still exact
-    assert(t.readWhereEq("id", 999L).collect().map(_.getLong(0)).toSeq == Seq(999L))
-    assert(t.readWhereEq("id", 5L).collect().map(_.getLong(0)).toSeq == Seq(5L))
+    assert(t.read(where = Where.Eq("id", 999L)).collect().map(_.getLong(0)).toSeq == Seq(999L))
+    assert(t.read(where = Where.Eq("id", 5L)).collect().map(_.getLong(0)).toSeq == Seq(5L))
   }
 
   test("vacuum drops unreachable data but keeps retained versions intact") {
     val t = fresh()
     t.append(Seq((1L, "a")).toDF("id", "v")) // v0
-    t.overwrite(Seq((2L, "b")).toDF("id", "v")) // v1 — v0's dir now unreachable from v1
+    t.overwriteWith(_ => Seq((2L, "b")).toDF("id", "v"))._1 // v1 — v0's dir now unreachable from v1
     t.append(Seq((3L, "c")).toDF("id", "v")) // v2
     // default minAge protects in-flight commits: fresh DATA dirs survive
     // an age-guarded vacuum even when unreferenced (old manifests are
@@ -336,7 +338,7 @@ class SnapshotTableSpec extends SparkSpecBase {
   test("vacuum's data-plane age gate runs on the newest FILE mtime, not the directory stat") {
     val t = fresh()
     t.append(Seq((1L, "a")).toDF("id", "v")) // v0
-    t.overwrite(Seq((2L, "b")).toDF("id", "v")) // v1 — v0's dir unreferenced
+    t.overwriteWith(_ => Seq((2L, "b")).toDF("id", "v"))._1 // v1 — v0's dir unreferenced
     val dataRoot = new java.io.File(t.rootPath + "/data")
     def dirs() = dataRoot.listFiles().filter(_.isDirectory)
     val live = t.snapshot().get.dirs.toSet
@@ -367,7 +369,7 @@ class SnapshotTableSpec extends SparkSpecBase {
 
   test("overwriteWith composes racing read-modify-writes (no lost update)") {
     val t = fresh()
-    t.overwrite(Seq((0L, "base")).toDF("id", "v"))
+    t.overwriteWith(_ => Seq((0L, "base")).toDF("id", "v"))._1
     // two writers, each adding its own row to whatever the current
     // contents are; the conflict loser must re-derive, not clobber
     val threads = (1 to 4).map { i =>
@@ -384,23 +386,23 @@ class SnapshotTableSpec extends SparkSpecBase {
       "every writer's row must survive — a stale republish would drop some")
   }
 
-  test("schema evolution: readMerged unions schemas, null-fills old rows, and type conflicts fail loudly") {
+  test("schema evolution: a mergeSchema read unions schemas, null-fills old rows, and type conflicts fail loudly") {
     val t = fresh()
     t.append(Seq((1L, "a")).toDF("id", "v"))
     t.append(Seq((2L, "b", 7.5)).toDF("id", "v", "score"))
-    val merged = t.readMerged().collect().map(r =>
+    val merged = t.read(mergeSchema = true).collect().map(r =>
       (r.getLong(0), r.getString(1),
         if (r.isNullAt(r.fieldIndex("score"))) None else Some(r.getDouble(r.fieldIndex("score"))))).toSet
     assert(merged == Set((1L, "a", None), (2L, "b", Some(7.5))),
       "union schema with pre-evolution rows null-filled")
     // history stays readable at each version's own schema
-    assert(!t.readMerged(Some(0L)).columns.contains("score"))
+    assert(!t.read(Some(0L), mergeSchema = true).columns.contains("score"))
     // a same-named column with a CONFLICTING type must fail the merged
     // read loudly, never silently pick one type
     val t2 = fresh()
     t2.append(Seq((1L, 10L)).toDF("id", "x"))
     t2.append(Seq((2L, "oops")).toDF("id", "x"))
-    val e = intercept[org.apache.spark.SparkException] { t2.readMerged().collect() }
+    val e = intercept[org.apache.spark.SparkException] { t2.read(mergeSchema = true).collect() }
     assert(e.getMessage.toLowerCase.contains("merg"), s"expected a merge error, got: ${e.getMessage}")
   }
 

@@ -62,12 +62,12 @@ class StoreIOSpec extends SparkSpecBase {
     table.append(Seq((1L, "a")).toDF("k", "v"))
 
     // every commit attempt for the next 5 tries finds the version taken
-    // by a rival no-op commit (same dirs, next version) — the appender's
-    // optimistic retry must re-read and eventually land WITHOUT losing
-    // the rival's committed versions or its own rows
+    // by a rival no-op commit (a restore of the head: same dirs, next
+    // version) — the appender's optimistic retry must re-read and
+    // eventually land WITHOUT losing the rival's committed versions or
+    // its own rows
     io.loseRaces(5, beforeEach = () => {
-      val cur = rival.snapshot().get
-      rival.tryCommit(cur.version, cur.dirs): Unit
+      rival.restore(rival.snapshot().get.version): Unit
     })
     val v = table.append(Seq((2L, "b")).toDF("k", "v"))
     assert(v == rival.snapshot().get.version, "the append lands on the latest version")
@@ -477,7 +477,7 @@ class StoreIOSpec extends SparkSpecBase {
     val root = "file:" + local.toString + "/t"
     val st = new SnapshotTable(spark, root, new graft.sources.HadoopFsStoreIO())
     st.append(Seq((1L, "a")).toDF("k", "v"))
-    st.overwrite(Seq((2L, "b")).toDF("k", "v"))
+    st.overwriteWith(_ => Seq((2L, "b")).toDF("k", "v"))
     assert(st.read().collect().map(_.getLong(0)).toSeq == Seq(2L))
     val dataDir = local.resolve("t").resolve("data")
     def dirCount: Long = {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.etl.SnapshotTable
+import graft.etl.{SnapshotTable, Where}
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 import graft.sources.{Tables, Warehouse}
 
@@ -28,13 +28,13 @@ class TakedownSpec extends SparkSpecBase {
 
   test("deleteWhere: copy-on-write rewrite of only the matching directories; diff shows exactly the deleted rows; history time-travels") {
     val st = fresh()
-    st.appendIndexed((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
-    st.appendIndexed((100L until 200L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
-    st.appendIndexed((200L until 300L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    st.append((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    st.append((100L until 200L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    st.append((200L until 300L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
     val before = st.currentVersion.get
     val dirsBefore = st.snapshot().get.dirs
 
-    val after = st.deleteWhereRange("id", 120L, 140L)
+    val after = st.deleteWhere(Where.Range("id", 120L, 140L))
     assert(after == before + 1)
     // zone-map pruning: only the [100, 200) directory was touched — the
     // other two survive into the new manifest under their OLD names
@@ -52,31 +52,31 @@ class TakedownSpec extends SparkSpecBase {
     assert(st.read(Some(before)).count() == 300)
     // the rewritten directory re-derived its zone map: a range read on
     // the new version still prunes to one directory per 100-block
-    assert(st.dirsMatching("id", 150L, 160L).size == 1)
+    assert(st.dirsMatching(Where.Range("id", 150L, 160L)).size == 1)
     // deleting every row of a directory drops the dir entirely
-    st.deleteWhereRange("id", 200L, 299L)
+    st.deleteWhere(Where.Range("id", 200L, 299L))
     assert(st.snapshot().get.dirs.size == 2)
     assert(st.read().count() == 300 - 21 - 100)
   }
 
-  test("deleteWhereEq prunes by Bloom sidecar; generic deleteWhere probes before rewriting; racing appends compose") {
+  test("an Eq delete prunes by Bloom sidecar; a Rows delete probes before rewriting; racing appends compose") {
     val st = fresh()
-    st.appendIndexed((0L until 100L).map(i => (i, i % 7)).toDF("id", "grp"),
+    st.append((0L until 100L).map(i => (i, i % 7)).toDF("id", "grp"),
       Seq("id"), bloomCols = Seq("id"))
-    st.appendIndexed((100L until 200L).map(i => (i, i % 7)).toDF("id", "grp"),
+    st.append((100L until 200L).map(i => (i, i % 7)).toDF("id", "grp"),
       Seq("id"), bloomCols = Seq("id"))
     val dirsBefore = st.snapshot().get.dirs
-    st.deleteWhereEq("id", 42L)
+    st.deleteWhere(Where.Eq("id", 42L))
     val dirsAfter = st.snapshot().get.dirs
     assert(dirsBefore.count(dirsAfter.contains) == 1,
       "the Bloom/zone sidecars admit exactly the one holding directory")
     assert(st.read().count() == 199)
-    assert(st.readWhereEq("id", 42L).isEmpty)
+    assert(st.read(where = Where.Eq("id", 42L)).isEmpty)
 
     // generic-predicate delete: the matching-row probe leaves
     // directories with no matches untouched
     val before2 = st.snapshot().get.dirs
-    st.deleteWhere(col("grp") === 3 && col("id") >= 100L && col("id") < 110L)
+    st.deleteWhere(Where.Rows(col("grp") === 3 && col("id") >= 100L && col("id") < 110L))
     val after2 = st.snapshot().get.dirs
     assert(before2.count(after2.contains) == 1,
       "only the directory holding matching rows is rewritten")
@@ -84,7 +84,7 @@ class TakedownSpec extends SparkSpecBase {
 
     // a delete of nothing commits nothing
     val v = st.currentVersion.get
-    assert(st.deleteWhereEq("id", 999999L) == v)
+    assert(st.deleteWhere(Where.Eq("id", 999999L)) == v)
     assert(st.currentVersion.get == v)
 
     // an append landing between the rewrite and the commit folds in
@@ -92,22 +92,22 @@ class TakedownSpec extends SparkSpecBase {
     val t2 = new java.util.concurrent.atomic.AtomicLong()
     val appender = new Thread(() => t2.set(st.append(Seq((5000L, 0L)).toDF("id", "grp"))))
     appender.start(); appender.join()
-    st.deleteWhereEq("id", 43L)
+    st.deleteWhere(Where.Eq("id", 43L))
     assert(st.read().filter(col("id") === 5000L).count() == 1,
       "appended rows survive a delete commit")
   }
 
   test("deleting every row keeps the table's schema; a directory emptied beside survivors still drops") {
     val st = fresh()
-    val v0 = st.appendIndexed(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"),
+    val v0 = st.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"),
       bloomCols = Seq("id"))
     val columns = st.read().columns.toSeq
-    val v1 = st.deleteWhereRange("id", 0L, 10L)
+    val v1 = st.deleteWhere(Where.Range("id", 0L, 10L))
     assert(v1 == v0 + 1)
     assert(st.read().columns.toSeq == columns, "the emptied table keeps its columns")
     assert(st.read().count() == 0)
-    assert(st.readWhere("id", 0L, 10L).count() == 0)
-    assert(st.readWhereEq("id", 1L).count() == 0)
+    assert(st.read(where = Where.Range("id", 0L, 10L)).count() == 0)
+    assert(st.read(where = Where.Eq("id", 1L)).count() == 0)
     val d = st.diff(v0, v1).collect()
     assert(d.map(r => (r.getLong(0), r.getAs[String]("change_type"))).sorted.toSeq ==
       Seq((1L, "delete"), (2L, "delete")))
@@ -117,20 +117,20 @@ class TakedownSpec extends SparkSpecBase {
 
     // with a surviving directory, an emptied one just drops
     val st2 = fresh()
-    st2.appendIndexed(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
-    st2.appendIndexed(Seq((100L, "x")).toDF("id", "v"), Seq("id"))
+    st2.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
+    st2.append(Seq((100L, "x")).toDF("id", "v"), Seq("id"))
     val survivor = st2.snapshot().get.dirs.last
-    st2.deleteWhereRange("id", 0L, 10L)
+    st2.deleteWhere(Where.Range("id", 0L, 10L))
     assert(st2.snapshot().get.dirs == Seq(survivor))
   }
 
   test("restore: one manifest commit returns the pre-delete state; history intact; refuses races and vacuumed targets") {
     val st = fresh()
-    st.appendIndexed((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
-    st.appendIndexed((100L until 200L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
-    val before = st.appendIndexed((200L until 300L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    st.append((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    st.append((100L until 200L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    val before = st.append((200L until 300L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
     val dirsBefore = st.snapshot().get.dirs
-    val afterDelete = st.deleteWhereRange("id", 120L, 140L)
+    val afterDelete = st.deleteWhere(Where.Range("id", 120L, 140L))
 
     val restored = st.restore(before)
     assert(restored == afterDelete + 1)
@@ -146,7 +146,7 @@ class TakedownSpec extends SparkSpecBase {
     assert(d.map(_.getLong(0)).toSet == (120L to 140L).toSet)
     // sidecars live inside the data dirs, so zone-map pruning works on
     // the restored head unchanged
-    assert(st.dirsMatching("id", 150L, 160L).size == 1)
+    assert(st.dirsMatching(Where.Range("id", 150L, 160L)).size == 1)
     // life goes on: appends after a restore compose
     st.append(Seq((900L, "x")).toDF("id", "v"))
     assert(st.read().count() == 301)
@@ -164,7 +164,7 @@ class TakedownSpec extends SparkSpecBase {
     val victim = fresh()
     victim.append(Seq((1L, "a")).toDF("id", "v"))
     val gone = victim.snapshot().get.dirs.head
-    victim.overwrite(Seq((2L, "b")).toDF("id", "v"))
+    victim.overwriteWith(_ => Seq((2L, "b")).toDF("id", "v"))
     graft.sources.HadoopFs.deleteRecursive(s"${victim.rootPath}/data/$gone")
     val eDir = intercept[IllegalArgumentException](victim.restore(0L))
     assert(eDir.getMessage.contains("gone"))
@@ -178,10 +178,10 @@ class TakedownSpec extends SparkSpecBase {
   test("permanent erasure = deleteWhere + vacuum: the deleted rows leave the disk, not just the manifest") {
     import org.apache.spark.sql.functions.col
     val st = fresh()
-    st.appendIndexed((0L until 100L).map(i => (i, s"secret$i")).toDF("id", "v"), Seq("id"))
-    st.appendIndexed((100L until 200L).map(i => (i, s"other$i")).toDF("id", "v"), Seq("id"))
+    st.append((0L until 100L).map(i => (i, s"secret$i")).toDF("id", "v"), Seq("id"))
+    st.append((100L until 200L).map(i => (i, s"other$i")).toDF("id", "v"), Seq("id"))
     val preDelete = st.currentVersion.get
-    st.deleteWhereRange("id", 10L, 20L)
+    st.deleteWhere(Where.Range("id", 10L, 20L))
     // history still readable — by design, until retention ends it
     assert(st.read(Some(preDelete)).count() == 200)
     // retention ends: drop every pre-delete manifest and its data
@@ -409,7 +409,7 @@ class TakedownSpec extends SparkSpecBase {
   test("deleteWhere KEEPS rows where the predicate evaluates NULL (three-valued logic is not data loss)") {
     val st = fresh()
     st.append(Seq((1L, Option("a")), (2L, None), (3L, Option("b"))).toDF("id", "v"))
-    st.deleteWhere(col("v") === "a")
+    st.deleteWhere(Where.Rows(col("v") === "a"))
     // NOT(v = 'a') is NULL for row 2 — a bare filter(not(p)) would drop
     // it; the delete's keep-side must treat did-not-match as KEEP
     assert(st.read().collect().map(_.getLong(0)).toSet == Set(2L, 3L),
@@ -552,17 +552,17 @@ class TakedownSpec extends SparkSpecBase {
 
   test("deleteWhere surviving only NULL rows in a zone-mapped column rewrites without stats, never crashing or unsafely pruning") {
     val st = fresh()
-    st.appendIndexed(
+    st.append(
       Seq((Option(5L), "m"), (Option.empty[Long], "n")).toDF("x", "v"), Seq("x"))
     // the rewrite keeps ONLY the x=null row: min/max over it are null,
     // and the sidecar pass must omit the column (a stat-less column is
     // never pruned on) instead of NPE-ing on an unboxed null
-    st.deleteWhereRange("x", 0L, 10L)
+    st.deleteWhere(Where.Range("x", 0L, 10L))
     val rows = st.read().collect()
     assert(rows.length == 1 && rows.head.isNullAt(0) && rows.head.getString(1) == "n")
     // the surviving dir has no x-zone, so a later range read still scans
     // it (safe) and returns nothing (the null row matches no range)
-    assert(st.readWhere("x", 0L, 10L).count() == 0)
+    assert(st.read(where = Where.Range("x", 0L, 10L)).count() == 0)
   }
 
   test("a second takedown through the cascade is a no-op on an emptied novelty store, not a wedge") {
