@@ -53,7 +53,7 @@ object Bench {
 
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
-    tables.foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+    tables.foreach(t => sources.ParquetSource.read(spark, s"$sfDir/$t.parquet").count())
 
     val failures = scala.collection.mutable.ListBuffer.empty[String]
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)

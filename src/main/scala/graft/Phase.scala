@@ -29,8 +29,10 @@ import org.apache.spark.sql.SparkSession
   * driver loop — `propagation`, `pagerank`, `weighted_pagerank`,
   * `personalized_pagerank`, `hop_distance`, `label_communities`,
   * `kmeans`, `codebooks`), propagation's setup (`propagation.setup` in
-  * `Dedup.clustersOfPairsCounted`) and BPE training (one `bpe.round` per
-  * merge round in `Bpe.train`).
+  * `Dedup.clustersOfPairsCounted`), BPE training (one `bpe.round` per
+  * merge round in `Bpe.train`) and parquet schema inference (one
+  * `parquet.schema` per read whose schema is not yet known, in
+  * [[graft.sources.ParquetSource]]).
   */
 object Phase {
   /** The local property holding the open phase path. */

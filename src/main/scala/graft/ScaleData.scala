@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetSource
+
 /** SCALECHECK data generator: scales the driver's sf0.1 testdata 10× to
   * an sf1-equivalent (`args = srcDir destDir [replicas]`) so the full
   * suite's cost CURVE can be measured one decade up — the check that
@@ -41,7 +43,7 @@ object ScaleData {
     val spark = GraftSession.builder(s"local[$cpus]", shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = ParquetSource.read(spark, s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$dest/$t.parquet")
 
@@ -118,7 +120,7 @@ object ScaleData {
 
     val counts = Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
-      .map(t => s""""$t":${spark.read.parquet(s"$dest/$t.parquet").count()}""")
+      .map(t => s""""$t":${ParquetSource.read(spark, s"$dest/$t.parquet").count()}""")
     println(s"""{"metric":"scale_data","dest":"$dest","replicas":$replicas,"rows":{${counts.mkString(",")}}}""")
     spark.stop()
   }

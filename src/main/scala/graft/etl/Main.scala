@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetSource
+
 /** The runnable CLI entrypoint — the reference's orchestrator surface
   * (/root/reference/main.py:282-407: argparse `--mode pre_season|
   * post_race --table NAME --year N --round N --force`) mapped onto
@@ -105,7 +107,7 @@ object Main {
     * (`year`/`round` from o_orderdate — the testdata's (season, round)).
     */
   private def ordersWithPeriod(spark: SparkSession, source: String): DataFrame =
-    spark.read.parquet(s"$source/orders.parquet")
+    ParquetSource.read(spark, s"$source/orders.parquet")
       .withColumn("year", year(col("o_orderdate")))
       .withColumn("round", month(col("o_orderdate")))
 
@@ -115,7 +117,7 @@ object Main {
     */
   def extracts(source: String): Map[String, Pipeline.Extract] = {
     def dim(name: String): Pipeline.Extract =
-      (spark, _) => spark.read.parquet(s"$source/$name.parquet")
+      (spark, _) => ParquetSource.read(spark, s"$source/$name.parquet")
     Map(
       "region" -> dim("region"), "nation" -> dim("nation"), "customer" -> dim("customer"),
       "orders" -> ((spark, since) => {

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetSource
+
 /** ETL orchestration — the Spark-first re-expression of the reference's
   * pipeline surface (/root/reference/main.py, metadata.py,
   * loaders/base_loader.py): dependency-ordered table loads in two modes
@@ -105,7 +107,7 @@ object Pipeline {
     // stale row alive in its old (untouched) partition — a duplicate-key
     // table. Opt-in because it scans the target's key+partition columns.
     if (checkPartitionStability && exists) {
-      val moved = spark.read.parquet(targetPath)
+      val moved = ParquetSource.read(spark, targetPath)
         .select(col(partitionCol).as("__old_part") +: keys.map(col): _*)
         .join(fresh.select(col(partitionCol).as("__new_part") +: keys.map(col): _*), keys)
         .filter(col("__old_part") =!= col("__new_part"))
@@ -118,7 +120,7 @@ object Pipeline {
     }
     val existing =
       if (exists)
-        Some(spark.read.parquet(targetPath)
+        Some(ParquetSource.read(spark, targetPath)
           .filter(col(partitionCol).isin(touched.toSeq: _*)))
       else None
     // the eager checkpoint severs lineage from the files being replaced;
@@ -256,9 +258,14 @@ object Pipeline {
           .unionByName(fresh.withColumn("__gen", lit(1)), allowMissingColumns = true)
         if (same.isEmpty) u
         else {
-          val row = struct(same.map(col): _*)
-          val old = first(when(gen === 0, row), ignoreNulls = true).over(byKey)
-          u.withColumn("__gen", when(gen === 1 && (row <=> old), lit(-1)).otherwise(gen))
+          // each column against the key's first row in __gen order, an
+          // existing row whenever the key has one: per-column window
+          // values, so no copy of the row is built below the exchange
+          val byGen = byKey.orderBy(gen)
+            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+          val unchanged = same.map(c => col(c) <=> first(col(c)).over(byGen)).reduce(_ && _)
+          u.withColumn("__gen", when(gen === 1 && first(gen).over(byGen) === 0 && unchanged,
+            lit(-1)).otherwise(gen))
         }
       case None => fresh.withColumn("__gen", lit(1))
     }
@@ -340,7 +347,7 @@ final class MetadataStore(spark: SparkSession, root: String,
     */
   private def readLegacy(path: String): Vector[LogRow] = {
     import spark.implicits._
-    val raw = spark.read.option("mergeSchema", "true").parquet(path)
+    val raw = ParquetSource.read(spark, path, mergeSchema = true)
     def orNull(c: String, t: String) = if (raw.columns.contains(c)) col(c) else lit(null).cast(t)
     raw.select(col("id"), col("entity"), col("status"), col("records"), col("watermark"),
         orNull("refId", "long").as("refId"), orNull("error", "string").as("error"),
@@ -499,7 +506,7 @@ final class PipelineRunner(
     * (and fails loudly before its first commit).
     */
   def table(name: String): DataFrame =
-    if (partitioned(name)) spark.read.parquet(targetPath(name))
+    if (partitioned(name)) ParquetSource.read(spark, targetPath(name))
     else snapshotTable(name).read()
 
   /** Time travel: the table as of `version`. Partitioned tables merge in

@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession, functions => F}
 
 import graft.functions.GraftBloom
-import graft.sources.{CommitLog, PosixStoreIO, StoreIO}
+import graft.sources.{CommitLog, ParquetSource, PosixStoreIO, StoreIO}
 
 /** Version-conflict signal for optimistic commits: the table advanced
   * between snapshot resolution and manifest publication. Writers re-read
@@ -179,13 +179,17 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     *
     * `mergeSchema` is the SCHEMA-EVOLUTION read: the union schema across
     * every read directory, with rows from pre-evolution appends
-    * null-filled in the columns they predate. A plain read samples ONE
-    * file for the schema, so a column added by a later append can
-    * silently VANISH from the result if the sampled file predates it —
-    * evolution is an explicit, loud choice: widened schemas merge, and a
-    * TYPE conflict on a same-named column fails the read with Spark's
-    * merge error instead of returning either type silently. Cost: one
-    * footer read per file instead of per sample.
+    * null-filled in the columns they predate. A plain read takes the
+    * schema of ONE file, the first in path order, which lives in the
+    * directory whose name sorts first; so a column added by a later
+    * append can silently VANISH from the result if that file predates
+    * it — evolution is an explicit, loud choice: widened schemas merge,
+    * and a TYPE conflict on a same-named column fails the read with
+    * Spark's merge error instead of returning either type silently.
+    * Data directories never change, so a plain read's schema is
+    * inferred once per first directory and then reused with no Spark
+    * job ([[graft.sources.ParquetSource.readImmutable]]); a merged read
+    * reads one footer per file, every time.
     */
   def read(version: Option[Long] = None, where: Where = Where.Rows(F.lit(true)),
       mergeSchema: Boolean = false): DataFrame = {
@@ -232,9 +236,9 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * its directory is one a delete file names.
     */
   private def scan(snap: Snapshot, dirs: Seq[String], mergeSchema: Boolean = false): DataFrame = {
-    val r = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
     val scanned = dirs.toSet
-    deletesOf(snap).foldLeft(r.parquet(dirs.map(d => dataPath(d)): _*)) { case (df, (keys, ids)) =>
+    val data = ParquetSource.readImmutable(spark, dirs.map(dataPath), mergeSchema)
+    deletesOf(snap).foldLeft(data) { case (df, (keys, ids)) =>
       val hit = ids.filter(id => scanned(id.takeWhile(_ != '\t'))).toSeq
       if (hit.isEmpty) df
       else {

@@ -573,14 +573,16 @@ object Graph {
       if (keepNum == keepDen) lit(true)
       else md5(concat_ws(":", col("src"), col("dst"))) < lit(threshold)
     val edges = und.select(col("src"), col("dst")).localCheckpoint(eager = true)
-    val sampled = edges.filter(coin).localCheckpoint(eager = true)
+    val (coined, sampledRows) = counted(edges.filter(coin))
+    val sampled = coined.localCheckpoint(eager = true)
     val den3 = keepDen.toLong * keepDen * keepDen
     val num3 = keepNum.toLong * keepNum * keepNum
     // degree ordering recomputes ON THE SAMPLED GRAPH (sparsification
     // changes degrees, and the estimator only needs the sampled graph's
     // own triangle count — the oracle orders by the same sampled degrees);
-    // the sampled checkpoint's count sizes the intersect fan-out
-    trianglesFromEdges(sampled, broadcastClosing, knownEdges = Some(sampled.count()))
+    // the sampled checkpoint's count (observed by its own job) sizes the
+    // intersect fan-out
+    trianglesFromEdges(sampled, broadcastClosing, knownEdges = Some(sampledRows()))
       .agg(count(lit(1)).as("n_tri_sampled"))
       .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
       .crossJoin(sampled.agg(count(lit(1)).as("n_edges_sampled")))

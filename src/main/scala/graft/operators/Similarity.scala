@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
-import graft.sources.{Tables, Warehouse}
+import graft.sources.{ParquetSource, Tables, Warehouse}
 
 /** Approximate-nearest-neighbor search over the embeddings table.
   *
@@ -256,7 +256,8 @@ object Similarity {
       dedupeTag,
       prepare = base => {
         val (input, rows) = counted(inc)
-        (assignNearest(input, spark.read.parquet(Warehouse.pathGenModel(path, base))), rows)
+        val centroids = ParquetSource.readImmutable(spark, Seq(Warehouse.pathGenModel(path, base)))
+        (assignNearest(input, centroids), rows)
       },
       writeData = { case (gen, (assigned, rows)) =>
         assigned.write.mode("overwrite").partitionBy("cid").parquet(Warehouse.pathGenData(path, gen))
@@ -282,9 +283,10 @@ object Similarity {
     val spark = vecIds.sparkSession
     val ids = vecIds.select(col("vec_id")).distinct().localCheckpoint(true)
     Warehouse.fold(Warehouse.pathStore(path))((base, segs) => Some((
-      (base +: segs).map(g => spark.read.parquet(Warehouse.pathGenData(path, g)))
+      (base +: segs)
+        .map(g => ParquetSource.readImmutable(spark, Seq(Warehouse.pathGenData(path, g))))
         .reduce(_ unionAll _),
-      spark.read.parquet(Warehouse.pathGenModel(path, base)))))(
+      ParquetSource.readImmutable(spark, Seq(Warehouse.pathGenModel(path, base))))))(
       write = { case (gen, (index, centroids)) =>
         index.join(broadcast(ids), Seq("vec_id"), "left_anti")
           .write.mode("overwrite").partitionBy("cid").parquet(Warehouse.pathGenData(path, gen))
@@ -359,8 +361,9 @@ object Similarity {
     // exactly its base as before; the set is pinned at plan time — a
     // concurrent rebuild/append changes nothing this plan reads.
     val (baseGen, segs) = Warehouse.pathStore(path).resolveSegmented()
-    val centroids = spark.read.parquet(Warehouse.pathGenModel(path, baseGen))
-    val index = (baseGen +: segs).map(g => spark.read.parquet(Warehouse.pathGenData(path, g)))
+    val centroids = ParquetSource.readImmutable(spark, Seq(Warehouse.pathGenModel(path, baseGen)))
+    val index = (baseGen +: segs)
+      .map(g => ParquetSource.readImmutable(spark, Seq(Warehouse.pathGenData(path, g))))
       .reduce(_ unionAll _)
     val wProbe = Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cid"))
     val probes = q.crossJoin(broadcast(centroids))

@@ -4,20 +4,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet readers for the testdata star schema.
   *
-  * Each accessor is a plain `spark.read.parquet` so Catalyst owns column
-  * pruning and predicate pushdown — callers `.select`/`.filter` and the
-  * scan reads only what the plan needs (verify via `PushedFilters` /
-  * `ReadSchema` in `.explain("formatted")`).
+  * Each accessor is a plain parquet scan ([[ParquetSource.read]]) so
+  * Catalyst owns column pruning and predicate pushdown — callers
+  * `.select`/`.filter` and the scan reads only what the plan needs
+  * (verify via `PushedFilters` / `ReadSchema` in `.explain("formatted")`).
+  * A table's schema is inferred on its first read and reused while its
+  * files are unchanged, so a repeated accessor launches no Spark job.
   *
   * At 100 TB the fact tables (`lineitem`, `events`) would be
-  * date-partitioned directories; the same `read.parquet(dir)` picks up
-  * partition pruning for free. The small dimensions are broadcast-sized
+  * date-partitioned directories; the same read of the directory picks
+  * up partition pruning for free. The small dimensions are broadcast-sized
   * by design (mirrors the reference's in-memory FK lookup maps,
   * `/root/reference/loaders/base_loader.py:176-211`, distributed-safe).
   */
 final class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = ParquetSource.read(spark, s"$dir/$name.parquet")
     Tables.assertSchema(name, df.schema)
     df
   }

@@ -400,7 +400,7 @@ object EventPipelines {
           case None =>
             val existing =
               if (java.nio.file.Files.exists(java.nio.file.Paths.get(targetPath)))
-                Some(spark.read.parquet(targetPath))
+                Some(graft.sources.ParquetSource.read(spark, targetPath))
               else None
             val merged = graft.etl.Pipeline
               .merge(existing, batch.toDF(), keys, Some(versionCol))

@@ -136,9 +136,19 @@ class FanOutSpec extends SparkSpecBase {
     val src = code(mainRoot.resolve("graft/etl/SnapshotTable.scala"))
     val defs = "(?m)^  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r.findAllMatchIn(src).toSeq
     val bodies = defs.zip(defs.drop(1).map(_.start) :+ src.length)
-    val readers = "spark\\.read".r.findAllMatchIn(src).map(m =>
+    val readers = "spark\\.read|ParquetSource\\.read".r.findAllMatchIn(src).map(m =>
       bodies.collectFirst { case (d, end) if d.start <= m.start && m.start < end => d.group(1) }
         .getOrElse("<outside any def>")).toSet
     assert(readers == Set("scan"), s"spark.read outside scan, in: ${readers.mkString(", ")}")
+  }
+
+  test("only ParquetSource reads parquet") {
+    // the one reader reuses an inferred schema while the files are
+    // unchanged; a direct read launches a schema-inference job on every
+    // call. It exempts no main, the tool mains included
+    val offenders = mainSourcesMatching("""\bread(\.\w+\([^()]*\))*\.(parquet\(|format\("parquet"\))""")
+      .filterNot(_.endsWith("graft/sources/ParquetSource.scala"))
+    assert(offenders.isEmpty,
+      s"read parquet through graft.sources.ParquetSource instead of spark.read in: ${offenders.mkString(", ")}")
   }
 }
