@@ -70,6 +70,11 @@ object Bench {
     // per key, the fastest successful rep's (seconds, construct, execute):
     // the rep whose time the key reports
     val splits = scala.collection.mutable.Map.empty[String, (Double, Double, Double)]
+    // per key, the generated classes compiled during its first rep (the
+    // JVM-wide compile count's delta: keys run one at a time)
+    val compiles = scala.collection.mutable.Map.empty[String, Long]
+    def compiled(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     // noop sink forces full evaluation of every output column; a count()
     // would let Catalyst prune the computation being measured. A ROOT
@@ -93,6 +98,7 @@ object Bench {
       val crashed = scala.collection.mutable.ListBuffer.empty[Double]
       (1 to nReps).foreach { _ =>
         if (!failures.contains(name)) Phase(name) {
+          val c0 = compiled()
           val t0 = System.nanoTime()
           try {
             val df = fn(spark, sfDir)
@@ -116,6 +122,7 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             crashed += (System.nanoTime() - t0) / 1e9
           }
+          if (!compiles.contains(name)) compiles(name) = compiled() - c0
         }
       }
       (if (ok.nonEmpty) ok.min else if (crashed.nonEmpty) crashed.min else 0.0,
@@ -190,10 +197,10 @@ object Bench {
       s""""$k":[${d2(firstByKey(k))},${d2(r)},${d2(resultByKey(k))}]"""
     }.mkString("{", ",", "}")
     val loadJson = loads.map { case (k, v) => s""""$k":${d2(v)}""" }.mkString("{", ",", "}")
-    // per key: the reported rep's construct/execute split, and the
-    // key's phase map — every phase path under the key, each figure a
-    // mean per rep of the key (first pass and reruns alike), so a
-    // loop phase's `n` is its round count
+    // per key: the reported rep's construct/execute split, the first
+    // rep's compile count, and the key's phase map — every phase path
+    // under the key, each figure a mean per rep of the key (first pass
+    // and reruns alike), so a loop phase's `n` is its round count
     def num(v: Double): String =
       if (v == math.rint(v)) v.toLong.toString
       else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -207,7 +214,8 @@ object Bench {
         st.per(reps).map { case (f, v) => s""""$f":${num(v)}""" }
           .mkString("\"" + p + "\":{", ",", "}")
       }.mkString("{", ",", "}")
-      s""""$k":{$split"reps":$reps,"phases":$phaseJson}"""
+      val compiledJson = compiles.get(k).fold("")(n => s""""compiles":$n,""")
+      s""""$k":{$split$compiledJson"reps":$reps,"phases":$phaseJson}"""
     }.mkString("{", ",", "}")
     val full =
       s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"rerun":$rerunJson,"load_per_key":$loadJson,"errors":$errs,"sf":"$sfDir","record":$recordJson}"""

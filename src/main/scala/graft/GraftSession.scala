@@ -29,8 +29,9 @@ object GraftSession {
     * the as-of join's clustering, and the default bucket count of every
     * persisted store.
     *
-    * The codegen cache holds [[CodegenCacheEntries]] compiled classes;
-    * see there.
+    * The codegen cache holds [[CodegenCacheEntries]] compiled classes,
+    * and generated class names carry no stage number, so the cache
+    * matches a stage by its code alone; see there.
     */
   def builder(master: String = "local[32]", shufflePartitions: Int = 32,
       initialPartitions: Int =
@@ -65,6 +66,7 @@ object GraftSession {
       // plans.
       .config("spark.sql.unionOutputPartitioning", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
 
   /** Size of Spark's JVM-wide cache of compiled generated classes (a
@@ -72,6 +74,13 @@ object GraftSession {
     * cache by (class loader, generated code), and a
     * [[scoped]] child runs its tasks under its own executor class
     * loader, so a child's classes are cached apart from its caller's.
+    * The builder sets `spark.sql.codegen.useIdInClassName=false`, so a
+    * whole-stage class's name, and so its code, no longer holds its
+    * stage number: two stages whose code is the same byte for byte
+    * share one compiled class, and a plan that differs from an earlier
+    * one only in stage numbering (one more union branch or store
+    * segment) compiles nothing new. Any other difference in the code
+    * still misses, so sharing is as safe as Spark's own cache key.
     * Spark's default of 100 entries is below graft's working set. One
     * sf0.01 `dc3_canonical` call uses ~115 generated classes, the five
     * keys of perfbench's `analytics_mix` ~185, and a whole
@@ -81,7 +90,9 @@ object GraftSession {
     * `analytics_mix` iteration: 250 entries still recompiled 25–80
     * classes; 500 and 1000 both compiled only the 2–4 whose code is new
     * each round (literals of that round's sync). 500 is the smallest
-    * round size that holds the working set. Each cached class keeps its
+    * round size that holds the working set. These figures were taken
+    * with stage numbers in class names; shared classes can only shrink
+    * the working set. Each cached class keeps its
     * bytecode in metaspace (a few KB to tens of KB, so a few MB at the
     * cap); a JVM run with `-XX:MaxMetaspaceSize` must leave room for it.
     */

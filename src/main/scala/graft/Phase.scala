@@ -30,9 +30,12 @@ import org.apache.spark.sql.SparkSession
   * `personalized_pagerank`, `hop_distance`, `label_communities`,
   * `kmeans`, `codebooks`), propagation's setup (`propagation.setup` in
   * `Dedup.clustersOfPairsCounted`), BPE training (one `bpe.round` per
-  * merge round in `Bpe.train`) and parquet schema inference (one
+  * merge round in `Bpe.train`), parquet schema inference (one
   * `parquet.schema` per read whose schema is not yet known, in
-  * [[graft.sources.ParquetSource]]).
+  * [[graft.sources.ParquetSource]]) and every snapshot-table commit
+  * (`snapshot.append`, `snapshot.delete`, `snapshot.overwrite`,
+  * `snapshot.merge`, `snapshot.compact`, `snapshot.zorder` in
+  * [[graft.etl.SnapshotTable]]'s commit loop).
   */
 object Phase {
   /** The local property holding the open phase path. */
@@ -53,15 +56,31 @@ object Phase {
     case None => body
     case Some(sc) =>
       val outer = sc.getLocalProperty(Property)
-      val outerDescription = sc.getLocalProperty(DescriptionProperty)
       val path = if (outer == null) name else s"$outer/$name"
+      val t0 = System.nanoTime()
+      resume(path) {
+        try body finally recorders.foreach(_.ended(path, System.nanoTime() - t0))
+      }
+  }
+
+  /** The phase path open on this thread (null outside every scope). */
+  private[graft] def path: String = activeContext.map(_.getLocalProperty(Property)).orNull
+
+  /** `body` under `path`, a path read with [[path]] on another thread.
+    * A pooled thread (a parallel collection's) keeps the local
+    * properties of whatever created it, not of the task's submitter, so
+    * work handed to one re-opens its submitter's path here. The
+    * thread's own path and description come back after.
+    */
+  private[graft] def resume[T](path: String)(body: => T): T = activeContext match {
+    case None => body
+    case Some(sc) =>
+      val (outer, outerDescription) =
+        (sc.getLocalProperty(Property), sc.getLocalProperty(DescriptionProperty))
       sc.setLocalProperty(Property, path)
       sc.setLocalProperty(DescriptionProperty, path)
-      val t0 = System.nanoTime()
       try body
       finally {
-        val wallNs = System.nanoTime() - t0
-        recorders.foreach(_.ended(path, wallNs))
         sc.setLocalProperty(Property, outer)
         sc.setLocalProperty(DescriptionProperty, outerDescription)
       }

@@ -187,8 +187,9 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * and a TYPE conflict on a same-named column fails the read with
     * Spark's merge error instead of returning either type silently.
     * Data directories never change, so a plain read's schema is
-    * inferred once per first directory and then reused with no Spark
-    * job ([[graft.sources.ParquetSource.readImmutable]]); a merged read
+    * known from the directory's write, or inferred once per first
+    * directory, and then reused with no Spark job
+    * ([[graft.sources.ParquetSource.readImmutable]]); a merged read
     * reads one footer per file, every time.
     */
   def read(version: Option[Long] = None, where: Where = Where.Rows(F.lit(true)),
@@ -338,7 +339,8 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * on the write job itself, so the input is evaluated exactly once
     * and nothing is read back. A 0-row write records no sidecar, and a
     * column NULL in every row gets no zone: a column without one is
-    * never pruned on.
+    * never pruned on. The directory's schema is kept for its reads
+    * ([[ParquetSource.written]]), so none of them infers it.
     */
   private def writeData(df: DataFrame, zoneCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): (String, Long) = {
@@ -368,6 +370,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
       Option(m(s"bloom$i").asInstanceOf[Array[Byte]])
         .map(b => s""""$c":"${java.util.Base64.getEncoder.encodeToString(b)}"""")
     })
+    ParquetSource.written(spark, path, df.schema)
     (name, rows)
   }
 
@@ -396,17 +399,23 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * the rebase reports it stale. Prepared data is reused across lost
     * races: it is invisible until a manifest names it, so a lost race
     * leaks nothing into readers.
+    *
+    * The whole loop runs as one [[graft.Phase]] named `phase` (one per
+    * writer: `snapshot.append`, `snapshot.delete`, `snapshot.overwrite`,
+    * `snapshot.merge`, `snapshot.compact`, `snapshot.zorder`), so every
+    * job a commit launches, retries included, is traced to its writer.
     */
-  private def commit(what: String)(prepare: Option[Snapshot] => Option[Rebase]): Long = {
-    var rebase: Option[Rebase] = None
-    log.commit(what) { head =>
-      rebase.flatMap(_(head)).orElse {
-        if (head.isEmpty) requireOwnLayout()
-        rebase = prepare(head)
-        rebase.flatMap(_(head))
-      }.map(Snapshot(-1L, _))
+  private def commit(phase: String)(prepare: Option[Snapshot] => Option[Rebase]): Long =
+    graft.Phase(phase) {
+      var rebase: Option[Rebase] = None
+      log.commit(phase) { head =>
+        rebase.flatMap(_(head)).orElse {
+          if (head.isEmpty) requireOwnLayout()
+          rebase = prepare(head)
+          rebase.flatMap(_(head))
+        }.map(Snapshot(-1L, _))
+      }
     }
-  }
 
   /** Before the first commit the root may hold only this format's own
     * entries (`data/`, possibly with staged directories of a crashed
@@ -448,7 +457,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * can.
     */
   def append(df: DataFrame, zoneCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long =
-    commit("append")(_ => Some(appending(writeData(df, zoneCols, bloomCols)._1)))
+    commit("snapshot.append")(_ => Some(appending(writeData(df, zoneCols, bloomCols)._1)))
 
   private val StatsEntryRe = """"([^"]+)":\{"min":(-?\d+),"max":(-?\d+)\}""".r
 
@@ -507,7 +516,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     // NOT(NULL) is NULL, which a bare filter(not(p)) would drop: in a
     // takedown primitive that is data loss
     val keep = F.coalesce(!where.rows, F.lit(true))
-    commit("deleteWhere") { head =>
+    commit("snapshot.delete") { head =>
       val snap = head.getOrElse(noCommittedVersion())
       // input_file_name() maps hits back to their directories (names are
       // UUIDs, so the /<name>/ segment match is unambiguous)
@@ -523,9 +532,10 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
         // a wide takedown range can touch hundreds, and a sequential
         // driver loop would serialize cluster-sized work
         import scala.collection.parallel.CollectionConverters._
+        val phase = graft.Phase.path
         val rewrites = touched.par.map { d =>
-          d -> writeData(scan(snap, Seq(d)).filter(keep),
-            statsOf(d).keys.toSeq.sorted, bloomsOf(d).keys.toSeq.sorted)
+          d -> graft.Phase.resume(phase)(writeData(scan(snap, Seq(d)).filter(keep),
+            statsOf(d).keys.toSeq.sorted, bloomsOf(d).keys.toSeq.sorted))
         }.seq.toMap
         val kept = rewrites.collect { case (d, (name, rows)) if rows > 0 => d -> name }
         // stale once a touched directory is no longer current (a
@@ -596,7 +606,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     */
   def overwriteWith(derive: Option[DataFrame] => DataFrame): (Long, DataFrame) = {
     var derived: DataFrame = null
-    val version = commit("read-modify-write") { head =>
+    val version = commit("snapshot.overwrite") { head =>
       derived = derive(head.map(s => read(Some(s.version))))
         .localCheckpoint(true) // pin the derivation to THIS snapshot's files
       val (d, _) = writeData(derived)
@@ -643,7 +653,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     val dir = col(Dir)
     val rank = col(Pipeline.Rank)
     var rows = 0L
-    val committedVersion = commit("keyed merge") { head =>
+    val committedVersion = commit("snapshot.merge") { head =>
       val live = head.filter(_.data.nonEmpty)
       // each existing row carries its directory: the parent of its file
       val existing = live.map(s => read(Some(s.version)).withColumn(Dir, dirOfRow))
@@ -710,7 +720,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
     * commit — specs inject a racing append/overwrite deterministically.
     */
   private[graft] def compactWithHook(numPartitions: Int, beforeCommit: () => Unit): Long =
-    commit("compaction") { head =>
+    commit("snapshot.compact") { head =>
       val snap = head.getOrElse(noCommittedVersion())
       if (snap.dirs.size <= 1) None
       else {
@@ -742,7 +752,7 @@ final class SnapshotTable(spark: SparkSession, root: String, io: StoreIO = Posix
   def compactZordered(cols: Seq[String], buckets: Int = 8): Long = {
     require(cols.nonEmpty && cols.size <= 4, s"1-4 cluster columns, got ${cols.size}")
     import org.apache.spark.sql.functions._
-    commit("z-order rewrite") { head =>
+    commit("snapshot.zorder") { head =>
       val snap = head.getOrElse(noCommittedVersion())
       val base = read(Some(snap.version))
       if (base.isEmpty) None

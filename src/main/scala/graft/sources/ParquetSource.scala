@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.StructType
   * hands it back through `spark.read.schema(...)` while the files are
   * known not to have changed: a repeated read launches no job. On a miss
   * Spark infers as usual (one job, labelled `parquet.schema` in the
-  * [[graft.Phase]] record) and the result is kept.
+  * [[graft.Phase]] record) and the result is kept. The writer of an
+  * immutable directory keeps its schema up front ([[written]]).
   *
   * A kept schema is found by the session's parquet confs (they change
   * what inference returns, e.g. `binaryAsString` or `nanosAsLong`) and
@@ -81,12 +82,29 @@ object ParquetSource {
     */
   def readImmutable(spark: SparkSession, dirs: Seq[String],
       mergeSchema: Boolean = false): DataFrame =
-    load(spark, dirs, mergeSchema) {
-      val sampled = dirs.minBy(_ + "/")
-      val p = new Path(sampled)
-      Seq((sampled, 0L, p.getFileSystem(spark.sessionState.newHadoopConf())
-        .getFileStatus(p).getModificationTime))
-    }
+    load(spark, dirs, mergeSchema)(dirIdentity(spark, dirs.minBy(_ + "/")))
+
+  /** Keep the schema of the immutable directory `dir`, just written in
+    * full from a frame of schema `schema`, so that a [[readImmutable]]
+    * sampling `dir` infers nothing. Spark's writer stores the frame's
+    * schema in each file's footer and inference reads it back from
+    * there, so this keeps what inference would return, as a read
+    * resolves it (every field nullable).
+    */
+  def written(spark: SparkSession, dir: String, schema: StructType): Unit =
+    keep(Key(confsOf(spark), dirIdentity(spark, dir)), spark.read.schema(schema).parquet(dir).schema)
+
+  /** An immutable directory's identity: its path and modification time. */
+  private def dirIdentity(spark: SparkSession, dir: String): Seq[(String, Long, Long)] = {
+    val p = new Path(dir)
+    Seq((dir, 0L, p.getFileSystem(spark.sessionState.newHadoopConf())
+      .getFileStatus(p).getModificationTime))
+  }
+
+  private def keep(key: Key, schema: StructType): Unit = {
+    if (schemas.size >= MaxSchemas) schemas.clear()
+    schemas.put(key, schema)
+  }
 
   /** `paths` read with the schema kept for `files`, or inferred and kept.
     * A path that cannot be identified (it does not exist) is left to
@@ -104,10 +122,7 @@ object ParquetSource {
         case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
         case None =>
           val df = graft.Phase("parquet.schema")(spark.read.parquet(paths: _*))
-          key.foreach { k =>
-            if (schemas.size >= MaxSchemas) schemas.clear()
-            schemas.put(k, df.schema)
-          }
+          key.foreach(keep(_, df.schema))
           df
       }
     }

@@ -132,6 +132,30 @@ class ParquetSourceSpec extends SparkSpecBase {
     assert(twice(ParquetSource.readImmutable(spark, Seq(path)))("b").dataType == BinaryType)
   }
 
+  test("a directory SnapshotTable writes reads with the schema Spark infers, and no read infers it") {
+    import org.apache.spark.sql.functions._
+    val t = new SnapshotTable(spark, tmp("graft_pq_written_"))
+    // non-nullable, nested, keyed, binary, decimal and time columns
+    val rows = spark.range(0, 3).select(col("id"), col("id").cast("int").as("i"),
+      lit("x").as("s"), (col("id") / 2).as("d"), col("id").cast("decimal(12,2)").as("m"),
+      timestamp_seconds(col("id")).as("ts"), current_date().as("day"),
+      array(col("id"), lit(null).cast("long")).as("xs"),
+      struct(col("id").as("a"), lit(null).cast("string").as("b")).as("st"),
+      map(lit("k"), col("id")).as("kv"), hex(col("id")).cast("binary").as("bin"),
+      (col("id") > 0).as("flag"))
+    t.append(rows)
+    t.append(rows.filter(col("id") > 0))
+    def dirs = t.snapshot().get.data.map(d => s"${t.rootPath}/data/$d")
+    val r = graft.Phase.record(spark)
+    val read = try {
+      val df = graft.Phase("written")(t.read())
+      assert(r.snapshot().get("written/parquet.schema").isEmpty, "the read inferred a schema")
+      df
+    } finally r.close()
+    assert(read.schema == inferred(spark, dirs: _*))
+    assert(read.count() == 5L)
+  }
+
   test("a missing path fails as Spark's own read does") {
     val missing = tmp("graft_pq_") + "/absent"
     val ours = intercept[Exception](ParquetSource.read(spark, missing))

@@ -140,6 +140,27 @@ class PhaseSpec extends SparkSpecBase {
     } finally Warehouse.dropStore(spark, name, Seq("ids"))
   }
 
+  test("every SnapshotTable commit runs under its writer's snapshot.* phase") {
+    // an earlier call leaves the delete's pooled rewrite threads holding
+    // its own path, and reads the key's table
+    Phase("earlier")(SparkEntry.queries("q40_delete_where")(spark, sfDir): Unit)
+    val q40 = recorded(Phase("q40")(SparkEntry.queries("q40_delete_where")(spark, sfDir): Unit))
+    assert(q40.get("q40/snapshot.append").exists(s => s.instances == 3 && s.jobs >= 3),
+      s"three appends, each writing its directory: ${q40.get("q40/snapshot.append")}")
+    assert(q40.get("q40/snapshot.delete").exists(s => s.instances == 1 && s.jobs >= 1),
+      s"one delete: ${q40.get("q40/snapshot.delete")}")
+    val outside = q40.collect { case (p, s) if !p.startsWith("q40/snapshot.") && s.jobs > 0 => p }
+    assert(outside.isEmpty, s"building q40 launched jobs outside its commits: ${outside.mkString(", ")}")
+
+    val table = new graft.etl.SnapshotTable(spark,
+      java.nio.file.Files.createTempDirectory("graft_phase_snap_").toString)
+    table.append(Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
+    val merge = recorded(Phase("sync")(table.mergeKeyed(Seq((2L, "c")).toDF("id", "s"), Seq("id"), None)))
+    assert(merge.get("sync/snapshot.merge").exists(s => s.instances == 1 && s.jobs >= 1),
+      s"one keyed merge: ${merge.get("sync/snapshot.merge")}")
+    assert(table.read().as[(Long, String)].collect().sorted.toSeq == Seq((1L, "a"), (2L, "c")))
+  }
+
   test("one listener and six mains in src/main") {
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = {

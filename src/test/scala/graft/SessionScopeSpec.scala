@@ -58,6 +58,13 @@ class SessionScopeSpec extends SparkSpecBase {
     assert(seen == own, s"the caller's conf changed while the loops ran: $seen, own $own")
   }
 
+  test("a scoped child names generated classes by their code, as its caller does") {
+    val key = "spark.sql.codegen.useIdInClassName"
+    val child = GraftSession.scoped(spark, Map("spark.sql.adaptive.enabled" -> "false"))
+    assert(spark.conf.get(key) == "false" && child.conf.get(key) == "false",
+      s"caller ${spark.conf.get(key)}, child ${child.conf.get(key)}")
+  }
+
   test("a labeling computed while a store build runs in the same session equals the solo labeling") {
     def labeling(): Seq[(Long, Long)] =
       Dedup.clustersOfPairsCounted(path99)._1.as[(Long, Long)].collect().toSeq
